@@ -30,16 +30,15 @@ from gondar_spark.functions.textstats import (
     with_lang_scores,
     with_quality_score,
 )
-from gondar_spark.operators import similarity
+from gondar_spark.operators import blocking, similarity
 from gondar_spark.operators.dedup import (
     exact_dedup,
     incremental_minhash_pairs,
     minhash_lsh_pairs,
     minhash_store,
     ngram_jaccard_pairs,
+    shingled,
     simhash_dedup,
-    word_shingles,
-    _minhash_cols,
 )
 from gondar_spark.operators.source import semi_join_fetch
 from gondar_spark.operators.topk import top_k_per_group
@@ -58,7 +57,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     from gondar_spark.config import JobConfig
-    from gondar_spark.operators import blocking, cc, chunk, extract, materialize, normalize
+    from gondar_spark.operators import cc, chunk, extract, materialize, normalize
     from gondar_spark.operators.scoring import score_pairs
     from gondar_spark.synth import SynthConfig, generate_source_df
 
@@ -224,10 +223,8 @@ def q_exact_dedup(spark, sf_dir):
 # --- B6 oracle: minhash signatures (4 hashes) over word 3-gram shingles ------
 def q_minhash_signatures(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    base = docs.select(
-        F.col("doc_id"), word_shingles("text", 3).alias("sh")
-    )
-    return base.select("doc_id", *_minhash_cols(F.col("sh"), 4, SEED))
+    return shingled(docs, "text", "doc_id", 3).select(
+        F.col("id").alias("doc_id"), *blocking.minhash_cols("sh", 4, SEED))
 
 
 # --- B6/B7/B8: minhash LSH near-dup pairs (with planted dups) ----------------
@@ -1412,7 +1409,7 @@ def q_kg_triples(spark, sf_dir):
 def q_kg_edges(spark, sf_dir):
     """Linking stages B5-B8 end-to-end (normalize -> minhash -> LSH bands
     -> candidate pairs -> jaccard scoring)."""
-    from gondar_spark.operators import blocking, normalize
+    from gondar_spark.operators import normalize
     from gondar_spark.operators.scoring import score_pairs
 
     triples = _mini_kg_triples(spark).persist()
@@ -1428,7 +1425,7 @@ def q_kg_edges(spark, sf_dir):
 def q_kg_entities(spark, sf_dir):
     """Canonicalization B9/B11 end-to-end (iterative large-star/small-star
     CC, oracled by a DuckDB recursive-CTE min-label closure)."""
-    from gondar_spark.operators import blocking, cc, materialize, normalize
+    from gondar_spark.operators import cc, materialize, normalize
     from gondar_spark.operators.scoring import score_pairs
 
     triples = _mini_kg_triples(spark).persist()
@@ -1445,7 +1442,7 @@ def q_kg_entities(spark, sf_dir):
 def _kg_link(triples):
     """Linking chain shared by the kg_* queries: mentions -> minhash
     signatures -> LSH bands -> candidate pairs -> scored edges."""
-    from gondar_spark.operators import blocking, normalize
+    from gondar_spark.operators import normalize
     from gondar_spark.operators.scoring import score_pairs
 
     mentions = normalize.normalize_mentions(triples)

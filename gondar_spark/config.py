@@ -31,7 +31,6 @@ class JobConfig:
     # --- extractor (SURVEY.md B4; analog of AzureOpenAIWrapper defaults,
     #     /root/reference/gondar/modules/PubMedFlow.py:71-75,104) ---
     extractor_seed: int = 1001            # reference pins seed=1001
-    extractor_batch_rows: int = 256       # micro-batch size per extractor call
     extractor_max_retries: int = 2        # reference: max_retries=2
     # --- linking ---
     shingle_size: int = 3                 # char n-gram size for similarity
@@ -67,8 +66,6 @@ class JobConfig:
                                           # OOMing the driver (round-5
                                           # verdict #2). Logged either way.
     shuffle_partitions: int = 32
-    salt_buckets: int = 8                 # deterministic hash-salt fan-out for hot keys
-    hot_key_threshold: int = 100_000      # rows per key before salting kicks in
     max_block_size: int = 10_000          # LSH mega-block cap (B7): blocks of
                                           # s norms emit s^2/2 pairs; dropped
                                           # blocks are counted in lineage,

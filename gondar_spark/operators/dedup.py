@@ -4,13 +4,19 @@ the 100 TB path (shuffle on a compact key, never a quadratic self-join):
   * exact_dedup          — md5-hash groupBy (one shuffle on a 32-byte key)
   * minhash_lsh_pairs    — word-shingle MinHash -> LSH bands -> candidate
                            join -> exact word-shingle Jaccard filter
+  * incremental_minhash_pairs — the same pairs for a new batch, probing a
+                           committed minhash_store instead of re-blocking
   * simhash_dedup        — 64-bit SimHash via xxhash64 bit ops (JVM-side);
                            hamming-near pairs found by 4x16-bit band blocking
   * ngram_jaccard_pairs  — exact word-n-gram Jaccard via inverted-index
                            join (for moderate cardinalities / verification)
-  * embedding_near_dup   — cosine >= threshold pairs, random-hyperplane-free:
-                           exact via blocked dot products (see similarity.py
-                           for the ANN path)
+
+The LSH operators own only the word-shingle sets (``shingled``) and
+dedup's threshold policy (``verify_pairs``: round half-up to 4 places,
+then compare). Signatures, band keys, the band self-join and the
+new x store probe are the shared kernel in operators.blocking, run with
+key ``id`` and set ``sh``; the Jaccard verify is scoring.jaccard_verify.
+Linking uses the same kernel on mention norms.
 
 All operators here have exact DuckDB oracles (md5-based hashing is
 engine-portable; see __spark_entry__.py).
@@ -35,6 +41,10 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round_half_up
 from ..functions.textstats import tokens_col
+from .blocking import (
+    band_keys_df, candidate_pairs, minhash_cols, probe_pairs, self_pairs,
+)
+from .scoring import jaccard_verify
 
 _LIVE_CACHES: list[DataFrame] = []
 # the registry is process-wide (shared across threads and SparkSessions):
@@ -116,14 +126,18 @@ def exact_dedup(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> Dat
     )
 
 
-def _shingles_from_tokens(toks, n: int):
-    """Shingle array from a *materialized* token column reference —
-    never from an inline split() expression: higher-order-function lambdas
-    defeat common-subexpression elimination, so an inline tokenizer would
-    re-split the text once per shingle element (measured 50x slowdowns)."""
+def shingled(df: DataFrame, col: str = "text", id_col: str = "doc_id",
+             n: int = 3) -> DataFrame:
+    """(id, sh): distinct md5'd word n-gram shingles; a text shorter than
+    n tokens is one shingle of its whole token string. The token array is
+    materialized exactly once per row — never re-split inside the
+    shingle lambda: higher-order-function lambdas defeat common-
+    subexpression elimination, so an inline tokenizer would re-split the
+    text once per shingle element (measured 50x slowdowns)."""
+    toks = F.col("_toks")
     sz = F.size(toks)
     whole = F.md5(F.concat_ws(" ", toks).cast("binary"))
-    return F.when(sz < n, F.array(whole)).otherwise(
+    sh = F.when(sz < n, F.array(whole)).otherwise(
         F.array_distinct(
             F.transform(
                 F.sequence(F.lit(0), sz - n),
@@ -135,57 +149,44 @@ def _shingles_from_tokens(toks, n: int):
             )
         )
     )
-
-
-def shingled(df: DataFrame, col: str = "text", id_col: str = "doc_id",
-             n: int = 3) -> DataFrame:
-    """(id, sh) with the token array materialized exactly once per row."""
     return (
         df.select(F.col(id_col).alias("id"), tokens_col(col).alias("_toks"))
-        .select("id", _shingles_from_tokens(F.col("_toks"), n).alias("sh"))
+        .select("id", sh.alias("sh"))
     )
 
 
-def word_shingles(col: str = "text", n: int = 3):
-    """Expression form (used where the input is a single projected column);
-    prefer ``shingled`` in pipelines — see _shingles_from_tokens note."""
-    return _shingles_from_tokens(tokens_col(col), n)
-
-
-def _minhash_cols(shingle_col, n_hashes: int, seed: int):
-    """h_k = min over shingles of md5('{seed}:{k}:' || shingle)."""
-    return [
-        F.array_min(
-            F.transform(
-                shingle_col,
-                lambda s: F.md5(F.concat(F.lit(f"{seed}:{k}:"), s).cast("binary")),
-            )
-        ).alias(f"h{k}")
-        for k in range(n_hashes)
-    ]
-
-
-def band_key_array(n_hashes: int, bands: int):
-    """LSH band keys from signature columns h0..h{n_hashes-1}:
-    '{b}:' || md5(h_i | h_j | ...). ONE definition — the batch pair join
-    (minhash_lsh_pairs) and the streaming band-state operator
-    (streaming.jobs.stateful_minhash_pairs) share their hash-parity
-    oracle, which holds only while both derive band keys through this
-    exact expression."""
-    rows = n_hashes // bands
-    return F.array(
-        *[
-            F.concat(
-                F.lit(f"{b}:"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                    ).cast("binary")
-                ),
-            )
-            for b in range(bands)
-        ]
+def verify_pairs(pairs: DataFrame, sets: DataFrame,
+                 threshold: float) -> DataFrame:
+    """Dedup's threshold policy over the shared verify join: the Jaccard is
+    rounded half-up to 4 places FIRST, then compared — the value the
+    DuckDB oracles reproduce bit-for-bit."""
+    return (
+        jaccard_verify(pairs, sets, "id", "sh")
+        .withColumn("jaccard", round_half_up(F.col("jaccard"), 4))
+        .filter(F.col("jaccard") >= threshold)
     )
+
+
+def minhash_store(
+    df: DataFrame,
+    col: str = "text",
+    id_col: str = "doc_id",
+    shingle_n: int = 3,
+    n_hashes: int = 16,
+    bands: int = 8,
+    seed: int = 1001,
+) -> tuple[DataFrame, DataFrame]:
+    """The LSH index of a document set: (signatures, blocks) where
+    signatures = (id, sh) — the shingle sets the verify join needs — and
+    blocks = (id, band_key), the band membership table. minhash_lsh_pairs
+    self-joins it; committed once per corpus it is what every later
+    ingest probes (incremental_minhash_pairs), O(new) instead of
+    O(corpus) re-blocking. The shingle sets feed the signature AND both
+    sides of the verify join, so they are persisted (tracked) and
+    hashing runs once."""
+    base = _tracked_persist(shingled(df, col, id_col, shingle_n))
+    sig = base.select("id", *minhash_cols("sh", n_hashes, seed))
+    return base, band_keys_df(sig, n_hashes, bands, key="id")
 
 
 def minhash_lsh_pairs(
@@ -200,59 +201,12 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard) via MinHash+LSH blocking
     then exact shingle-Jaccard verification. The self-join is on band keys
-    only — never all-pairs."""
-    # base feeds the signature AND both sides of the verify join — persist
-    # so shingling+hashing runs once (see ngram_jaccard_pairs note)
-    base = _tracked_persist(shingled(df, col, id_col, shingle_n))
-    sig = base.select("id", *_minhash_cols(F.col("sh"), n_hashes, seed))
-    band_arr = band_key_array(n_hashes, bands)
-    # blocks carry IDS ONLY: the band self-join and pair-dedup shuffle
-    # 16-byte keys, not shingle arrays; arrays re-attach by id afterwards
-    # (two hash joins on a far smaller distinct-pair set).
-    blocks = sig.select("id", F.explode(band_arr).alias("band_key"))
-    pairs = (
-        blocks.withColumnRenamed("id", "id_a")
-        .join(blocks.withColumnRenamed("id", "id_b"), "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    withsh = (
-        pairs.join(base.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(base.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    return (
-        withsh.withColumn("jaccard", round_half_up(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_store(
-    df: DataFrame,
-    col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    n_hashes: int = 16,
-    bands: int = 8,
-    seed: int = 1001,
-) -> tuple[DataFrame, DataFrame]:
-    """The COMMITTED LSH index an incremental run probes: returns
-    (signatures, blocks) where signatures = (id, sh) — the shingle sets
-    the verify join needs — and blocks = (id, band_key), the band
-    membership table. Committing these once per corpus converts every
-    later ingest from O(corpus) re-blocking into O(new) probing
-    (incremental_minhash_pairs). Derivation is shared expression-for-
-    expression with minhash_lsh_pairs (band_key_array / _minhash_cols),
-    so store + probe reproduce the one-shot pair set exactly."""
-    base = _tracked_persist(shingled(df, col, id_col, shingle_n))
-    sig = base.select("id", *_minhash_cols(F.col("sh"), n_hashes, seed))
-    blocks = sig.select(
-        "id", F.explode(band_key_array(n_hashes, bands)).alias("band_key")
-    )
-    return base.select(F.col("id"), F.col("sh")), blocks
+    only — never all-pairs — and carries ids only: shingle arrays
+    re-attach by id on the far smaller distinct-pair set."""
+    sets, blocks = minhash_store(
+        df, col, id_col, shingle_n, n_hashes, bands, seed)
+    pairs = candidate_pairs(blocks, max_block_size=None, key="id")
+    return verify_pairs(pairs, sets, threshold)
 
 
 def incremental_minhash_pairs(
@@ -268,19 +222,19 @@ def incremental_minhash_pairs(
     threshold: float = 0.5,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Near-dup pairs INVOLVING a new batch, without re-blocking the
-    corpus: new docs are shingled/banded, then candidates come from
-    (a) the new batch's own band self-join and (b) an equi-join probe of
-    the committed band store — never a rescan-and-self-join of the whole
-    corpus. Because band membership of committed docs never changes,
-    old-corpus pairs are exactly the ones a previous run already emitted,
-    so ``previous pairs ∪ returned pairs`` equals the one-shot
+    corpus: candidates come from blocking.probe_pairs (the batch's own
+    band self-join plus an equi-join probe of the committed band store).
+    Because band membership of committed docs never changes, old-corpus
+    pairs are exactly the ones a previous run already emitted, so
+    ``previous pairs ∪ returned pairs`` equals the one-shot
     minhash_lsh_pairs over the unioned corpus (the oracle contract of
     __spark_entry__.q_incremental_edges).
 
     Plan shape at scale: the probe side (new batch) is small, so AQE
     broadcasts it into the band-store join — the store is SCANNED
     (columnar, two narrow columns) but never SHUFFLED; the verify join
-    fetches shingles only for pair members. Returns
+    fetches shingles only for pair members, from the store for committed
+    members and from the batch for new ones. Returns
     (pairs, new_sig, new_blocks) — callers append the latter two to the
     store so the next ingest probes this batch too.
 
@@ -291,39 +245,9 @@ def incremental_minhash_pairs(
         new_df, col, id_col, shingle_n, n_hashes, bands, seed
     )
     new_blocks = _tracked_persist(new_blocks)
-    # (a) new x new within a band
-    nn = (
-        new_blocks.withColumnRenamed("id", "id_a")
-        .join(new_blocks.withColumnRenamed("id", "id_b"), "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    # (b) new x committed: probe the band store. min/max ordering keeps
-    # the (id_a < id_b) invariant regardless of which side is newer.
-    no = (
-        new_blocks.withColumnRenamed("id", "id_n")
-        .join(store_blocks.withColumnRenamed("id", "id_o"), "band_key")
-        .filter(F.col("id_n") != F.col("id_o"))
-        .select(
-            F.least("id_n", "id_o").alias("id_a"),
-            F.greatest("id_n", "id_o").alias("id_b"),
-        )
-    )
-    pairs = nn.select("id_a", "id_b").union(no).distinct()
-    # verify with exact shingle Jaccard; shingles resolve from the store
-    # for committed members and from the new batch for new ones
-    sh = store_sig.select("id", "sh").unionByName(new_sig.select("id", "sh"))
-    withsh = (
-        pairs.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
-    out = (
-        withsh.withColumn("jaccard", round_half_up(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out, new_sig, new_blocks
+    pairs = probe_pairs(new_blocks, store_blocks, key="id")
+    sets = store_sig.select("id", "sh").unionByName(new_sig)
+    return verify_pairs(pairs, sets, threshold), new_sig, new_blocks
 
 
 def ngram_jaccard_pairs(
@@ -377,10 +301,36 @@ def ngram_jaccard_pairs(
     sizes = base.select("id", F.size("sh").alias("sz"))
     inv = base.select("id", F.explode("sh").alias("s"))
 
+    if not prefix_filter and max_posting is None:
+        # unfiltered: overlap counts straight off the inverted index — no
+        # array payloads cross the shuffle. Exact but quadratic in the
+        # hottest posting list; reserve for corpora with measured-flat
+        # shingle dfs.
+        inter = (self_pairs(inv, "id", "s").groupBy("id_a", "id_b")
+                 .agg(F.count("*").alias("inter")))
+        return (
+            inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}),
+                       "id_a")
+            .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}),
+                  "id_b")
+            .withColumn(
+                "jaccard",
+                round_half_up(
+                    F.col("inter")
+                    / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+                    4,
+                ),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
+        )
+
+    # both guarded paths self-join a reduced inverted index, then verify
+    # candidates on the FULL shingle sets (exact jaccard)
+    dfreq = inv.groupBy("s").agg(F.count("*").alias("dfreq"))
     if prefix_filter:
         from pyspark.sql import Window
 
-        dfreq = inv.groupBy("s").agg(F.count("*").alias("dfreq"))
         w = Window.partitionBy("id").orderBy("dfreq", "s")
         ranked = (
             inv.join(dfreq, "s")
@@ -388,98 +338,20 @@ def ngram_jaccard_pairs(
             .join(sizes, "id")
         )
         prefix_len = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-        prefix = ranked.filter(F.col("rn") <= prefix_len).select("id", "s")
-        a = prefix.withColumnsRenamed({"id": "id_a"})
-        b = prefix.withColumnsRenamed({"id": "id_b"})
-        pairs = (
-            a.join(b, "s")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        # prefix join sees only a subset of collisions -> verify on the
-        # full shingle sets
-        verified = (
-            pairs.join(
-                base.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-            .join(base.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                round_half_up(
-                    F.col("inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                    4,
-                ),
-            )
-        )
-        return verified.filter(F.col("jaccard") >= threshold).select(
-            "id_a", "id_b", "jaccard"
-        )
-
-    if max_posting is not None:
-        # capped candidate generation: drop mega-postings from the index,
-        # then verify candidates on FULL shingle sets (exact jaccard)
+        index = ranked.filter(F.col("rn") <= prefix_len).select("id", "s")
+    else:
+        # capped candidate generation: drop mega-postings from the index
         import logging
 
-        dfreq = inv.groupBy("s").agg(F.count("*").alias("dfreq"))
         hot = dfreq.filter(F.col("dfreq") > max_posting)
         n_hot = hot.count()  # tiny agg-of-agg; the cap must not be silent
         if n_hot:
             logging.getLogger("gondar_spark.dedup").warning(
                 "ngram_jaccard_pairs: max_posting=%d dropped %d hot "
                 "shingle(s) from candidate generation", max_posting, n_hot)
-        capped = inv.join(hot.select("s"), "s", "left_anti")
-        a = capped.withColumnsRenamed({"id": "id_a"})
-        b = capped.withColumnsRenamed({"id": "id_b"})
-        pairs = (
-            a.join(b, "s")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        verified = (
-            pairs.join(
-                base.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-            .join(base.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                round_half_up(
-                    F.col("inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                    4,
-                ),
-            )
-        )
-        return verified.filter(F.col("jaccard") >= threshold).select(
-            "id_a", "id_b", "jaccard"
-        )
-
-    # unfiltered: overlap counts straight off the inverted index — no
-    # array payloads cross the shuffle. Exact but quadratic in the hottest
-    # posting list; reserve for corpora with measured-flat shingle dfs.
-    a = inv.withColumnsRenamed({"id": "id_a"})
-    b = inv.withColumnsRenamed({"id": "id_b"})
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            round_half_up(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+        index = inv.join(hot.select("s"), "s", "left_anti")
+    pairs = candidate_pairs(index, max_block_size=None, key="id", band="s")
+    return verify_pairs(pairs, base, threshold)
 
 
 def simhash_dedup(

@@ -1,8 +1,9 @@
 """B14: top-k diagnostics (hot entities / mega-repos) + B10 salting.
 
-Top-k drives the skew decisions: keys above `hot_key_threshold` get a
-deterministic hash salt before the heavy join/agg (never F.rand() —
-stage retries must be idempotent, SURVEY.md §4 determinism row).
+Top-k finds the hot keys; ``salted`` / ``two_phase_count`` spread a hot
+key over a fixed number of reducers with a deterministic hash salt
+before the heavy join/agg (never F.rand() — stage retries must be
+idempotent, SURVEY.md §4 determinism row).
 """
 
 from __future__ import annotations

@@ -228,7 +228,8 @@ def stateful_minhash_pairs(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    from ..operators.dedup import _minhash_cols, band_key_array, shingled
+    from ..operators.blocking import band_key_array, minhash_cols
+    from ..operators.dedup import shingled
 
     # ids keep their NATIVE type, same contract as the batch twin and
     # stateful_exact_dedup: integral ids -> long state/output columns,
@@ -239,7 +240,7 @@ def stateful_minhash_pairs(
 
     base = shingled(doc_stream.select(F.col(id_col), F.col(col)),
                     col, id_col, shingle_n)
-    sig = base.select("id", "sh", *_minhash_cols(F.col("sh"), n_hashes, seed))
+    sig = base.select("id", "sh", *minhash_cols("sh", n_hashes, seed))
     blocks = sig.select(
         "id", "sh",
         F.explode(band_key_array(n_hashes, bands)).alias("band_key"),

@@ -162,11 +162,13 @@ def test_gram_array_matches_python(spark):
 
 def test_minhash_signature_matches_python(spark):
     df = spark.createDataFrame([(n,) for n in NORMS if n], ["norm"])
-    sig = minhash_signature_df(df, n_hashes=8, seed=1001)
-    got = {r["norm"]: [r[f"h{k}"] for k in range(8)] for r in sig.collect()}
-    for n in NORMS:
-        if n:
-            assert got[n] == minhash_signature(n, 8, 1001), n
+    for ngram in (3, 2):
+        sig = minhash_signature_df(df, n_hashes=8, seed=1001, ngram=ngram)
+        got = {r["norm"]: [r[f"h{k}"] for k in range(8)]
+               for r in sig.collect()}
+        for n in NORMS:
+            if n:
+                assert got[n] == minhash_signature(n, 8, 1001, ngram), (n, ngram)
 
 
 def test_band_keys_match_python(spark):
@@ -219,6 +221,38 @@ def _cc(spark, pairs, max_iter=20):
         r["norm"]: r["component"]
         for r in connected_components(df, max_iter).collect()
     }
+
+
+def test_verify_threshold_policies_differ_at_boundary(spark):
+    """|A|=15000, |B|=14999, |A∩B|=9999 -> Jaccard 9999/20000 = 0.49995.
+    The shared verify returns the raw value; linking compares it raw and
+    drops the pair at 0.5, dedup rounds half-up to 4 places first and
+    keeps it at exactly 0.5."""
+    from gondar_spark.operators.dedup import verify_pairs
+    from gondar_spark.operators.scoring import jaccard_verify
+
+    def ints(lo, hi):
+        return F.transform(F.sequence(F.lit(lo), F.lit(hi)),
+                           lambda i: i.cast("string"))
+
+    sets = spark.range(1).select(F.explode(F.array(
+        F.struct(F.lit("a").alias("k"), ints(0, 14999).alias("s")),
+        F.struct(F.lit("b").alias("k"), ints(5001, 19999).alias("s")),
+    )).alias("r")).select("r.k", "r.s")
+    sizes = {r["k"]: r["n"] for r in
+             sets.select("k", F.size("s").alias("n")).collect()}
+    assert sizes == {"a": 15000, "b": 14999}
+
+    sig = sets.withColumnsRenamed({"k": "norm", "s": "grams"})
+    link_pairs = spark.createDataFrame([("a", "b")], "norm_a string, norm_b string")
+    [raw] = jaccard_verify(link_pairs, sig).collect()
+    assert raw["jaccard"] == 9999 / 20000
+    assert score_pairs(link_pairs, sig, threshold=0.5).count() == 0
+
+    shingles = sets.withColumnsRenamed({"k": "id", "s": "sh"})
+    dedup_pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
+    kept = [tuple(r) for r in verify_pairs(dedup_pairs, shingles, 0.5).collect()]
+    assert kept == [("a", "b", 0.5)]
 
 
 def test_cc_chain(spark):

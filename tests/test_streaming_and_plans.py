@@ -146,30 +146,35 @@ def test_extraction_plan_has_no_shuffle(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """Both sides bucketed by the join key with equal bucket counts ->
-    the join plan contains no Exchange (co-located join; the 100 TB
-    pattern for repeated joins on one key)."""
-    from gondar_spark.plans.inspect import explain_str
-    from gondar_spark.sources.bucketing import read_table, write_bucketed
+def test_lsh_plan_exchange_counts(spark):
+    """Plan-shape pin for the shared LSH kernel: the unexecuted formatted
+    plans of the one-shot, linking and incremental LSH queries hold
+    exactly these Exchange operators (shuffle + broadcast) at sf0.001 —
+    a kernel change that adds a shuffle or loses a broadcast shows here."""
+    import re
 
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    cust = spark.read.parquet(f"{SF}/customer.parquet")
-    write_bucketed(orders, "b_orders", str(tmp_path / "bo"), "o_custkey", 8)
-    write_bucketed(cust, "b_cust", str(tmp_path / "bc"), "c_custkey", 8)
+    import __spark_entry__ as entrymod
+    from gondar_spark.operators.dedup import release_caches
+    from gondar_spark.plans.inspect import explain_str
+
+    # a cache an earlier query materialized would show its executed plan
+    spark.catalog.clearCache()
+    queries = {
+        "minhash_lsh_pairs": entrymod.q_minhash_lsh_pairs,
+        "kg_edges": entrymod.q_kg_edges,
+        "incremental_edges": entrymod.q_incremental_edges,
+    }
+    got = {}
     try:
-        j = read_table(spark, "b_orders").join(
-            read_table(spark, "b_cust").hint("merge"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = explain_str(j, "simple")
-        assert "Exchange" not in plan, plan
-        # and the result is correct
-        assert j.count() == orders.join(
-            cust, orders.o_custkey == cust.c_custkey).count()
+        for name, q in queries.items():
+            plan = explain_str(q(spark, SF), "formatted")
+            got[name] = len(re.findall(r"^\(\d+\) \w*Exchange\b", plan,
+                                       re.M))
     finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_cust")
+        release_caches()
+        spark.catalog.clearCache()
+    assert got == {"minhash_lsh_pairs": 5, "kg_edges": 13,
+                   "incremental_edges": 11}
 
 
 def test_aggregation_stays_in_codegen(spark):
