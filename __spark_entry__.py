@@ -42,6 +42,7 @@ from gondar_spark.operators.dedup import (
 )
 from gondar_spark.operators.source import semi_join_fetch
 from gondar_spark.operators.topk import top_k_per_group
+from gondar_spark.session import checkpoint, persist
 
 SEED = 1001
 
@@ -69,12 +70,12 @@ def entry(spark: SparkSession) -> DataFrame:
                                   cfg.chunk_lines, emit_metrics=False)
     triples, _, _ = extract.split_extraction(raw)
     # no-write flagship path: persist the fan-out points, else the LSH
-    # self-join and CC loop re-run extraction once per DAG branch
-    triples = triples.persist()
+    # self-join and CC loop re-run extraction once per DAG branch (in the
+    # current scope: release_caches() frees them outside any Scope)
+    triples = persist(triples)
     mentions = normalize.normalize_mentions(triples)
-    sig = blocking.minhash_signature_df(mentions, cfg.minhash_hashes,
-                                        cfg.extractor_seed, cfg.shingle_size
-                                        ).persist()
+    sig = persist(blocking.minhash_signature_df(
+        mentions, cfg.minhash_hashes, cfg.extractor_seed, cfg.shingle_size))
     blocks = blocking.band_keys_df(sig, cfg.minhash_hashes, cfg.lsh_bands)
     pairs = blocking.candidate_pairs(blocks)
     edges = score_pairs(pairs, sig, cfg.link_threshold)
@@ -380,9 +381,8 @@ def q_incremental_components(spark, sf_dir):
     def pad(c):
         return F.lpad(F.col(c).cast("string"), 19, "0")
 
-    edges = pairs.select(
-        pad("id_a").alias("norm_a"), pad("id_b").alias("norm_b")
-    ).localCheckpoint(eager=True)
+    edges = checkpoint(pairs.select(
+        pad("id_a").alias("norm_a"), pad("id_b").alias("norm_b")))
     old_e = edges.filter((F.xxhash64("norm_a", "norm_b") % 3) != 0)
     new_e = edges.filter((F.xxhash64("norm_a", "norm_b") % 3) == 0)
     old_labels = cc.connected_components(old_e, 20)
@@ -1412,7 +1412,7 @@ def q_kg_edges(spark, sf_dir):
     from gondar_spark.operators import normalize
     from gondar_spark.operators.scoring import score_pairs
 
-    triples = _mini_kg_triples(spark).persist()
+    triples = persist(_mini_kg_triples(spark))
     mentions = normalize.normalize_mentions(triples)
     sig = blocking.minhash_signature_df(mentions, 16, SEED, 3)
     blocks = blocking.band_keys_df(sig, 16, 8)
@@ -1428,9 +1428,9 @@ def q_kg_entities(spark, sf_dir):
     from gondar_spark.operators import cc, materialize, normalize
     from gondar_spark.operators.scoring import score_pairs
 
-    triples = _mini_kg_triples(spark).persist()
-    mentions = normalize.normalize_mentions(triples).persist()
-    sig = blocking.minhash_signature_df(mentions, 16, SEED, 3).persist()
+    triples = persist(_mini_kg_triples(spark))
+    mentions = persist(normalize.normalize_mentions(triples))
+    sig = persist(blocking.minhash_signature_df(mentions, 16, SEED, 3))
     blocks = blocking.band_keys_df(sig, 16, 8)
     pairs = blocking.candidate_pairs(blocks)
     edges = score_pairs(pairs, sig, 0.6)
@@ -1474,7 +1474,7 @@ def q_kg_canonical_triples(spark, sf_dir):
     the full produce-a-KG path is hash-verified in one query."""
     from gondar_spark.operators import cc, materialize
 
-    triples = _mini_kg_triples(spark).persist()
+    triples = persist(_mini_kg_triples(spark))
     mentions, edges = _kg_link(triples)
     labels = cc.connected_components(edges, 20)
     mapping = _kg_mapping(mentions, labels)
@@ -1490,36 +1490,31 @@ def _kg_incremental_outputs(spark):
     (materialize.incremental_outputs). The result must equal a
     one-shot build over the union, which is exactly what the DuckDB
     oracles compute — so the O(new) ingest contract is hash-verified
-    end-to-end, not just pytest-pinned. The outputs are cached: the
-    splice ends in localCheckpointed scope frames, so the triples and
-    entities queries share one build."""
+    end-to-end, not just pytest-pinned. Every persist and checkpoint
+    lands in the current scope (release_caches() frees them outside any
+    Scope), so each of the two queries builds its own copy."""
     from gondar_spark.operators import cc, materialize
 
-    if "kg_incremental" in _CENTROID_CACHE:
-        return _CENTROID_CACHE["kg_incremental"]
-
-    triples = _mini_kg_triples(spark).persist()
+    triples = persist(_mini_kg_triples(spark))
     is_new = (F.xxhash64("path") % 3) == 0
-    old_raw = triples.filter(~is_new).persist()
-    new_raw = triples.filter(is_new).persist()
+    old_raw = persist(triples.filter(~is_new))
+    new_raw = persist(triples.filter(is_new))
 
     m_old, e_old = _kg_link(old_raw)
-    e_old = e_old.localCheckpoint(eager=True)
+    e_old = checkpoint(e_old)
     labels_old = cc.connected_components(e_old, 20)
-    map_old = _kg_mapping(m_old, labels_old).localCheckpoint(eager=True)
+    map_old = checkpoint(_kg_mapping(m_old, labels_old))
     old_out = materialize.full_outputs(m_old, old_raw, map_old)
 
     m_all, e_all = _kg_link(triples)
     e_new = e_all.join(e_old, ["norm_a", "norm_b"], "left_anti")
     labels_u, _touched = cc.incremental_components(
         labels_old, e_old, e_new, 20)
-    mapping = _kg_mapping(m_all, labels_u).localCheckpoint(eager=True)
+    mapping = checkpoint(_kg_mapping(m_all, labels_u))
     changed = mapping.join(map_old, ["norm", "entity_id"], "left_anti")
     outputs, _ids, _keys = materialize.incremental_outputs(
         old_out["triples"], old_out["entities"], old_out["aliases"],
         m_all, triples, new_raw, mapping, map_old, changed)
-    outputs = {k: v.localCheckpoint(eager=False) for k, v in outputs.items()}
-    _CENTROID_CACHE["kg_incremental"] = outputs
     return outputs
 
 

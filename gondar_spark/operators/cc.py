@@ -22,15 +22,16 @@ measured on a 100k-edge graph: every-round 24s, every-2nd 26s, every-3rd
 82s (re-planning stacked iterations costs far more than checkpointing).
 Convergence is detected by an edge-checksum aggregate fused into the
 checkpoint job via ``observe`` (one action per round), never a collect
-of the edge set. Each round's checkpoint blocks are EXPLICITLY freed once
-the next round materializes (DataFrame.unpersist is a no-op on
-localCheckpoint storage and the context cleaner only frees on GC —
-without this, R rounds leave R edge-set copies in executor storage and
-a long session degrades every job after CC); only the final round's
-blocks stay alive because the returned plan reads them. Data scaling
-measured on the worst-case chain+hub topology: 100k edges 13.4s -> 1M
-edges 36.5s on local[32] — 10x data, 2.7x wall, because rounds track
-component diameter, not edge count (see BENCH/BASELINE.md).
+of the edge set. Every checkpoint registers with the caller's
+session.Scope: each round's blocks are released as soon as the next
+round materializes (without this, R rounds leave R edge-set copies in
+executor storage and a long session degrades every job after CC); the
+final round, the contraction map ``g`` and incremental CC's ``touched``
+set stay alive because the returned plan reads them, and are freed when
+the caller's scope exits (or by release_caches() outside any scope).
+Data scaling measured on the worst-case chain+hub topology: 100k edges
+13.4s -> 1M edges 36.5s on local[32] — 10x data, 2.7x wall, because
+rounds track component diameter, not edge count (see BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
 from ..errors import StageError
 
 
@@ -135,37 +137,15 @@ def _checksum(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _unpersist_rdd_ids(sc, ids: set[int]) -> None:
-    """Free specific checkpoint RDDs by id (non-blocking). The only handle
-    Spark exposes for localCheckpoint storage — DataFrame.unpersist only
-    touches CacheManager entries, which these are not."""
-    jmap = sc._jsc.getPersistentRDDs()
-    for i in ids:
-        rdd = jmap.get(i)
-        if rdd is not None:
-            rdd.unpersist(False)
-
-
-def _checkpoint_rdd_ids(cp: DataFrame) -> set[int]:
-    """The checkpointed RDD id straight off the plan (LogicalRDD.rdd.id)
-    — NOT a before/after diff of all persistent RDDs, which would capture
-    (and later free) checkpoints created concurrently by OTHER driver
-    threads in a shared session."""
-    try:
-        return {int(cp._jdf.queryExecution().analyzed().rdd().id())}
-    except Exception:  # plan shape changed: skip cleanup, never misfree
-        return set()
-
-
 def _checkpoint_with_checksum(
     e: DataFrame,
-) -> tuple[DataFrame, tuple[int, int], set[int]]:
+) -> tuple[DataFrame, tuple[int, int]]:
     """Materialize one round AND collect its convergence checksum in the
     SAME job via df.observe — halves the per-round action count vs
     localCheckpoint-then-aggregate (measured ~5-10% off the 100k-edge CC
     wall time: the separate checksum scan read cached partitions, so the
-    saving is scheduling overhead, not IO). Also returns the new
-    checkpoint's RDD id so the caller can free the PREVIOUS round."""
+    saving is scheduling overhead, not IO). The checkpoint registers with
+    the current scope, so the caller can release the PREVIOUS round."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -174,101 +154,16 @@ def _checkpoint_with_checksum(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
     )
-    cp = observed.localCheckpoint()  # eager: runs the job, fires the obs
+    cp = session.checkpoint(observed)  # runs the job, fires obs
     got = obs.get
-    return cp, (int(got["n"]), int(got["h"])), _checkpoint_rdd_ids(cp)
+    return cp, (int(got["n"]), int(got["h"]))
 
 
-def _contract_partitions(it):
-    """Per-partition union-find over the edge rows this task sees (the
-    local-contraction optimization from the Kiveris et al. paper): emits
-    (node, root) with root = the node's partition-LOCAL component minimum
-    (lexicographic — labels are strings). Narrow: no shuffle; dict-based
-    union-find with path compression, one pass over the Arrow batches."""
-    import pandas as pd
-
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for pdf in it:
-        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra == rb:
-                continue
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    if parent:
-        nodes = list(parent.keys())
-        yield pd.DataFrame({"node": nodes,
-                            "root": [find(x) for x in nodes]})
-
-
-def _star_loop(
-    e: DataFrame, max_iter: int, checkpoint: bool, accelerate: bool,
-) -> DataFrame:
-    """The alternating large-star/small-star fixpoint over an edge set
-    that is already (src, dst), src != dst. Input need not be distinct
-    (the initial checkpointed distinct handles it). Returns
-    labels(norm, component) for every node in ``e``."""
-    e = e.distinct()
-    sc = e.sparkSession.sparkContext
-    prev_ids: set[int] = set()
-    if checkpoint:
-        e, prev, prev_ids = _checkpoint_with_checksum(e)
-    else:
-        prev = _checksum(e)
-    for _ in range(max_iter):
-        half = _large_star(e)
-        if accelerate:
-            # _min_jump references the large-star output twice (min-target
-            # aggregate + join left side). Deliberately NOT persisted:
-            # both references hang off the same shuffle output (the round
-            # reads from the previous round's checkpoint, so recomputing
-            # the projection over it is cheap), and a persist was MEASURED
-            # 2x slower per round (24s vs 11s on the 100k bench) — the
-            # InMemoryRelation write + cache scan costs more than the
-            # recompute it saves at every scale where rounds are
-            # shuffle-bound.
-            half = _min_jump(half)
-        # large_star/min_jump output is strictly decreasing -> skip the
-        # orientation+distinct Exchange (see _small_star)
-        e = _small_star(half, oriented_input=True)
-        if checkpoint:
-            e, cur, new_ids = _checkpoint_with_checksum(e)
-            # the new round is materialized: the previous round's blocks
-            # are dead weight from here on — free them now
-            _unpersist_rdd_ids(sc, prev_ids)
-            prev_ids = new_ids
-        else:
-            cur = _checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise StageError(f"connected components did not converge in {max_iter} rounds")
-    # converged edge set is (node -> component-min) stars
-    labels = e.select(F.col("src").alias("norm"), F.col("dst").alias("component"))
-    roots = e.select(F.col("dst").alias("norm")).distinct().withColumn(
-        "component", F.col("norm")
-    )
-    return labels.union(roots).distinct()
-
-
-def _solve_driver(rows) -> dict:
-    """Union-find over a (small, gated) collected edge list; root =
-    lexicographic minimum member. Returns {node: component}."""
+def _union_find(rows) -> dict:
+    """Union-find with path compression over (a, b) pairs; root =
+    lexicographic minimum member (labels are strings). Returns
+    {node: component}. Runs on the driver over a (small, gated) collected
+    edge list, and per task in _contract_partitions."""
     parent: dict = {}
 
     def find(x):
@@ -291,6 +186,70 @@ def _solve_driver(rows) -> dict:
             ra, rb = rb, ra
         parent[rb] = ra
     return {n: find(n) for n in parent}
+
+
+def _contract_partitions(it):
+    """Per-partition union-find over the edge rows this task sees (the
+    local-contraction optimization from the Kiveris et al. paper): emits
+    (node, root) with root = the node's partition-LOCAL component minimum
+    (lexicographic — labels are strings). Narrow: no shuffle; one pass
+    over the Arrow batches."""
+    import pandas as pd
+
+    comp = _union_find(
+        (a, b) for pdf in it
+        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+    if comp:
+        yield pd.DataFrame({"node": list(comp), "root": list(comp.values())})
+
+
+def _star_loop(
+    e: DataFrame, max_iter: int, checkpoint: bool, accelerate: bool,
+) -> DataFrame:
+    """The alternating large-star/small-star fixpoint over an edge set
+    that is already (src, dst), src != dst. Input need not be distinct
+    (the initial checkpointed distinct handles it). Returns
+    labels(norm, component) for every node in ``e``."""
+    e = e.distinct()
+    if checkpoint:
+        e, prev = _checkpoint_with_checksum(e)
+    else:
+        prev = _checksum(e)
+    for _ in range(max_iter):
+        half = _large_star(e)
+        if accelerate:
+            # _min_jump references the large-star output twice (min-target
+            # aggregate + join left side). Deliberately NOT persisted:
+            # both references hang off the same shuffle output (the round
+            # reads from the previous round's checkpoint, so recomputing
+            # the projection over it is cheap), and a persist was MEASURED
+            # 2x slower per round (24s vs 11s on the 100k bench) — the
+            # InMemoryRelation write + cache scan costs more than the
+            # recompute it saves at every scale where rounds are
+            # shuffle-bound.
+            half = _min_jump(half)
+        # large_star/min_jump output is strictly decreasing -> skip the
+        # orientation+distinct Exchange (see _small_star)
+        nxt = _small_star(half, oriented_input=True)
+        if checkpoint:
+            nxt, cur = _checkpoint_with_checksum(nxt)
+            # the new round is materialized: the previous round's blocks
+            # are dead weight from here on — free them now
+            session.release(e)
+        else:
+            cur = _checksum(nxt)
+        e = nxt
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise StageError(f"connected components did not converge in {max_iter} rounds")
+    # converged edge set is (node -> component-min) stars
+    labels = e.select(F.col("src").alias("norm"), F.col("dst").alias("component"))
+    roots = e.select(F.col("dst").alias("norm")).distinct().withColumn(
+        "component", F.col("norm")
+    )
+    return labels.union(roots).distinct()
 
 
 def connected_components(
@@ -337,11 +296,10 @@ def connected_components(
     # groupBy is ONE shuffle of 2-string rows (vs one per round over the
     # full edge set in the uncontracted loop). Eagerly checkpointed: it
     # feeds the contracted edge set AND the final label composition.
-    g = (
+    g = session.checkpoint(
         e.mapInPandas(_contract_partitions, "node string, root string")
         .groupBy("node")
         .agg(F.min("root").alias("root"), F.collect_set("root").alias("_roots"))
-        .localCheckpoint(eager=True)
     )
     ce = (
         g.filter(F.size("_roots") > 1)
@@ -358,7 +316,7 @@ def connected_components(
     n_ce = ce.count()
     spark = edges.sparkSession
     if n_ce <= driver_solve_max:
-        comp = _solve_driver(
+        comp = _union_find(
             [(r["src"], r["dst"]) for r in ce.collect()])
         labels_c = spark.createDataFrame(
             list(comp.items()) or [], "root string, component string")
@@ -419,14 +377,13 @@ def incremental_components(
         .union(new_e.select(F.col("norm_b").alias("norm")))
         .distinct()
     )
-    touched = (
+    # consumed by two joins below AND returned to the caller (merge
+    # bookkeeping); eager checkpoint keeps it one tiny materialized set
+    # instead of three re-derivations over old_labels
+    touched = session.checkpoint(
         old_labels.join(endpoints, "norm", "left_semi")
         .select("component")
         .distinct()
-        # consumed by two joins below AND returned to the caller (merge
-        # bookkeeping); eager checkpoint keeps it one tiny materialized
-        # set instead of three re-derivations over old_labels
-        .localCheckpoint(eager=True)
     )
     sub_old = (
         old_edges.select("norm_a", "norm_b")

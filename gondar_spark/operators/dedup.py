@@ -24,94 +24,27 @@ engine-portable; see __spark_entry__.py).
 Cache ownership: minhash_lsh_pairs / ngram_jaccard_pairs / simhash_dedup
 persist their md5-heavy intermediate (shingles / fingerprints) because it
 feeds 2-4 DAG branches. The persist cannot be released inside the
-operator (the returned plan still reads it), so every persist is TRACKED:
-call ``release_caches()`` after consuming a result — bench.py and
-tools/check_oracles.py do between queries (the Pipeline's own stage
-persists are released separately via _run_stage_lazy's finally) — and a
-long-lived session never accumulates cached shingle data. Untracked
-fallback is LRU eviction (MEMORY_AND_DISK — degrades, never fails).
+operator (the returned plan still reads it), so it registers with the
+caller's session.Scope and lives until that scope exits; outside any
+``with Scope()`` it lands in the root scope, which ``release_caches()``
+(re-exported here for the harnesses) drains — bench.py and
+tools/check_oracles.py call it between queries. The root scope caps
+outstanding persists (oldest force-released, logged), so a long-lived
+session never accumulates cached shingle data.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_half_up
 from ..functions.textstats import tokens_col
+from ..session import persist, release_caches  # noqa: F401 (re-export)
 from .blocking import (
     band_keys_df, candidate_pairs, minhash_cols, probe_pairs, self_pairs,
 )
 from .scoring import jaccard_verify
-
-_LIVE_CACHES: list[DataFrame] = []
-# the registry is process-wide (shared across threads and SparkSessions):
-# all mutation happens under _CACHES_LOCK, and every unpersist is
-# individually try/except'd — a DataFrame whose session has already been
-# stopped raises, and one dead entry must not leak the live rest.
-# Created unconditionally at import: a lazily-installed lock is itself a
-# check-then-set race (two threads could each install a different Lock
-# and the first concurrent persists would not be mutually excluded).
-_CACHES_LOCK = threading.Lock()
-# bound for callers that never call release_caches(): beyond this many
-# outstanding persists the OLDEST is force-unpersisted (logged). Note a
-# dropped persisted Dataset was never auto-freed before either — the SQL
-# CacheManager holds entries until unpersist/clearCache regardless of
-# Python references — so the cap strictly improves the untracked case.
-MAX_LIVE_CACHES = 16
-
-
-def _lock():
-    return _CACHES_LOCK
-
-
-def _safe_unpersist(df: DataFrame) -> bool:
-    try:
-        df.unpersist()
-        return True
-    except Exception:  # stopped session / dead JVM handle — skip, no leak
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "unpersist failed (stopped session?) — dropping registry entry",
-            exc_info=True,
-        )
-        return False
-
-
-def _tracked_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    evict = None
-    with _lock():
-        _LIVE_CACHES.append(df)
-        if len(_LIVE_CACHES) > MAX_LIVE_CACHES:
-            evict = _LIVE_CACHES.pop(0)
-    if evict is not None:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "dedup cache registry over %d entries — force-releasing the "
-            "oldest; call release_caches() between queries",
-            MAX_LIVE_CACHES,
-        )
-        _safe_unpersist(evict)
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every intermediate a dedup operator cached since the last
-    call. Safe while no returned plan is still being consumed. Returns the
-    number released; entries whose session died are dropped (logged), never
-    left to abort the rest."""
-    with _lock():
-        drained, _LIVE_CACHES[:] = _LIVE_CACHES[:], []
-    n = 0
-    for df in drained:
-        if _safe_unpersist(df):
-            n += 1
-    return n
 
 
 def exact_dedup(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -182,9 +115,9 @@ def minhash_store(
     self-joins it; committed once per corpus it is what every later
     ingest probes (incremental_minhash_pairs), O(new) instead of
     O(corpus) re-blocking. The shingle sets feed the signature AND both
-    sides of the verify join, so they are persisted (tracked) and
-    hashing runs once."""
-    base = _tracked_persist(shingled(df, col, id_col, shingle_n))
+    sides of the verify join, so they are persisted (in the current
+    scope) and hashing runs once."""
+    base = persist(shingled(df, col, id_col, shingle_n))
     sig = base.select("id", *minhash_cols("sh", n_hashes, seed))
     return base, band_keys_df(sig, n_hashes, bands, key="id")
 
@@ -244,7 +177,7 @@ def incremental_minhash_pairs(
     new_sig, new_blocks = minhash_store(
         new_df, col, id_col, shingle_n, n_hashes, bands, seed
     )
-    new_blocks = _tracked_persist(new_blocks)
+    new_blocks = persist(new_blocks)
     pairs = probe_pairs(new_blocks, store_blocks, key="id")
     sets = store_sig.select("id", "sh").unionByName(new_sig)
     return verify_pairs(pairs, sets, threshold), new_sig, new_blocks
@@ -297,7 +230,7 @@ def ngram_jaccard_pairs(
     # the shingle arrays (md5-heavy) feed 3-4 DAG branches (index, sizes,
     # and both sides of the verify join) — persist so the hashing runs
     # once, not once per branch (measured 1.5-2x on the sf0.1 corpus)
-    base = _tracked_persist(shingled(df, col, id_col, shingle_n))
+    base = persist(shingled(df, col, id_col, shingle_n))
     sizes = base.select("id", F.size("sh").alias("sz"))
     inv = base.select("id", F.explode("sh").alias("s"))
 
@@ -420,7 +353,7 @@ def simhash_dedup(
         sim = term if sim is None else sim.bitwiseXOR(term)
     # the bit votes feed BOTH sides of the band self-join — persist the
     # fingerprints so the votes run once per row, not twice
-    fp = _tracked_persist(votes.select("id", sim.alias("simhash")))
+    fp = persist(votes.select("id", sim.alias("simhash")))
     bands = fp.select(
         "id",
         "simhash",

@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
 from .normalize import LINKABLE_KINDS, norm_col
-
 
 
 def _hint(hint_broadcast: bool):
@@ -31,15 +31,6 @@ def _hint(hint_broadcast: bool):
     #2) and AQE picks the strategy from real sizes."""
     return F.broadcast if hint_broadcast else (lambda df: df)
 
-
-def _ckpt(df: DataFrame, ckpts: list | None) -> DataFrame:
-    """Eager localCheckpoint; registered in ``ckpts`` when the caller
-    (the pipeline) wants to free the blocks at end of run — long-lived
-    sessions must not accumulate checkpoint storage."""
-    df = df.localCheckpoint(eager=True)
-    if ckpts is not None:
-        ckpts.append(df)
-    return df
 
 def entity_tables(
     mentions: DataFrame, labels: DataFrame
@@ -144,7 +135,6 @@ def incremental_outputs(
     mapping: DataFrame,
     prior_map: DataFrame,
     changed: DataFrame,
-    ckpts: list | None = None,
     hint_broadcast: bool = True,
 ) -> tuple[dict[str, DataFrame], DataFrame, DataFrame]:
     """Affected-group splice: recompute ONLY the output groups an ingest
@@ -186,12 +176,12 @@ def incremental_outputs(
         mapping.join(B(pending_norms), "norm", "left_semi")
         .select("entity_id").distinct()
     )
-    affected_ids = _ckpt(
-        prior_ids.union(new_ids).union(pending_ids).distinct(), ckpts)
+    affected_ids = checkpoint(
+        prior_ids.union(new_ids).union(pending_ids).distinct())
 
     entities_out, aliases_out = _splice_entities(
         old_entities, old_aliases, mentions, triples_raw, mapping,
-        affected_ids, ckpts, hint_broadcast=hint_broadcast)
+        affected_ids, hint_broadcast=hint_broadcast)
 
     # ---- triples: affected group keys -----------------------------------
     labels_stable = mapping.select(
@@ -224,8 +214,8 @@ def incremental_outputs(
         keys_b_old.join(B(absorbed_to_new), "obj")
         .select("subj", "pred", F.col("new_id").alias("obj")).distinct()
     )
-    drop_keys = _ckpt(
-        keys_a.union(keys_b_old).union(keys_b_new).distinct(), ckpts)
+    drop_keys = checkpoint(
+        keys_a.union(keys_b_old).union(keys_b_new).distinct())
 
     triples_out = _splice_triples(
         old_triples, triples_raw, mapping, drop_keys,
@@ -245,7 +235,6 @@ def _splice_entities(
     triples_raw: DataFrame,
     mapping: DataFrame,
     affected_ids: DataFrame,
-    ckpts: list | None = None,
     hint_broadcast: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Recompute the entity/alias groups of ``affected_ids`` from the
@@ -254,8 +243,8 @@ def _splice_entities(
     with no surviving members simply vanishes (dropped, nothing
     recomputed)."""
     B = _hint(hint_broadcast)
-    members = _ckpt(mapping.join(
-        B(affected_ids), "entity_id", "left_semi"), ckpts)
+    members = checkpoint(mapping.join(
+        B(affected_ids), "entity_id", "left_semi"))
     labels_aff = members.select(
         "norm", F.col("entity_id").alias("component"))
     aff_mentions = mentions.join(
@@ -337,7 +326,6 @@ def retraction_outputs(
     removed_raw: DataFrame,
     mapping: DataFrame,
     prior_map: DataFrame,
-    ckpts: list | None = None,
     hint_broadcast: bool = True,
 ) -> tuple[dict[str, DataFrame], DataFrame, DataFrame]:
     """Retraction analog of ``incremental_outputs``: recompute only the
@@ -366,26 +354,27 @@ def retraction_outputs(
         .select(norm_col("obj").alias("norm"))
         .filter(F.length("norm") > 0).distinct()
     )
-    moved = _ckpt(
+    moved = checkpoint(
         prior_map.join(mapping.withColumnsRenamed(
             {"entity_id": "new_id"}), "norm")
-        .filter(F.col("entity_id") != F.col("new_id")), ckpts)
-    old_ids = _ckpt(
+        .filter(F.col("entity_id") != F.col("new_id")))
+    old_ids = checkpoint(
         prior_map.join(B(affected_norms), "norm", "left_semi")
         .select("entity_id")
         .union(moved.select("entity_id"))
-        .distinct(), ckpts)
+        .distinct())
     new_ids = (
         mapping.join(B(affected_norms), "norm", "left_semi")
         .select("entity_id")
         .union(moved.select(F.col("new_id").alias("entity_id")))
         .distinct()
     )
-    affected_ids = _ckpt(old_ids.union(new_ids).distinct(), ckpts)
+    affected_ids = checkpoint(
+        old_ids.union(new_ids).distinct())
 
     entities_out, aliases_out = _splice_entities(
         old_entities, old_aliases, mentions, remaining_raw, mapping,
-        affected_ids, ckpts, hint_broadcast=hint_broadcast)
+        affected_ids, hint_broadcast=hint_broadcast)
 
     prior_stable = prior_map.select(
         "norm", F.col("entity_id").alias("component"))
@@ -405,8 +394,8 @@ def retraction_outputs(
         keys_b_old.join(B(old_to_new), "obj")
         .select("subj", "pred", F.col("new_id").alias("obj")).distinct()
     )
-    drop_keys = _ckpt(
-        keys_a.union(keys_b_old).union(keys_b_new).distinct(), ckpts)
+    drop_keys = checkpoint(
+        keys_a.union(keys_b_old).union(keys_b_new).distinct())
     triples_out = _splice_triples(
         old_triples, remaining_raw, mapping, drop_keys,
         hint_broadcast=hint_broadcast)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_half_up
+from ..session import Scope, persist
+from ..sources.tables import restore_aside, swap_in
 
 
 def _dot(a, b):
@@ -245,12 +247,12 @@ def kmeans_train(
     At 100 TB this is the standard shape — only centroids ever leave the
     executors."""
     v = F.col(vec_col).cast("array<double>")
-    staged = df.select(
-        F.col(id_col).alias("_id"),
-        v.alias("_kv"),
-        F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5))).alias("_vq"),
-    ).persist()
-    try:
+    with Scope():
+        staged = persist(df.select(
+            F.col(id_col).alias("_id"),
+            v.alias("_kv"),
+            F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5))).alias("_vq"),
+        ))
         first = staged.select("_vq").first()
         if first is None:
             raise ValueError("kmeans_train: empty input")
@@ -282,8 +284,6 @@ def kmeans_train(
                     float(r[f"s{j}"]) / denom for j in range(dim)
                 ]
         return cents
-    finally:
-        staged.unpersist()
 
 
 def kmeans_parallel_init(
@@ -308,8 +308,9 @@ def kmeans_parallel_init(
     broadcast-join pass + one 1-row agg; candidates only ever leave the
     executors."""
     v = F.col(vec_col).cast("array<double>")
-    staged = df.select(F.col(id_col).alias("_id"), v.alias("_kv")).persist()
-    try:
+    with Scope():
+        staged = persist(
+            df.select(F.col(id_col).alias("_id"), v.alias("_kv")))
         first_row = (
             staged.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
             .limit(1)
@@ -372,8 +373,6 @@ def kmeans_parallel_init(
             chosen.append(seeds[pad % len(seeds)])
             pad += 1
         return chosen
-    finally:
-        staged.unpersist()
 
 
 def ivf_topk(
@@ -391,6 +390,15 @@ def ivf_topk(
     assign_cells / the DuckDB oracle, so the probed cell set is identical
     across engines (unrounded doubles could order two near-equal cells
     differently)."""
+    probe_cells = _probe_cells(query_vec, centroids, n_probe)
+    celled = assign_cells(data, centroids, vec_col, n_probe=1)
+    cand = celled.filter(F.col("cell").isin(probe_cells))
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
+
+
+def _probe_cells(query_vec, centroids, n_probe: int) -> list[int]:
+    """The n_probe cells nearest the query, driver-side, by round6(cosine)
+    with ties to the lowest cell."""
     import math
 
     def cos(a, b):
@@ -400,14 +408,20 @@ def ivf_topk(
         raw = dot / (na * nb) if na and nb else 0.0
         return math.floor(raw * 1e6 + 0.5) / 1e6
 
-    order = sorted(
-        range(len(centroids)),
-        key=lambda i: (-cos(query_vec, centroids[i]), i),
-    )
-    probe_cells = order[:n_probe]
-    celled = assign_cells(data, centroids, vec_col, n_probe=1)
-    cand = celled.filter(F.col("cell").isin(probe_cells))
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
+    return sorted(range(len(centroids)),
+                  key=lambda i: (-cos(query_vec, centroids[i]), i))[:n_probe]
+
+
+def _ivf_centroids(spark, path: str) -> list[list[float]]:
+    """Open a materialized IVF index: finish a rebuild swap a crash
+    interrupted (tables.restore_aside), then read the centroids in cell
+    order."""
+    restore_aside(path)
+    return [
+        list(r["cvec"])
+        for r in sorted(spark.read.parquet(f"{path}/centroids").collect(),
+                        key=lambda r: r["cell"])
+    ]
 
 
 def build_ivf_index(
@@ -448,11 +462,12 @@ def rebuild_ivf_index(
 ) -> dict:
     """Act on the drift gate (round-5 verdict #7): re-train k-means on
     the ACCUMULATED corpus read back from the cell partitions, rebuild
-    the cell layout, and atomically swap it in (the TableIO aside-swap
-    pattern: the new index is staged completely beside the old one, the
-    swap is two renames, and every instant has a complete index on
-    disk). ``k`` defaults to the constant-cell-size rule (rows // 128,
-    min 16) — the 100 TB design scales cell count with the corpus.
+    the cell layout, and atomically swap it in (tables.swap_in, TableIO's
+    aside-swap: the new index is staged completely beside the old one,
+    and every instant has a complete index on disk — every IVF opener
+    restores the aside when a crash interrupted the swap). ``k``
+    defaults to the constant-cell-size rule (rows // 128, min 16) — the
+    100 TB design scales cell count with the corpus.
 
     Deterministic: kmeans_train is md5-seeded with integer-quantized
     sums, so the rebuilt index is bit-equal to a fresh
@@ -464,6 +479,7 @@ def rebuild_ivf_index(
     import time
     import uuid
 
+    restore_aside(path)
     corpus = spark.read.parquet(f"{path}/cells").select(id_col, vec_col)
     n = corpus.count()
     if k is None:
@@ -477,10 +493,7 @@ def rebuild_ivf_index(
     with open(os.path.join(tmp, "drift.jsonl"), "a") as f:
         f.write(json.dumps({"rebuilt": True, "rows": n, "k": k,
                             "ts": time.time()}) + "\n")
-    aside = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, aside)
-    os.rename(tmp, path)
-    shutil.rmtree(aside, ignore_errors=True)
+    swap_in(tmp, path)
     for sub in ("cells", "centroids", "stats"):
         spark.catalog.refreshByPath(f"{path}/{sub}")
     return {"rows": n, "k": k}
@@ -522,11 +535,7 @@ def append_to_ivf_index(
     import os
 
     spark = df.sparkSession
-    cents = [
-        list(r["cvec"])
-        for r in sorted(spark.read.parquet(f"{path}/centroids").collect(),
-                        key=lambda r: r["cell"])
-    ]
+    cents = _ivf_centroids(spark, path)
     assigned = assign_cells(df, cents, vec_col=vec_col, n_probe=1)
     (assigned.select("cell", id_col, F.col(vec_col).cast("array<double>")
                      .alias(vec_col))
@@ -582,22 +591,8 @@ def ivf_topk_indexed(
     listing — verify with .explain(): PartitionFilters, not a full scan).
     Results are identical to ivf_topk over the same centroids (shared
     oracle)."""
-    import math
-
-    cents = {
-        r["cell"]: list(r["cvec"])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        raw = dot / (na * nb) if na and nb else 0.0
-        return math.floor(raw * 1e6 + 0.5) / 1e6
-
-    order = sorted(cents, key=lambda c: (-cos(query_vec, cents[c]), c))
-    probe_cells = [int(c) for c in order[:n_probe]]
+    probe_cells = _probe_cells(query_vec, _ivf_centroids(spark, path),
+                               n_probe)
     cand = spark.read.parquet(f"{path}/cells").filter(
         F.col("cell").isin(probe_cells)
     )
@@ -623,13 +618,7 @@ def ivf_topk_per_probe_indexed(
     selects are pruned by the semi-join pushed into the partitioned scan;
     a batch that touches every cell reads everything — correct, that IS
     its working set."""
-    cents = [
-        list(r["cvec"])
-        for r in sorted(
-            spark.read.parquet(f"{path}/centroids").collect(),
-            key=lambda r: r["cell"],
-        )
-    ]
+    cents = _ivf_centroids(spark, path)
     p = assign_cells(probes, cents, vec_col=vec_col, n_probe=n_probe).select(
         "cell",
         F.col(id_col).alias("probe_id"),

@@ -13,13 +13,176 @@ harmless at local[32]):
 Iceberg: if the Iceberg runtime jars are on the classpath we configure a
 hadoop catalog under the warehouse; otherwise gondar_spark.sources.tables
 falls back to parquet + snapshot manifests behind the same interface.
+
+Cache and checkpoint lifetime: every persist and localCheckpoint in the
+package goes through ``Scope`` (below) — the one owner of executor
+storage for a pipeline run, a retraction, a CC call, a dedup query or a
+declared query.
 """
 
 from __future__ import annotations
 
+import contextvars
+import logging
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# the root scope's bound for callers that never call release_caches():
+# beyond this many outstanding PERSISTS the oldest is force-unpersisted
+# (logged). A dropped persisted Dataset is never auto-freed — the SQL
+# CacheManager holds entries until unpersist/clearCache regardless of
+# Python references — so the cap strictly improves the untracked case.
+# Checkpoints neither count nor get evicted: a live plan may still read
+# their blocks, and unlike a persist they cannot be recomputed.
+MAX_LIVE_CACHES = 16
+
+_CURRENT: contextvars.ContextVar[Scope | None] = contextvars.ContextVar(
+    "gondar_scope", default=None)
+
+
+def _rdd_id(df: DataFrame) -> int | None:
+    """A localCheckpoint's RDD id straight off the plan (LogicalRDD.rdd.id)
+    — NOT a before/after diff of all persistent RDDs, which would capture
+    (and later free) checkpoints created concurrently by OTHER driver
+    threads in a shared session."""
+    try:
+        return int(df._jdf.queryExecution().analyzed().rdd().id())
+    except Exception:  # plan shape changed: skip cleanup, never misfree
+        return None
+
+
+class Scope:
+    """Owns the caches and checkpoints created while it is open, and frees
+    them all on exit. ``with Scope():`` makes it the innermost scope of
+    the calling thread (a ContextVar); ``Scope.current()`` is that scope,
+    or the process ROOT scope when none is open. The module functions
+    ``persist``/``checkpoint``/``release`` act on ``Scope.current()``, so
+    an operator whose returned plan reads its own persist or checkpoint
+    leaves the lifetime to its caller's ``with``; ``release_caches()``
+    drains the root scope (bench.py and tools/check_oracles.py call it
+    between queries).
+
+    Freeing: ``DataFrame.unpersist()`` for persists; for checkpoints,
+    ``getPersistentRDDs().get(id).unpersist(False)`` — DataFrame.unpersist
+    only touches CacheManager entries, which localCheckpoint storage is
+    not, and the context cleaner frees it only on JVM GC. Entries are
+    shared across threads (the root especially): all mutation happens
+    under the scope's lock, and every free is individually try/except'd
+    — an entry whose session has stopped raises, and one dead entry must
+    not leak the live rest."""
+
+    def __init__(self) -> None:
+        # DataFrame (persist) | (JavaSparkContext, rdd id) (checkpoint);
+        # checkpoints hold only the id so the cleaner can still GC them
+        self._entries: list = []
+        self._lock = threading.Lock()
+        self._token = None
+
+    @staticmethod
+    def current() -> Scope:
+        return _CURRENT.get() or _ROOT
+
+    def __enter__(self) -> Scope:
+        self._token = _CURRENT.set(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _CURRENT.reset(self._token)
+        self.close()
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        evict = None
+        with self._lock:
+            self._entries.append(df)
+            if self is _ROOT:
+                persists = [e for e in self._entries if not isinstance(e, tuple)]
+                if len(persists) > MAX_LIVE_CACHES:
+                    evict = persists[0]
+                    self._entries = [e for e in self._entries
+                                     if e is not evict]
+        if evict is not None:
+            logging.getLogger(__name__).warning(
+                "root cache scope over %d persists — force-releasing the "
+                "oldest; call release_caches() between queries",
+                MAX_LIVE_CACHES,
+            )
+            _free(evict)
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eager localCheckpoint (runs the job now: any ``observe`` on
+        ``df`` has fired when this returns)."""
+        df = df.localCheckpoint(eager=True)
+        rid = _rdd_id(df)
+        if rid is not None:
+            with self._lock:
+                self._entries.append((df.sparkSession.sparkContext._jsc, rid))
+        return df
+
+    def release(self, df: DataFrame) -> None:
+        """Free one registered persist or checkpoint before scope exit."""
+        rid = None if any(e is df for e in self._entries) else _rdd_id(df)
+        with self._lock:
+            hit = [e for e in self._entries if e is df or (
+                rid is not None and isinstance(e, tuple) and e[1] == rid)]
+            self._entries = [e for e in self._entries
+                             if not any(e is h for h in hit)]
+        for e in hit:
+            _free(e)
+
+    def close(self) -> int:
+        """Free every entry; returns how many were freed (entries whose
+        session died are dropped, logged)."""
+        with self._lock:
+            drained, self._entries = self._entries, []
+        return sum(_free(e) for e in drained)
+
+
+def _free(entry) -> bool:
+    try:
+        if isinstance(entry, tuple):
+            jsc, rid = entry
+            rdd = jsc.getPersistentRDDs().get(rid)
+            if rdd is not None:
+                rdd.unpersist(False)
+        else:
+            entry.unpersist()
+        return True
+    except Exception:  # stopped session / dead JVM handle — skip, no leak
+        logging.getLogger(__name__).warning(
+            "free failed (stopped session?) — dropping scope entry",
+            exc_info=True,
+        )
+        return False
+
+
+_ROOT = Scope()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, registered with the innermost open scope."""
+    return Scope.current().persist(df)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint, registered with the innermost open scope."""
+    return Scope.current().checkpoint(df)
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df``'s persist or checkpoint from the innermost open scope
+    now, before the scope exits."""
+    Scope.current().release(df)
+
+
+def release_caches() -> int:
+    """Free everything registered with the root scope since the last call
+    (operator-owned persists and checkpoints made outside any ``with
+    Scope()``). Safe while no returned plan is still being consumed."""
+    return _ROOT.close()
 
 
 def build_session(

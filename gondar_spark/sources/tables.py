@@ -27,6 +27,34 @@ from ..errors import TableFormatError
 _COMMIT = "_gondar_commit.json"
 
 
+def swap_in(tmp: str, final: str) -> None:
+    """Crash-safe replace of directory ``final`` by the fully staged
+    ``tmp``: the old copy moves ASIDE (rename, atomic) rather than
+    rmtree-then-rename — a crash between those two steps would leave NO
+    copy. With the aside, every instant has a complete directory on disk
+    (``final`` or ``final.old-<id>``); restore_aside() / TableIO._recover
+    finish an interrupted swap."""
+    aside = None
+    if os.path.exists(final):
+        aside = final + ".old-" + uuid.uuid4().hex[:8]
+        os.rename(final, aside)
+    os.rename(tmp, final)
+    if aside is not None:
+        shutil.rmtree(aside, ignore_errors=True)
+
+
+def restore_aside(final: str) -> None:
+    """Undo a swap_in that died between its two renames: ``final`` is
+    missing and its ``.old-<id>`` aside is the last complete copy."""
+    if os.path.exists(final):
+        return
+    parent, base = os.path.split(os.path.abspath(final))
+    for entry in sorted(os.listdir(parent)):
+        if entry.startswith(base + ".old-"):
+            os.rename(os.path.join(parent, entry), final)
+            return
+
+
 class TableIO:
     def __init__(self, spark: SparkSession, warehouse: str,
                  use_iceberg: bool | None = None) -> None:
@@ -140,19 +168,9 @@ class TableIO:
             }
             with open(os.path.join(tmp, _COMMIT), "w") as f:
                 json.dump(commit, f)
-            # crash-safe swap: move the old snapshot ASIDE (rename, atomic)
-            # rather than rmtree-then-rename — a crash between those two
-            # steps would leave NO committed snapshot. With the aside, every
-            # instant has either the old or the new snapshot committed;
             # recovery (_recover, run at init) restores the aside if the
-            # swap never happened and deletes it if it did.
-            aside = None
-            if os.path.exists(final):
-                aside = final + ".old-" + uuid.uuid4().hex[:8]
-                os.rename(final, aside)
-            os.rename(tmp, final)
-            if aside is not None:
-                shutil.rmtree(aside, ignore_errors=True)
+            # swap never happened and deletes it if it did
+            swap_in(tmp, final)
             # a base write REPLACES the table: any append segments from
             # earlier incremental runs are now stale and must not be
             # unioned back in by read() — a forced full re-run would
@@ -306,13 +324,7 @@ class TableIO:
                   "superseded_segments": self._raw_segments(name)}
         with open(os.path.join(tmp, _COMMIT), "w") as f:
             json.dump(commit, f)
-        aside = None
-        if os.path.exists(final):
-            aside = final + ".old-" + uuid.uuid4().hex[:8]
-            os.rename(final, aside)
-        os.rename(tmp, final)
-        if aside is not None:
-            shutil.rmtree(aside, ignore_errors=True)
+        swap_in(tmp, final)
         return commit
 
     # ---- read --------------------------------------------------------------

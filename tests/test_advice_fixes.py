@@ -266,17 +266,17 @@ def test_zero_copy_incremental_hashes_only_new_files(spark, tmp_path):
     assert pipe.io.read("source_hashes").count() == n0 + 1
 
 
-def test_tracked_persist_cap_force_releases_oldest(spark, monkeypatch):
-    from gondar_spark.operators import dedup
+def test_root_scope_cap_force_releases_oldest(spark, monkeypatch):
+    from gondar_spark import session
 
-    dedup.release_caches()
-    monkeypatch.setattr(dedup, "MAX_LIVE_CACHES", 2)
-    dfs = [spark.range(10 + i) for i in range(3)]
-    for d in dfs:
-        dedup._tracked_persist(d)
-    assert len(dedup._LIVE_CACHES) == 2  # oldest force-released
-    assert dedup._LIVE_CACHES[0] is not dfs[0]
-    dedup.release_caches()
+    session.release_caches()
+    monkeypatch.setattr(session, "MAX_LIVE_CACHES", 2)
+    root = session.Scope.current()
+    dfs = [root.persist(spark.range(10 + i)) for i in range(3)]
+    assert len(root._entries) == 2  # oldest force-released
+    assert root._entries[0] is not dfs[0]
+    assert dfs[0].storageLevel.useMemory is False
+    session.release_caches()
 
 
 def test_top_k_per_group_default_tiebreak_skips_map_columns(spark):

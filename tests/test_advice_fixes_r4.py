@@ -152,6 +152,7 @@ def test_release_caches_survives_dead_entries(spark):
     """One entry whose unpersist raises (stopped session, dead handle)
     must not abort the loop and leak the rest."""
     from gondar_spark.operators import dedup
+    from gondar_spark.session import Scope
 
     class Dead:
         def unpersist(self):
@@ -159,10 +160,11 @@ def test_release_caches_survives_dead_entries(spark):
 
     live = spark.range(10).persist()
     dedup.release_caches()  # drain whatever earlier tests left
-    with dedup._lock():
-        dedup._LIVE_CACHES.extend([Dead(), live])
+    root = Scope.current()
+    with root._lock:
+        root._entries.extend([Dead(), live])
     assert dedup.release_caches() == 1  # the live one released, Dead dropped
-    assert not dedup._LIVE_CACHES
+    assert not root._entries
     assert live.storageLevel.useMemory is False
 
 

@@ -27,10 +27,13 @@ from gondar_spark.sources.tables import TableIO
 
 
 def test_caches_lock_created_at_import():
-    from gondar_spark.operators import dedup
+    """The root cache scope and its lock exist from import — a lazily
+    installed lock is itself a check-then-set race."""
+    from gondar_spark.session import Scope
 
-    assert isinstance(dedup._CACHES_LOCK, type(threading.Lock()))
-    assert dedup._lock() is dedup._CACHES_LOCK
+    root = Scope.current()
+    assert isinstance(root._lock, type(threading.Lock()))
+    assert Scope.current() is root
 
 
 def test_superseded_segments_survive_crash_mid_prune(spark, tmp_warehouse,

@@ -337,3 +337,44 @@ def test_ivf_drift_gate_rebuild_swaps_bitequal_index(spark, tmp_path):
     b = [r.asDict() for r in
          ivf_topk_indexed(spark, fresh, q, k=5, n_probe=2).collect()]
     assert a == b and len(a) == 5
+
+
+def test_ivf_rebuild_crash_between_renames_recovers(spark, tmp_path,
+                                                    monkeypatch):
+    """A crash between the rebuild swap's two renames leaves no index at
+    ``path`` — only its ``.old-*`` aside. The next opener restores the
+    aside, so a query returns exactly the pre-rebuild results."""
+    import os
+
+    from gondar_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_topk_indexed,
+        rebuild_ivf_index,
+    )
+
+    base = _clustered(spark, n=60)
+    path = str(tmp_path / "idx")
+    build_ivf_index(base, kmeans_train(base, k=3, n_iter=2), path)
+    q = [1.0, 0.0, 0.0]
+    before = [r.asDict() for r in
+              ivf_topk_indexed(spark, path, q, k=5, n_probe=1).collect()]
+
+    real_rename = os.rename
+    calls = []
+
+    def crash_on_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("simulated crash")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with pytest.raises(OSError, match="simulated crash"):
+        rebuild_ivf_index(spark, path, k=2)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(path)
+
+    after = [r.asDict() for r in
+             ivf_topk_indexed(spark, path, q, k=5, n_probe=1).collect()]
+    assert after == before
+    assert spark.read.parquet(f"{path}/centroids").count() == 3  # old k

@@ -309,11 +309,13 @@ def test_cc_matches_union_find(spark, edges):
 
 
 def test_cc_frees_previous_round_checkpoints(spark):
-    """After CC converges, at most TWO checkpoint block sets remain in
-    executor storage: the final round (which the returned plan reads)
-    and the local-contraction node->root mapping (ditto) — earlier
-    rounds are freed explicitly, not left to GC."""
+    """Earlier rounds are freed explicitly as the loop goes, and the
+    blocks the returned plan reads (the final round, the local-
+    contraction node->root mapping) live exactly as long as the caller's
+    scope: none remain in executor storage once it exits. Both the
+    driver-solve and the distributed star-loop paths are covered."""
     from gondar_spark.operators.cc import connected_components
+    from gondar_spark.session import Scope
 
     sc = spark.sparkContext
 
@@ -324,10 +326,13 @@ def test_cc_frees_previous_round_checkpoints(spark):
     # chain topology -> several rounds
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(300)]
     df = spark.createDataFrame(edges, ["norm_a", "norm_b"])
-    labels = connected_components(df, max_iter=30)
-    assert labels.count() == 301
-    leftover = persistent() - before
-    assert len(leftover) <= 2, leftover
+    for solve_max in (200_000, 0):
+        with Scope():
+            labels = connected_components(df, max_iter=30,
+                                          driver_solve_max=solve_max)
+            assert labels.count() == 301
+        leftover = persistent() - before
+        assert not leftover, (solve_max, leftover)
 
 
 def test_cc_accelerated_equals_plain(spark):

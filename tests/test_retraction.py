@@ -159,3 +159,32 @@ def test_retract_crash_replay(spark, tmp_path):
 
     # a second retract with the same corpus is a clean no-op
     assert pipe.retract(source_df=remaining)["removed_files"] == 0
+
+
+def test_retract_refuses_old_link_store_layout_before_writing(spark,
+                                                              tmp_path):
+    """A link_signatures store without the ``_np`` prefix column (the
+    pre-partitioning layout) fails retract() up front with StageError —
+    before this check the overlapped store compaction failed on the
+    missing column AFTER mentions and edges were already rewritten.
+    Every table's commit manifest must be untouched."""
+    import os
+
+    from gondar_spark.errors import StageError
+
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="o1",
+                    durable_link_state=True)
+    pipe = Pipeline(spark, cfg)
+    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 6])))
+    pipe.io.write(pipe.io.read("link_signatures").drop("_np"),
+                  "link_signatures")
+
+    def manifests():
+        return {t: pipe.io.commit_meta(t)
+                for t in sorted(os.listdir(cfg.warehouse))
+                if pipe.io.exists(t)}
+
+    before = manifests()
+    with pytest.raises(StageError, match="_np"):
+        pipe.retract(source_df=_src(spark, _win_files([0, 2, 6])))
+    assert manifests() == before

@@ -131,12 +131,15 @@ def test_dedup_release_caches_unpersists(spark):
         [(i, f"tok{i} tok{i+1} tok{i+2} shared words here") for i in range(30)],
         ["doc_id", "text"],
     )
+    from gondar_spark.session import Scope
+
     dedup.release_caches()  # drain any leftovers from other tests
     dedup.minhash_lsh_pairs(df).collect()
     dedup.ngram_jaccard_pairs(df).collect()
-    assert len(dedup._LIVE_CACHES) == 2
+    root = Scope.current()
+    assert len(root._entries) == 2
     assert dedup.release_caches() == 2
-    assert not dedup._LIVE_CACHES
+    assert not root._entries
 
 
 def test_asof_bucketed_splits_hot_key_windows(spark):

@@ -24,9 +24,8 @@ from gondar_spark.operators.cc import (  # noqa: E402
     _checkpoint_with_checksum,
     _large_star,
     _small_star,
-    _unpersist_rdd_ids,
 )
-from gondar_spark.session import build_session  # noqa: E402
+from gondar_spark.session import Scope, build_session, release  # noqa: E402
 
 
 def chain_hub_edges(spark, n_edges: int):
@@ -44,31 +43,32 @@ def chain_hub_edges(spark, n_edges: int):
 
 
 def run(spark, n_edges: int) -> dict:
-    sc = spark.sparkContext
     e = (
         chain_hub_edges(spark, n_edges)
         .select(F.col("norm_a").alias("src"), F.col("norm_b").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    t0 = time.time()
-    e, prev, prev_ids = _checkpoint_with_checksum(e)
-    rounds = []
-    for _ in range(40):
-        e = _small_star(_large_star(e))
-        e, cur, new_ids = _checkpoint_with_checksum(e)
-        _unpersist_rdd_ids(sc, prev_ids)
-        prev_ids = new_ids
-        rounds.append(cur[0])  # intermediate edge count this round
-        if cur == prev:
-            break
-        prev = cur
-    wall = round(time.time() - t0, 3)
-    labels = e.select(F.col("src").alias("norm"), F.col("dst").alias("component"))
-    roots = e.select(F.col("dst").alias("norm")).distinct().withColumn(
-        "component", F.col("norm"))
-    n_labels = labels.union(roots).distinct().count()
-    _unpersist_rdd_ids(sc, prev_ids)
+    # every round's checkpoint lands in this scope; the previous round is
+    # released as soon as the next one materializes, the last on exit
+    with Scope():
+        t0 = time.time()
+        e, prev = _checkpoint_with_checksum(e)
+        rounds = []
+        for _ in range(40):
+            nxt, cur = _checkpoint_with_checksum(_small_star(_large_star(e)))
+            release(e)
+            e = nxt
+            rounds.append(cur[0])  # intermediate edge count this round
+            if cur == prev:
+                break
+            prev = cur
+        wall = round(time.time() - t0, 3)
+        labels = e.select(F.col("src").alias("norm"),
+                          F.col("dst").alias("component"))
+        roots = e.select(F.col("dst").alias("norm")).distinct().withColumn(
+            "component", F.col("norm"))
+        n_labels = labels.union(roots).distinct().count()
     return {
         "edges": n_edges,
         "wall_s": wall,
