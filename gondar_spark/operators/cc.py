@@ -17,6 +17,16 @@ already-decreasing edges, and _min_jump's dedup folds into the round-
 final distinct (its consumer aggregates with min, which is duplicate-
 insensitive). Measured: 100k-edge bench 13.8s -> 3.7s warm.
 
+One gate, ``driver_solve_max`` (edge rows), is checked twice: first on
+the raw edge set, then on the contracted boundary graph. An edge set
+within the gate is fetched in one bounded job and solved by union-find
+on the driver (_driver_solve); only above it do the contraction and
+then the star loop run. Link graphs of a ~1 MB corpus (16 to ~1.4k
+edges) thus skip the Python-worker contraction, its checkpoint and the
+label join: the pipeline's labels stage (CC + its write) went from 9
+to 2 Spark jobs and 3.8-5.9 to 0.6-0.9 CPU-s per build (local[4],
+perfbench build_linked corpus).
+
 Scale notes: `localCheckpoint` after EVERY round truncates the lineage —
 measured on a 100k-edge graph: every-round 24s, every-2nd 26s, every-3rd
 82s (re-planning stacked iterations costs far more than checkpointing).
@@ -188,6 +198,32 @@ def _union_find(rows) -> dict:
     return {n: find(n) for n in parent}
 
 
+def _driver_solve(e: DataFrame, max_rows: int, key: str) -> DataFrame | None:
+    """Labels (``key``, component) of edge set ``e`` (src, dst), solved by
+    union-find on the driver when ``e`` has at most ``max_rows`` rows;
+    None (nothing solved) above that, or when ``max_rows`` <= 0. One
+    bounded fetch decides and collects at once, so the gate is also the
+    driver-memory bound. Arrow both ways: ``toPandas`` is one job where
+    ``collect`` of a limit is two, and at 200k edges the round trip
+    measured 1.0-1.7 s vs 1.9-2.5 s for Row collect + list
+    createDataFrame. The result is a single-partition local DataFrame —
+    no Python worker, checkpoint or shuffle. Labels equal the star
+    loop's: union-find with lexicographic-min roots IS its fixpoint."""
+    import pandas as pd
+
+    if max_rows <= 0:
+        return None
+    pdf = e.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
+        return None
+    comp = _union_find(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({key: list(comp), "component": list(comp.values())},
+                     dtype=object),
+        f"{key} string, component string",
+    ).coalesce(1)
+
+
 def _contract_partitions(it):
     """Per-partition union-find over the edge rows this task sees (the
     local-contraction optimization from the Kiveris et al. paper): emits
@@ -285,11 +321,22 @@ def connected_components(
     bound as a sort buffer); pass local_contract=False to fall back to
     the pure-shuffle loop.
 
+    ``driver_solve_max`` is one gate, checked on the raw edges and then
+    on the contracted edges: an edge set of at most that many rows is
+    solved on the driver in one bounded fetch (_driver_solve), skipping
+    the contraction and the star loop. 0 turns the driver path off
+    (the contraction and the star loop always run — tests and
+    tools/bench_cc_deep.py use it to keep those paths exercised on
+    small graphs).
+
     Callers union in singleton nodes afterwards (materialize.py)."""
     e = (
         edges.select(F.col("norm_a").alias("src"), F.col("norm_b").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
+    labels = _driver_solve(e, driver_solve_max, "norm")
+    if labels is not None:
+        return labels
     if not local_contract:
         return _star_loop(e, max_iter, checkpoint, accelerate)
     # (node, root) pairs; a node appearing in k tasks has k rows. The
@@ -307,20 +354,9 @@ def connected_components(
         .filter(F.col("src") != F.col("dst"))
     )
     # the contracted boundary graph is usually TINY (999 edges for the
-    # 100k-edge bench topology); below the gate, solve it on the driver
-    # (bounded collect — the gate is the bound) instead of paying
-    # ~1 s/round of stage latency in the distributed loop. Above the
-    # gate — a genuinely large boundary graph at cluster scale — the
-    # star loop runs as before. Labels identical either way (union-find
-    # with lexicographic-min roots IS the loop's fixpoint).
-    n_ce = ce.count()
-    spark = edges.sparkSession
-    if n_ce <= driver_solve_max:
-        comp = _union_find(
-            [(r["src"], r["dst"]) for r in ce.collect()])
-        labels_c = spark.createDataFrame(
-            list(comp.items()) or [], "root string, component string")
-    else:
+    # 100k-edge bench topology): the same gate solves it on the driver
+    labels_c = _driver_solve(ce, driver_solve_max, "root")
+    if labels_c is None:
         labels_c = _star_loop(
             ce, max_iter, checkpoint, accelerate
         ).withColumnRenamed("norm", "root")

@@ -14,9 +14,12 @@ then stops — which is also the production backfill mode.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..errors import StageError
 from ..functions.numeric import round_half_up
 from ..operators.chunk import prepare_extraction_units
 from ..operators.extract import extract_triples, split_extraction
@@ -88,10 +91,15 @@ def run_streaming_kg_ingest(
 
     ``corpus_dir`` accumulates the batches as the pipeline's append-only
     corpus table (at production scale: an Iceberg append per batch).
+    A ``corpus_dir`` holding flat data files is refused up front
+    (StageError, nothing written): the stream adds ``batch_id=``
+    directories beside them, and the partition discovery of the first
+    ingest would then fail after the corpus append.
     Returns the list of processed batch ids."""
     from ..config import JobConfig
     from ..pipeline import Pipeline
 
+    _check_corpus_layout(corpus_dir)
     seen: list[int] = []
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -121,6 +129,24 @@ def run_streaming_kg_ingest(
     )
     q.awaitTermination()
     return seen
+
+
+def _check_corpus_layout(corpus_dir: str) -> None:
+    """StageError when ``corpus_dir`` has data files at its top level —
+    beside ``batch_id=`` directories, or where the stream would add
+    them. Hidden and ``_``-prefixed files (``_SUCCESS``, ``.crc``) are
+    not data."""
+    if not os.path.isdir(corpus_dir):
+        return
+    flat = sorted(
+        n for n in os.listdir(corpus_dir)
+        if not n.startswith(("_", "."))
+        and os.path.isfile(os.path.join(corpus_dir, n)))
+    if flat:
+        raise StageError(
+            f"corpus_dir {corpus_dir!r} holds flat files {flat[:3]} where "
+            "the stream writes batch_id= directories; move them into a "
+            "batch_id= directory or use an empty corpus_dir")
 
 
 def stateful_repo_totals(triple_stream: DataFrame) -> DataFrame:

@@ -215,11 +215,16 @@ def test_candidates_and_scoring_find_cluster_pair(spark):
 
 
 # ------------------------------------------------------------------------ cc
-def _cc(spark, pairs, max_iter=20):
+# every CC test runs at the default gate (small graphs: driver solve) AND
+# with the gate off, so the contraction and the star loop stay exercised
+_GATES = ({}, {"driver_solve_max": 0})
+
+
+def _cc(spark, pairs, max_iter=20, **gate):
     df = spark.createDataFrame(pairs, ["norm_a", "norm_b"])
     return {
         r["norm"]: r["component"]
-        for r in connected_components(df, max_iter).collect()
+        for r in connected_components(df, max_iter, **gate).collect()
     }
 
 
@@ -256,18 +261,24 @@ def test_verify_threshold_policies_differ_at_boundary(spark):
 
 
 def test_cc_chain(spark):
-    labels = _cc(spark, [("b", "c"), ("a", "b"), ("c", "d")])
-    assert labels == {"a": "a", "b": "a", "c": "a", "d": "a"}
+    for gate in _GATES:
+        labels = _cc(spark, [("b", "c"), ("a", "b"), ("c", "d")], **gate)
+        assert labels == {"a": "a", "b": "a", "c": "a", "d": "a"}, gate
 
 
 def test_cc_two_components_and_clique(spark):
-    labels = _cc(spark, [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y")])
-    assert labels == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    for gate in _GATES:
+        labels = _cc(spark, [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y")],
+                     **gate)
+        assert labels == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}, gate
 
 
 def test_cc_empty(spark):
     df = spark.createDataFrame([], "norm_a string, norm_b string")
-    assert connected_components(df).count() == 0
+    for gate in _GATES:
+        labels = connected_components(df, **gate)
+        assert labels.count() == 0, gate
+        assert labels.columns == ["norm", "component"], gate
 
 
 def _union_find(edges):
@@ -303,9 +314,40 @@ def _union_find(edges):
 @settings(max_examples=12, deadline=None)
 def test_cc_matches_union_find(spark, edges):
     pairs = [(f"n{min(a, b):02d}", f"n{max(a, b):02d}") for a, b in edges]
-    got = _cc(spark, pairs)
     want = _union_find(pairs)
-    assert got == want
+    for gate in _GATES:
+        assert _cc(spark, pairs, **gate) == want, gate
+
+
+def test_cc_driver_solve_gate_boundary(spark, monkeypatch):
+    """The gate is inclusive: an edge set of exactly ``driver_solve_max``
+    rows is solved on the driver (no contraction, no MapInPandas in the
+    returned plan); one more row sends it through the contraction. The
+    labels agree with each other and with a Python union-find."""
+    gate = 40
+    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(gate + 1)]
+    calls = []
+    cls = type(spark.range(1))
+    real = cls.mapInPandas
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", spy)
+    got = {}
+    for n in (gate, gate + 1):
+        calls.clear()
+        df = spark.createDataFrame(chain[:n], ["norm_a", "norm_b"])
+        labels = connected_components(df, driver_solve_max=gate)
+        plan = labels._jdf.queryExecution().optimizedPlan().toString()
+        got[n] = {r["norm"]: r["component"] for r in labels.collect()}
+        assert got[n] == _union_find(chain[:n]), n
+        if n == gate:
+            assert not calls and "MapInPandas" not in plan, plan
+        else:
+            assert len(calls) == 1
+    assert got[gate + 1] == {**got[gate], f"n{gate + 1:03d}": "n000"}
 
 
 def test_cc_frees_previous_round_checkpoints(spark):
@@ -353,17 +395,17 @@ def test_cc_accelerated_equals_plain(spark):
         [(f"v{random.randrange(50)}", f"v{random.randrange(50)}")
          for _ in range(120)]
     )
-    for rows in shapes:
+    for rows, gate in ((r, g) for r in shapes for g in _GATES):
         df = spark.createDataFrame(rows, ["norm_a", "norm_b"])
         plain = {
             (r["norm"], r["component"])
-            for r in connected_components(df, accelerate=False).collect()
+            for r in connected_components(df, accelerate=False, **gate).collect()
         }
         fast = {
             (r["norm"], r["component"])
-            for r in connected_components(df, accelerate=True).collect()
+            for r in connected_components(df, accelerate=True, **gate).collect()
         }
-        assert plain == fast and len(fast) > 0
+        assert plain == fast and len(fast) > 0, gate
 
 
 def test_clean_corpus_keeps_keepers_drops_dups(spark):

@@ -11,9 +11,13 @@ recompute — the same contract tests/test_incremental_materialize.py
 pins for batch ingests.
 """
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from gondar_spark.config import JobConfig
+from gondar_spark.errors import StageError
 from gondar_spark.pipeline import Pipeline
 from gondar_spark.streaming.jobs import run_streaming_kg_ingest
 from gondar_spark.synth import SynthConfig, generate_source_df
@@ -93,3 +97,30 @@ def test_streaming_kg_ingest_equals_batch(spark, tmp_path):
     latest = comp.groupBy("norm").agg(
         F.max_by("entity_id", "_seq").alias("eid"))
     assert latest.select("eid").distinct().count() == 1
+
+
+def test_streaming_refuses_flat_files_beside_batch_dirs(spark, tmp_path):
+    """A corpus_dir mixing flat parquet files with batch_id= directories
+    is refused before the stream starts: no batch runs, and neither the
+    warehouse, the checkpoint nor the corpus is touched."""
+    src_dir = str(tmp_path / "src")
+    corpus = tmp_path / "corpus"
+    df = _src(spark, [("w2.py", _win(2)), ("w4.py", _win(4))])
+    df.write.parquet(src_dir)
+    df.write.parquet(str(corpus / "batch_id=0"))
+    df.coalesce(1).write.parquet(str(tmp_path / "flat"))
+    [part] = [n for n in os.listdir(tmp_path / "flat")
+              if n.endswith(".parquet")]
+    os.rename(tmp_path / "flat" / part, corpus / "flat.parquet")
+
+    def listing(d):
+        return sorted((r, tuple(sorted(fs))) for r, _ds, fs in os.walk(d))
+
+    before = listing(corpus)
+    with pytest.raises(StageError, match="flat files"):
+        run_streaming_kg_ingest(
+            spark, src_dir, warehouse=str(tmp_path / "wh"),
+            checkpoint_dir=str(tmp_path / "ckpt"), corpus_dir=str(corpus))
+    assert not (tmp_path / "wh").exists()
+    assert not (tmp_path / "ckpt").exists()
+    assert listing(corpus) == before

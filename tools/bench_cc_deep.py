@@ -5,6 +5,11 @@ size (the payload every round's two groupBy shuffles carry — the honest
 "peak shuffle" proxy: localCheckpoint keeps rounds off the lineage, so
 per-stage shuffle-write bytes track these counts directly).
 
+It also times the public ``connected_components`` with
+``driver_solve_max=0`` (``cc_wall_s``): the gate would otherwise solve
+any graph of up to 200k edges on the driver, and this tool measures the
+distributed path (local contraction + star loop) at every size.
+
 Usage: python tools/bench_cc_deep.py [max_edges=10000000]
 Appends one JSON line per size to stdout; transcribe into
 BENCH/BASELINE.md's CC table.
@@ -24,6 +29,7 @@ from gondar_spark.operators.cc import (  # noqa: E402
     _checkpoint_with_checksum,
     _large_star,
     _small_star,
+    connected_components,
 )
 from gondar_spark.session import Scope, build_session, release  # noqa: E402
 
@@ -69,9 +75,16 @@ def run(spark, n_edges: int) -> dict:
         roots = e.select(F.col("dst").alias("norm")).distinct().withColumn(
             "component", F.col("norm"))
         n_labels = labels.union(roots).distinct().count()
+    with Scope():
+        t0 = time.time()
+        n_cc = connected_components(chain_hub_edges(spark, n_edges),
+                                    max_iter=40, driver_solve_max=0).count()
+        cc_wall = round(time.time() - t0, 3)
+    assert n_cc == n_labels, (n_cc, n_labels)
     return {
         "edges": n_edges,
         "wall_s": wall,
+        "cc_wall_s": cc_wall,
         "rounds": len(rounds),
         "labels": n_labels,
         "round_edge_counts": rounds,
