@@ -258,17 +258,11 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 
 # --- dedup: exact n-gram Jaccard via inverted index --------------------------
 def q_ngram_jaccard_pairs(spark, sf_dir):
-    # prefix_filter=False: the synthetic corpus has a uniformly-hot
-    # vocabulary (the regime the operator docstring calls out), so the
-    # AllPairs prefix machinery (df-ranking shuffle + per-doc window)
-    # costs more than the raw inverted-index join it prunes — measured
-    # 12.1s vs 2.8s on sf0.1, outputs exceptAll-equal both ways (both
-    # paths are EXACT; the choice is per-corpus cost, not semantics).
-    # prefix_filter stays the operator DEFAULT — it is the scale-safe
-    # path for skewed real vocabularies.
+    # the synthetic corpus has a flat vocabulary (posting fan-out ~5), so
+    # the operator picks its raw inverted-index join by itself; both of
+    # its paths are exact
     return ngram_jaccard_pairs(
         _docs_with_planted_dups(spark, sf_dir), threshold=0.5,
-        prefix_filter=False,
     )
 
 

@@ -81,10 +81,6 @@ class JobConfig:
         if self.chunk_lines <= 0 or self.cc_max_iter <= 0:
             raise ConfigError("chunk_lines and cc_max_iter must be positive")
 
-    @property
-    def lsh_rows_per_band(self) -> int:
-        return self.minhash_hashes // self.lsh_bands
-
     @classmethod
     def from_env(cls, **overrides) -> "JobConfig":
         """Build from GONDAR_* env vars (reference loads .env at import,

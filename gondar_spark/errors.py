@@ -35,7 +35,3 @@ class StageError(GondarSparkError):
 
 class TableFormatError(GondarSparkError):
     default_message = "table read/write failed"
-
-
-class ResumeError(GondarSparkError):
-    default_message = "checkpoint/resume state inconsistent"

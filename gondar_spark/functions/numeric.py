@@ -16,9 +16,3 @@ from pyspark.sql import functions as F
 def round_half_up(col: Column, n: int) -> Column:
     k = float(10**n)
     return F.floor(col * k + F.lit(0.5)) / k
-
-
-def round_sql(expr: str, n: int) -> str:
-    """The identical formula as DuckDB SQL text."""
-    k = float(10**n)
-    return f"(floor(({expr}) * {k} + 0.5) / {k})"

@@ -7,15 +7,17 @@ groupBy shuffles. Node ids are strings (normalized mention forms); the
 component label is the MINIMUM member, so canonical ids are
 partition-order independent (determinism rule, SURVEY.md §7).
 
-Round 6: the loop is preceded by a partition-local union-find contraction
+The loop is always preceded by a partition-local union-find contraction
 (the same paper's "local contraction" optimization, _contract_partitions)
 so the global rounds run over the cross-partition boundary graph only —
 one narrow pass + one 2-string-column shuffle replace per-round shuffles
 of the full edge set; identical labels (see connected_components). Each
-round also drops two Exchanges: _small_star skips re-orienting the loop's
-already-decreasing edges, and _min_jump's dedup folds into the round-
-final distinct (its consumer aggregates with min, which is duplicate-
-insensitive). Measured: 100k-edge bench 13.8s -> 3.7s warm.
+round is large-star, the _min_jump path compression, then small-star;
+it carries two fewer Exchanges than the textbook round: _small_star
+never re-orients the loop's already-decreasing edges, and _min_jump's
+dedup folds into the round-final distinct (its consumer aggregates with
+min, which is duplicate-insensitive). Measured: 100k-edge bench 13.8s ->
+3.7s warm.
 
 One gate, ``driver_solve_max`` (edge rows), is checked twice: first on
 the raw edge set, then on the contracted boundary graph. An edge set
@@ -92,8 +94,8 @@ def _min_jump(e: DataFrame) -> DataFrame:
     round; the join key skews toward component minima, which AQE
     skew-join splits. Effect: rounds track ~half the chain depth —
     measured on the 100k-edge chain+hub bench: 10 -> 6 rounds, identical
-    final labels (fuzz-checked against the unaccelerated loop on random
-    graphs, cycles and cliques included)."""
+    final labels (fuzz-checked against union-find on random graphs,
+    cycles and cliques included)."""
     tgt = e.groupBy("src").agg(F.min("dst").alias("_t"))
     return (
         e.join(tgt.withColumnRenamed("src", "dst"), "dst", "left")
@@ -103,32 +105,24 @@ def _min_jump(e: DataFrame) -> DataFrame:
         )
         # no distinct here (one Exchange per round saved): the jump maps
         # each already-distinct large-star edge to exactly one row, so
-        # only duplicate VALUES can appear; the consumer (_small_star
-        # with oriented_input=True) is a groupBy-min (dup-insensitive)
-        # plus a join whose fan-out the round-final distinct dedups.
+        # only duplicate VALUES can appear; the consumer (_small_star) is
+        # a groupBy-min (dup-insensitive) plus a join whose fan-out the
+        # round-final distinct dedups.
     )
 
 
-def _small_star(e: DataFrame, oriented_input: bool = False) -> DataFrame:
-    """Orient edges downward; attach each node's smaller neighbors (and
-    itself) to the minimum of its downward neighborhood.
+def _small_star(e: DataFrame) -> DataFrame:
+    """Attach each node's smaller neighbors (and itself) to the minimum of
+    its downward neighborhood.
 
-    ``oriented_input=True`` (the loop's internal call) skips the
-    orientation+distinct shuffle: _large_star / _min_jump output is
-    strictly DECREASING (src > dst, see their proofs), so greatest/least
-    is the identity there, and the groupBy-min below is insensitive to
-    duplicate rows while the final distinct dedups the attach fan-out —
-    one full Exchange per round removed with identical output."""
-    if oriented_input:
-        oriented = e
-    else:
-        oriented = e.select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        ).distinct()
-    m = oriented.groupBy("src").agg(F.min("dst").alias("m"))
+    Input must already point downward: _large_star / _min_jump output is
+    strictly DECREASING (src > dst, see their proofs), so no orientation
+    or distinct pass runs here — the groupBy-min below is insensitive to
+    duplicate rows and the final distinct dedups the attach fan-out (one
+    full Exchange per round fewer than the textbook small-star)."""
+    m = e.groupBy("src").agg(F.min("dst").alias("m"))
     attach_nbrs = (
-        oriented.join(m, "src")
+        e.join(m, "src")
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
     attach_self = m.select("src", F.col("m").alias("dst"))
@@ -137,14 +131,6 @@ def _small_star(e: DataFrame, oriented_input: bool = False) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-
-
-def _checksum(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
 
 
 def _checkpoint_with_checksum(
@@ -239,41 +225,27 @@ def _contract_partitions(it):
         yield pd.DataFrame({"node": list(comp), "root": list(comp.values())})
 
 
-def _star_loop(
-    e: DataFrame, max_iter: int, checkpoint: bool, accelerate: bool,
-) -> DataFrame:
+def _star_loop(e: DataFrame, max_iter: int) -> DataFrame:
     """The alternating large-star/small-star fixpoint over an edge set
     that is already (src, dst), src != dst. Input need not be distinct
     (the initial checkpointed distinct handles it). Returns
     labels(norm, component) for every node in ``e``."""
-    e = e.distinct()
-    if checkpoint:
-        e, prev = _checkpoint_with_checksum(e)
-    else:
-        prev = _checksum(e)
+    e, prev = _checkpoint_with_checksum(e.distinct())
     for _ in range(max_iter):
-        half = _large_star(e)
-        if accelerate:
-            # _min_jump references the large-star output twice (min-target
-            # aggregate + join left side). Deliberately NOT persisted:
-            # both references hang off the same shuffle output (the round
-            # reads from the previous round's checkpoint, so recomputing
-            # the projection over it is cheap), and a persist was MEASURED
-            # 2x slower per round (24s vs 11s on the 100k bench) — the
-            # InMemoryRelation write + cache scan costs more than the
-            # recompute it saves at every scale where rounds are
-            # shuffle-bound.
-            half = _min_jump(half)
-        # large_star/min_jump output is strictly decreasing -> skip the
-        # orientation+distinct Exchange (see _small_star)
-        nxt = _small_star(half, oriented_input=True)
-        if checkpoint:
-            nxt, cur = _checkpoint_with_checksum(nxt)
-            # the new round is materialized: the previous round's blocks
-            # are dead weight from here on — free them now
-            session.release(e)
-        else:
-            cur = _checksum(nxt)
+        # _min_jump references the large-star output twice (min-target
+        # aggregate + join left side). Deliberately NOT persisted: both
+        # references hang off the same shuffle output (the round reads
+        # from the previous round's checkpoint, so recomputing the
+        # projection over it is cheap), and a persist was MEASURED 2x
+        # slower per round (24s vs 11s on the 100k bench) — the
+        # InMemoryRelation write + cache scan costs more than the
+        # recompute it saves at every scale where rounds are
+        # shuffle-bound.
+        nxt, cur = _checkpoint_with_checksum(
+            _small_star(_min_jump(_large_star(e))))
+        # the new round is materialized: the previous round's blocks are
+        # dead weight from here on — free them now
+        session.release(e)
         e = nxt
         if cur == prev:
             break
@@ -289,22 +261,14 @@ def _star_loop(
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 20, checkpoint: bool = True,
-    accelerate: bool = True, local_contract: bool = True,
-    driver_solve_max: int = 200_000,
+    edges: DataFrame, max_iter: int = 20, driver_solve_max: int = 200_000,
 ) -> DataFrame:
     """edges(norm_a, norm_b) -> labels(norm, component) for every node
     that appears in an edge; component = min member of the component.
 
-    ``accelerate`` inserts the _min_jump path-compression pass between
-    the large-star and small-star halves of each round (see its proof
-    sketch) — same labels, fewer rounds (10 -> 6 on the 100k bench
-    topology; each round is a global synchronization barrier, so round
-    count is the dominant term at cluster scale).
-
-    ``local_contract`` (default on) runs a partition-local union-find
-    pre-pass (narrow, zero shuffle) and the iterative star loop only on
-    the CONTRACTED cross-partition graph — the "local contraction"
+    Above the driver-solve gate, a partition-local union-find pre-pass
+    (narrow, zero shuffle) runs first and the iterative star loop only
+    on the CONTRACTED cross-partition graph — the "local contraction"
     optimization of the Kiveris et al. paper. Each task collapses the
     components of its own edge slice to their local minimum; a node read
     by several tasks links its local roots, so the contracted graph is
@@ -312,14 +276,16 @@ def connected_components(
     cross-partition boundary, not the corpus. Labels are IDENTICAL:
     every local root is the min of a subset of its global component, so
     the contracted component minimum is the true minimum, and each node
-    inherits it through its root (fuzz-pinned against union-find and the
-    uncontracted loop). Measured on the 100k-edge chain+hub bench:
-    13.8s -> ~3s (rounds run on ~1-2k contracted edges instead of 100k,
-    and round count tracks the contracted diameter). Memory note: the
-    union-find dict is proportional to the nodes of ONE partition —
-    size input splits accordingly at cluster scale (the same class of
-    bound as a sort buffer); pass local_contract=False to fall back to
-    the pure-shuffle loop.
+    inherits it through its root (fuzz-pinned against union-find).
+    Measured on the 100k-edge chain+hub bench: 13.8s -> ~3s (rounds run
+    on ~1-2k contracted edges instead of 100k, and round count tracks
+    the contracted diameter). Each star round includes the _min_jump
+    path compression (see its proof sketch): same labels, fewer rounds
+    (10 -> 6 on the 100k bench topology; each round is a global
+    synchronization barrier, so round count is the dominant term at
+    cluster scale). Memory note: the union-find dict is proportional to
+    the nodes of ONE partition — size input splits accordingly at
+    cluster scale (the same class of bound as a sort buffer).
 
     ``driver_solve_max`` is one gate, checked on the raw edges and then
     on the contracted edges: an edge set of at most that many rows is
@@ -337,11 +303,9 @@ def connected_components(
     labels = _driver_solve(e, driver_solve_max, "norm")
     if labels is not None:
         return labels
-    if not local_contract:
-        return _star_loop(e, max_iter, checkpoint, accelerate)
     # (node, root) pairs; a node appearing in k tasks has k rows. The
     # groupBy is ONE shuffle of 2-string rows (vs one per round over the
-    # full edge set in the uncontracted loop). Eagerly checkpointed: it
+    # full edge set in a star loop on raw edges). Eagerly checkpointed: it
     # feeds the contracted edge set AND the final label composition.
     g = session.checkpoint(
         e.mapInPandas(_contract_partitions, "node string, root string")
@@ -357,9 +321,7 @@ def connected_components(
     # 100k-edge bench topology): the same gate solves it on the driver
     labels_c = _driver_solve(ce, driver_solve_max, "root")
     if labels_c is None:
-        labels_c = _star_loop(
-            ce, max_iter, checkpoint, accelerate
-        ).withColumnRenamed("norm", "root")
+        labels_c = _star_loop(ce, max_iter).withColumnRenamed("norm", "root")
     return (
         g.select("node", "root")
         .join(labels_c, "root", "left")
@@ -375,7 +337,6 @@ def incremental_components(
     old_edges: DataFrame,
     new_edges: DataFrame,
     max_iter: int = 20,
-    accelerate: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Re-label ONLY the components a new edge batch touches — the
     incremental-ingest analog of connected_components: at a daily-ingest
@@ -429,8 +390,6 @@ def incremental_components(
         .join(touched, "component", "left_semi")
         .select("norm_a", "norm_b")
     )
-    sub_labels = connected_components(
-        sub_old.union(new_e), max_iter, accelerate=accelerate
-    )
+    sub_labels = connected_components(sub_old.union(new_e), max_iter)
     keep = old_labels.join(touched, "component", "left_anti")
     return keep.unionByName(sub_labels), touched

@@ -1,25 +1,22 @@
 """B3 document chunking — pure column ops, no UDF.
 
-Analog of the reference's body sectioning + per-section loop
-(get_Body /root/reference/gondar/tools/entrez.py:36-56; section loop
-/root/reference/gondar/modules/PubMedFlow.py:233). Two strategies:
+Analog of the reference's body sectioning + per-section loop (its
+``get_Body`` in tools/entrez.py:36-56; section loop in
+modules/PubMedFlow.py:233).
 
-* ``prepare_extraction_units`` (the pipeline path): normal files pass
-  through WHOLE (base_chunk=0) — chunk ids are line math the extractor
-  does for free — and only oversized files are JVM-split into
-  SUPER-chunks of ``chunk_lines * super_factor`` lines with an aligned
-  ``base_chunk`` offset. Rationale: a fine-grained explode materializes
-  every line string twice and re-joins them, an allocation storm that
-  measurably ANTI-scales at high core counts (8->32 threads tripled the
-  stage's core-time in this sandbox); the hybrid keeps Arrow rows bounded
-  (mega-file safety) at near-zero cost for the 99% case.
-
-* ``chunk_content`` (fine-grained explode): one row per chunk_lines
-  group — kept for callers that genuinely want chunk-shaped rows.
+``prepare_extraction_units``: normal files pass through WHOLE
+(base_chunk=0) — chunk ids are line math the extractor does for free —
+and only oversized files are JVM-split into SUPER-chunks of
+``chunk_lines * super_factor`` lines with an aligned ``base_chunk``
+offset. Rationale: a fine-grained explode materializes every line string
+twice and re-joins them, an allocation storm that measurably ANTI-scales
+at high core counts (8->32 threads tripled the stage's core-time on a
+32-thread host); the hybrid keeps Arrow rows bounded (mega-file safety)
+at near-zero cost for the 99% case.
 
 Line-based grouping means a fact line never straddles units, mirroring
 the reference's section boundaries; super-chunk boundaries are multiples
-of chunk_lines, so chunk ids are identical under both strategies.
+of chunk_lines, so chunk ids equal a fine-grained chunk_lines split's.
 """
 
 from __future__ import annotations
@@ -62,38 +59,4 @@ def prepare_extraction_units(
         .select(*out_cols, F.posexplode("_units").alias("_ui", "unit"))
         .withColumn("base_chunk", F.col("_ui") * super_factor)
         .drop("_ui")
-    )
-
-
-def chunk_content(df: DataFrame, chunk_lines: int = 64,
-                  max_chunk_chars: int = 1 << 20) -> DataFrame:
-    """(.., content) -> (.., chunk_id:int, chunk:string), one row per chunk.
-
-    All whole-stage-codegen: split -> grouped slices via
-    transform(sequence(...)) -> posexplode. Empty/whitespace files yield
-    zero chunks (empty-result semantics, A17 /
-    /root/reference/gondar/modules/PubMedFlow.py:246).
-    """
-    lines = F.split(F.col("content"), "\n")
-    n_lines = F.size(lines)
-    n_chunks = F.ceil(n_lines / F.lit(chunk_lines)).cast("int")
-    chunks = F.when(
-        ~F.col("content").rlike(r"\S"), F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.substring(
-                F.array_join(
-                    F.slice(lines, i * chunk_lines + 1, chunk_lines), "\n"
-                ),
-                1,
-                max_chunk_chars,
-            ),
-        )
-    )
-    out_cols = [c for c in df.columns if c != "content"]
-    return (
-        df.withColumn("_chunks", chunks)
-        .select(*out_cols, F.posexplode_outer("_chunks").alias("chunk_id", "chunk"))
-        .filter(F.col("chunk").isNotNull())
     )

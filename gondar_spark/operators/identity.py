@@ -33,17 +33,12 @@ from pyspark.sql import functions as F
 def resolve_stable_ids(
     labels: DataFrame,
     prior_map: DataFrame | None = None,
-    prior_norms: DataFrame | None = None,
     all_norms: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """labels(norm, component) -> (assign, merges).
 
     ``prior_map`` (norm, entity_id): the committed ledger — previously
-    published ids per linked norm. ``prior_norms`` (norm): norms that
-    existed in earlier runs as SINGLETONS (published with entity_id =
-    own norm by materialize's coalesce); linking one into a component is
-    also a merge of a previously-published entity and must keep/absorb
-    its id deliberately, not silently.
+    published ids per linked norm.
 
     A prior id can be CLAIMED by several components. Under append-only
     growth that only happens within one component's history (a merge,
@@ -83,19 +78,6 @@ def resolve_stable_ids(
         )
     else:
         j = j.withColumn("_prior", F.lit(None).cast("string"))
-    if prior_norms is not None:
-        j = j.join(
-            prior_norms.select("norm").distinct().withColumn(
-                "_known", F.lit(True)
-            ),
-            "norm",
-            "left",
-        ).withColumn(
-            "_prior",
-            F.coalesce(
-                "_prior", F.when(F.col("_known"), F.col("norm"))
-            ),
-        )
     prior_pairs = (
         j.filter(F.col("_prior").isNotNull())
         .select("component", "_prior")

@@ -92,8 +92,7 @@ def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     return (raw.astype(np.float64) / np.iinfo(np.uint32).max).astype(np.float32)
 
 
-def extract_media_features(media: DataFrame,
-                           batch_hint: int = 64) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over length-bucketed partitions.
 
     Arrow moves `payload` as bytes; the UDF is invoked per micro-batch.
@@ -122,24 +121,3 @@ def extract_media_features(media: DataFrame,
             )
 
     return narrow.mapInPandas(run, FEATURES_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: explode a deterministic frame index
-    plan per video (decode stubbed); shows the row-explosion pattern a
-    real sampler uses."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .withColumn(
-            "frame_idx",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(
-                        (F.length("payload") / (every_n * 100)).cast("int"), F.lit(1)
-                    ),
-                )
-            ),
-        )
-        .select("media_id", "frame_idx", "mime")
-    )

@@ -7,9 +7,8 @@
   * cosine_topk_per_probe — batch variant: top-k neighbors for EVERY probe
                          row via broadcast join + row_number window.
   * kmeans_train       — distributed Lloyd k-means (integer-quantized
-                         sums -> bit-exact SQL-oracle parity); seeded
-                         deterministic init, or kmeans_parallel_init's
-                         k-means||-style distributed oversampling.
+                         sums -> bit-exact SQL-oracle parity) from a
+                         seeded deterministic init.
   * ivf_topk           — IVF ANN over trained centroids: broadcast-join
                          cell assignment, probe only the nearest n_probe
                          cells. The scale path: the candidate set shrinks
@@ -223,7 +222,6 @@ def kmeans_train(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = 1_000_000,
-    init: list[list[float]] | None = None,
 ) -> list[list[float]]:
     """Distributed Lloyd k-means over an embedding column, engineered so a
     SQL oracle can reproduce the trained centroids BIT-FOR-BIT:
@@ -232,11 +230,10 @@ def kmeans_train(
         per-cell sums are then EXACT bigints (order-independent — the usual
         float-sum nondeterminism of distributed k-means is gone), and the
         mean is a single IEEE division double(sum) / double(n*scale);
-      * init (when not given) is a deterministic seeded sample: the first k
-        rows by md5(id) — engine-portable and unbiased w.r.t. insertion
-        order (a randomized k-means||-style init would not be reproducible
-        in the oracle engine; see kmeans_parallel_init for the distributed
-        oversampling variant used when parity is not required);
+      * init is a deterministic seeded sample: the first k rows by
+        md5(id) — engine-portable and unbiased w.r.t. insertion order (a
+        randomized k-means||-style init would not be reproducible in the
+        oracle engine);
       * assignment = nearest centroid by round6(cosine), ties to the lowest
         cell — the same rule assign_cells applies at query time;
       * empty cells keep their previous centroid.
@@ -257,16 +254,13 @@ def kmeans_train(
         if first is None:
             raise ValueError("kmeans_train: empty input")
         dim = len(first["_vq"])
-        if init is None:
-            seeds = (
-                staged.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-                .limit(k)
-                .select("_vq")
-                .collect()
-            )
-            cents = [[float(q) / float(scale) for q in r["_vq"]] for r in seeds]
-        else:
-            cents = [[float(x) for x in c] for c in init]
+        seeds = (
+            staged.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
+            .limit(k)
+            .select("_vq")
+            .collect()
+        )
+        cents = [[float(q) / float(scale) for q in r["_vq"]] for r in seeds]
         sums = [
             F.sum(F.element_at("_vq", j + 1)).alias(f"s{j}") for j in range(dim)
         ]
@@ -284,95 +278,6 @@ def kmeans_train(
                     float(r[f"s{j}"]) / denom for j in range(dim)
                 ]
         return cents
-
-
-def kmeans_parallel_init(
-    df: DataFrame,
-    k: int = 64,
-    rounds: int = 2,
-    oversample: float = 2.0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 2027,
-) -> list[list[float]]:
-    """Deterministic k-means||-style seeding (Bahmani et al., VLDB'12
-    shape): ``rounds`` distributed oversampling passes, each admitting
-    points with probability proportional to their distance to the current
-    candidate set, then a driver-side weighted reduction of the (tiny)
-    candidate pool down to k. "Randomness" is hash-derived
-    (xxhash64(id, round, seed) -> uniform in [0,1)), so the init is
-    reproducible run-to-run and cluster-layout-independent — the property
-    the resume/lineage story requires. Not SQL-oracle-mirrored (the
-    reduction is driver-side); kmeans_train's seeded-sample init is the
-    parity path, this is the recall-at-scale path. Each round is one
-    broadcast-join pass + one 1-row agg; candidates only ever leave the
-    executors."""
-    v = F.col(vec_col).cast("array<double>")
-    with Scope():
-        staged = persist(
-            df.select(F.col(id_col).alias("_id"), v.alias("_kv")))
-        first_row = (
-            staged.orderBy(F.md5(F.col("_id").cast("string")), F.col("_id"))
-            .limit(1)
-            .collect()
-        )
-        if not first_row:
-            raise ValueError("kmeans_parallel_init: empty input")
-        cands = [[float(x) for x in first_row[0]["_kv"]]]
-        ell = oversample * k
-        for r in range(rounds):
-            # cost(x) = 1 - best cosine to the candidate set (>= 0),
-            # via the same broadcast one-row centroid join
-            cents = _centroid_df(staged.sparkSession, cands)
-            scored = (
-                staged.crossJoin(F.broadcast(cents))
-                .withColumn(
-                    "_cost",
-                    F.lit(1.0)
-                    - F.array_max(
-                        F.transform(
-                            F.col("cents"),
-                            lambda c: cosine_col(F.col("_kv"), c["cvec"]),
-                        )
-                    ),
-                )
-                .drop("cents")
-            )
-            total = scored.agg(F.sum("_cost").alias("t")).collect()[0]["t"]
-            if not total or total <= 0:
-                break
-            u = (
-                F.abs(F.xxhash64(F.col("_id").cast("string"), F.lit(r), F.lit(seed)))
-                % 1_000_000_007
-            ) / 1_000_000_007.0
-            picked = scored.filter(
-                u < F.lit(ell) * F.col("_cost") / F.lit(float(total))
-            ).select("_id", "_kv").collect()
-            seen = {tuple(c) for c in cands}
-            for row in sorted(picked, key=lambda x: x["_id"]):
-                t = tuple(float(x) for x in row["_kv"])
-                if t not in seen:
-                    seen.add(t)
-                    cands.append(list(t))
-        # weight candidates by how many points they attract, then reduce
-        # to k on the driver (candidate pool ~ oversample*k*rounds — tiny)
-        weights = dict(
-            assign_cells(staged, cands, vec_col="_kv", n_probe=1)
-            .groupBy("cell")
-            .count()
-            .collect()
-        )
-        ranked = sorted(
-            range(len(cands)), key=lambda i: (-weights.get(i, 0), i)
-        )
-        chosen = [cands[i] for i in ranked[:k]]
-        # degenerate pool (< k candidates): pad by CYCLING the seeds —
-        # indexing by len(chosen) % len(chosen) would always repeat seed 0
-        seeds, pad = list(chosen), 0
-        while seeds and len(chosen) < k:
-            chosen.append(seeds[pad % len(seeds)])
-            pad += 1
-        return chosen
 
 
 def ivf_topk(

@@ -1,10 +1,6 @@
-"""Source-side operators: scan with pushdown, sha256 pass, semi-join fetch.
+"""Source-side operators: sha256 pass, semi-join fetch.
 
 Reference analogs (SURVEY.md §2A):
-  * A1 `_search_ID` pushes limit/offset/sort/date predicates into the
-    remote source (/root/reference/gondar/tools/entrez.py:153-173) — here
-    the same intent is expressed declaratively and Catalyst/Iceberg push
-    filters + limits to the scan (check `.explain()` for PushedFilters).
   * A2 `_fetch_content` is an ID->content semi-join
     (/root/reference/gondar/tools/entrez.py:175-182) — here a broadcast
     left-semi join.
@@ -16,40 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def scan_source(
-    df: DataFrame,
-    repos: list[str] | None = None,
-    langs: list[str] | None = None,
-    limit: int | None = None,
-    offset: int | None = None,
-    order_by: list[str] | None = None,
-) -> DataFrame:
-    """Declarative scan: predicates stay above the scan so Catalyst pushes
-    them into the parquet/Iceberg reader (partition pruning on repo/lang
-    when the table is partitioned that way).
-
-    ``offset`` is the reference's `restart` paging param
-    (entrez.py:95 — which the reference then mislabels as "restart" at
-    entrez.py:156, so its offset is silently ignored; implemented
-    correctly here). Offsets only make sense against a total order, so
-    passing offset without ``order_by`` raises — a distributed scan has
-    no implicit row order to page through."""
-    if repos:
-        df = df.filter(F.col("repo").isin(repos))
-    if langs:
-        df = df.filter(F.col("lang").isin(langs))
-    if offset is not None:
-        if not order_by:
-            raise ValueError("offset paging requires order_by (no implicit "
-                             "row order in a distributed scan)")
-        df = df.orderBy(*[F.col(c) for c in order_by]).offset(offset)
-    elif order_by:
-        df = df.orderBy(*[F.col(c) for c in order_by])
-    if limit is not None:
-        df = df.limit(limit)
-    return df
 
 
 def with_content_sha(df: DataFrame) -> DataFrame:
@@ -81,28 +43,3 @@ def semi_join_fetch(content_df: DataFrame, ids_df: DataFrame,
     """A2 analog: fetch full rows for a (small) id set — broadcast
     left-semi join, no shuffle of the big side."""
     return content_df.join(F.broadcast(ids_df), keys, "left_semi")
-
-
-EMPTY_CORPUS_SENTINEL = "There is no valid reference."
-
-
-def flatten_corpus(df: DataFrame, limit: int = 100) -> str:
-    """A10 'run mode' analog (/root/reference/gondar/tools/entrez.py:191-211):
-    flatten a (small, limited) corpus to one LLM-ready context string —
-    records joined with blank lines, fields with newlines; empty corpus
-    short-circuits to the sentinel (entrez.py:192-200).
-
-    Driver-side by design: run mode exists to feed one prompt, so `limit`
-    bounds the collect. The distributed pipeline never calls this."""
-    rows = (
-        df.select(
-            F.concat_ws(
-                "\n", F.col("repo"), F.col("path"), F.col("content")
-            ).alias("flat")
-        )
-        .limit(limit)
-        .collect()
-    )
-    if not rows:
-        return EMPTY_CORPUS_SENTINEL
-    return "\n\n".join(r["flat"] for r in rows)

@@ -4,9 +4,10 @@ The reference is batch-only (SURVEY.md §2 streaming row: none; its
 `Memory` stub is the only nod to state), and the north rule is a batch
 job — so streaming here is the incremental-ingest path for the same KG
 pipeline: new source files land in a directory, get chunked + extracted
-with the SAME operators as batch (chunk_content / extract_triples are
-plain DataFrame transforms, so they compose with readStream), and windowed
-extraction-rate metrics come from a watermarked window agg.
+with the SAME operators as batch (prepare_extraction_units /
+extract_triples are plain DataFrame transforms, so they compose with
+readStream), and windowed extraction-rate metrics come from a
+watermarked window agg.
 
 Tested with trigger(availableNow=True) — processes everything present,
 then stops — which is also the production backfill mode.

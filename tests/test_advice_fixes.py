@@ -223,19 +223,6 @@ def test_cosine_null_embedding_stays_out_of_topk(spark):
     assert got[0]["cosine"] == 1.0 and got[1]["cosine"] == -1.0
 
 
-def test_kmeans_parallel_init_pads_by_cycling(spark):
-    from gondar_spark.operators.similarity import kmeans_parallel_init
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    cents = kmeans_parallel_init(df, k=4, rounds=1)
-    assert len(cents) == 4
-    assert cents[2] == cents[0] and cents[3] == cents[1]  # cycled, not all seed-0
-    assert cents[0] != cents[1]
-
-
 def test_zero_copy_incremental_hashes_only_new_files(spark, tmp_path):
     from gondar_spark.config import JobConfig
     from gondar_spark.pipeline import Pipeline

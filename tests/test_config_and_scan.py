@@ -1,12 +1,9 @@
-"""Config loading (A21), error rendering (A22), and scan pushdown (A1)."""
+"""Config loading (A21), error rendering (A22) and the CLI surface."""
 
 import pytest
 
 from gondar_spark.config import JobConfig
 from gondar_spark.errors import ConfigError, StageError
-from gondar_spark.operators.source import scan_source
-from gondar_spark.plans.inspect import pushed_filters
-from gondar_spark.synth import SynthConfig, generate_source_df
 
 
 def test_config_from_env(monkeypatch):
@@ -33,40 +30,6 @@ def test_config_validation_bounds():
 def test_error_str_has_timestamp_and_type():
     s = str(StageError("boom"))
     assert "StageError" in s and "boom" in s and "20" in s
-
-
-def test_scan_source_filters_and_limit(spark, tmp_path):
-    src = generate_source_df(spark, SynthConfig(n_files=120), partitions=4)
-    path = str(tmp_path / "src")
-    src.write.partitionBy("lang").parquet(path)
-    table = spark.read.parquet(path)
-
-    scanned = scan_source(table, langs=["python"], limit=5)
-    rows = scanned.collect()
-    assert len(rows) == 5 and all(r["lang"] == "python" for r in rows)
-
-    # the lang predicate must prune partitions / reach the scan
-    pruned = scan_source(table, repos=["org0/repo"], langs=["python"])
-    plan_filters = pushed_filters(pruned)
-    assert any("repo" in f for f in plan_filters), plan_filters
-
-
-def test_scan_source_offset_paging(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
-    from gondar_spark.operators.source import scan_source
-
-    df = spark.createDataFrame(
-        [(f"r{i % 3}", f"p{i:02d}", "c", "python", "x") for i in range(20)],
-        ["repo", "path", "commit", "lang", "content"],
-    ).repartition(5)
-    page1 = scan_source(df, limit=5, order_by=["path"])
-    page2 = scan_source(df, limit=5, offset=5, order_by=["path"])
-    assert [r["path"] for r in page1.collect()] == [f"p{i:02d}" for i in range(5)]
-    assert [r["path"] for r in page2.collect()] == [f"p{i:02d}" for i in range(5, 10)]
-    with pytest.raises(ValueError):  # paging without a total order
-        scan_source(df, limit=5, offset=5)
 
 
 def test_cli_exposes_zero_copy_and_incremental():

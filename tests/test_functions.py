@@ -22,7 +22,6 @@ from gondar_spark.operators.dedup import (
 from gondar_spark.operators.multimodal import (
     decode_image_real,
     extract_media_features,
-    frame_sample_plan,
     synthetic_media_df,
 )
 from gondar_spark.operators.similarity import (
@@ -109,82 +108,110 @@ def test_minhash_lsh_finds_planted_near_dups(spark):
     assert pairs[0]["jaccard"] == exact[0]["jaccard"]
 
 
-def test_prefix_filter_is_lossless(spark):
-    """AllPairs prefix filtering must not change the result set — exact
-    same pairs and scores as the brute inverted-index join."""
-    texts = [
-        "alpha beta gamma delta epsilon zeta eta theta",
-        "alpha beta gamma delta epsilon zeta eta CHANGED",
-        "alpha beta gamma delta NOPE zeta eta theta",
-        "one two three four five six seven eight",
-        "one two three four five six seven CHANGED",
-    ]
-    df = _docs(spark, texts)
-    for t in (0.3, 0.5, 0.7):
-        fast = sorted(map(tuple, ngram_jaccard_pairs(
-            df, threshold=t, prefix_filter=True).collect()))
-        brute = sorted(map(tuple, ngram_jaccard_pairs(
-            df, threshold=t, prefix_filter=False).collect()))
-        assert fast == brute, (t, fast, brute)
+def _brute_ngram_pairs(texts, t, n=3):
+    """Python all-pairs word-n-gram Jaccard, rounded half-up to 4 places
+    like the operator."""
+    def shingles(text):
+        toks = text.split()
+        if len(toks) < n:
+            return {" ".join(toks)}
+        return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+    sets = [shingles(x) for x in texts]
+    out = []
+    for i in range(len(sets)):
+        for j in range(i + 1, len(sets)):
+            inter = len(sets[i] & sets[j])
+            jac = math.floor(inter / len(sets[i] | sets[j]) * 1e4 + 0.5) / 1e4
+            if jac >= t:
+                out.append((i, j, jac))
+    return out
+
+
+def _ngram_plan(df, **kw):
+    got = ngram_jaccard_pairs(df, **kw)
+    return got, got._jdf.queryExecution().optimizedPlan().toString()
+
+
+_LOSSLESS_TEXTS = [
+    "alpha beta gamma delta epsilon zeta eta theta",
+    "alpha beta gamma delta epsilon zeta eta CHANGED",
+    "alpha beta gamma delta NOPE zeta eta theta",
+    "one two three four five six seven eight",
+    "one two three four five six seven CHANGED",
+    "tiny",
+    "",
+]
+
+
+def test_prefix_filter_is_lossless(spark, monkeypatch):
+    """Both exact paths equal a Python brute-force Jaccard at every
+    threshold. The fixture's vocabulary is flat (no trigram in more than
+    three docs), so the operator's own gate takes the raw join, as does a
+    gate at +inf; a gate below any fan-out forces the prefix filter, the
+    only path with a Window."""
+    from gondar_spark.operators import dedup
+
+    df = _docs(spark, _LOSSLESS_TEXTS)
+    for gate in (None, float("inf"), -1.0):
+        if gate is not None:
+            monkeypatch.setattr(dedup, "PREFIX_FANOUT", gate)
+        for t in (0.3, 0.5, 0.7):
+            got, plan = _ngram_plan(df, threshold=t)
+            assert ("Window" in plan) == (gate == -1.0), (gate, plan)
+            assert sorted(map(tuple, got.collect())) == \
+                _brute_ngram_pairs(_LOSSLESS_TEXTS, t), (gate, t)
 
 
 def test_skewed_hot_shingle_candidate_explosion(spark):
-    """Zipf-style skew fixture: every doc shares one mega-hot trigram. The
-    raw inverted-index join goes quadratic on the hot posting (s^2/2
-    candidates); the prefix filter keeps candidates near-linear because
-    the hot shingle falls OUTSIDE most docs' rarest-first prefix. The cap
-    path (max_posting) drops the hot posting outright."""
-    n = 60
-    # "HOT HOT HOT" trigram in every doc + a unique tail per doc; one
-    # planted near-dup pair (docs 0 and 1 share their tails too)
-    texts = [f"HOT HOT HOT u{i}a u{i}b u{i}c u{i}d u{i}e" for i in range(n)]
-    texts[1] = texts[0].replace("u0e", "CHANGED")
+    """Zipf-style skew fixture: every doc shares one mega-hot trigram, so
+    the raw inverted-index join goes quadratic on the hot posting (s^2/2
+    candidates) and the fan-out lands above the gate. The operator takes
+    the prefix filter, whose candidates stay near-linear because the hot
+    shingle falls OUTSIDE most docs' rarest-first prefix, and still finds
+    exactly the brute-force pairs (the one planted near-dup)."""
+    from pyspark.sql import Window
+
+    from gondar_spark.operators.dedup import (
+        PREFIX_FANOUT, _posting_fanout, shingled,
+    )
+
+    n = 600
+    # "HOT HOT HOT" trigram in every doc + a unique tail per doc (fan-out
+    # (n-1)/8 ~ 75); one planted near-dup pair (docs 0 and 1 share their
+    # tails too)
+    texts = [f"HOT HOT HOT u{i}a u{i}b u{i}c" for i in range(n)]
+    texts[1] = texts[0].replace("u0c", "CHANGED")
     df = _docs(spark, texts)
+    base = shingled(df, "text", "doc_id", 3)
+    inv = base.select("id", F.explode("sh").alias("s"))
+    dfreq = inv.groupBy("s").agg(F.count("*").alias("dfreq"))
+    assert _posting_fanout(dfreq) > PREFIX_FANOUT
 
-    def n_candidates(prefix: bool, cap=None):
-        from gondar_spark.operators.dedup import shingled
-        from pyspark.sql import functions as F
-
-        base = shingled(df, "text", "doc_id", 3)
-        inv = base.select("id", F.explode("sh").alias("s"))
-        if cap is not None:
-            dfreq = inv.groupBy("s").agg(F.count("*").alias("d"))
-            inv = inv.join(
-                dfreq.filter(F.col("d") > cap).select("s"), "s", "left_anti")
-        if prefix:
-            from pyspark.sql import Window
-
-            dfreq = inv.groupBy("s").agg(F.count("*").alias("dfreq"))
-            sizes = base.select("id", F.size("sh").alias("sz"))
-            w = Window.partitionBy("id").orderBy("dfreq", "s")
-            ranked = (
-                inv.join(dfreq, "s")
-                .withColumn("rn", F.row_number().over(w))
-                .join(sizes, "id")
-            )
-            plen = F.col("sz") - F.ceil(F.lit(0.5) * F.col("sz")) + 1
-            inv = ranked.filter(F.col("rn") <= plen).select("id", "s")
-        a = inv.withColumnsRenamed({"id": "id_a"})
-        b = inv.withColumnsRenamed({"id": "id_b"})
+    def n_candidates(idx):
+        a = idx.withColumnsRenamed({"id": "id_a"})
+        b = idx.withColumnsRenamed({"id": "id_b"})
         return (
             a.join(b, "s").filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct().count()
         )
 
-    brute = n_candidates(prefix=False)
-    filtered = n_candidates(prefix=True)
-    capped = n_candidates(prefix=False, cap=10)
+    sizes = base.select("id", F.size("sh").alias("sz"))
+    w = Window.partitionBy("id").orderBy("dfreq", "s")
+    ranked = (
+        inv.join(dfreq, "s")
+        .withColumn("rn", F.row_number().over(w))
+        .join(sizes, "id")
+    )
+    plen = F.col("sz") - F.ceil(F.lit(0.5) * F.col("sz")) + 1
+    prefix = ranked.filter(F.col("rn") <= plen).select("id", "s")
+    brute = n_candidates(inv)
     assert brute == n * (n - 1) // 2          # full quadratic blow-up
-    assert filtered < brute / 10              # prefix kills the hot posting
-    assert capped < brute / 10                # cap kills it too
+    assert n_candidates(prefix) < brute / 10  # prefix kills the hot posting
 
-    # ...and all three API paths agree on the actual result pairs
-    expect = [(0, 1)]
-    for kwargs in ({"prefix_filter": True}, {"prefix_filter": False},
-                   {"prefix_filter": False, "max_posting": 10}):
-        got = [(r["id_a"], r["id_b"]) for r in
-               ngram_jaccard_pairs(df, threshold=0.5, **kwargs).collect()]
-        assert got == expect, (kwargs, got)
+    got, plan = _ngram_plan(df, threshold=0.5)
+    assert "Window" in plan, plan
+    assert sorted(map(tuple, got.collect())) == _brute_ngram_pairs(texts, 0.5)
 
 
 def test_simhash_hamming_near_dups(spark):
@@ -308,13 +335,6 @@ def test_media_features_deterministic_and_shaped(spark):
 def test_media_decode_stub_raises():
     with pytest.raises(NotImplementedError):
         decode_image_real(b"\xff\xd8")
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media_df(spark, n=12)
-    plan = frame_sample_plan(media).collect()
-    assert plan and all(r["frame_idx"] >= 0 for r in plan)
-    assert {r["mime"] for r in plan} == {"video/mp4"}
 
 
 def test_deterministic_sampling_properties(spark):

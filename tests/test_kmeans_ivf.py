@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from gondar_spark.operators.similarity import (
     assign_cells,
-    kmeans_parallel_init,
     kmeans_train,
 )
 
@@ -118,18 +117,6 @@ def test_assign_cells_n_probe_replicates_rows(spark):
     got1 = {(r["vec_id"], r["cell"]) for r in one.collect()}
     got2 = {(r["vec_id"], r["cell"]) for r in two.collect()}
     assert got1 <= got2
-
-
-def test_kmeans_parallel_init_deterministic_and_improves(spark):
-    df = _clustered(spark)
-    i1 = kmeans_parallel_init(df, k=3, rounds=2)
-    i2 = kmeans_parallel_init(df, k=3, rounds=2)
-    assert i1 == i2 and len(i1) == 3
-    cents = kmeans_train(df, k=3, n_iter=2, init=i1)
-    # with a distance-aware init each trained centroid should be dominated
-    # by a distinct axis (the planted cluster structure)
-    doms = sorted(max(range(3), key=lambda j: c[j]) for c in cents)
-    assert doms == [0, 1, 2]
 
 
 def test_kmeans_train_empty_input_raises(spark):

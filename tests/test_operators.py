@@ -20,43 +20,19 @@ from gondar_spark.operators.blocking import (
     minhash_signature_df,
 )
 from gondar_spark.operators.cc import connected_components
-from gondar_spark.operators.chunk import chunk_content, prepare_extraction_units
+from gondar_spark.operators.chunk import prepare_extraction_units
 from gondar_spark.operators.extract import extract_triples, split_extraction
 from gondar_spark.operators.scoring import score_pairs
 from gondar_spark.operators.source import semi_join_fetch, with_content_sha
 
 
-# --------------------------------------------------------------------- chunk
+# --------------------------------------------------------- extraction units
 def _src(spark, rows):
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content"])
     )
 
 
-def test_chunk_groups_lines(spark):
-    content = "\n".join(f"line{i}" for i in range(10))
-    df = _src(spark, [("r", "p", "c", "python", content)])
-    out = chunk_content(df, chunk_lines=4).orderBy("chunk_id").collect()
-    assert [r["chunk_id"] for r in out] == [0, 1, 2]
-    assert out[0]["chunk"] == "line0\nline1\nline2\nline3"
-    assert out[2]["chunk"] == "line8\nline9"
-
-
-def test_chunk_empty_and_whitespace(spark):
-    df = _src(spark, [("r", "p1", "c", "python", ""),
-                      ("r", "p2", "c", "python", "  \n \n"),
-                      ("r", "p3", "c", "python", "x")])
-    out = chunk_content(df, chunk_lines=4).collect()
-    assert len(out) == 1 and out[0]["path"] == "p3"
-
-
-def test_chunk_char_cap(spark):
-    df = _src(spark, [("r", "p", "c", "python", "a" * 100)])
-    out = chunk_content(df, chunk_lines=4, max_chunk_chars=10).collect()
-    assert len(out[0]["chunk"]) == 10
-
-
-# --------------------------------------------------------- extraction units
 def test_units_pass_through_small_files(spark):
     content = "\n".join(f"line{i}" for i in range(10))
     df = _src(spark, [("r", "p", "c", "python", content)])
@@ -378,9 +354,9 @@ def test_cc_frees_previous_round_checkpoints(spark):
 
 
 def test_cc_accelerated_equals_plain(spark):
-    """_min_jump path compression: identical labels to the unaccelerated
-    loop on adversarial shapes (cycle, clique, chain+hub, random), in
-    fewer rounds. Valid only on large-star output (strictly decreasing
+    """_min_jump path compression: identical labels to a plain
+    union-find on adversarial shapes (cycle, clique, chain+hub, random)
+    at both gates. Valid only on large-star output (strictly decreasing
     edges) — this is the end-to-end equality gate for that argument."""
     import random
 
@@ -396,15 +372,9 @@ def test_cc_accelerated_equals_plain(spark):
          for _ in range(120)]
     )
     for rows, gate in ((r, g) for r in shapes for g in _GATES):
-        df = spark.createDataFrame(rows, ["norm_a", "norm_b"])
-        plain = {
-            (r["norm"], r["component"])
-            for r in connected_components(df, accelerate=False, **gate).collect()
-        }
-        fast = {
-            (r["norm"], r["component"])
-            for r in connected_components(df, accelerate=True, **gate).collect()
-        }
+        # self-loops carry no link: connected_components drops them
+        plain = _union_find([(a, b) for a, b in rows if a != b])
+        fast = _cc(spark, rows, **gate)
         assert plain == fast and len(fast) > 0, gate
 
 

@@ -1,5 +1,5 @@
-"""Prompt assembly (A12/A13), run-mode corpus flatten (A10), and the
-pluggable-extractor seam (the 'wrap the LLM extractor' contract)."""
+"""Prompt assembly (A12/A13) and the pluggable-extractor seam (the 'wrap
+the LLM extractor' contract)."""
 
 import pandas as pd
 
@@ -13,10 +13,6 @@ from gondar_spark.operators.extract import (
     split_extraction,
 )
 from gondar_spark.operators.chunk import prepare_extraction_units
-from gondar_spark.operators.source import (
-    EMPTY_CORPUS_SENTINEL,
-    flatten_corpus,
-)
 
 
 def test_message_template_fill():
@@ -33,17 +29,6 @@ def test_build_messages_structure():
     assert "def f(ctx):" in msgs[1]["content"]
     for head in DEFAULT_HEADS:
         assert head in msgs[0]["content"]
-
-
-def test_flatten_corpus_and_sentinel(spark):
-    df = spark.createDataFrame(
-        [("r", "p1", "c", "python", "body1"), ("r", "p2", "c", "python", "body2")],
-        ["repo", "path", "commit", "lang", "content"],
-    )
-    flat = flatten_corpus(df.orderBy("path"))
-    assert "body1" in flat and "\n\n" in flat
-    empty = df.filter("path = 'nope'")
-    assert flatten_corpus(empty) == EMPTY_CORPUS_SENTINEL
 
 
 def test_custom_extractor_plugs_in(spark):

@@ -6,7 +6,6 @@ stays exact under hot-key skew."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from gondar_spark.config import JobConfig
@@ -109,19 +108,6 @@ def test_top_k_per_group_default_tiebreak_is_total_order(spark):
     got1 = {r["rid"] for r in top_k_per_group(df1, "grp", "score", 5).collect()}
     got2 = {r["rid"] for r in top_k_per_group(df2, "grp", "score", 5).collect()}
     assert got1 == got2 == {f"id{i:02d}" for i in range(5)}
-
-
-def test_ngram_rejects_conflicting_cap_options(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
-    from gondar_spark.operators.dedup import ngram_jaccard_pairs
-
-    df = spark.createDataFrame([(0, "a b c")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        ngram_jaccard_pairs(df, max_posting=100)  # prefix_filter defaults True
-    # explicit raw path accepts the cap
-    ngram_jaccard_pairs(df, prefix_filter=False, max_posting=100)
 
 
 def test_dedup_release_caches_unpersists(spark):

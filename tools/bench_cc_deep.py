@@ -3,7 +3,9 @@ chain+hub worst-case topology at 100k / 1M / 10M edges on local[32],
 recording wall, ROUND COUNT, and the per-round intermediate edge-set
 size (the payload every round's two groupBy shuffles carry — the honest
 "peak shuffle" proxy: localCheckpoint keeps rounds off the lineage, so
-per-stage shuffle-write bytes track these counts directly).
+per-stage shuffle-write bytes track these counts directly). The rounds
+counted are the product's star round (large-star, _min_jump, small-star)
+run over the raw, uncontracted edge set.
 
 It also times the public ``connected_components`` with
 ``driver_solve_max=0`` (``cc_wall_s``): the gate would otherwise solve
@@ -18,16 +20,18 @@ BENCH/BASELINE.md's CC table.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from gondar_spark.operators.cc import (  # noqa: E402
     _checkpoint_with_checksum,
     _large_star,
+    _min_jump,
     _small_star,
     connected_components,
 )
@@ -62,7 +66,8 @@ def run(spark, n_edges: int) -> dict:
         e, prev = _checkpoint_with_checksum(e)
         rounds = []
         for _ in range(40):
-            nxt, cur = _checkpoint_with_checksum(_small_star(_large_star(e)))
+            nxt, cur = _checkpoint_with_checksum(
+                _small_star(_min_jump(_large_star(e))))
             release(e)
             e = nxt
             rounds.append(cur[0])  # intermediate edge count this round
