@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round_half_up
 from ..session import Scope, persist
-from ..sources.tables import restore_aside, swap_in
+from ..sources.tables import CODEC, restore_aside, swap_in
 
 
 def _dot(a, b):
@@ -345,16 +345,19 @@ def build_ivf_index(
     cents = assign_cells(df, centroids, vec_col=vec_col, n_probe=1)
     (cents.select("cell", id_col, F.col(vec_col).cast("array<double>")
                   .alias(vec_col))
-     .write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells"))
+     .write.mode("overwrite").option("compression", CODEC)
+     .partitionBy("cell").parquet(f"{path}/cells"))
     spark = df.sparkSession
     cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     (spark.createDataFrame(cent_rows, "cell int, cvec array<double>")
-     .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids"))
+     .coalesce(1).write.mode("overwrite").option("compression", CODEC)
+     .parquet(f"{path}/centroids"))
     # build-time cell-occupancy stats: the baseline append_to_ivf_index's
     # drift gate compares against
     (spark.read.parquet(f"{path}/cells").groupBy("cell")
      .agg(F.count("*").alias("n")).coalesce(1)
-     .write.mode("overwrite").parquet(f"{path}/stats"))
+     .write.mode("overwrite").option("compression", CODEC)
+     .parquet(f"{path}/stats"))
 
 
 def rebuild_ivf_index(
@@ -444,7 +447,8 @@ def append_to_ivf_index(
     assigned = assign_cells(df, cents, vec_col=vec_col, n_probe=1)
     (assigned.select("cell", id_col, F.col(vec_col).cast("array<double>")
                      .alias(vec_col))
-     .write.mode("append").partitionBy("cell").parquet(f"{path}/cells"))
+     .write.mode("append").option("compression", CODEC)
+     .partitionBy("cell").parquet(f"{path}/cells"))
     spark.catalog.refreshByPath(f"{path}/cells")
     build = {int(r["cell"]): int(r["n"])
              for r in spark.read.parquet(f"{path}/stats").collect()}

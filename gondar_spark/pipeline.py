@@ -6,7 +6,7 @@
 Every stage ends in a committed snapshot (TableIO.write is atomic), so a
 killed run resumes idempotently: committed stages are SKIPPED and their
 outputs re-read (checkpoint/resume, B12). Lineage: one JSONL record per
-stage per run (rows, wall ms, skipped flag) plus the extractor's
+stage per run (rows, bytes, wall ms, skipped flag) plus the extractor's
 per-batch metric rows persisted as `extract_metrics`.
 
 The reference analog of lineage/metrics is the token-usage callback
@@ -106,25 +106,31 @@ class Pipeline:
             self._log(name, skipped=True)
             return False
         t0 = time.time()
-        rows = self._write_tables(name, tables, partition_by, parallel)
+        commits = self._write_tables(name, tables, partition_by, parallel)
         self._log(name, skipped=False, wall_s=round(time.time() - t0, 3),
-                  rows=rows)
+                  **self._sizes(commits))
         return True
 
     def _write_tables(self, stage: str, tables: dict[str, DataFrame],
                       partition_by: dict[str, list[str]] | None = None,
                       parallel: bool = False) -> dict:
         """Commit each table, overlapped (_overlap) when ``parallel``;
-        returns {table: rows}."""
+        returns {table: commit}."""
         def _write(tbl, df):
-            commit = self.io.write(
+            return tbl, self.io.write(
                 df, tbl, partition_by=(partition_by or {}).get(tbl),
                 meta={"stage": stage, "run_id": self.cfg.run_id})
-            return tbl, commit.get("rows")
 
         writes = [functools.partial(_write, *kv) for kv in tables.items()]
         return dict(self._overlap(writes) if parallel
                     else [w() for w in writes])
+
+    @staticmethod
+    def _sizes(commits: dict) -> dict:
+        """A stage's lineage fields from its commits: rows and bytes per
+        table."""
+        return {k: {t: c.get(k) for t, c in commits.items()}
+                for k in ("rows", "bytes")}
 
     # ---- stages -----------------------------------------------------------
     # fold ledger segments into one snapshot once this many accumulate:
@@ -250,18 +256,17 @@ class Pipeline:
                 else:
                     t0 = time.time()
                     meta = {"stage": "source", "run_id": cfg.run_id}
-                    rows = {}
-                    commit = self.io.write(source_df, cfg.source_table,
-                                           partition_by=["lang"], meta=meta)
-                    rows[cfg.source_table] = commit.get("rows")
+                    commits = {cfg.source_table: self.io.write(
+                        source_df, cfg.source_table, partition_by=["lang"],
+                        meta=meta)}
                     committed = self.io.read(cfg.source_table)
-                    commit = self.io.write(
+                    commits["source_hashes"] = self.io.write(
                         source.with_content_sha(committed).select(
                             "repo", "path", "commit", "content_sha256"),
                         "source_hashes", meta=meta)
-                    rows["source_hashes"] = commit.get("rows")
                     self._log("source", skipped=False,
-                              wall_s=round(time.time() - t0, 3), rows=rows)
+                              wall_s=round(time.time() - t0, 3),
+                              **self._sizes(commits))
                     executed["source"] = True
             src = self.io.read(cfg.source_table)
 
@@ -674,8 +679,8 @@ class Pipeline:
         # overlapped writes (guide §2.6) — every input is a committed
         # table, a broadcast of a checkpointed scope frame, or the
         # checkpointed mapping, so the three plans share no live persist
-        rows = self._write_tables("materialize", outputs, _MAT_PARTITIONS,
-                                  parallel=True)
+        commits = self._write_tables("materialize", outputs,
+                                     _MAT_PARTITIONS, parallel=True)
         io.append(pending, "mat_done",
                   meta={"stage": "materialize", "run_id": self.cfg.run_id})
         self._fold("mat_done", DataFrame.distinct)
@@ -683,7 +688,7 @@ class Pipeline:
                   pending_files=n_pending, changed_mappings=n_changed,
                   affected_entities=affected_ids.count(),
                   affected_triple_groups=drop_keys.count(),
-                  rows=rows, wall_s=round(time.time() - t0, 3))
+                  wall_s=round(time.time() - t0, 3), **self._sizes(commits))
         return True
 
     @staticmethod

@@ -281,6 +281,8 @@ def _warm_start(spark: SparkSession) -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from .sources.tables import CODEC
+
     tmp = tempfile.mkdtemp(prefix="gondar_warm_")
     try:
         base = spark.range(2000).select(
@@ -288,7 +290,9 @@ def _warm_start(spark: SparkSession) -> None:
             F.concat(F.lit("tok a b c d "),
                      F.col("id").cast("string")).alias("txt"),
         )
-        base.write.mode("overwrite").parquet(f"{tmp}/t")
+        # in TableIO's codec, so its native library loads here
+        base.write.mode("overwrite").option("compression", CODEC).parquet(
+            f"{tmp}/t")
         pf = spark.read.parquet(f"{tmp}/t")
         (pf.select("k", F.explode(F.split("txt", " ")).alias("w"))
          .groupBy("w").agg(F.count("*").alias("n"), F.countDistinct("k"))

@@ -7,9 +7,16 @@ Semantics both backends provide:
     half-written table (parquet backend stages to a temp dir, fsyncs a
     commit manifest last; Iceberg gets this natively).
   * ``exists`` is true only for *committed* tables — the resume logic
-    (pipeline.py, north rule /root/repo/BASELINE.json:14) keys off it.
+    (pipeline.py, north rule BASELINE.json:14) keys off it.
   * partitioned writes (`partition_by`) for the final triple/entity
-    outputs (/root/repo/BASELINE.json:6 "partitioned Iceberg outputs").
+    outputs (BASELINE.json:6 "partitioned Iceberg outputs").
+  * every parquet file is zstd-compressed (``CODEC``, parquet's default
+    level): Iceberg tables pin it as a table property, so the codec does
+    not depend on the runtime's default (gzip before Iceberg 1.4).
+
+On the parquet backend the commit manifest (``_gondar_commit.json``) is
+the ONLY success marker: ``exists``, resume and ``_recover`` trust
+nothing else, so writes skip Hadoop's ``_SUCCESS`` (and its ``.crc``).
 """
 
 from __future__ import annotations
@@ -25,6 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from ..errors import TableFormatError
 
 _COMMIT = "_gondar_commit.json"
+# the codec of every parquet file the package persists: TableIO's tables,
+# the IVF index and the streaming sinks. zstd entropy-codes what snappy
+# only dictionary/RLE-packs — the warehouse's hex norms, md5 band keys and
+# sha256 columns — for about half the bytes at parquet's default level.
+CODEC = "zstd"
 
 
 def swap_in(tmp: str, final: str) -> None:
@@ -115,7 +127,9 @@ class TableIO:
               partition_by: list[str] | None = None,
               meta: dict | None = None) -> dict:
         if self.use_iceberg:
-            writer = df.writeTo(self._ident(name)).using("iceberg")
+            writer = (df.writeTo(self._ident(name)).using("iceberg")
+                      .tableProperty("write.parquet.compression-codec",
+                                     CODEC))
             if partition_by:
                 from pyspark.sql import functions as F
                 writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
@@ -136,23 +150,24 @@ class TableIO:
                 # append from 32 tasks x 256 dirs emitted thousands of
                 # near-empty files and made the ingest SLOWER at higher
                 # parallelism. One shuffle of the written rows, one file
-                # per populated dir (AQE-coalesced).
-                from pyspark.sql import functions as F
-
-                df = df.repartition(*[F.col(c) for c in partition_by])
-            w = df.write.mode("overwrite")
+                # per populated dir (AQE-coalesced) — and a REBALANCE, not
+                # a repartition, so AQE splits a hot partition value
+                # across tasks instead of writing it through one.
+                df = df.hint("rebalance", *partition_by)
+            w = (df.write.mode("overwrite").option("compression", CODEC)
+                 # the commit manifest below is the success marker
+                 .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+                         "false"))
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(tmp)
-            # row count from the parquet FOOTERS (driver-side metadata
-            # read, microseconds per file) — not a second Spark scan of
-            # the data; at 6 stage writes per pipeline run the footer
-            # read saves a full re-scan per stage
-            n = self._count_from_footers(tmp)
+            # rows from the parquet FOOTERS (driver-side metadata read,
+            # microseconds per file) — not a second Spark scan of the
+            # data; bytes and files from the same walk of the staging dir
             commit = {
                 "table": name,
                 "ts": time.time(),
-                "rows": n,
+                **self._staged_stats(tmp),
                 "partition_by": partition_by or [],
                 # a base write REPLACES the table, so every segment
                 # committed before it is stale. Listing them IN the commit
@@ -204,31 +219,39 @@ class TableIO:
         return None
 
     # Footer-walk cap: microseconds per file is MINUTES per stage commit at
-    # millions of files. Above the cap the count is skipped (rows=None in
-    # the commit manifest, never a wrong number) — at that scale the
-    # Iceberg branch's snapshot summary is the right source anyway.
+    # millions of files. Above the cap the footer reads stop (rows=None in
+    # the commit manifest, never a wrong number; bytes and files still
+    # cost one stat per file) — at that scale the Iceberg branch's
+    # snapshot summary is the right source anyway.
     MAX_FOOTER_FILES = 20_000
 
     @classmethod
-    def _count_from_footers(cls, path: str) -> int | None:
+    def _staged_stats(cls, path: str) -> dict:
+        """``{rows, bytes, files}`` of a staged table dir in one walk:
+        rows summed from the part files' footers, bytes and files over
+        every file on disk (part files and their checksums)."""
         import pyarrow.parquet as pq
 
-        n = 0
-        seen = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    seen += 1
-                    if seen > cls.MAX_FOOTER_FILES:
-                        import logging
+        rows, nbytes, files, parts = 0, 0, 0, 0
+        for root, _dirs, names in os.walk(path):
+            for f in names:
+                p = os.path.join(root, f)
+                files += 1
+                nbytes += os.path.getsize(p)
+                if rows is None or not f.endswith(".parquet"):
+                    continue
+                parts += 1
+                if parts > cls.MAX_FOOTER_FILES:
+                    import logging
 
-                        logging.getLogger(__name__).warning(
-                            "row-count skipped for %s: > %d part files",
-                            path, cls.MAX_FOOTER_FILES,
-                        )
-                        return None
-                    n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return n
+                    logging.getLogger(__name__).warning(
+                        "row-count skipped for %s: > %d part files",
+                        path, cls.MAX_FOOTER_FILES,
+                    )
+                    rows = None
+                    continue
+                rows += pq.ParquetFile(p).metadata.num_rows
+        return {"rows": rows, "bytes": nbytes, "files": files}
 
     # ---- append segments (ledger tables) -----------------------------------
     # A table that only ever GROWS (the extract_done ledger, extract

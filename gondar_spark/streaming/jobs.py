@@ -24,6 +24,7 @@ from ..errors import StageError
 from ..functions.numeric import round_half_up
 from ..operators.chunk import prepare_extraction_units
 from ..operators.extract import extract_triples, split_extraction
+from ..sources.tables import CODEC
 from ..synth import SOURCE_SCHEMA
 
 
@@ -58,6 +59,7 @@ def run_streaming_extraction(
     triples = streaming_extraction(stream_source(spark, src_dir), chunk_lines)
     q = (
         triples.writeStream.format("parquet")
+        .option("compression", CODEC)
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -112,7 +114,7 @@ def run_streaming_kg_ingest(
         # rebuild or retract would double-extract them). A deterministic
         # per-batch subdirectory overwritten in place makes the replay a
         # no-op: same batch id -> same path -> same content.
-        (batch_df.write.mode("overwrite")
+        (batch_df.write.mode("overwrite").option("compression", CODEC)
          .parquet(f"{corpus_dir}/batch_id={batch_id}"))
         pipe = Pipeline(
             batch_df.sparkSession,

@@ -7,6 +7,8 @@ Gates (BASELINE.md / /root/repo/BASELINE.json):
   * idempotent resume from the last committed snapshot.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,6 +93,23 @@ def test_quarantine_empty_and_lineage_written(pipe):
     stages = {r["stage"] for r in pipe.lineage()}
     assert {"source", "triples_raw", "mentions", "edges", "labels",
             "materialize"} <= stages
+
+
+def test_lineage_bytes_match_committed_files(pipe):
+    """Each stage record's ``bytes`` for a table is what its commit put
+    on disk: every file under the table's dir except the manifest."""
+    logged = {}
+    for r in pipe.lineage():
+        logged.update(r.get("bytes") or {})
+    assert {pipe.cfg.source_table, "source_hashes", "triples_raw",
+            "mentions", "edges", "labels", "triples", "entities",
+            "aliases"} <= set(logged)
+    for table, nbytes in logged.items():
+        root = os.path.join(pipe.cfg.warehouse, table)
+        on_disk = sum(os.path.getsize(os.path.join(r, f))
+                      for r, _d, files in os.walk(root) for f in files
+                      if f != "_gondar_commit.json")
+        assert nbytes == on_disk > 0, table
 
 
 def test_resume_skips_and_recomputes_missing(spark, pipe):

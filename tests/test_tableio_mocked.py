@@ -18,6 +18,10 @@ class _FakeWriter:
         self.calls["using"] = fmt
         return self
 
+    def tableProperty(self, key, value):
+        self.calls.setdefault("properties", {})[key] = value
+        return self
+
     def partitionedBy(self, *cols):
         self.calls["partitioned_by"] = len(cols)
         return self
@@ -74,7 +78,10 @@ def test_iceberg_branch_write_returns_snapshot_row_count(spark, tmp_path):
     io = TableIO(spark, str(tmp_path / "wh_i"), use_iceberg=True)
     calls = {}
     commit = io.write(_FakeDF(calls), "triples", partition_by=["pred", "lang"])
+    # the codec is pinned, not left to the Iceberg runtime's default
     assert calls == {"ident": "gondar.db.triples", "using": "iceberg",
+                     "properties": {"write.parquet.compression-codec":
+                                    "zstd"},
                      "partitioned_by": 2, "created": True}
     assert commit["rows"] == 123  # from the snapshot summary, no data scan
     # unpartitioned write skips partitionedBy
@@ -134,6 +141,10 @@ def test_footer_count_caps_at_max_files(tmp_path, monkeypatch):
     d.mkdir()
     for i in range(5):
         pq.write_table(pa.table({"x": [1, 2]}), d / f"part-{i}.parquet")
-    assert TableIO._count_from_footers(str(d)) == 10
+    stats = TableIO._staged_stats(str(d))
+    assert stats["rows"] == 10 and stats["files"] == 5
+    assert stats["bytes"] == sum(p.stat().st_size for p in d.iterdir())
     monkeypatch.setattr(TableIO, "MAX_FOOTER_FILES", 3)
-    assert TableIO._count_from_footers(str(d)) is None  # capped, not wrong
+    capped = TableIO._staged_stats(str(d))
+    assert capped["rows"] is None  # capped, not wrong
+    assert capped["bytes"] == stats["bytes"] and capped["files"] == 5
