@@ -1481,7 +1481,8 @@ def _kg_incremental_outputs(spark):
     committed part one-shot, then ingest the new files through the
     ENTIRE incremental path — incremental CC over the new edge batch
     (cc.incremental_components) and affected-group output splicing
-    (materialize.incremental_outputs). The result must equal a
+    (materialize.splice_outputs, the one splice ingest and retraction
+    share; the delta here is the new files' rows). The result must equal a
     one-shot build over the union, which is exactly what the DuckDB
     oracles compute — so the O(new) ingest contract is hash-verified
     end-to-end, not just pytest-pinned. Every persist and checkpoint
@@ -1506,7 +1507,7 @@ def _kg_incremental_outputs(spark):
         labels_old, e_old, e_new, 20)
     mapping = checkpoint(_kg_mapping(m_all, labels_u))
     changed = mapping.join(map_old, ["norm", "entity_id"], "left_anti")
-    outputs, _ids, _keys = materialize.incremental_outputs(
+    outputs, _ids, _keys = materialize.splice_outputs(
         old_out["triples"], old_out["entities"], old_out["aliases"],
         m_all, triples, new_raw, mapping, map_old, changed)
     return outputs

@@ -337,51 +337,66 @@ def incremental_components(
     old_edges: DataFrame,
     new_edges: DataFrame,
     max_iter: int = 20,
+    removed: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Re-label ONLY the components a new edge batch touches — the
-    incremental-ingest analog of connected_components: at a daily-ingest
-    corpus, re-running CC over the whole graph is an O(corpus) global-
-    barrier job paid for an O(new) change (round-4 verdict ask #1).
+    """Re-label ONLY the components a signed edge delta touches — the
+    incremental analog of connected_components for ingest AND
+    retraction: at a daily-ingest corpus, re-running CC over the whole
+    graph is an O(corpus) global-barrier job paid for an O(delta)
+    change (round-4 verdict ask #1).
 
     Inputs: ``old_labels`` (norm, component) — the committed CC output
-    over ``old_edges`` (norm_a, norm_b); ``new_edges`` — this ingest's
-    edges (endpoints may be new nodes, old nodes, or bridge two old
-    components). Returns (labels, touched_components):
+    over ``old_edges`` (norm_a, norm_b; may already hold the new edges
+    and the edges of removed norms); ``new_edges`` — edges added since
+    (endpoints may be new nodes, old nodes, or bridge two old
+    components); ``removed`` (norm) — nodes deleted since: every edge
+    with a removed endpoint is gone. Returns (labels,
+    touched_components):
 
       * touched = distinct old components containing an endpoint of a
-        new edge (small — ∝ new batch; resolved via a semi-join of
-        old_labels against the new endpoints, broadcast by AQE);
+        surviving new edge or a removed node (small — ∝ delta; resolved
+        via a semi-join of old_labels, broadcast by AQE);
       * the SUBGRAPH = old edges inside touched components (both
         endpoints of an old edge share a component, so filtering on
-        norm_a's label suffices) ∪ new edges — extracted with one
-        columnar scan of old_edges, no shuffle of the untouched graph;
+        norm_a's label suffices) ∪ new edges, minus edges touching a
+        removed node — extracted with one columnar scan of old_edges,
+        no shuffle of the untouched graph;
       * iterative CC runs on the subgraph only, so round count tracks
-        the diameter of the TOUCHED region, not the corpus;
+        the diameter of the TOUCHED region, not the corpus; a touched
+        component can grow, merge or SPLIT;
       * untouched labels pass through unchanged (anti-join on touched).
 
-    Exactly equal to connected_components(old_edges ∪ new_edges): a
-    touched component is fully present in the subgraph, so its new
-    min-label is the global min; an untouched component has no new edge
-    by definition, so its label set is already converged
-    (fuzz-pinned in tests against the full recompute)."""
-    new_e = (
+    Exactly equal to connected_components over the surviving edges of
+    old_edges ∪ new_edges: a touched component is fully present in the
+    subgraph, so its new labels are the global ones; an untouched
+    component gained and lost no edge, so its label set is already
+    converged (fuzz-pinned in tests against the full recompute)."""
+    def alive(e: DataFrame) -> DataFrame:
+        if removed is None:
+            return e
+        for side in ("norm_a", "norm_b"):
+            e = e.join(removed.select(F.col("norm").alias(side)), side,
+                       "left_anti")
+        return e
+
+    new_e = alive(
         new_edges.select(F.col("norm_a"), F.col("norm_b"))
         .filter(F.col("norm_a") != F.col("norm_b"))
-        .distinct()
-    )
+    ).distinct()
     endpoints = (
         new_e.select(F.col("norm_a").alias("norm"))
         .union(new_e.select(F.col("norm_b").alias("norm")))
         .distinct()
     )
+    hits = old_labels.join(endpoints, "norm", "left_semi")
+    if removed is not None:
+        # its own semi-join, so a caller's broadcast hint on ``removed``
+        # reaches the join
+        hits = hits.union(old_labels.join(removed, "norm", "left_semi"))
     # consumed by two joins below AND returned to the caller (merge
     # bookkeeping); eager checkpoint keeps it one tiny materialized set
     # instead of three re-derivations over old_labels
-    touched = session.checkpoint(
-        old_labels.join(endpoints, "norm", "left_semi")
-        .select("component")
-        .distinct()
-    )
+    touched = session.checkpoint(hits.select("component").distinct())
     sub_old = (
         old_edges.select("norm_a", "norm_b")
         .join(
@@ -390,6 +405,7 @@ def incremental_components(
         .join(touched, "component", "left_semi")
         .select("norm_a", "norm_b")
     )
-    sub_labels = connected_components(sub_old.union(new_e), max_iter)
+    sub_labels = connected_components(
+        alive(sub_old).unionByName(new_e), max_iter)
     keep = old_labels.join(touched, "component", "left_anti")
     return keep.unionByName(sub_labels), touched

@@ -4,8 +4,8 @@ Outputs (partitioned, per /root/repo/BASELINE.json:6):
   * triples   — distinct (subj, pred, obj) with first-provenance,
                 linkable OBJECTS rewritten to canonical entity ids
                 (subjects are file identities and stay verbatim — the
-                incremental/retraction splice scope derivation depends
-                on this, see incremental_outputs);
+                splice scope derivation depends on this, see
+                splice_outputs);
   * entities  — (entity_id, canonical_form, n_mentions, n_aliases);
   * aliases   — (entity_id, alias, lang).
 
@@ -13,6 +13,12 @@ Canonical id = the component label from connected components = minimum
 normalized member (deterministic). Mentions whose norm never entered an
 edge are singletons: entity_id = own norm (left join + coalesce — no
 extra pass to enumerate singletons).
+
+Two ways to produce the outputs: ``full_outputs`` aggregates the whole
+corpus (one-shot builds, full rebuilds), ``splice_outputs`` recomputes
+only the groups a signed file delta touches — added files on ingest,
+removed files on retraction, one scope derivation for both — and
+splices them into the prior snapshot.
 """
 
 from __future__ import annotations
@@ -125,97 +131,90 @@ def full_outputs(
     }
 
 
-def incremental_outputs(
+def splice_outputs(
     old_triples: DataFrame,
     old_entities: DataFrame,
     old_aliases: DataFrame,
     mentions: DataFrame,
     triples_raw: DataFrame,
-    new_raw: DataFrame,
+    delta_raw: DataFrame,
     mapping: DataFrame,
     prior_map: DataFrame,
     changed: DataFrame,
     hint_broadcast: bool = True,
 ) -> tuple[dict[str, DataFrame], DataFrame, DataFrame]:
-    """Affected-group splice: recompute ONLY the output groups an ingest
-    touches and splice them into the prior snapshot — the O(new) analog
-    of ``full_outputs`` (which re-aggregates every group every run).
+    """Affected-group splice: recompute ONLY the output groups a signed
+    delta touches and splice them into the prior snapshot — the
+    O(delta) analog of ``full_outputs``, for added and removed files
+    alike.
 
-    Inputs: the prior outputs, the FULL post-ingest mention/raw-triple
-    tables, the pending batch's raw triples ``new_raw``, the full
-    post-ingest norm -> entity_id ``mapping``, the pre-ingest
-    ``prior_map``, and ``changed`` = mapping \\ prior_map (new or moved
-    norms). Scope (all driver-small, broadcast into column-pruned
-    scans):
-      * affected entity ids = changed mappings' new ids + their prior
-        ids (absorbed entities vanish) + ids referenced by the pending
-        batch's linkable objects (their n_mentions/provenance grow);
-      * affected triple groups = groups of pending rows + groups whose
-        obj was an absorbed prior id + those groups re-keyed to the
-        surviving id.
-    Exact-equal to ``full_outputs`` over the union by construction and
-    by test (tests/test_incremental_materialize.py) and by the
-    ``incremental_kg_triples``/``incremental_kg_entities`` DuckDB
-    oracles. Returns (outputs, affected_ids, drop_keys) — the two scope
-    frames are localCheckpointed so callers can count them for lineage
+    Inputs: the prior outputs, the CURRENT mention/raw-triple tables,
+    the delta's raw triples ``delta_raw`` (the added or the removed
+    rows), the current norm -> entity_id ``mapping``, the ledger's
+    ``prior_map`` and ``changed`` = mapping \\ prior_map (new or moved
+    norms). ``moved`` = prior_map ⋈ changed pairs each moved norm's
+    prior id with its current one. Scope (all
+    driver-small, broadcast into column-pruned scans):
+      * affected entity ids = prior and current ids of the delta's
+        linkable norms (their n_mentions/provenance/aliases change) +
+        moved norms' prior ids (absorbed or split-off entities) +
+        ``changed``'s ids;
+      * affected triple groups = the delta's groups under the prior AND
+        the current mapping + old groups whose obj is a moved norm's
+        prior id + those groups re-keyed to its current id.
+    Both scopes are supersets of the true change, and the splices
+    recompute any superset exactly from current state — so the result
+    equals ``full_outputs`` over the current state (tests
+    test_incremental_materialize.py / test_retraction.py, and the
+    ``incremental_kg_*`` / ``retract_kg_triples`` DuckDB oracles).
+    Returns (outputs, affected_ids, drop_keys) — the two scope frames
+    are localCheckpointed so callers can count them for lineage
     without recomputation."""
     B = _hint(hint_broadcast)
-    # ---- affected entity ids --------------------------------------------
-    changed_norms = changed.select("norm").distinct()
-    prior_ids = (
-        prior_map.join(B(changed_norms), "norm", "left_semi")
-        .select("entity_id").distinct()
-    )
-    new_ids = changed.select("entity_id").distinct()
-    pending_norms = (
-        new_raw.filter(F.col("kind").isin(*LINKABLE_KINDS))
+    delta_norms = (
+        delta_raw.filter(F.col("kind").isin(*LINKABLE_KINDS))
         .select(norm_col("obj").alias("norm"))
         .filter(F.length("norm") > 0).distinct()
     )
-    pending_ids = (
-        mapping.join(B(pending_norms), "norm", "left_semi")
-        .select("entity_id").distinct()
+    # (norm, id) under the prior AND the current mapping, delta norms only
+    delta_ids = (
+        prior_map.unionByName(mapping)
+        .join(B(delta_norms), "norm", "left_semi").distinct()
     )
+    moved = prior_map.join(
+        B(changed.withColumnRenamed("entity_id", "new_id")), "norm")
     affected_ids = checkpoint(
-        prior_ids.union(new_ids).union(pending_ids).distinct())
+        delta_ids.select("entity_id")
+        .union(moved.select("entity_id"))
+        .union(changed.select("entity_id"))
+        .distinct())
 
     entities_out, aliases_out = _splice_entities(
         old_entities, old_aliases, mentions, triples_raw, mapping,
         affected_ids, hint_broadcast=hint_broadcast)
 
     # ---- triples: affected group keys -----------------------------------
-    labels_stable = mapping.select(
-        "norm", F.col("entity_id").alias("component"))
-    keys_a = (
-        canonical_triples(new_raw, labels_stable)
+    # INVARIANT (round-5 advice): the group scope is keyed and re-keyed
+    # on obj ONLY because canonical_triples canonicalizes only linkable
+    # OBJECTS; canonicalizing subj too would silently break the splice —
+    # extend the scope derivation symmetrically if that ever changes
+    keys_delta = (
+        canonical_triples(delta_raw, delta_ids.withColumnRenamed(
+            "entity_id", "component"))
+        .select("subj", "pred", "obj")
+    )
+    keys_moved = (
+        old_triples.join(B(moved.select(F.col("entity_id").alias("obj"))),
+                         "obj", "left_semi")
         .select("subj", "pred", "obj").distinct()
     )
-    # groups whose obj is an absorbed prior id: member rows re-key to
-    # the surviving id, so both the old and the rewritten group (and
-    # any pre-existing group at the surviving id) recompute.
-    # INVARIANT (round-5 advice): this affected-group scope is keyed and
-    # re-keyed on obj ONLY because canonical_triples canonicalizes only
-    # linkable OBJECTS; canonicalizing subj too would silently break the
-    # splice — extend the scope derivation symmetrically if that ever
-    # changes
-    keys_b_old = (
-        old_triples.join(B(prior_ids),
-                         old_triples.obj == prior_ids.entity_id,
-                         "left_semi")
-        .select("subj", "pred", "obj").distinct()
-    )
-    absorbed_to_new = (
-        prior_map.join(B(changed_norms), "norm", "left_semi")
-        .join(mapping.withColumnsRenamed(
-            {"entity_id": "new_id"}), "norm")
-        .select(F.col("entity_id").alias("obj"), "new_id").distinct()
-    )
-    keys_b_new = (
-        keys_b_old.join(B(absorbed_to_new), "obj")
-        .select("subj", "pred", F.col("new_id").alias("obj")).distinct()
+    keys_rekeyed = (
+        keys_moved.join(B(moved.select(F.col("entity_id").alias("obj"),
+                                       "new_id")), "obj")
+        .select("subj", "pred", F.col("new_id").alias("obj"))
     )
     drop_keys = checkpoint(
-        keys_a.union(keys_b_old).union(keys_b_new).distinct())
+        keys_delta.union(keys_moved).union(keys_rekeyed).distinct())
 
     triples_out = _splice_triples(
         old_triples, triples_raw, mapping, drop_keys,
@@ -315,93 +314,3 @@ def _splice_triples(
                          ["subj", "pred", "obj"], "left_anti")
         .unionByName(recomputed)
     )
-
-
-def retraction_outputs(
-    old_triples: DataFrame,
-    old_entities: DataFrame,
-    old_aliases: DataFrame,
-    mentions: DataFrame,
-    remaining_raw: DataFrame,
-    removed_raw: DataFrame,
-    mapping: DataFrame,
-    prior_map: DataFrame,
-    hint_broadcast: bool = True,
-) -> tuple[dict[str, DataFrame], DataFrame, DataFrame]:
-    """Retraction analog of ``incremental_outputs``: recompute only the
-    output groups a file REMOVAL touches. Inputs are the prior outputs,
-    the post-retraction mention table and raw-triple stream, the removed
-    files' raw triples, the post-retraction norm -> entity_id
-    ``mapping`` (splits already resolved by the holder-aware stable-id
-    rule), and the pre-retraction ``prior_map`` (the entity_ids ledger —
-    covers every norm ever materialized, including now-dead ones).
-
-    Scope:
-      * affected OLD ids = prior ids of the removed rows' norms (their
-        n_mentions/provenance shrink or they vanish) + prior ids of
-        norms whose mapping moved (splits);
-      * affected NEW ids = current ids of those same norms (where they
-        survive);
-      * affected triple groups = the removed rows' canonical groups
-        under the PRIOR mapping + groups whose obj is an affected old id
-        + those groups re-keyed to each moved norm's new id.
-    Exact-equal to a full rebuild over the remaining corpus with the
-    same ledger — pinned by tests/test_retraction.py and the
-    ``retract_kg_triples`` oracle."""
-    B = _hint(hint_broadcast)
-    affected_norms = (
-        removed_raw.filter(F.col("kind").isin(*LINKABLE_KINDS))
-        .select(norm_col("obj").alias("norm"))
-        .filter(F.length("norm") > 0).distinct()
-    )
-    moved = checkpoint(
-        prior_map.join(mapping.withColumnsRenamed(
-            {"entity_id": "new_id"}), "norm")
-        .filter(F.col("entity_id") != F.col("new_id")))
-    old_ids = checkpoint(
-        prior_map.join(B(affected_norms), "norm", "left_semi")
-        .select("entity_id")
-        .union(moved.select("entity_id"))
-        .distinct())
-    new_ids = (
-        mapping.join(B(affected_norms), "norm", "left_semi")
-        .select("entity_id")
-        .union(moved.select(F.col("new_id").alias("entity_id")))
-        .distinct()
-    )
-    affected_ids = checkpoint(
-        old_ids.union(new_ids).distinct())
-
-    entities_out, aliases_out = _splice_entities(
-        old_entities, old_aliases, mentions, remaining_raw, mapping,
-        affected_ids, hint_broadcast=hint_broadcast)
-
-    prior_stable = prior_map.select(
-        "norm", F.col("entity_id").alias("component"))
-    keys_a = (
-        canonical_triples(removed_raw, prior_stable)
-        .select("subj", "pred", "obj").distinct()
-    )
-    keys_b_old = (
-        old_triples.join(B(old_ids),
-                         old_triples.obj == old_ids.entity_id,
-                         "left_semi")
-        .select("subj", "pred", "obj").distinct()
-    )
-    old_to_new = moved.select(
-        F.col("entity_id").alias("obj"), "new_id").distinct()
-    keys_b_new = (
-        keys_b_old.join(B(old_to_new), "obj")
-        .select("subj", "pred", F.col("new_id").alias("obj")).distinct()
-    )
-    drop_keys = checkpoint(
-        keys_a.union(keys_b_old).union(keys_b_new).distinct())
-    triples_out = _splice_triples(
-        old_triples, remaining_raw, mapping, drop_keys,
-        hint_broadcast=hint_broadcast)
-    outputs = {
-        "triples": triples_out,
-        "entities": entities_out,
-        "aliases": aliases_out,
-    }
-    return outputs, affected_ids, drop_keys

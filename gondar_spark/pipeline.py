@@ -141,8 +141,7 @@ class Pipeline:
     def run(self, source_df: DataFrame | None = None, force: bool = False,
             incremental: bool = False,
             source_path: str | None = None,
-            prune_removed: bool = False,
-            incremental_materialize: bool = True) -> dict:
+            prune_removed: bool = False) -> dict:
         """Run all stages with resume. ``incremental=True`` additionally
         enables file-level resume of the extraction stage: files already
         recorded in the committed ``extract_done`` ledger are skipped via
@@ -171,15 +170,6 @@ class Pipeline:
         incremental run appends only its new keys (O(new), not
         O(history)); segments fold into one snapshot every
         ``COMPACT_AFTER`` runs (dedup-on-read in between).
-
-        ``incremental_materialize=False`` keeps incremental linking but
-        forces a FULL materialize: the splice is exact-equal to the full
-        path, so this is purely a cost choice — the splice wins when
-        snapshot rewrite is cheap relative to the corpus-wide
-        re-aggregation (row-level-MERGE sinks, big corpora), the full
-        path when rewrite dominates (this sandbox's whole-snapshot
-        parquet writes at the 500k-family point; see
-        BENCH/BASELINE.md's 50k-campaign crossover table).
 
         Every cache and checkpoint the run makes — its own and those of
         the operators it calls (CC, materialize) — belongs to one
@@ -393,13 +383,8 @@ class Pipeline:
                     # recorded.
                     link_exec = self._link_incremental()
                     executed.update(link_exec)
-                    mentions = self.io.read("mentions")
-                    labels = self.io.read("labels")
-                    triples_raw = self.io.read("triples_raw")
-                    executed["materialize"] = self._materialize_stage(
-                        mentions, labels, triples_raw,
-                        force=force_downstream or any(link_exec.values()),
-                        allow_incremental=incremental_materialize)
+                    executed["materialize"] = self._materialize_incremental(
+                        force=force_downstream or any(link_exec.values()))
                     return executed
                 force = force or force_downstream
             else:
@@ -532,22 +517,17 @@ class Pipeline:
 
     def _materialize_stage(self, mentions: DataFrame, labels: DataFrame,
                            triples_raw: DataFrame, force: bool,
-                           allow_incremental: bool = False,
                            durable: bool = True) -> bool:
-        """Materialize with STABLE entity ids: CC labels are component
-        minima and churn when a lower-id member arrives; the entity_ids
-        ledger maps every mention norm to its FIRST-ASSIGNED id, so
-        corpus growth never relabels a published entity. Merges (several
-        prior ids landing in one component) survive as the minimum prior
-        id — deterministic — and are recorded in lineage. On a fresh
-        warehouse the ledger is the identity mapping, so first-run
-        outputs equal plain min-label canonicalization (all existing
-        oracles/fixtures unchanged).
-
-        ``allow_incremental``: recompute ONLY the output groups this
-        ingest touches (_materialize_incremental) instead of
-        re-aggregating the corpus — exact-equal to the full path by
-        construction and by test."""
+        """FULL materialize with STABLE entity ids: CC labels are
+        component minima and churn when a lower-id member arrives; the
+        entity_ids ledger maps every mention norm to its FIRST-ASSIGNED
+        id, so corpus growth never relabels a published entity. Merges
+        (several prior ids landing in one component) survive as the
+        minimum prior id — deterministic — and are recorded in lineage.
+        On a fresh warehouse the ledger is the identity mapping, so
+        first-run outputs equal plain min-label canonicalization (all
+        existing oracles/fixtures unchanged). Ingests splice instead
+        (_materialize_incremental)."""
         probe = _STAGE_TABLES["materialize"]
         has_ledger = self.io.exists("entity_ids")
         if (not force and all(self.io.exists(t) for t in probe)
@@ -570,44 +550,21 @@ class Pipeline:
         prior_map = self._read_entity_ledger() if has_ledger else None
         mapping, changed, merges = self._stable_mapping(
             labels, mentions, prior_map)
-
-        can_inc = (
-            allow_incremental and has_ledger
-            and all(self.io.exists(t) for t in probe)
-            and self.io.exists("mat_done")
-        )
-        if can_inc:
-            executed = self._materialize_incremental(
-                mentions, triples_raw, mapping, prior_map, changed)
-        else:
-            executed = self._run_stage(
-                "materialize",
-                materialize.full_outputs(mentions, triples_raw, mapping),
-                partition_by=_MAT_PARTITIONS, force=True, parallel=True)
-            # a completed full materialize covers every extracted file
-            self.io.write(
-                self.io.read("extract_done").distinct(), "mat_done",
-                meta={"stage": "materialize", "run_id": self.cfg.run_id})
+        executed = self._run_stage(
+            "materialize",
+            materialize.full_outputs(mentions, triples_raw, mapping),
+            partition_by=_MAT_PARTITIONS, force=True, parallel=True)
         meta = {"stage": "materialize", "run_id": self.cfg.run_id}
-        if not has_ledger:
+        # a completed full materialize covers every extracted file
+        self.io.write(self.io.read("extract_done").distinct(), "mat_done",
+                      meta=meta)
+        if has_ledger:
+            self._advance_ids(changed, merges, "materialize",
+                              changed.count())
+        else:
             self.io.write(mapping.withColumn("_seq", F.lit(0)),
                           "entity_ids", meta=meta)
             self._log("entity_ids", rows="base", merges=0)
-        else:
-            n_changed = changed.count()
-            merge_rows = [
-                {"entity_id": r["entity_id"],
-                 "absorbed_id": r["absorbed_id"]}
-                for r in merges.limit(100).collect()
-            ]
-            n_merges = merges.count()
-            if n_changed:
-                seq = self.io.read("entity_ids").agg(
-                    F.max("_seq")).collect()[0][0] or 0
-                self.io.append(changed.withColumn("_seq", F.lit(seq + 1)),
-                               "entity_ids", meta=meta)
-            self._log("entity_ids", changed=n_changed, merges=n_merges,
-                      merge_sample=merge_rows)
         return executed
 
     @staticmethod
@@ -639,57 +596,100 @@ class Pipeline:
             mapping.join(prior_map, ["norm", "entity_id"], "left_anti"))
         return mapping, changed, merges
 
-    def _materialize_incremental(self, mentions: DataFrame,
-                                 triples_raw: DataFrame,
-                                 mapping: DataFrame,
-                                 prior_map: DataFrame,
-                                 changed: DataFrame) -> bool:
-        """Recompute ONLY the output groups this ingest touches — the
-        last O(corpus)-shuffle per ingest (full materialize re-aggregates
-        every triple group and every entity on every run with changes).
+    def _materialize_incremental(self, force: bool) -> bool:
+        """Ingest's materialize: splice ONLY the output groups the
+        pending files touch (_splice) instead of re-aggregating every
+        triple group and every entity (_materialize_stage, the fallback
+        for a warehouse without outputs, ledger or ``mat_done``).
 
-        Pending files = extract_done ∖ mat_done (own ledger — crash
-        anywhere replays idempotently, advanced LAST); the affected-group
-        scope derivation and splice live in
-        operators/materialize.incremental_outputs (shared with the
-        oracle-gated ``incremental_kg_*`` queries). Exact-equal to the
-        full path: pinned by tests/test_incremental_materialize.py
-        against a same-state full recompute. Output writes stay full
-        atomic snapshots (at Iceberg scale the write becomes a row-level
-        MERGE on the same delta)."""
+        Pending files = extract_done ∖ mat_done (own ledger — a crash
+        anywhere replays idempotently, advanced LAST). Exact-equal to
+        the full path: pinned by tests/test_incremental_materialize.py
+        against a same-state full recompute."""
         io = self.io
+        mentions, labels, triples_raw = (
+            io.read(t) for t in ("mentions", "labels", "triples_raw"))
+        if not all(io.exists(t) for t in (*_STAGE_TABLES["materialize"],
+                                          "entity_ids", "mat_done")):
+            return self._materialize_stage(mentions, labels, triples_raw,
+                                           force=force)
+        if not force:
+            self._log("materialize", skipped=True)
+            return False
         t0 = time.time()
         keys = self._LINK_KEYS
-        done = io.read("extract_done").distinct()
-        pending = checkpoint(
-            done.join(io.read("mat_done"), keys, "left_anti"))
+        pending = checkpoint(io.read("extract_done").distinct().join(
+            io.read("mat_done"), keys, "left_anti"))
         n_pending = pending.count()
-        n_changed = changed.count()
-        if n_pending == 0 and n_changed == 0:
+        new_raw = triples_raw.join(
+            self._batch_broadcast(n_pending)(pending), keys, "left_semi")
+        stats = self._splice("materialize", labels, triples_raw, new_raw,
+                             n_pending)
+        if stats is None:
             self._log("materialize", skipped=True, incremental=True)
             return False
-        B = self._batch_broadcast(max(n_pending, n_changed))
-        new_raw = triples_raw.join(B(pending), keys, "left_semi")
-
-        outputs, affected_ids, drop_keys = materialize.incremental_outputs(
-            io.read("triples"), io.read("entities"), io.read("aliases"),
-            mentions, triples_raw, new_raw, mapping, prior_map, changed,
-            hint_broadcast=B is F.broadcast)
-
-        # overlapped writes (guide §2.6) — every input is a committed
-        # table, a broadcast of a checkpointed scope frame, or the
-        # checkpointed mapping, so the three plans share no live persist
-        commits = self._write_tables("materialize", outputs,
-                                     _MAT_PARTITIONS, parallel=True)
         io.append(pending, "mat_done",
                   meta={"stage": "materialize", "run_id": self.cfg.run_id})
         self._fold("mat_done", DataFrame.distinct)
         self._log("materialize", skipped=False, incremental=True,
-                  pending_files=n_pending, changed_mappings=n_changed,
-                  affected_entities=affected_ids.count(),
-                  affected_triple_groups=drop_keys.count(),
-                  wall_s=round(time.time() - t0, 3), **self._sizes(commits))
+                  pending_files=n_pending, **stats,
+                  wall_s=round(time.time() - t0, 3))
         return True
+
+    def _splice(self, stage: str, labels: DataFrame, triples_raw: DataFrame,
+                delta_raw: DataFrame, n_delta: int) -> dict | None:
+        """The shared tail of every file delta — ingest's materialize
+        and retract(): stable mapping over the current ``labels`` and
+        mentions -> materialize.splice_outputs over the delta's raw rows
+        (``delta_raw``: added or removed; ``triples_raw``: the current
+        raw stream) -> overlapped output writes -> entity_ids advance.
+        Every splice input is a committed table or a checkpointed frame,
+        so the three writes share no live persist. Returns the lineage
+        stats; None, with nothing written, when the delta is empty and
+        no mapping moved."""
+        io = self.io
+        mentions = io.read("mentions")
+        prior_map = self._read_entity_ledger()
+        mapping, changed, merges = self._stable_mapping(
+            labels, mentions, prior_map)
+        n_changed = changed.count()
+        if n_delta == 0 and n_changed == 0:
+            return None
+        B = self._batch_broadcast(max(n_delta, n_changed))
+        outputs, affected_ids, drop_keys = materialize.splice_outputs(
+            io.read("triples"), io.read("entities"), io.read("aliases"),
+            mentions, triples_raw, delta_raw, mapping, prior_map, changed,
+            hint_broadcast=B is F.broadcast)
+        commits = self._write_tables(stage, outputs, _MAT_PARTITIONS,
+                                     parallel=True)
+        self._advance_ids(changed, merges, stage, n_changed)
+        return {"changed_mappings": n_changed,
+                "affected_entities": affected_ids.count(),
+                "affected_triple_groups": drop_keys.count(),
+                **self._sizes(commits)}
+
+    def _advance_ids(self, changed: DataFrame, merges: DataFrame,
+                     stage: str, n_changed: int) -> None:
+        """Append the new or moved mappings as one entity_ids segment
+        (``_seq`` = latest + 1, so they win on read) and log the merge
+        sample: prior ids a component claimed but did not keep — merges
+        under growth, re-assignments under splits."""
+        # the sample and the count both read it: one evaluation of the
+        # stable-id resolution instead of two
+        merges = checkpoint(merges)
+        merge_rows = [
+            {"entity_id": r["entity_id"], "absorbed_id": r["absorbed_id"]}
+            for r in merges.limit(100).collect()
+        ]
+        n_merges = merges.count()
+        if n_changed:
+            seq = self.io.read("entity_ids").agg(
+                F.max("_seq")).collect()[0][0] or 0
+            self.io.append(changed.withColumn("_seq", F.lit(seq + 1)),
+                           "entity_ids",
+                           meta={"stage": stage, "run_id": self.cfg.run_id})
+        self._log("entity_ids", changed=n_changed, merges=n_merges,
+                  merge_sample=merge_rows)
 
     @staticmethod
     def _overlap(tasks) -> list:
@@ -736,24 +736,29 @@ class Pipeline:
         forgotten: a daily handful of removals must not re-link the
         corpus.
 
-        Scope: removed files' raw triples -> affected norms; a norm with
-        no surviving mention DIES (leaves the mention dictionary and the
+        Scope — only what removal alone needs lives here: the removed
+        files' raw triples -> affected norms; a norm with no surviving
+        mention DIES (leaves the mention dictionary and the
         signature/band store, so future probes cannot link to ghosts);
-        edges with a dead endpoint die; CC re-runs only on the
-        components that contained a dead norm (they can SPLIT — the
-        holder-aware stable-id rule in identity.resolve_stable_ids keeps
-        published ids collision-free: the fragment holding the id norm
-        keeps it, others get their CC label); materialize splices only
-        the affected output groups (materialize.retraction_outputs).
+        edges with a dead endpoint die. From there the delta takes the
+        path ingest takes: the touched-component CC (_touched_cc — the
+        components holding a dead norm can SPLIT, and edge segments a
+        crashed ingest left unreflected are folded in), then _splice
+        (stable mapping — the holder-aware rule in
+        identity.resolve_stable_ids keeps published ids collision-free:
+        the fragment holding the id norm keeps it, others get their CC
+        label — output splice, entity_ids advance).
 
         CRASH-SAFE by idempotent replay: every derived table is a pure
-        function of (old triples_raw, removed keys), data tables are
-        rewritten before triples_raw, and the ledgers are pruned LAST —
-        a replay after any crash point recomputes identical content (a
-        post-triples_raw replay sees empty scopes and only re-commits
-        already-correct tables). Dead norms keep their ledger rows (no
-        tombstones): if a file returns, its norms get their old ids
-        back.
+        function of (old triples_raw, removed keys, committed link
+        state); labels are written before the link-table compactions
+        (so a replay never loses unreflected edge segments a compaction
+        folded away), data tables are rewritten before triples_raw, and
+        the ledgers are pruned LAST — a replay after any crash point
+        recomputes identical content (a post-triples_raw replay sees
+        empty scopes and only re-commits already-correct tables). Dead
+        norms keep their ledger rows (no tombstones): if a file
+        returns, its norms get their old ids back.
 
         Cap-freeze note: removal never re-opens a mega-block — a band
         that crossed the cap stays frozen even if removals shrink it
@@ -785,7 +790,7 @@ class Pipeline:
                 )
             # the link-store compactions below partition by the probe-key
             # prefix; an older unpartitioned store would fail them AFTER
-            # mentions/edges were rewritten — refuse before any write
+            # labels and mentions were rewritten — refuse before any write
             stale = [f"{t} lacks {c}" for t, c in (("link_signatures", "_np"),
                                                    ("link_bands", "_bp"))
                      if io.exists(t) and c not in io.read(t).columns]
@@ -843,46 +848,31 @@ class Pipeline:
             )
             n_dead = dead.count()
 
-            # ---- edges + labels: dead endpoints; re-CC touched components ----
-            old_labels = io.read("labels")
-            edges_out = (
-                io.read("edges")
-                .join(B(dead.withColumnRenamed("norm", "norm_a")),
-                      "norm_a", "left_anti")
-                .join(B(dead.withColumnRenamed("norm", "norm_b")),
-                      "norm_b", "left_anti")
-            )
-            touched = (
-                old_labels.join(B(dead), "norm", "left_semi")
-                .select("component").distinct().transform(checkpoint)
-            )
-            n_touched = touched.count()
-            sub = (
-                edges_out.join(
-                    old_labels.select(F.col("norm").alias("norm_a"),
-                                      "component"), "norm_a")
-                .join(B(touched), "component", "left_semi")
-                .select("norm_a", "norm_b")
-            )
-            relabeled = cc.connected_components(sub, cfg.cc_max_iter)
-            labels_out = (
-                old_labels.join(B(touched), "component", "left_anti")
-                .unionByName(relabeled)
-                .transform(checkpoint)
-            )
-
+            # ---- labels: one touched-component CC, written first ----------
+            labels_out, n_touched = self._touched_cc(
+                self.spark.createDataFrame([], "norm_a string, norm_b string"),
+                removed=B(dead))
             meta = {"stage": "retract", "run_id": cfg.run_id}
+            io.write(labels_out, "labels", meta={
+                **meta, "edge_segments": io.segments("edges")})
+
             # the four link-state rewrites are independent (each compact's
             # plan reads only its OWN table + the checkpointed dead set) —
-            # overlap them (guide §2.6); labels follows because its commit
-            # manifest records the post-compact edge segment list
+            # overlap them (guide §2.6)
             link_rewrites = [
                 lambda: io.compact("mentions", mentions_out, meta=meta),
                 lambda: io.compact(
                     "link_signatures",
                     io.read("link_signatures").join(B(dead), "norm", "left_anti"),
                     meta=meta, partition_by=["_np"]),
-                lambda: io.compact("edges", edges_out, meta=meta),
+                lambda: io.compact(
+                    "edges",
+                    io.read("edges")
+                    .join(B(dead.withColumnRenamed("norm", "norm_a")),
+                          "norm_a", "left_anti")
+                    .join(B(dead.withColumnRenamed("norm", "norm_b")),
+                          "norm_b", "left_anti"),
+                    meta=meta),
             ]
             if io.exists("link_bands"):
                 link_rewrites.append(lambda: io.compact(
@@ -890,31 +880,11 @@ class Pipeline:
                     io.read("link_bands").join(B(dead), "norm", "left_anti"),
                     meta=meta, partition_by=["_bp"]))
             self._overlap(link_rewrites)
-            io.write(labels_out, "labels", meta={
-                **meta, "edge_segments": io.segments("edges")})
 
-            # ---- stable ids over the post-retraction graph -------------------
-            mentions_new = io.read("mentions")
-            prior_map = self._read_entity_ledger()
-            mapping, changed, reassigned = self._stable_mapping(
-                labels_out, mentions_new, prior_map)
-            n_changed = changed.count()
-
-            # ---- materialize: splice only affected output groups -------------
-            outputs, affected_ids, drop_keys = materialize.retraction_outputs(
-                io.read("triples"), io.read("entities"), io.read("aliases"),
-                mentions_new, remaining_raw, removed_raw, mapping, prior_map,
-                hint_broadcast=B is F.broadcast)
-            self._write_tables("retract", outputs, _MAT_PARTITIONS)
-            if n_changed:
-                seq = io.read("entity_ids").agg(
-                    F.max("_seq")).collect()[0][0] or 0
-                io.append(changed.withColumn("_seq", F.lit(seq + 1)),
-                          "entity_ids", meta=meta)
-            reassign_rows = [
-                {"entity_id": r["entity_id"], "absorbed_id": r["absorbed_id"]}
-                for r in reassigned.limit(100).collect()
-            ]
+            stats = {"removed_files": n_removed, "dead_norms": n_dead,
+                     "touched_components": n_touched,
+                     **self._splice("retract", io.read("labels"),
+                                    remaining_raw, removed_raw, n_removed)}
 
             # ---- prune the raw stream + per-file tables + ledgers LAST -------
             per_file = []
@@ -938,16 +908,7 @@ class Pipeline:
                 for ledger in ("extract_done", "link_done", "mat_done")
                 if io.exists(ledger)
             ])
-            stats = {
-                "removed_files": n_removed,
-                "dead_norms": n_dead,
-                "touched_components": n_touched,
-                "changed_mappings": n_changed,
-                "affected_entities": affected_ids.count(),
-                "affected_triple_groups": drop_keys.count(),
-            }
             self._log("retract", skipped=False, **stats,
-                      id_reassignments=reassign_rows,
                       wall_s=round(time.time() - t0, 3))
             return stats
 
@@ -987,7 +948,11 @@ class Pipeline:
             small stay — the batch analog of the streaming max_band
             freeze; refusals are logged);
           * labels — CC re-runs ONLY on components touched by a new edge
-            (cc.incremental_components); untouched labels pass through.
+            (_touched_cc, the one touched-component CC retract() also
+            runs); untouched labels pass through.
+
+        Materialize follows as _materialize_incremental -> _splice, the
+        tail retract() shares.
 
         CRASH-SAFE RESUME: extraction's ledger advances before linking,
         so linking must track its own progress or a crash between the
@@ -1001,8 +966,9 @@ class Pipeline:
             regenerated edges anti-join the edges table before append;
           - the labels commit manifest records WHICH edge segments it
             reflects — a crash between the edges append and the labels
-            write leaves an unreflected segment that the next run folds
-            into its incremental CC input.
+            write leaves an unreflected segment that the next run — an
+            ingest or a retract() — folds into its touched-component CC
+            input.
 
         Equal to the full recompute except for cap-freeze semantics
         (pinned by tests against Pipeline-on-union)."""
@@ -1117,17 +1083,8 @@ class Pipeline:
         t2 = time.time()
         labels_changed = bool(n_new_edges or unreflected)
         if labels_changed:
-            cc_input = new_edges.select("norm_a", "norm_b")
-            for seg in unreflected:
-                cc_input = cc_input.unionByName(
-                    self.spark.read.parquet(io._path(seg))
-                    .select("norm_a", "norm_b"))
-            old_labels = io.read("labels")
-            all_edges = io.read("edges")  # post-append: duplicates with
-            # cc_input are deduped inside incremental CC's distinct
-            labels_new, touched = cc.incremental_components(
-                old_labels, all_edges, cc_input, cfg.cc_max_iter)
-            n_touched = touched.count()
+            labels_new, n_touched = self._touched_cc(
+                new_edges.select("norm_a", "norm_b"))
             # the labels write reads the old snapshot while staging to a
             # tmp dir; the atomic swap happens only after the read ran.
             # Its manifest records which edge segments it reflects.
@@ -1169,6 +1126,25 @@ class Pipeline:
         meta = self.io.commit_meta("labels") or {}
         reflected = set(meta.get("meta", {}).get("edge_segments", []))
         return [s for s in self.io.segments("edges") if s not in reflected]
+
+    def _touched_cc(self, new_edges: DataFrame,
+                    removed: DataFrame | None = None):
+        """Labels after a signed edge delta, for ingest and retract()
+        alike: cc.incremental_components over the committed labels and
+        edges, re-running CC only on the components that ``new_edges``,
+        the unreflected edge segments (a crash between an edges append
+        and its labels write) and the ``removed`` norms touch. Returns
+        (labels plan, touched component count)."""
+        for seg in self._unreflected_edge_segments():
+            new_edges = new_edges.unionByName(
+                self.spark.read.parquet(self.io._path(seg))
+                .select("norm_a", "norm_b"))
+        # the committed edges already hold this ingest's append: the
+        # duplicates with new_edges dedup inside incremental CC
+        labels, touched = cc.incremental_components(
+            self.io.read("labels"), self.io.read("edges"), new_edges,
+            self.cfg.cc_max_iter, removed=removed)
+        return labels, touched.count()
 
     def _compact_ledgers(self, keep_keys: DataFrame | None,
                          force: bool = False) -> None:

@@ -258,7 +258,11 @@ def test_link_crash_before_labels_folds_unreflected_edges(spark, tmp_path):
 def test_incremental_components_fuzz(spark):
     """Random graphs: incremental_components(old_labels, old, new) must
     equal connected_components(old ∪ new) — bridges, cycles, brand-new
-    nodes, empty splits included."""
+    nodes, empty splits included. Each trial also removes a random node
+    set (possibly empty, possibly outside every edge — a retraction that
+    touches no component) and must equal connected_components over the
+    surviving edges: splits, vanished components, removed endpoints of
+    new edges."""
     rng = random.Random(1001)
     for trial in range(5):
         n = rng.randint(8, 40)
@@ -280,6 +284,20 @@ def test_incremental_components_fuzz(spark):
         old_labels = connected_components(old_df, 20)
         inc, _touched = incremental_components(old_labels, old_df, new_df, 20)
         assert _set(inc, ["norm", "component"]) == full, f"trial {trial}"
+
+        gone = {f"n{i:03d}" for i in rng.sample(range(n + 5),
+                                                rng.randint(0, 6))}
+        survivors = [(a, b) for a, b in edges
+                     if a not in gone and b not in gone]
+        want = _set(connected_components(to_df(survivors), 20),
+                    ["norm", "component"])
+        removed = spark.createDataFrame(
+            [(g,) for g in sorted(gone)] or [("x",)], "norm string"
+        ).filter(F.col("norm") != "x")
+        inc_rm, _touched = incremental_components(
+            old_labels, old_df, new_df, 20, removed=removed)
+        assert _set(inc_rm, ["norm", "component"]) == want, \
+            f"trial {trial}, removed {sorted(gone)}"
 
 
 def test_ivf_append_drift_gate(spark, tmp_path):

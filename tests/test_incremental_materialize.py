@@ -112,34 +112,3 @@ def test_incremental_materialize_crash_replay(spark, tmp_path):
         assert got[t] == want[t], f"{t} after crash replay"
         df = pipe.io.read(t)
         assert df.count() == df.select(cols).distinct().count()
-
-
-def test_incremental_materialize_opt_out(spark, tmp_path):
-    """``incremental_materialize=False`` keeps incremental linking but
-    takes the FULL materialize path (the cost knob for rewrite-dominated
-    sinks; BENCH/BASELINE.md 50k-campaign crossover) — outputs must be
-    identical to the splice's."""
-    def _seed(wh, run_id):
-        pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / wh),
-                                         run_id=run_id,
-                                         durable_link_state=True))
-        pipe.run(source_df=_src(spark, [("a.py", _win(2)),
-                                        ("b.py", _win(4))]))
-        return pipe
-
-    grown = _src(spark, [("a.py", _win(2)), ("b.py", _win(4)),
-                         ("c.py", _win(0)), ("d.py", _win(6))])
-
-    inc = _seed("wh_inc", "inc")
-    inc.run(source_df=grown, incremental=True)
-    assert any(r.get("incremental") for r in inc.lineage()
-               if r["stage"] == "materialize")
-
-    full = _seed("wh_full", "full")
-    full.run(source_df=grown, incremental=True,
-             incremental_materialize=False)
-    mats = [r for r in full.lineage() if r["stage"] == "materialize"]
-    assert not any(r.get("incremental") for r in mats)
-    assert not mats[-1].get("skipped")
-
-    assert _snapshot(inc) == _snapshot(full)

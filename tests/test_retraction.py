@@ -124,6 +124,12 @@ def test_retract_singleton_keeps_id_against_fragment(spark, tmp_path):
     w_aliases = pipe.io.read("aliases").filter(
         F.col("alias").isin([_win(0), _win(2), _win(4), _win(6)]))
     assert w_aliases.select("entity_id").distinct().count() == 1
+    # retract then ingest, back to back through the shared splice path,
+    # stays exact against a same-ledger full recompute
+    got = _snapshot(pipe)
+    want = _full_recompute_snapshot(spark, pipe, tmp_path, "reingest")
+    for t, _cols in _OUT:
+        assert got[t] == want[t], f"{t} after retract + re-ingest"
 
 
 def test_retract_crash_replay(spark, tmp_path):
@@ -161,6 +167,40 @@ def test_retract_crash_replay(spark, tmp_path):
     assert pipe.retract(source_df=remaining)["removed_files"] == 0
 
 
+
+@pytest.mark.parametrize("table", ["edges", "triples"])
+def test_retract_crash_after_labels_replays(spark, tmp_path, table):
+    """Kill the retraction after its labels write: in the edges
+    compaction, or in the output splice's writes. The replay sees labels
+    already without the dead norms and must still converge to the
+    scratch build and the same-ledger full recompute."""
+    from tests.test_incremental_linking import _crash_on
+
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="c2",
+                    durable_link_state=True)
+    pipe = Pipeline(spark, cfg)
+    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 6, 12, 14])))
+    remaining = _src(spark, _win_files([0, 2, 6, 12, 14]))
+
+    restore = _crash_on(pipe.io, "write", table)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.retract(source_df=remaining)
+    restore()
+    pipe.retract(source_df=remaining)
+
+    scratch = Pipeline(spark, JobConfig(
+        warehouse=str(tmp_path / "wh2"), run_id="scratch",
+        durable_link_state=True))
+    scratch.run(source_df=remaining)
+    for t, cols in _LINK:
+        assert _set(pipe.io.read(t), cols) == \
+            _set(scratch.io.read(t), cols), f"{t} after replay"
+    got = _snapshot(pipe)
+    want = _full_recompute_snapshot(spark, pipe, tmp_path, "crash2")
+    for t, _cols in _OUT:
+        assert got[t] == want[t], f"{t} after replay"
+
+
 def test_retract_refuses_old_link_store_layout_before_writing(spark,
                                                               tmp_path):
     """A link_signatures store without the ``_np`` prefix column (the
@@ -188,3 +228,39 @@ def test_retract_refuses_old_link_store_layout_before_writing(spark,
     with pytest.raises(StageError, match="_np"):
         pipe.retract(source_df=_src(spark, _win_files([0, 2, 6])))
     assert manifests() == before
+
+
+def test_retract_after_ingest_crash_keeps_unreflected_edges(spark, tmp_path):
+    """An ingest killed between the edges append and the labels write
+    leaves edge segments the labels manifest does not reflect. A
+    retraction that runs next must fold them into its touched-component
+    CC (as the next ingest would), not mark them reflected unseen: the
+    follow-up ingest must then converge to a scratch build, merges of
+    the crashed batch included."""
+    from tests.test_incremental_linking import _crash_on
+
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="x1",
+                    durable_link_state=True)
+    pipe = Pipeline(spark, cfg)
+    pipe.run(source_df=_src(spark, _win_files([2, 4, 20, 30])))
+
+    restore = _crash_on(pipe.io, "write", "labels")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 20, 22, 30])),
+                 incremental=True)
+    restore()
+    assert pipe._unreflected_edge_segments()
+
+    remaining = _src(spark, _win_files([0, 2, 4, 20, 22]))
+    pipe.retract(source_df=remaining)
+    pipe.run(source_df=remaining, incremental=True)
+
+    scratch = Pipeline(spark, JobConfig(
+        warehouse=str(tmp_path / "wh2"), run_id="scratch",
+        durable_link_state=True))
+    scratch.run(source_df=remaining)
+    for table, cols in _LINK[1:]:
+        assert _set(pipe.io.read(table), cols) == \
+            _set(scratch.io.read(table), cols), f"{table} != scratch"
+    assert pipe.io.read("entities").count() == \
+        scratch.io.read("entities").count()

@@ -20,9 +20,14 @@ It prints two lists:
   conditional expression) of the function reads, or one the function
   forwards to a path-selecting parameter of another.
 
-Resolution is by name, so two package functions that share a name are
-reached together. Methods are followed through their class but their
-parameters are not audited.
+Methods of reached package classes (``Pipeline``, ``TableIO``,
+``Scope``, ...) are audited the same way and listed as
+``Class.method``; a call ``obj.method(...)`` binds positions after
+``self``/``cls`` (none are skipped for a staticmethod), and ``Class(...)``
+binds ``Class.__init__``.
+
+Resolution is by name, so two package functions (or methods) that share
+a name are reached together.
 
 Usage: python tools/audit_reach.py [repo_root]
 """
@@ -133,10 +138,28 @@ def audit(root: str) -> tuple[list[str], list[str], dict]:
             node, (ast.FunctionDef, ast.AsyncFunctionDef)) else None)
 
     audited = {(rel, d.name): d for rel, d in funcs if id(d) in reached}
+    # methods of reached package classes; ``shift`` = positions a bound
+    # call does not pass (self/cls)
+    shift: dict[tuple[str, str], int] = {}
+    for name, ds in defs.items():
+        for rel, cls in ds:
+            if not (isinstance(cls, ast.ClassDef) and id(cls) in reached
+                    and rel.startswith("gondar_spark/")):
+                continue
+            for m in cls.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    key = (rel, f"{cls.name}.{m.name}")
+                    audited[key] = m
+                    shift[key] = 0 if "staticmethod" in {
+                        getattr(d, "id", None) for d in m.decorator_list
+                    } else 1
     key_of = {id(d): key for key, d in audited.items()}
     by_name: dict[str, list[tuple[str, str]]] = {}
-    for (rel, name), d in audited.items():
-        by_name.setdefault(name, []).append((rel, name))
+    for key, d in audited.items():
+        # ``Cls(...)`` binds ``Cls.__init__``
+        name = (key[1].split(".")[0] if d.name == "__init__"
+                and key in shift else d.name)
+        by_name.setdefault(name, []).append(key)
 
     def params_of(fn) -> set[str]:
         a = fn.args
@@ -146,11 +169,11 @@ def audit(root: str) -> tuple[list[str], list[str], dict]:
         return pname in params_of(fn) and pname not in {
             n for _, n in _defaults(fn)}
 
-    def bound(call, fn, pnames):
+    def bound(call, key, pnames):
         """(param, value) pairs a call binds among ``pnames``; value is
         None when only a * or ** splat can bind it."""
-        a = fn.args
-        pos = [p.arg for p in a.posonlyargs + a.args]
+        a = audited[key].args
+        pos = [p.arg for p in a.posonlyargs + a.args][shift.get(key, 0):]
         splat = (any(isinstance(v, ast.Starred) for v in call.args)
                  or any(k.arg is None for k in call.keywords))
         kw = {k.arg: k.value for k in call.keywords if k.arg}
@@ -184,14 +207,14 @@ def audit(root: str) -> tuple[list[str], list[str], dict]:
         changed = False
         for call, enclosing, key in resolved:
             fn = audited[key]
-            for pname, value in bound(call, fn, params_of(fn)):
+            for pname, value in bound(call, key, params_of(fn)):
                 src = forwarded(value, enclosing)
                 if src and (*key, pname) in path and src not in path:
                     path.add(src)
                     changed = True
             defaulted = [p for _, p in _defaults(fn)
                          if (*key, p) not in is_set]
-            for pname, value in bound(call, fn, defaulted):
+            for pname, value in bound(call, key, defaulted):
                 src = forwarded(value, enclosing)
                 if src and not (src in is_set
                                 or required(enclosing, value.id)):
@@ -204,7 +227,8 @@ def audit(root: str) -> tuple[list[str], list[str], dict]:
     unset = sorted(f"{rel}:{name}({p}=)" + (" *" if (rel, name, p) in path
                                             else "")
                    for rel, name, p in options if (rel, name, p) not in is_set)
-    summary = {"functions": len(funcs), "unreached": len(unreached),
+    summary = {"functions": len(funcs), "methods": len(shift),
+               "unreached": len(unreached),
                "defaulted_params": len(options),
                "path_params": sum(o in path for o in options),
                "unset_params": len(unset),
