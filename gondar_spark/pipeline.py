@@ -1,21 +1,29 @@
-"""The staged KG-construction job (north rule, /root/repo/BASELINE.json:14):
+"""The staged KG-construction job:
 
   source -> triples_raw (extract) -> mentions -> edges -> labels (CC)
          -> triples / entities / aliases (materialize)
 
-Every stage ends in a committed snapshot (TableIO.write is atomic), so a
-killed run resumes idempotently: committed stages are SKIPPED and their
-outputs re-read (checkpoint/resume, B12). Lineage: one JSONL record per
-stage per run (rows, bytes, wall ms, skipped flag) plus the extractor's
-per-batch metric rows persisted as `extract_metrics`.
+Every stage ends in committed tables (TableIO.write is atomic), so a
+killed run resumes idempotently: a build skips the stages whose tables
+are committed and re-reads them. Builds and incremental ingests share
+the first two stages, one path each. The source stage commits the
+corpus (a copy, or a zero-copy registration) and hashes the committed
+table: a build hashes every file, an ingest only the files
+``source_hashes`` lacks. The extraction stage extracts its todo: the
+whole corpus on a build, the corpus minus the ``extract_done`` ledger on
+an ingest. A build writes its tables; an ingest appends one segment to
+each. From there an ingest's link and materialize steps each work from
+their own ledger (``link_done``, ``mat_done``), advanced last, so a
+crash at any commit replays without duplicating rows.
 
-The reference analog of lineage/metrics is the token-usage callback
-(/root/reference/gondar/utils/Flow.py:27-40, PubMedFlow.py:242) and the
-Memory stub's cache/history role (PubMedFlow.py:26-28).
+Lineage: one JSONL record per stage per run (rows, bytes, wall_s,
+skipped flag), timed by one context manager (Pipeline._stage), plus the
+extractor's per-batch metric rows persisted as ``extract_metrics``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
@@ -30,7 +38,7 @@ from .operators import (
     blocking, cc, chunk, extract, identity, materialize, normalize, source,
 )
 from .operators.scoring import score_pairs
-from .session import Scope, checkpoint, persist, release
+from .session import Scope, checkpoint, persist
 from .sources.tables import TableIO
 
 STAGES = ("source", "triples_raw", "mentions", "edges", "labels", "materialize")
@@ -73,21 +81,27 @@ class Pipeline:
         """This run's lineage records; ``all_runs=True`` returns every
         run's records for this warehouse in timestamp order (e.g. the
         per-micro-batch run ids a streaming ingest generates)."""
-        if all_runs:
-            if not os.path.isdir(self._lineage_path):
-                return []
-            recs: list[dict] = []
-            for name in os.listdir(self._lineage_path):
-                if not name.endswith(".jsonl"):
-                    continue
-                with open(os.path.join(self._lineage_path, name)) as f:
+        d = self._lineage_path
+        names = (sorted(os.listdir(d)) if all_runs and os.path.isdir(d)
+                 else [f"{self.cfg.run_id}.jsonl"])
+        recs: list[dict] = []
+        for name in names:
+            p = os.path.join(d, name)
+            if name.endswith(".jsonl") and os.path.exists(p):
+                with open(p) as f:
                     recs += [json.loads(ln) for ln in f if ln.strip()]
-            return sorted(recs, key=lambda r: r.get("ts", 0))
-        p = os.path.join(self._lineage_path, f"{self.cfg.run_id}.jsonl")
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return sorted(recs, key=lambda r: r.get("ts", 0)) if all_runs else recs
+
+    @contextlib.contextmanager
+    def _stage(self, name: str, **fields):
+        """Time one stage or sub-step: the block fills the yielded dict
+        with its lineage fields, and on a clean exit the record is logged
+        with the block's ``wall_s``. A block that raises logs nothing, as
+        a killed run would not. The one place per-stage metrics attach."""
+        t0 = time.time()
+        rec = dict(fields)
+        yield rec
+        self._log(name, **rec, wall_s=round(time.time() - t0, 3))
 
     def _run_stage(self, name: str, tables: dict[str, "DataFrame"],
                    partition_by: dict[str, list[str]] | None = None,
@@ -105,19 +119,21 @@ class Pipeline:
         if not force and all(self.io.exists(t) for t in tables):
             self._log(name, skipped=True)
             return False
-        t0 = time.time()
-        commits = self._write_tables(name, tables, partition_by, parallel)
-        self._log(name, skipped=False, wall_s=round(time.time() - t0, 3),
-                  **self._sizes(commits))
+        with self._stage(name, skipped=False) as rec:
+            rec.update(self._sizes(self._write_tables(
+                name, tables, partition_by, parallel)))
         return True
 
     def _write_tables(self, stage: str, tables: dict[str, DataFrame],
                       partition_by: dict[str, list[str]] | None = None,
-                      parallel: bool = False) -> dict:
-        """Commit each table, overlapped (_overlap) when ``parallel``;
+                      parallel: bool = False, append: bool = False) -> dict:
+        """Commit each table — a snapshot write, or one appended segment
+        when ``append`` — overlapped (_overlap) when ``parallel``;
         returns {table: commit}."""
+        commit = self.io.append if append else self.io.write
+
         def _write(tbl, df):
-            return tbl, self.io.write(
+            return tbl, commit(
                 df, tbl, partition_by=(partition_by or {}).get(tbl),
                 meta={"stage": stage, "run_id": self.cfg.run_id})
 
@@ -142,40 +158,50 @@ class Pipeline:
             incremental: bool = False,
             source_path: str | None = None,
             prune_removed: bool = False) -> dict:
-        """Run all stages with resume. ``incremental=True`` additionally
-        enables file-level resume of the extraction stage: files already
-        recorded in the committed ``extract_done`` ledger are skipped via
-        an anti-join on (repo, path, commit), and downstream stages are
-        recomputed only when extraction actually added rows (B12 —
-        resume-by-anti-join, /root/repo/BASELINE.json:6,14). The ledger
-        records every file whose extraction COMPLETED — including files
-        that yielded zero triples and quarantined files — so an unchanged
-        corpus re-runs with zero extractor invocations.
+        """Run all stages with resume; returns {stage: executed}.
 
-        ``source_path`` is the ZERO-COPY ingestion mode: the existing
-        committed corpus at that path is registered (a pointer, no data
-        movement) and only the small sha256 table is written — at 100 TB
-        the copy+shuffle of the ``source_df`` path is a job in itself and
-        must not be paid to ingest data that is already at rest.
-        ``source_df`` (fixture/test mode) keeps the copying behavior.
+        ``source_df`` is written to ``cfg.source_table`` as a copy;
+        ``source_path`` is the ZERO-COPY mode: the corpus already at rest
+        there is registered (a pointer, no data movement) — at 100 TB the
+        copy is a job in itself. Without either, the committed source
+        table is re-read.
 
-        APPEND-ONLY ASSUMPTION: incremental mode treats the corpus as
-        append-only — files REMOVED or REWRITTEN-in-place upstream leave
-        their old rows in ``source_hashes`` / ``extract_done`` (harmless
-        for correctness: a key absent from the corpus can never match the
-        anti-join, it is dead weight only). Pass ``prune_removed=True``
-        to semi-join both ledgers against the currently-registered corpus
-        keys during this run's compaction, dropping keys the corpus no
-        longer contains. The extraction ledger itself is SEGMENTED: each
-        incremental run appends only its new keys (O(new), not
-        O(history)); segments fold into one snapshot every
-        ``COMPACT_AFTER`` runs (dedup-on-read in between).
+        ``incremental=True`` makes the run an INGEST once the warehouse
+        holds ``triples_raw`` (B12 — resume by anti-join on (repo, path,
+        commit)). Every stage still has one path; what changes is its
+        todo and its commit:
+          * source: only the files ``source_hashes`` lacks are hashed,
+            and appended as one segment;
+          * extraction: only the corpus minus the ``extract_done``
+            ledger is extracted, and ``triples_raw``, ``quarantine``,
+            ``extract_metrics`` and the ledger each get one appended
+            segment — O(batch) bytes, never a rewrite of the history. The
+            ledger records every file whose extraction completed (zero-
+            triple and quarantined files too), so an unchanged corpus
+            re-runs with zero extractor calls;
+          * linking (_link_incremental) and materialize
+            (_materialize_incremental) each take their pending files
+            from their own ledger (``link_done``, ``mat_done``).
+        Segment tables fold into one snapshot every ``COMPACT_AFTER``
+        runs. A warehouse without the link state, or with lang-aware
+        blocking, recomputes the later stages in full when extraction
+        added rows. ``force=True`` rebuilds every stage.
+
+        APPEND-ONLY ASSUMPTION: an ingest treats the corpus as
+        append-only — files REMOVED or REWRITTEN-in-place upstream keep
+        their rows in ``source_hashes`` / ``extract_done`` (dead weight
+        only: a key absent from the corpus never matches the anti-join).
+        ``prune_removed=True`` semi-joins both against the current corpus
+        keys while folding them this run; retract() removes files from
+        every table.
 
         Every cache and checkpoint the run makes — its own and those of
         the operators it calls (CC, materialize) — belongs to one
         session.Scope and is freed when run() returns or raises: a
         long-lived session (streaming foreachBatch, a bench campaign, a
         notebook) never accumulates executor storage across runs."""
+        if source_path is not None and source_df is not None:
+            raise ValueError("pass source_df OR source_path, not both")
         with Scope():
             cfg = self.cfg
             executed: dict[str, bool] = {}
@@ -188,225 +214,25 @@ class Pipeline:
             durable = (cfg.durable_link_state or incremental
                        or self.io.exists("entity_ids"))
 
-            # stage 1: source scan + sha256 pass (B1/B2)
-            if source_path is not None and source_df is not None:
-                raise ValueError("pass source_df OR source_path, not both")
-            if source_path is not None:
-                if force or incremental or not self.io.exists(cfg.source_table):
-                    self.io.register(cfg.source_table, source_path)
-                registered = self.io.read(cfg.source_table)
-                if (incremental and not force
-                        and self.io.exists("source_hashes")):
-                    # zero-copy incremental: hash ONLY files not yet in the
-                    # committed hash table (same anti-join as the extraction
-                    # ledger) — a full-corpus sha pass per incremental run is
-                    # exactly the job-sized cost this mode exists to avoid
-                    old_hashes = self.io.read("source_hashes")
-                    if prune_removed:
-                        # drop hash rows whose file the corpus no longer holds
-                        old_hashes = old_hashes.join(
-                            registered.select("repo", "path", "commit"),
-                            ["repo", "path", "commit"], "left_semi",
-                        )
-                    new_hashes = source.with_content_sha(
-                        registered.join(
-                            old_hashes.select("repo", "path", "commit"),
-                            ["repo", "path", "commit"], "left_anti",
-                        )
-                    ).select("repo", "path", "commit", "content_sha256"
-                             ).transform(checkpoint)
-                    if new_hashes.count() > 0 or prune_removed:
-                        executed["source"] = self._run_stage(
-                            "source",
-                            {"source_hashes": old_hashes.unionByName(new_hashes)},
-                            force=True,
-                        )
-                    else:
-                        self._log("source", skipped=True)
-                        executed["source"] = False
-                else:
-                    executed["source"] = self._run_stage(
-                        "source",
-                        {"source_hashes": source.with_content_sha(registered)
-                         .select("repo", "path", "commit", "content_sha256")},
-                        force=force or incremental,
-                    )
-            elif source_df is not None:
-                # write the corpus FIRST, hash the committed copy: the two
-                # tables previously evaluated the (possibly expensive) input
-                # plan twice — a synthetic generator or an upstream join paid
-                # per table. The committed parquet scan prunes to the key +
-                # content columns for the sha pass. Same outputs, one
-                # evaluation.
-                probe = (cfg.source_table, "source_hashes")
-                if (not (force or incremental)
-                        and all(self.io.exists(t) for t in probe)):
-                    self._log("source", skipped=True)
-                    executed["source"] = False
-                else:
-                    t0 = time.time()
-                    meta = {"stage": "source", "run_id": cfg.run_id}
-                    commits = {cfg.source_table: self.io.write(
-                        source_df, cfg.source_table, partition_by=["lang"],
-                        meta=meta)}
-                    committed = self.io.read(cfg.source_table)
-                    commits["source_hashes"] = self.io.write(
-                        source.with_content_sha(committed).select(
-                            "repo", "path", "commit", "content_sha256"),
-                        "source_hashes", meta=meta)
-                    self._log("source", skipped=False,
-                              wall_s=round(time.time() - t0, 3),
-                              **self._sizes(commits))
-                    executed["source"] = True
+            if source_df is not None or source_path is not None:
+                executed["source"] = self._source_stage(
+                    source_df, source_path, force, incremental)
             src = self.io.read(cfg.source_table)
-
-            # stage 2: chunk + vectorized extraction (B3/B4)
-            def _extract(base_src, done_keys=None):
-                """Returns (triples, quarantine, metrics, raw). ``raw`` is
-                PERSISTED: the three outputs are filters over one extraction
-                plan, and without the persist each table write re-runs the
-                whole mapInPandas extraction — 3x the expensive operator per
-                stage (on the LLM path, 3x the endpoint bill). It lives in
-                the caller's scope, released once its outputs exist."""
-                todo = base_src
-                if done_keys is not None:
-                    todo = base_src.join(done_keys, ["repo", "path", "commit"],
-                                         "left_anti")
-                units = chunk.prepare_extraction_units(
-                    todo, cfg.chunk_lines, pass_through_chars=cfg.max_chunk_chars)
-                kw = {}
-                if self.extractor is not None:
-                    kw["extractor"] = self.extractor
-                if self.batch_extractor is not None:
-                    kw["batch_extractor"] = self.batch_extractor
-                raw = persist(extract.extract_triples(
-                    units, cfg.extractor_max_retries, cfg.chunk_lines, **kw))
-                return (*extract.split_extraction(raw), raw)
-
-            if incremental and self.io.exists("triples_raw") and not force:
-                # done-file LEDGER keyed on (repo, path, commit): triples_raw
-                # alone cannot serve — files whose extraction yielded zero
-                # triples leave no row there and would re-extract on EVERY
-                # incremental run (a standing extractor tax at billions of
-                # files). Older warehouses without the ledger fall back to the
-                # triples_raw-derived key set once; this run commits the
-                # ledger and the tax ends.
-                old = self.io.read("triples_raw")
-                if self.io.exists("extract_done"):
-                    done = self.io.read("extract_done")
-                else:
-                    done = old.select("repo", "path", "commit").distinct()
-                todo_keys = (
-                    src.select("repo", "path", "commit").distinct()
-                    .join(done, ["repo", "path", "commit"], "left_anti")
-                    .transform(checkpoint)
-                )
-                n_todo = todo_keys.count()
-                if n_todo == 0:
-                    # ZERO extractor invocations: no extraction plan is even
-                    # built — the gate the ledger exists to provide. A legacy
-                    # warehouse (pre-ledger) still commits the derived key set
-                    # here, so the triples_raw-distinct fallback runs ONCE,
-                    # not on every future run.
-                    if not self.io.exists("extract_done"):
-                        self.io.write(
-                            done, "extract_done",
-                            meta={"stage": "triples_raw",
-                                  "run_id": self.cfg.run_id},
-                        )
-                    self._log("triples_raw_incremental", n_todo=0, new_rows=0,
-                              skipped=True)
-                    executed["triples_raw"] = False
-                    force_downstream = False
-                else:
-                    new_triples, new_quarantine, new_metrics, raw = _extract(
-                        src, done)
-                    # materialize BEFORE overwriting triples_raw: these plans
-                    # read the old snapshot lazily, and the upcoming swap would
-                    # change what the anti-join sees mid-write. The persisted
-                    # raw means extraction runs ONCE across the three
-                    # checkpoints; released as soon as they exist.
-                    new_triples = checkpoint(new_triples)
-                    new_quarantine = checkpoint(new_quarantine)
-                    new_metrics = checkpoint(new_metrics.select(
-                        F.col("obj").alias("metric"), "chunk_id"))
-                    release(raw)
-                    n_new = new_triples.count()
-                    n_quar = new_quarantine.count()
-                    # the ledger advances for every ATTEMPTED file — zero-triple
-                    # and quarantined files included (their outcome is recorded
-                    # in quarantine; force=True re-extracts everything). It is
-                    # appended LAST, after the data commit: committing the
-                    # ledger BEFORE the data would let a crash between the two
-                    # commits permanently skip files whose triples were never
-                    # written (A15). Ledgers are SEGMENT APPENDS — O(new rows)
-                    # per run, never a rewrite of the full history.
-                    tables = {}
-                    if n_new > 0:
-                        tables["triples_raw"] = old.unionByName(new_triples)
-                    self._run_stage("triples_raw", tables, force=True)
-                    ledger_meta = {"stage": "triples_raw", "run_id": cfg.run_id}
-                    if n_quar > 0:
-                        # persist quarantine even when no triples were added
-                        # (A15: never silently drop) — an O(new) SEGMENT like
-                        # the other ledgers, appended BEFORE extract_done so a
-                        # crash re-extracts rather than losing failure records.
-                        # Anti-join on the FAILURE identity (file key + error
-                        # message) keeps re-extraction from stacking
-                        # duplicates while distinct failures of one file all
-                        # land.
-                        fresh_quar = new_quarantine.join(
-                            self.io.read("quarantine").select(
-                                "repo", "path", "commit", "obj"),
-                            ["repo", "path", "commit", "obj"], "left_anti",
-                        ).dropDuplicates(["repo", "path", "commit", "obj"])
-                        self.io.append(fresh_quar, "quarantine",
-                                       meta=ledger_meta)
-                    self.io.append(new_metrics, "extract_metrics",
-                                   meta=ledger_meta)
-                    self.io.append(todo_keys, "extract_done", meta=ledger_meta)
-                    self._log("triples_raw_incremental", n_todo=n_todo,
-                              new_rows=n_new, new_quarantine=n_quar)
-                    executed["triples_raw"] = True
-                    force_downstream = n_new > 0
+            ingest = (incremental and not force
+                      and self.io.exists("triples_raw"))
+            executed["triples_raw"], added = self._extract_stage(
+                src, ingest, force)
+            if ingest:
                 self._compact_ledgers(src if prune_removed else None,
                                       force=prune_removed)
                 if self._can_link_incremental():
-                    # O(new) linking: probe the committed signature/band store
-                    # with the new mentions, re-run CC only on the components
-                    # a new edge touches, and leave the untouched graph alone
-                    # — ingest cost tracks the batch, not the corpus. Driven
-                    # by the link_done ledger (extract_done minus link_done =
-                    # files whose linking is pending), so a crash anywhere in
-                    # the linking sub-steps resumes idempotently — never a
-                    # silent skip of files the extraction ledger already
-                    # recorded.
                     link_exec = self._link_incremental()
                     executed.update(link_exec)
                     executed["materialize"] = self._materialize_incremental(
-                        force=force_downstream or any(link_exec.values()))
+                        link_exec["labels"])
                     return executed
-                force = force or force_downstream
-            else:
-                def _extract_all():
-                    triples, quarantine, metrics, raw = _extract(src)
-                    # materialize the extraction cache with ONE action so the
-                    # four table writes below can run overlapped (guide §2.6)
-                    # without racing to populate the persist — the extractor
-                    # still runs exactly once per unit (the extract-once
-                    # contract, pinned by the CountingBatchExtractor test)
-                    raw.count()
-                    return {"triples_raw": triples, "quarantine": quarantine,
-                            "extract_metrics": metrics.select(
-                                F.col("obj").alias("metric"), "chunk_id"),
-                            "extract_done": src.select(
-                                "repo", "path", "commit").distinct()}
-                # the stage's own scope frees the raw persist once the
-                # writes complete (or fail)
-                with Scope():
-                    executed["triples_raw"] = self._run_stage_lazy(
-                        "triples_raw", _extract_all, force=force,
-                        parallel=True)
+                # the full-stage fallback recomputes what the new rows feed
+                force = added
             triples_raw = self.io.read("triples_raw")
 
             # stage 3: distinct normalized mentions (B5)
@@ -498,6 +324,136 @@ class Pipeline:
             executed["materialize"] = self._materialize_stage(
                 mentions, labels, triples_raw, force=force, durable=durable)
             return executed
+
+    def _source_stage(self, source_df: DataFrame | None,
+                      source_path: str | None, force: bool,
+                      incremental: bool) -> bool:
+        """Stage 1 (B1/B2): commit the corpus — ``source_df`` as a copy
+        partitioned by lang, ``source_path`` registered in place — then
+        one sha256 pass over the COMMITTED table, so the (possibly
+        expensive) input plan is evaluated once and the scan prunes to
+        the key and content columns. A build hashes every file. An
+        ingest hashes only the files ``source_hashes`` lacks and appends
+        them as one segment (folded and pruned in _compact_ledgers).
+        Returns True if a table was committed."""
+        cfg, io, keys = self.cfg, self.io, self._LINK_KEYS
+        if not (force or incremental) and all(
+                io.exists(t) for t in (cfg.source_table, "source_hashes")):
+            self._log("source", skipped=True)
+            return False
+        ingest = incremental and not force and io.exists("source_hashes")
+        with self._stage("source") as rec:
+            commits = {}
+            if source_path is not None:
+                io.register(cfg.source_table, source_path)
+            else:
+                commits = self._write_tables(
+                    "source", {cfg.source_table: source_df},
+                    {cfg.source_table: ["lang"]})
+            corpus = io.read(cfg.source_table)
+            if ingest:
+                corpus = corpus.join(io.read("source_hashes").select(*keys),
+                                     keys, "left_anti")
+            hashes = source.with_content_sha(corpus).select(
+                *keys, "content_sha256")
+            if ingest:
+                hashes = checkpoint(hashes)
+            if not ingest or hashes.count():
+                commits.update(self._write_tables(
+                    "source", {"source_hashes": hashes}, append=ingest))
+            rec.update(skipped=not commits, **self._sizes(commits))
+        return bool(commits)
+
+    def _extract_stage(self, src: DataFrame, ingest: bool,
+                       force: bool) -> tuple[bool, bool]:
+        """Stage 2 (B3/B4): chunk + vectorized extraction, one path for
+        builds and ingests. The todo is the whole corpus on a build and
+        the corpus minus the ``extract_done`` ledger on an ingest. The
+        ledger, keyed on (repo, path, commit), records every ATTEMPTED
+        file: triples_raw alone cannot serve, since a file that yields
+        zero triples leaves no row there and would re-extract on every
+        ingest. A warehouse without the ledger falls back once to the
+        keys of triples_raw and commits them.
+
+        The extraction is persisted and populated by ONE action, which
+        also counts each output; the three data tables are filters over
+        that one plan, so they commit overlapped and the extractor still
+        runs once per unit (the extract-once contract). A build writes
+        them; an ingest appends one segment each and drops re-extracted
+        rows a killed run already committed — triples_raw rows of files
+        it holds, quarantine rows by failure identity (file key + error
+        message). ``extract_done`` commits LAST: a ledger committed
+        before the data would let a crash between the two skip files
+        whose rows were never written (A15).
+
+        Returns (executed, extraction added triples)."""
+        io, cfg, keys = self.io, self.cfg, self._LINK_KEYS
+        todo = src.select(*keys).distinct()
+        if ingest:
+            done = (io.read("extract_done") if io.exists("extract_done")
+                    else io.read("triples_raw").select(*keys).distinct())
+            todo = checkpoint(todo.join(done, keys, "left_anti"))
+            n_todo = todo.count()
+            if n_todo == 0:
+                # ZERO extractor calls: no extraction plan is even built.
+                # A pre-ledger warehouse commits the derived key set here,
+                # so its fallback runs once.
+                if not io.exists("extract_done"):
+                    io.write(done, "extract_done", meta={
+                        "stage": "triples_raw", "run_id": cfg.run_id})
+                self._log("triples_raw_incremental", n_todo=0, new_rows=0,
+                          skipped=True)
+                return False, False
+            B = self._batch_broadcast(n_todo)
+            src = src.join(B(todo), keys, "left_semi")
+        elif not force and all(io.exists(t)
+                               for t in _STAGE_TABLES["triples_raw"]):
+            self._log("triples_raw", skipped=True)
+            return False, False
+        kw = {k: v for k, v in (("extractor", self.extractor),
+                                ("batch_extractor", self.batch_extractor))
+              if v is not None}
+        # the stage's own scope frees the extraction persist once its
+        # commits complete (or fail)
+        with Scope(), self._stage("triples_raw", skipped=False) as rec:
+            raw = persist(extract.extract_triples(
+                chunk.prepare_extraction_units(
+                    src, cfg.chunk_lines,
+                    pass_through_chars=cfg.max_chunk_chars),
+                cfg.extractor_max_retries, cfg.chunk_lines, **kw))
+            triples, quarantine, metrics = extract.split_extraction(raw)
+            tables = {"triples_raw": triples, "quarantine": quarantine,
+                      "extract_metrics": metrics.select(
+                          F.col("obj").alias("metric"), "chunk_id")}
+            # ONE action populates the persist and counts each output
+            # (split_extraction's filters), so an ingest skips empty appends
+            out = (F.when(raw.pred == "__error__", "quarantine")
+                   .when(raw.pred == "__metric__", "extract_metrics")
+                   .otherwise("triples_raw"))
+            n = {t: 0 for t in tables}
+            n.update(raw.groupBy(out).count().collect())
+            if ingest:
+                tables = {t: df for t, df in tables.items() if n[t]}
+                if "triples_raw" in tables:
+                    held = io.read("triples_raw").select(*keys).join(
+                        B(todo), keys, "left_semi")
+                    tables["triples_raw"] = triples.join(held, keys,
+                                                         "left_anti")
+                if "quarantine" in tables:
+                    qkey = [*keys, "obj"]
+                    tables["quarantine"] = quarantine.join(
+                        io.read("quarantine").select(*qkey), qkey,
+                        "left_anti").dropDuplicates(qkey)
+            commits = self._write_tables("triples_raw", tables,
+                                         parallel=True, append=ingest)
+            commits.update(self._write_tables(
+                "triples_raw", {"extract_done": todo}, append=ingest))
+            rec.update(self._sizes(commits))
+        if ingest:
+            self._log("triples_raw_incremental", n_todo=n_todo,
+                      new_rows=n["triples_raw"],
+                      new_quarantine=n["quarantine"])
+        return True, n["triples_raw"] > 0
 
     # ---- stable canonical ids + materialize ---------------------------------
     @staticmethod
@@ -596,44 +552,48 @@ class Pipeline:
             mapping.join(prior_map, ["norm", "entity_id"], "left_anti"))
         return mapping, changed, merges
 
-    def _materialize_incremental(self, force: bool) -> bool:
+    def _materialize_incremental(self, labels_changed: bool) -> bool:
         """Ingest's materialize: splice ONLY the output groups the
         pending files touch (_splice) instead of re-aggregating every
         triple group and every entity (_materialize_stage, the fallback
         for a warehouse without outputs, ledger or ``mat_done``).
 
-        Pending files = extract_done ∖ mat_done (own ledger — a crash
-        anywhere replays idempotently, advanced LAST). Exact-equal to
-        the full path: pinned by tests/test_incremental_materialize.py
-        against a same-state full recompute."""
+        Pending files = extract_done ∖ mat_done: its own ledger, advanced
+        LAST. It runs when that set is non-empty or this run changed
+        ``labels`` — never from a caller's "something changed" flag,
+        which a replay after a crash past the extraction and link ledgers
+        would read as nothing to do. Exact-equal to the full path:
+        pinned by tests/test_incremental_materialize.py against a
+        same-state full recompute."""
         io = self.io
-        mentions, labels, triples_raw = (
-            io.read(t) for t in ("mentions", "labels", "triples_raw"))
         if not all(io.exists(t) for t in (*_STAGE_TABLES["materialize"],
                                           "entity_ids", "mat_done")):
-            return self._materialize_stage(mentions, labels, triples_raw,
-                                           force=force)
-        if not force:
-            self._log("materialize", skipped=True)
-            return False
-        t0 = time.time()
+            return self._materialize_stage(
+                *(io.read(t) for t in ("mentions", "labels", "triples_raw")),
+                force=True)
         keys = self._LINK_KEYS
-        pending = checkpoint(io.read("extract_done").distinct().join(
-            io.read("mat_done"), keys, "left_anti"))
-        n_pending = pending.count()
-        new_raw = triples_raw.join(
-            self._batch_broadcast(n_pending)(pending), keys, "left_semi")
-        stats = self._splice("materialize", labels, triples_raw, new_raw,
-                             n_pending)
-        if stats is None:
-            self._log("materialize", skipped=True, incremental=True)
-            return False
-        io.append(pending, "mat_done",
-                  meta={"stage": "materialize", "run_id": self.cfg.run_id})
-        self._fold("mat_done", DataFrame.distinct)
-        self._log("materialize", skipped=False, incremental=True,
-                  pending_files=n_pending, **stats,
-                  wall_s=round(time.time() - t0, 3))
+        with self._stage("materialize", incremental=True) as rec:
+            pending = io.read("extract_done").join(io.read("mat_done"),
+                                                   keys, "left_anti")
+            stats = None
+            # the emptiness probe is a no-op's whole cost: nothing else is
+            # read, deduplicated or checkpointed until there is work
+            if labels_changed or not pending.isEmpty():
+                pending = checkpoint(pending.distinct())
+                n_pending = pending.count()
+                triples_raw = io.read("triples_raw")
+                new_raw = triples_raw.join(
+                    self._batch_broadcast(n_pending)(pending), keys,
+                    "left_semi")
+                stats = self._splice("materialize", io.read("labels"),
+                                     triples_raw, new_raw, n_pending)
+            rec["skipped"] = stats is None
+            if stats is None:
+                return False
+            io.append(pending, "mat_done",
+                      meta={"stage": "materialize", "run_id": self.cfg.run_id})
+            self._fold("mat_done", DataFrame.distinct)
+            rec.update(pending_files=n_pending, **stats)
         return True
 
     def _splice(self, stage: str, labels: DataFrame, triples_raw: DataFrame,
@@ -765,7 +725,10 @@ class Pipeline:
         (consistent with ingest/streaming cap semantics).
         ``extract_metrics`` is left untouched: its rows are identity-
         less observability (no file key to anti-join), and metrics
-        inform, never gate.
+        inform, never gate. The source side loses the removed files too:
+        ``source_hashes`` and ``cfg.source_table`` are pruned — or, given
+        ``source_path``, the source table is re-registered to it — so a
+        later run without a source cannot re-extract them.
 
         Fails up front (StageError, nothing written) on a warehouse whose
         link store predates the prefix-partitioned layout. Caches and
@@ -773,11 +736,10 @@ class Pipeline:
 
         Returns {"removed_files": n, "dead_norms": n, ...} (also logged
         to lineage)."""
-        with Scope():
+        with Scope(), self._stage("retract") as rec:
             io = self.io
             cfg = self.cfg
             keys = self._LINK_KEYS
-            t0 = time.time()
             missing = [t for t in ("extract_done", "link_signatures",
                                    "entity_ids")
                        if not io.exists(t)]
@@ -809,8 +771,8 @@ class Pipeline:
                 .transform(checkpoint)
             )
             n_removed = removed.count()
+            rec["skipped"] = n_removed == 0
             if n_removed == 0:
-                self._log("retract", skipped=True)
                 return {"removed_files": 0}
             B = self._batch_broadcast(n_removed)
 
@@ -887,17 +849,18 @@ class Pipeline:
                                     remaining_raw, removed_raw, n_removed)}
 
             # ---- prune the raw stream + per-file tables + ledgers LAST -------
-            per_file = []
-            if io.exists("quarantine"):
-                per_file.append(lambda: io.compact(
-                    "quarantine",
-                    io.read("quarantine").join(B(removed), keys, "left_anti"),
-                    meta=meta))
-            if io.exists("source_repos"):
-                per_file.append(lambda: io.write(
-                    io.read("source_repos").join(B(removed), keys, "left_anti"),
-                    "source_repos", meta=meta))
-            self._overlap(per_file)
+            # the source table is re-registered when the caller names the
+            # corpus's path (zero-copy), otherwise pruned like the others
+            per_file = ["quarantine", "source_hashes"]
+            if source_path is not None:
+                io.register(cfg.source_table, source_path)
+            else:
+                per_file.append(cfg.source_table)
+            self._overlap([
+                (lambda t: lambda: io.compact(
+                    t, io.read(t).join(B(removed), keys, "left_anti"),
+                    meta=meta))(t)
+                for t in per_file if io.exists(t)])
             self._run_stage("triples_raw", {"triples_raw": remaining_raw},
                             force=True)
             self._overlap([
@@ -908,8 +871,7 @@ class Pipeline:
                 for ledger in ("extract_done", "link_done", "mat_done")
                 if io.exists(ledger)
             ])
-            self._log("retract", skipped=False, **stats,
-                      wall_s=round(time.time() - t0, 3))
+            rec.update(stats)
             return stats
 
     # ---- incremental linking (O(new) ingest) --------------------------------
@@ -990,112 +952,106 @@ class Pipeline:
                 self._log(stage, skipped=True, incremental=True)
             return {"mentions": False, "edges": False, "labels": False}
 
-        t0 = time.time()
-        old_mentions = io.read("mentions")
-        pending_triples = io.read("triples_raw").join(
-            B(pending), keys, "left_semi")
-        new_m = normalize.normalize_mentions(pending_triples)
-        # which of the batch's mention rows are genuinely new: semi-join
-        # the dictionary against the (small, broadcast) batch, then
-        # anti-join the batch against that overlap — both joins broadcast
-        # the small side, so the dictionary is scanned, not shuffled
-        overlap = old_mentions.join(
-            B(new_m), ["surface", "lang", "norm"], "left_semi")
-        new_rows = new_m.join(
-            B(overlap), ["surface", "lang", "norm"], "left_anti"
-        ).transform(checkpoint)
-        n_new_mentions = new_rows.count()
-        self._log("mentions", skipped=False, incremental=True,
-                  new_rows=n_new_mentions, pending_files=n_pending,
-                  wall_s=round(time.time() - t0, 3))
+        with self._stage("mentions", skipped=False, incremental=True) as rec:
+            old_mentions = io.read("mentions")
+            pending_triples = io.read("triples_raw").join(
+                B(pending), keys, "left_semi")
+            new_m = normalize.normalize_mentions(pending_triples)
+            # which of the batch's mention rows are genuinely new: semi-join
+            # the dictionary against the (small, broadcast) batch, then
+            # anti-join the batch against that overlap — both joins broadcast
+            # the small side, so the dictionary is scanned, not shuffled
+            overlap = old_mentions.join(
+                B(new_m), ["surface", "lang", "norm"], "left_semi")
+            new_rows = new_m.join(
+                B(overlap), ["surface", "lang", "norm"], "left_anti"
+            ).transform(checkpoint)
+            n_new_mentions = new_rows.count()
+            rec.update(new_rows=n_new_mentions, pending_files=n_pending)
 
-        t1 = time.time()
-        store_sig = io.read("link_signatures")
-        # the store is the source of truth for "already blocked": norms
-        # of pending files absent from it (replay-safe on retry). The
-        # store tables are prefix-PARTITIONED (see the edges stage):
-        # collecting the batch's distinct prefixes (bounded — <= 256
-        # norm prefixes, <= bands*16 band prefixes) lets every store
-        # read below prune to the partitions the batch can touch, so
-        # probe scan bytes track the batch, not the corpus (round-5
-        # verdict #1; plan-asserted in tests/test_streaming_and_plans).
-        pending_norms = new_m.select("norm").distinct().transform(checkpoint)
-        sig_slice = _prefix_slice(store_sig, "_np", pending_norms,
-                                  blocking.norm_prefix())
-        norm_overlap = sig_slice.select("norm").join(
-            B(pending_norms), "norm", "left_semi").distinct()
-        new_norm_rows = pending_norms.join(
-            B(norm_overlap), "norm", "left_anti")
-        new_sig = blocking.minhash_signature_df(
-            new_norm_rows, cfg.minhash_hashes, cfg.extractor_seed,
-            cfg.shingle_size).transform(checkpoint)
-        n_new_norms = new_sig.count()
-        new_blocks = blocking.band_keys_df(
-            new_sig, cfg.minhash_hashes, cfg.lsh_bands)
-        bands_slice = _prefix_slice(io.read("link_bands"), "_bp", new_blocks,
-                                    blocking.band_prefix())
-        new_band_keys = new_blocks.select("band_key").distinct()
-        touched_store = bands_slice.join(
-            B(new_band_keys), "band_key", "left_semi"
-        ).select("norm", "band_key")
-        combined = (
-            touched_store.select("band_key")
-            .union(new_blocks.select("band_key"))
-            .groupBy("band_key").agg(F.count("*").alias("_bs"))
-            .transform(checkpoint)
-        )
-        n_refused = combined.filter(
-            F.col("_bs") > cfg.max_block_size).count()
-        if n_refused:
-            self._log("edges_megablock_cap", n_blocks_refused=n_refused,
-                      max_block_size=cfg.max_block_size, incremental=True)
-        ok_bands = combined.filter(
-            F.col("_bs") <= cfg.max_block_size).select("band_key")
-        new_blocks_ok = new_blocks.join(
-            B(ok_bands), "band_key", "left_semi")
-        touched_ok = touched_store.join(
-            B(ok_bands), "band_key", "left_semi")
-        pairs = blocking.probe_pairs(new_blocks_ok, touched_ok)
-        # grams for the verify join: only the store norms that actually
-        # appear in a touched band (batch-proportional) — fetched through
-        # the same prefix-pruned store read, never a full grams scan
-        needed_store = touched_ok.select("norm").distinct().transform(checkpoint)
-        grams_slice = _prefix_slice(store_sig, "_np", needed_store,
-                                    blocking.norm_prefix())
-        sig_grams = grams_slice.select("norm", "grams").join(
-            B(needed_store), "norm", "left_semi"
-        ).unionByName(new_sig.select("norm", "grams"))
-        # anti-join against committed edges: a retry after a crash
-        # between the edges append and the link_done advance regenerates
-        # the same pairs — they must not stack
-        new_edges = score_pairs(
-            pairs, sig_grams, cfg.link_threshold
-        ).join(io.read("edges").select("norm_a", "norm_b"),
-               ["norm_a", "norm_b"], "left_anti").transform(checkpoint)
-        n_new_edges = new_edges.count()
-        meta = {"stage": "link_incremental", "run_id": cfg.run_id}
-        if n_new_edges:
-            io.append(new_edges, "edges", meta=meta)
-        self._log("edges", skipped=False, incremental=True,
-                  new_rows=n_new_edges, new_norms=n_new_norms,
-                  wall_s=round(time.time() - t1, 3))
+        with self._stage("edges", skipped=False, incremental=True) as rec:
+            store_sig = io.read("link_signatures")
+            # the store is the source of truth for "already blocked": norms
+            # of pending files absent from it (replay-safe on retry). The
+            # store tables are prefix-PARTITIONED (see the edges stage):
+            # collecting the batch's distinct prefixes (bounded — <= 256
+            # norm prefixes, <= bands*16 band prefixes) lets every store
+            # read below prune to the partitions the batch can touch, so
+            # probe scan bytes track the batch, not the corpus (round-5
+            # verdict #1; plan-asserted in tests/test_streaming_and_plans).
+            pending_norms = checkpoint(new_m.select("norm").distinct())
+            sig_slice = _prefix_slice(store_sig, "_np", pending_norms,
+                                      blocking.norm_prefix())
+            norm_overlap = sig_slice.select("norm").join(
+                B(pending_norms), "norm", "left_semi").distinct()
+            new_norm_rows = pending_norms.join(
+                B(norm_overlap), "norm", "left_anti")
+            new_sig = blocking.minhash_signature_df(
+                new_norm_rows, cfg.minhash_hashes, cfg.extractor_seed,
+                cfg.shingle_size).transform(checkpoint)
+            n_new_norms = new_sig.count()
+            new_blocks = blocking.band_keys_df(
+                new_sig, cfg.minhash_hashes, cfg.lsh_bands)
+            bands_slice = _prefix_slice(io.read("link_bands"), "_bp",
+                                        new_blocks, blocking.band_prefix())
+            new_band_keys = new_blocks.select("band_key").distinct()
+            touched_store = bands_slice.join(
+                B(new_band_keys), "band_key", "left_semi"
+            ).select("norm", "band_key")
+            combined = (
+                touched_store.select("band_key")
+                .union(new_blocks.select("band_key"))
+                .groupBy("band_key").agg(F.count("*").alias("_bs"))
+                .transform(checkpoint)
+            )
+            n_refused = combined.filter(
+                F.col("_bs") > cfg.max_block_size).count()
+            if n_refused:
+                self._log("edges_megablock_cap", n_blocks_refused=n_refused,
+                          max_block_size=cfg.max_block_size, incremental=True)
+            ok_bands = combined.filter(
+                F.col("_bs") <= cfg.max_block_size).select("band_key")
+            new_blocks_ok = new_blocks.join(
+                B(ok_bands), "band_key", "left_semi")
+            touched_ok = touched_store.join(
+                B(ok_bands), "band_key", "left_semi")
+            pairs = blocking.probe_pairs(new_blocks_ok, touched_ok)
+            # grams for the verify join: only the store norms that actually
+            # appear in a touched band (batch-proportional) — fetched through
+            # the same prefix-pruned store read, never a full grams scan
+            needed_store = checkpoint(touched_ok.select("norm").distinct())
+            grams_slice = _prefix_slice(store_sig, "_np", needed_store,
+                                        blocking.norm_prefix())
+            sig_grams = grams_slice.select("norm", "grams").join(
+                B(needed_store), "norm", "left_semi"
+            ).unionByName(new_sig.select("norm", "grams"))
+            # anti-join against committed edges: a retry after a crash
+            # between the edges append and the link_done advance regenerates
+            # the same pairs — they must not stack
+            new_edges = score_pairs(
+                pairs, sig_grams, cfg.link_threshold
+            ).join(io.read("edges").select("norm_a", "norm_b"),
+                   ["norm_a", "norm_b"], "left_anti").transform(checkpoint)
+            n_new_edges = new_edges.count()
+            meta = {"stage": "link_incremental", "run_id": cfg.run_id}
+            if n_new_edges:
+                io.append(new_edges, "edges", meta=meta)
+            rec.update(new_rows=n_new_edges, new_norms=n_new_norms)
 
-        t2 = time.time()
         labels_changed = bool(n_new_edges or unreflected)
         if labels_changed:
-            labels_new, n_touched = self._touched_cc(
-                new_edges.select("norm_a", "norm_b"))
-            # the labels write reads the old snapshot while staging to a
-            # tmp dir; the atomic swap happens only after the read ran.
-            # Its manifest records which edge segments it reflects.
-            io.write(labels_new, "labels", meta={
-                "stage": "labels", "run_id": cfg.run_id,
-                "edge_segments": io.segments("edges"),
-            })
-            self._log("labels_incremental",
-                      touched_components=n_touched,
-                      unreflected_segments=len(unreflected),
-                      wall_s=round(time.time() - t2, 3))
+            with self._stage("labels_incremental") as rec:
+                labels_new, n_touched = self._touched_cc(
+                    new_edges.select("norm_a", "norm_b"))
+                # the labels write reads the old snapshot while staging to
+                # a tmp dir; the atomic swap happens only after the read
+                # ran. Its manifest records which edge segments it reflects.
+                io.write(labels_new, "labels", meta={
+                    "stage": "labels", "run_id": cfg.run_id,
+                    "edge_segments": io.segments("edges"),
+                })
+                rec.update(touched_components=n_touched,
+                           unreflected_segments=len(unreflected))
         else:
             self._log("labels", skipped=True, incremental=True)
         # remaining appends; link_done advances LAST so any crash above
@@ -1148,29 +1104,26 @@ class Pipeline:
 
     def _compact_ledgers(self, keep_keys: DataFrame | None,
                          force: bool = False) -> None:
-        """Fold extraction-ledger segments into one base snapshot once
+        """Fold the ingest's segment tables into one base snapshot once
         ``COMPACT_AFTER`` accumulate (or immediately when ``force``, the
-        prune_removed path). ``extract_done`` compacts to DISTINCT keys,
-        semi-joined against ``keep_keys`` (the registered corpus) when
-        pruning; ``extract_metrics`` folds as-is. Crash-safety: the base
-        snapshot is written before segments are dropped, so a crash
-        between the two steps duplicates rows, never loses them — for
-        extract_done that is invisible (every consumer keys on distinct
-        (repo, path, commit)); for extract_metrics, whose rows have no
-        identity, one fold's worth of observability rows could double-
-        count until the next fold rewrites the base. Metrics inform,
-        they never gate — the correctness ledger is extract_done."""
-        def extract_done(led):
-            led = led.distinct()
-            if keep_keys is None:
-                return led
-            return led.join(
-                keep_keys.select("repo", "path", "commit").distinct(),
-                ["repo", "path", "commit"], "left_semi")
+        prune_removed path). ``extract_done`` and ``source_hashes`` fold
+        to distinct rows, semi-joined against ``keep_keys`` (the
+        registered corpus) when pruning; ``triples_raw`` and
+        ``extract_metrics`` fold as-is. Crash-safety: the base manifest
+        lists the segments it supersedes, so readers never see a row
+        twice. Metrics inform, they never gate — the correctness ledger
+        is extract_done."""
+        keys = self._LINK_KEYS
 
-        self._fold("extract_done", extract_done, force=force,
-                   pruned=keep_keys is not None)
-        self._fold("extract_metrics")
+        def keep(led):
+            led = led.distinct()
+            return led if keep_keys is None else led.join(
+                keep_keys.select(*keys).distinct(), keys, "left_semi")
+
+        for name in ("extract_done", "source_hashes"):
+            self._fold(name, keep, force=force, pruned=keep_keys is not None)
+        for name in ("triples_raw", "extract_metrics"):
+            self._fold(name)
         self._fold("quarantine", lambda q: q.dropDuplicates(
             ["repo", "path", "commit", "obj"]))
         # entity_ids folds to the LATEST row per norm (keeping its _seq
@@ -1193,15 +1146,14 @@ class Pipeline:
                 partition_by=partition_by)
             self._log("ledger_compact", table=name, segments=n_seg, **log)
 
-    def _run_stage_lazy(self, name, thunk, force=False,
-                        parallel=False) -> bool:
+    def _run_stage_lazy(self, name, thunk, force=False) -> bool:
         """Resume-aware stage: only build the DataFrames if not committed
         (building them is cheap/lazy, but skipping keeps lineage honest).
         Caches the thunk makes live in the caller's session.Scope."""
         if not force and all(self.io.exists(t) for t in _STAGE_TABLES[name]):
             self._log(name, skipped=True)
             return False
-        return self._run_stage(name, thunk(), force=True, parallel=parallel)
+        return self._run_stage(name, thunk(), force=True)
 
 
 _STAGE_TABLES = {

@@ -143,31 +143,35 @@ def test_incremental_commits_ledger_after_data(spark, tmp_path, monkeypatch):
     pipe.run(source_df=base)
 
     events = []
-    orig_stage = Pipeline._run_stage
-    orig_append = type(pipe.io).append
+    io_cls = type(pipe.io)
+    orig = {m: getattr(io_cls, m) for m in ("write", "append")}
 
-    def spy_stage(self, name, tables, **kw):
-        events.append(("stage", name, list(tables)))
-        return orig_stage(self, name, tables, **kw)
+    def spy(method):
+        def wrapped(self, df, name, *a, **kw):
+            events.append(("start", method, name))
+            out = orig[method](self, df, name, *a, **kw)
+            events.append(("end", method, name))
+            return out
+        return wrapped
 
-    def spy_append(self, df, name, **kw):
-        events.append(("append", name, None))
-        return orig_append(self, df, name, **kw)
-
-    monkeypatch.setattr(Pipeline, "_run_stage", spy_stage)
-    monkeypatch.setattr(type(pipe.io), "append", spy_append)
+    for m in orig:
+        monkeypatch.setattr(io_cls, m, spy(m))
     bigger = generate_source_df(spark, SynthConfig(n_files=40), partitions=4)
     pipe.run(source_df=bigger, incremental=True)
     # the ledger is a segment APPEND that happens strictly AFTER the data
-    # commit (and never rides inside the stage's tables dict)
-    i_data = next(i for i, (kind, name, tables) in enumerate(events)
-                  if kind == "stage" and name == "triples_raw"
-                  and "triples_raw" in (tables or []))
-    i_ledger = next(i for i, (kind, name, _) in enumerate(events)
-                    if kind == "append" and name == "extract_done")
+    # commit (and never rides inside the stage's overlapped data group:
+    # every data commit started before it has ended before it)
+    i_data = next(i for i, (ev, _m, name) in enumerate(events)
+                  if ev == "end" and name == "triples_raw")
+    i_ledger = next(i for i, (ev, m, name) in enumerate(events)
+                    if ev == "start" and m == "append"
+                    and name == "extract_done")
     assert i_data < i_ledger
-    assert all("extract_done" not in (tables or [])
-               for kind, name, tables in events if kind == "stage")
+    data = {"triples_raw", "quarantine", "extract_metrics"}
+    started, ended = ([name for e, _m, name in events[:i_ledger]
+                       if e == ev and name in data]
+                      for ev in ("start", "end"))
+    assert sorted(started) == sorted(ended)
 
 
 def test_http_transport_has_no_lossy_request_batch():

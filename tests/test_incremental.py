@@ -181,3 +181,71 @@ def test_metric_rows_carry_partition_lineage(spark, tmp_path):
             (re.search(r"partition=(-?\d+)", s) for s in metrics) if m}
     assert pids and all(p >= 0 for p in pids)
     assert len(pids) >= 2  # multiple physical partitions represented
+
+
+_RAW = ["subj", "pred", "obj", "kind", "repo", "path", "commit", "chunk_id"]
+
+
+def _rows(df, cols):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("table", ["extract_metrics", "extract_done"])
+def test_extract_crash_before_ledger_replays(spark, tmp_path, table):
+    """Kill an ingest after its data commit, before the extract_done
+    append (at the metrics append or at the ledger append itself): the
+    replay re-extracts the batch, and must neither stack its triples_raw
+    rows a second time nor count a second provenance in triples."""
+    from tests.test_incremental_linking import _crash_on, _src, _win
+    from tests.test_incremental_materialize import (
+        _full_recompute_snapshot,
+        _snapshot,
+    )
+
+    pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh"),
+                                     run_id="x1", durable_link_state=True))
+    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
+    pipe.run(source_df=run1)
+    both = run1.unionByName(_src(spark, [("c.py", _win(0)),
+                                         ("d.py", _win(6))]))
+    restore = _crash_on(pipe.io, "append", table)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(source_df=both, incremental=True)
+    restore()
+    pipe.run(source_df=both, incremental=True)  # replay
+
+    scratch = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh2"),
+                                        run_id="scratch"))
+    scratch.run(source_df=both)
+    assert (_rows(pipe.io.read("triples_raw"), _RAW)
+            == _rows(scratch.io.read("triples_raw"), _RAW))
+    assert _snapshot(pipe) == _full_recompute_snapshot(
+        spark, pipe, tmp_path, "x")
+
+
+def test_ingest_appends_one_triples_raw_segment(spark, tmp_path):
+    """An ingest commits triples_raw as exactly one new segment and
+    leaves its base snapshot as it was: O(batch) bytes, no rewrite."""
+    import os
+
+    pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh"),
+                                     run_id="seg"))
+    pipe.run(source_df=generate_source_df(
+        spark, SynthConfig(n_files=30), partitions=2))
+    base = pipe.io.commit_meta("triples_raw")
+    base_files = sorted(os.listdir(os.path.join(pipe.cfg.warehouse,
+                                                "triples_raw")))
+    assert pipe.io.segments("triples_raw") == []
+
+    pipe.run(source_df=generate_source_df(
+        spark, SynthConfig(n_files=40), partitions=2), incremental=True)
+    segs = pipe.io.segments("triples_raw")
+    assert len(segs) == 1
+    assert pipe.io.commit_meta("triples_raw") == base
+    assert sorted(os.listdir(os.path.join(pipe.cfg.warehouse,
+                                          "triples_raw"))) == base_files
+    new_rows = [r for r in pipe.lineage()
+                if r["stage"] == "triples_raw_incremental"][-1]["new_rows"]
+    assert pipe.io.commit_meta(segs[0])["rows"] == new_rows > 0

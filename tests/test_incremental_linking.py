@@ -11,6 +11,7 @@
     union on random graphs (bridges, new nodes, cycles).
 """
 
+import inspect
 import random
 
 import pytest
@@ -175,17 +176,50 @@ def test_entity_id_stable_under_smaller_newcomer(spark, tmp_path):
 
 
 def _crash_on(io, method: str, table: str):
-    """Wrap io.<method> to raise when first called for ``table`` —
-    simulates a hard kill at that exact commit point."""
+    """Wrap io.<method> to raise whenever it is called for ``table`` —
+    simulates a hard kill at that exact commit point. The table argument
+    is bound by the wrapped method's signature, so it fires for
+    ``write(df, name)`` and ``compact(name, df)`` alike. The returned
+    ``restore()`` unwraps the method and fails if the crash never fired:
+    a crash test whose crash never happened proves nothing."""
     real = getattr(io, method)
+    sig = inspect.signature(real)
+    fired = []
 
-    def boom(df, name, *a, **kw):
-        if name == table:
+    def boom(*a, **kw):
+        if sig.bind(*a, **kw).arguments["name"] == table:
+            fired.append(table)
             raise RuntimeError(f"simulated crash at {method}({table})")
-        return real(df, name, *a, **kw)
+        return real(*a, **kw)
 
     setattr(io, method, boom)
-    return lambda: setattr(io, method, real)
+
+    def restore():
+        setattr(io, method, real)
+        assert fired, f"simulated crash at {method}({table}) never fired"
+
+    return restore
+
+
+def test_crash_on_binds_the_table_argument(spark, tmp_path):
+    """_crash_on fires for a method called ``(name, df)`` — compact — and
+    its restore() fails when the wrapped call never happened."""
+    from gondar_spark.sources.tables import TableIO
+
+    io = TableIO(spark, str(tmp_path / "wh"), use_iceberg=False)
+    df = spark.createDataFrame([("a", "b")], "norm_a string, norm_b string")
+    io.write(df, "edges")
+    restore = _crash_on(io, "compact", "edges")
+    io.compact("labels", None)  # another table: passes through
+    with pytest.raises(RuntimeError,
+                       match=r"simulated crash at compact\(edges\)"):
+        io.compact("edges", df)
+    restore()
+    assert io.read("edges").count() == 1
+
+    restore = _crash_on(io, "append", "edges")
+    with pytest.raises(AssertionError, match="never fired"):
+        restore()
 
 
 def _expected_state(spark, tmp_path, source_df):

@@ -112,3 +112,28 @@ def test_incremental_materialize_crash_replay(spark, tmp_path):
         assert got[t] == want[t], f"{t} after crash replay"
         df = pipe.io.read(t)
         assert df.count() == df.select(cols).distinct().count()
+
+
+def test_link_crash_before_ledger_replays_outputs(spark, tmp_path):
+    """Kill an ingest at its link_done append: extraction and linking
+    are committed, materialize never ran. The replay finds nothing left
+    to extract or link, and materialize must still splice the batch in
+    from its own mat_done ledger."""
+    from tests.test_incremental_linking import _crash_on
+
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="m1",
+                    durable_link_state=True)
+    pipe = Pipeline(spark, cfg)
+    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
+    pipe.run(source_df=run1)
+
+    both = run1.unionByName(_src(spark, [("c.py", _win(0)),
+                                         ("d.py", _win(6))]))
+    restore = _crash_on(pipe.io, "append", "link_done")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(source_df=both, incremental=True)
+    restore()
+    executed = pipe.run(source_df=both, incremental=True)
+    assert executed["materialize"]
+    assert _snapshot(pipe) == _full_recompute_snapshot(
+        spark, pipe, tmp_path, "link_crash")

@@ -264,3 +264,37 @@ def test_retract_after_ingest_crash_keeps_unreflected_edges(spark, tmp_path):
             _set(scratch.io.read(table), cols), f"{table} != scratch"
     assert pipe.io.read("entities").count() == \
         scratch.io.read("entities").count()
+
+
+@pytest.mark.parametrize("mode", ["source_df", "source_path"])
+def test_retract_prunes_the_source_tables(spark, tmp_path, mode):
+    """retract() removes the files from the configured source table and
+    from source_hashes — re-registering the source table when given the
+    corpus's path — so a later incremental run without a source cannot
+    re-extract a retracted file."""
+    import os
+
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="s1",
+                    durable_link_state=True, source_table="corpus")
+    pipe = Pipeline(spark, cfg)
+    full = _src(spark, _win_files([0, 2, 4, 12]))
+    remaining = _src(spark, _win_files([0, 2, 12]))
+    if mode == "source_path":
+        full_dir, rest_dir = str(tmp_path / "full"), str(tmp_path / "rest")
+        full.write.parquet(full_dir)
+        remaining.write.parquet(rest_dir)
+        pipe.run(source_path=full_dir)
+        pipe.retract(source_path=rest_dir)
+        assert (pipe.io.commit_meta("corpus")["external_path"]
+                == os.path.abspath(rest_dir))
+    else:
+        pipe.run(source_df=full)
+        pipe.retract(source_df=remaining)
+
+    gone = F.col("path") == "w4.py"
+    for table in ("corpus", "source_hashes"):
+        assert pipe.io.read(table).filter(gone).count() == 0, table
+    assert pipe.io.read("source_hashes").count() == 3
+    pipe.run(incremental=True)
+    assert pipe.io.read("triples_raw").filter(gone).count() == 0
+    assert pipe.io.read("triples").filter(gone).count() == 0
