@@ -12,8 +12,8 @@ This module resolves each CC component to a FIRST-ASSIGNED stable id:
     when a new lexicographically-smaller member arrived;
   * a component whose members carry SEVERAL previously-assigned ids is a
     MERGE: the surviving id is the minimum of the prior ids
-    (deterministic), and every absorbed id is reported so the pipeline
-    can record the merge in lineage.
+    (deterministic). The pipeline records every absorbed id in lineage:
+    it is the prior id of a linked norm whose id moved.
 
 Ids are norms, and a norm belongs to exactly one (append-only growing)
 component forever, so a retired id can never be re-assigned to a
@@ -34,8 +34,9 @@ def resolve_stable_ids(
     labels: DataFrame,
     prior_map: DataFrame | None = None,
     all_norms: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """labels(norm, component) -> (assign, merges).
+) -> DataFrame:
+    """labels(norm, component) -> assign(component, entity_id), one row
+    per component.
 
     ``prior_map`` (norm, entity_id): the committed ledger — previously
     published ids per linked norm.
@@ -59,12 +60,6 @@ def resolve_stable_ids(
     set, needed to see singleton holders after a retraction; when None,
     holders are resolved from ``labels`` alone (sufficient for
     append-only callers).
-
-    Returns:
-      * assign  — (component, entity_id), one row per component;
-      * merges  — (entity_id, absorbed_id, component): prior ids a
-        component claimed but did not keep — merges under growth,
-        re-assignments under splits (lineage-logged either way).
 
     All frames are small (∝ components / ∝ claims); the groupBys
     shuffle only (component, prior-id) pairs, never the corpus.
@@ -118,7 +113,7 @@ def resolve_stable_ids(
     )
     won = per_id.filter(F.col("_winner").isNotNull()).select(
         F.col("_winner").alias("component"), "_prior")
-    assign = (
+    return (
         labels.select("component")
         .distinct()
         .join(
@@ -131,11 +126,3 @@ def resolve_stable_ids(
             F.coalesce("_m", F.col("component")).alias("entity_id"),
         )
     )
-    merges = (
-        prior_pairs.join(assign, "component")
-        .filter(F.col("_prior") != F.col("entity_id"))
-        .select(
-            "entity_id", F.col("_prior").alias("absorbed_id"), "component"
-        )
-    )
-    return assign, merges

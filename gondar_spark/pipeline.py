@@ -41,8 +41,6 @@ from .operators.scoring import score_pairs
 from .session import Scope, checkpoint, persist
 from .sources.tables import TableIO
 
-STAGES = ("source", "triples_raw", "mentions", "edges", "labels", "materialize")
-
 
 def _prefix_slice(store: DataFrame, part_col: str, batch: DataFrame,
                   prefix) -> DataFrame:
@@ -129,7 +127,8 @@ class Pipeline:
                       parallel: bool = False, append: bool = False) -> dict:
         """Commit each table — a snapshot write, or one appended segment
         when ``append`` — overlapped (_overlap) when ``parallel``;
-        returns {table: commit}."""
+        returns {table: commit} of the tables committed: an append that
+        turned out empty commits nothing and is left out."""
         commit = self.io.append if append else self.io.write
 
         def _write(tbl, df):
@@ -138,8 +137,9 @@ class Pipeline:
                 meta={"stage": stage, "run_id": self.cfg.run_id})
 
         writes = [functools.partial(_write, *kv) for kv in tables.items()]
-        return dict(self._overlap(writes) if parallel
-                    else [w() for w in writes])
+        return {t: c for t, c in (self._overlap(writes) if parallel
+                                  else [w() for w in writes])
+                if not append or c["rows"] != 0}
 
     @staticmethod
     def _sizes(commits: dict) -> dict:
@@ -184,8 +184,11 @@ class Pipeline:
             from their own ledger (``link_done``, ``mat_done``).
         Segment tables fold into one snapshot every ``COMPACT_AFTER``
         runs. A warehouse without the link state, or with lang-aware
-        blocking, recomputes the later stages in full when extraction
-        added rows. ``force=True`` rebuilds every stage.
+        blocking, recomputes the later stages in full while extracted
+        files wait for materialize (``extract_done`` ∖ ``mat_done``
+        non-empty, or no ``mat_done``) — a replay of a killed run
+        extracts nothing new and still finishes its batch.
+        ``force=True`` rebuilds every stage.
 
         APPEND-ONLY ASSUMPTION: an ingest treats the corpus as
         append-only — files REMOVED or REWRITTEN-in-place upstream keep
@@ -220,7 +223,7 @@ class Pipeline:
             src = self.io.read(cfg.source_table)
             ingest = (incremental and not force
                       and self.io.exists("triples_raw"))
-            executed["triples_raw"], added = self._extract_stage(
+            executed["triples_raw"] = self._extract_stage(
                 src, ingest, force)
             if ingest:
                 self._compact_ledgers(src if prune_removed else None,
@@ -231,8 +234,11 @@ class Pipeline:
                     executed["materialize"] = self._materialize_incremental(
                         link_exec["labels"])
                     return executed
-                # the full-stage fallback recomputes what the new rows feed
-                force = added
+                # the full-stage fallback recomputes the later stages
+                # while extracted files wait for materialize — this run's
+                # or a killed run's: a replay extracts nothing new
+                force = (not self.io.exists("mat_done")
+                         or not self._pending("mat_done").isEmpty())
             triples_raw = self.io.read("triples_raw")
 
             # stage 3: distinct normalized mentions (B5)
@@ -334,7 +340,8 @@ class Pipeline:
         expensive) input plan is evaluated once and the scan prunes to
         the key and content columns. A build hashes every file. An
         ingest hashes only the files ``source_hashes`` lacks and appends
-        them as one segment (folded and pruned in _compact_ledgers).
+        them as one segment (folded and pruned in _compact_ledgers); the
+        append commits nothing when no file is new.
         Returns True if a table was committed."""
         cfg, io, keys = self.cfg, self.io, self._LINK_KEYS
         if not (force or incremental) and all(
@@ -356,16 +363,13 @@ class Pipeline:
                                      keys, "left_anti")
             hashes = source.with_content_sha(corpus).select(
                 *keys, "content_sha256")
-            if ingest:
-                hashes = checkpoint(hashes)
-            if not ingest or hashes.count():
-                commits.update(self._write_tables(
-                    "source", {"source_hashes": hashes}, append=ingest))
+            commits.update(self._write_tables(
+                "source", {"source_hashes": hashes}, append=ingest))
             rec.update(skipped=not commits, **self._sizes(commits))
         return bool(commits)
 
     def _extract_stage(self, src: DataFrame, ingest: bool,
-                       force: bool) -> tuple[bool, bool]:
+                       force: bool) -> bool:
         """Stage 2 (B3/B4): chunk + vectorized extraction, one path for
         builds and ingests. The todo is the whole corpus on a build and
         the corpus minus the ``extract_done`` ledger on an ingest. The
@@ -386,7 +390,7 @@ class Pipeline:
         before the data would let a crash between the two skip files
         whose rows were never written (A15).
 
-        Returns (executed, extraction added triples)."""
+        Returns True if the stage executed."""
         io, cfg, keys = self.io, self.cfg, self._LINK_KEYS
         todo = src.select(*keys).distinct()
         if ingest:
@@ -403,13 +407,13 @@ class Pipeline:
                         "stage": "triples_raw", "run_id": cfg.run_id})
                 self._log("triples_raw_incremental", n_todo=0, new_rows=0,
                           skipped=True)
-                return False, False
+                return False
             B = self._batch_broadcast(n_todo)
             src = src.join(B(todo), keys, "left_semi")
         elif not force and all(io.exists(t)
                                for t in _STAGE_TABLES["triples_raw"]):
             self._log("triples_raw", skipped=True)
-            return False, False
+            return False
         kw = {k: v for k, v in (("extractor", self.extractor),
                                 ("batch_extractor", self.batch_extractor))
               if v is not None}
@@ -453,7 +457,7 @@ class Pipeline:
             self._log("triples_raw_incremental", n_todo=n_todo,
                       new_rows=n["triples_raw"],
                       new_quarantine=n["quarantine"])
-        return True, n["triples_raw"] > 0
+        return True
 
     # ---- stable canonical ids + materialize ---------------------------------
     @staticmethod
@@ -511,9 +515,6 @@ class Pipeline:
             materialize.full_outputs(mentions, triples_raw, mapping),
             partition_by=_MAT_PARTITIONS, force=True, parallel=True)
         meta = {"stage": "materialize", "run_id": self.cfg.run_id}
-        # a completed full materialize covers every extracted file
-        self.io.write(self.io.read("extract_done").distinct(), "mat_done",
-                      meta=meta)
         if has_ledger:
             self._advance_ids(changed, merges, "materialize",
                               changed.count())
@@ -521,6 +522,10 @@ class Pipeline:
             self.io.write(mapping.withColumn("_seq", F.lit(0)),
                           "entity_ids", meta=meta)
             self._log("entity_ids", rows="base", merges=0)
+        # a completed full materialize covers every extracted file; its
+        # ledger advances last
+        self.io.write(self.io.read("extract_done").distinct(), "mat_done",
+                      meta=meta)
         return executed
 
     @staticmethod
@@ -538,19 +543,31 @@ class Pipeline:
         once — it feeds three materialize joins plus the ledger diff;
         ``changed`` = norms whose mapping is new or moved vs
         ``prior_map`` (O(changed); feeds the ledger append AND the
-        splice scope), checkpointed too — None without a ledger."""
+        splice scope), checkpointed too — None without a ledger.
+        ``merges`` (entity_id, absorbed_id) derives from that one
+        checkpoint, so the stable-id resolution runs once: a prior id a
+        component claimed but did not keep is exactly the prior id of
+        one of its linked norms that moved (merges under growth,
+        re-assignments under splits)."""
         norms = mentions.select("norm").distinct()
-        assign, merges = identity.resolve_stable_ids(
-            labels, prior_map, all_norms=norms)
+        assign = identity.resolve_stable_ids(labels, prior_map,
+                                             all_norms=norms)
         linked = labels.join(assign, "component").select("norm", "entity_id")
         singles = (
             norms.join(labels.select("norm").distinct(), "norm", "left_anti")
             .withColumn("entity_id", F.col("norm"))
         )
         mapping = checkpoint(linked.unionByName(singles))
-        changed = None if prior_map is None else checkpoint(
-            mapping.join(prior_map, ["norm", "entity_id"], "left_anti"))
-        return mapping, changed, merges
+        if prior_map is None:
+            return mapping, None, None
+        moved = checkpoint(mapping.join(
+            prior_map.withColumnRenamed("entity_id", "absorbed_id"),
+            "norm", "left").filter(
+                ~F.col("entity_id").eqNullSafe(F.col("absorbed_id"))))
+        merges = (moved.filter(F.col("absorbed_id").isNotNull())
+                  .join(labels.select("norm"), "norm", "left_semi")
+                  .select("entity_id", "absorbed_id").distinct())
+        return mapping, moved.select("norm", "entity_id"), merges
 
     def _materialize_incremental(self, labels_changed: bool) -> bool:
         """Ingest's materialize: splice ONLY the output groups the
@@ -573,8 +590,7 @@ class Pipeline:
                 force=True)
         keys = self._LINK_KEYS
         with self._stage("materialize", incremental=True) as rec:
-            pending = io.read("extract_done").join(io.read("mat_done"),
-                                                   keys, "left_anti")
+            pending = self._pending("mat_done")
             stats = None
             # the emptiness probe is a no-op's whole cost: nothing else is
             # read, deduplicated or checkpointed until there is work
@@ -634,15 +650,12 @@ class Pipeline:
         (``_seq`` = latest + 1, so they win on read) and log the merge
         sample: prior ids a component claimed but did not keep — merges
         under growth, re-assignments under splits."""
-        # the sample and the count both read it: one evaluation of the
-        # stable-id resolution instead of two
-        merges = checkpoint(merges)
-        merge_rows = [
-            {"entity_id": r["entity_id"], "absorbed_id": r["absorbed_id"]}
-            for r in merges.limit(100).collect()
-        ]
-        n_merges = merges.count()
+        merge_rows, n_merges = [], 0
+        # merges derive from ``changed``: none unless a mapping moved
         if n_changed:
+            merges = checkpoint(merges)  # the sample and the count read it
+            merge_rows = [r.asDict() for r in merges.limit(100).collect()]
+            n_merges = merges.count()
             seq = self.io.read("entity_ids").agg(
                 F.max("_seq")).collect()[0][0] or 0
             self.io.append(changed.withColumn("_seq", F.lit(seq + 1)),
@@ -849,6 +862,13 @@ class Pipeline:
                                     remaining_raw, removed_raw, n_removed)}
 
             # ---- prune the raw stream + per-file tables + ledgers LAST -------
+            def prune(tables, rows=lambda df: df):
+                """Compact each committed table without the removed
+                files' rows, overlapped."""
+                self._overlap([functools.partial(lambda t: io.compact(
+                    t, rows(io.read(t)).join(B(removed), keys, "left_anti"),
+                    meta=meta), t) for t in tables if io.exists(t)])
+
             # the source table is re-registered when the caller names the
             # corpus's path (zero-copy), otherwise pruned like the others
             per_file = ["quarantine", "source_hashes"]
@@ -856,21 +876,10 @@ class Pipeline:
                 io.register(cfg.source_table, source_path)
             else:
                 per_file.append(cfg.source_table)
-            self._overlap([
-                (lambda t: lambda: io.compact(
-                    t, io.read(t).join(B(removed), keys, "left_anti"),
-                    meta=meta))(t)
-                for t in per_file if io.exists(t)])
+            prune(per_file)
             self._run_stage("triples_raw", {"triples_raw": remaining_raw},
                             force=True)
-            self._overlap([
-                (lambda lg: lambda: io.compact(
-                    lg, io.read(lg).distinct().join(B(removed), keys,
-                                                    "left_anti"),
-                    meta=meta))(ledger)
-                for ledger in ("extract_done", "link_done", "mat_done")
-                if io.exists(ledger)
-            ])
+            prune(("extract_done", "link_done", "mat_done"), DataFrame.distinct)
             rec.update(stats)
             return stats
 
@@ -921,11 +930,18 @@ class Pipeline:
         two would skip these files forever (extraction's anti-join sees
         nothing left to do). The unit of progress is the ``link_done``
         ledger: pending = extract_done ∖ link_done, advanced LAST. Every
-        sub-step re-derives its own todo from committed state, so any
-        crash point replays without duplicating:
-          - mention rows dedup by anti-join against the mentions table;
+        sub-step re-derives its own todo from committed state and commits
+        it as one append, whose row count comes back from the commit (an
+        empty append commits nothing), so any crash point replays
+        without duplicating:
+          - the mentions step appends its rows at once: they dedup by
+            anti-join against the mentions table, so a replay appends
+            none twice;
           - the new-norm set is "pending norms ∉ link_signatures", and
-            regenerated edges anti-join the edges table before append;
+            regenerated edges anti-join the edges table before append.
+            The signature and band appends follow the edges append: a
+            crash between them leaves those norms unblocked, and the
+            replay regenerates (and anti-joins away) their pairs;
           - the labels commit manifest records WHICH edge segments it
             reflects — a crash between the edges append and the labels
             write leaves an unreflected segment that the next run — an
@@ -937,13 +953,8 @@ class Pipeline:
         cfg = self.cfg
         io = self.io
         keys = self._LINK_KEYS
-        done = io.read("extract_done").distinct()
-        if io.exists("link_done"):
-            linked = io.read("link_done")
-            pending = done.join(linked, keys, "left_anti")
-        else:
-            pending = done
-        pending = pending.transform(checkpoint)
+        meta = {"stage": "link_incremental", "run_id": cfg.run_id}
+        pending = checkpoint(self._pending("link_done").distinct())
         n_pending = pending.count()
         B = self._batch_broadcast(n_pending)
         unreflected = self._unreflected_edge_segments()
@@ -964,9 +975,9 @@ class Pipeline:
             overlap = old_mentions.join(
                 B(new_m), ["surface", "lang", "norm"], "left_semi")
             new_rows = new_m.join(
-                B(overlap), ["surface", "lang", "norm"], "left_anti"
-            ).transform(checkpoint)
-            n_new_mentions = new_rows.count()
+                B(overlap), ["surface", "lang", "norm"], "left_anti")
+            n_new_mentions = io.append(new_rows, "mentions",
+                                       meta=meta)["rows"]
             rec.update(new_rows=n_new_mentions, pending_files=n_pending)
 
         with self._stage("edges", skipped=False, incremental=True) as rec:
@@ -989,7 +1000,6 @@ class Pipeline:
             new_sig = blocking.minhash_signature_df(
                 new_norm_rows, cfg.minhash_hashes, cfg.extractor_seed,
                 cfg.shingle_size).transform(checkpoint)
-            n_new_norms = new_sig.count()
             new_blocks = blocking.band_keys_df(
                 new_sig, cfg.minhash_hashes, cfg.lsh_bands)
             bands_slice = _prefix_slice(io.read("link_bands"), "_bp",
@@ -1032,13 +1042,19 @@ class Pipeline:
                 pairs, sig_grams, cfg.link_threshold
             ).join(io.read("edges").select("norm_a", "norm_b"),
                    ["norm_a", "norm_b"], "left_anti").transform(checkpoint)
-            n_new_edges = new_edges.count()
-            meta = {"stage": "link_incremental", "run_id": cfg.run_id}
-            if n_new_edges:
-                io.append(new_edges, "edges", meta=meta)
+            n_new_edges = io.append(new_edges, "edges", meta=meta)["rows"]
+            # the store appends come after the edges append: a replay
+            # after a crash between them still finds these norms
+            # unblocked and regenerates their pairs
+            n_new_norms = io.append(
+                new_sig.withColumn("_np", blocking.norm_prefix()),
+                "link_signatures", meta=meta, partition_by=["_np"])["rows"]
+            io.append(new_blocks.withColumn("_bp", blocking.band_prefix()),
+                      "link_bands", meta=meta, partition_by=["_bp"])
             rec.update(new_rows=n_new_edges, new_norms=n_new_norms)
 
-        labels_changed = bool(n_new_edges or unreflected)
+        # a commit's rows are None when unknown: "may have rows"
+        labels_changed = n_new_edges != 0 or bool(unreflected)
         if labels_changed:
             with self._stage("labels_incremental") as rec:
                 labels_new, n_touched = self._touched_cc(
@@ -1054,23 +1070,24 @@ class Pipeline:
                            unreflected_segments=len(unreflected))
         else:
             self._log("labels", skipped=True, incremental=True)
-        # remaining appends; link_done advances LAST so any crash above
-        # replays this batch instead of losing it
-        if n_new_norms:
-            io.append(new_sig.withColumn("_np", blocking.norm_prefix()),
-                      "link_signatures", meta=meta, partition_by=["_np"])
-            io.append(new_blocks.withColumn("_bp", blocking.band_prefix()),
-                      "link_bands", meta=meta, partition_by=["_bp"])
-        if n_new_mentions:
-            io.append(new_rows, "mentions", meta=meta)
+        # link_done advances LAST so any crash above replays this batch
+        # instead of losing it
         io.append(pending, "link_done", meta=meta)
         for name, pb in (("mentions", None), ("link_signatures", ["_np"]),
                          ("link_bands", ["_bp"]), ("edges", None)):
             self._fold(name, partition_by=pb)
         self._fold("link_done", DataFrame.distinct)
-        return {"mentions": n_new_mentions > 0,
-                "edges": n_new_edges > 0,
+        return {"mentions": n_new_mentions != 0,
+                "edges": n_new_edges != 0,
                 "labels": labels_changed}
+
+    def _pending(self, ledger: str) -> DataFrame:
+        """Extracted files a stage's ``ledger`` does not hold yet:
+        extract_done ∖ ledger (all of extract_done without the ledger)."""
+        done = self.io.read("extract_done")
+        if not self.io.exists(ledger):
+            return done
+        return done.join(self.io.read(ledger), self._LINK_KEYS, "left_anti")
 
     def _unreflected_edge_segments(self) -> list[str]:
         """Edge segments appended after the last labels write (crash
@@ -1093,8 +1110,7 @@ class Pipeline:
         (labels plan, touched component count)."""
         for seg in self._unreflected_edge_segments():
             new_edges = new_edges.unionByName(
-                self.spark.read.parquet(self.io._path(seg))
-                .select("norm_a", "norm_b"))
+                self.io.read(seg).select("norm_a", "norm_b"))
         # the committed edges already hold this ingest's append: the
         # duplicates with new_edges dedup inside incremental CC
         labels, touched = cc.incremental_components(

@@ -13,15 +13,30 @@ Semantics both backends provide:
   * every parquet file is zstd-compressed (``CODEC``, parquet's default
     level): Iceberg tables pin it as a table property, so the codec does
     not depend on the runtime's default (gzip before Iceberg 1.4).
+  * every commit returns its ``rows``, taken from metadata the commit
+    already holds, never from a scan: the staged part files' footers on
+    parquet, the snapshot summaries on Iceberg (``None`` when unknown —
+    callers read it as "may have rows"). Callers take row counts from
+    here instead of counting the frame they commit.
+  * an ``append`` of a frame that turns out empty commits nothing: no
+    segment, no manifest, ``rows`` 0. A caller appends without first
+    counting whether there is anything to append.
 
 On the parquet backend the commit manifest (``_gondar_commit.json``) is
 the ONLY success marker: ``exists``, resume and ``_recover`` trust
 nothing else, so writes skip Hadoop's ``_SUCCESS`` (and its ``.crc``).
+``read`` unions one read per committed directory (base, segments, a
+registered path), each with the schema Spark wrote into its part files'
+footers, so a read plans without a schema-inference job; Spark still
+adds the ``k=v`` partition columns from the listing. A directory
+without that footer key (a registered corpus written by another tool)
+keeps Spark's inference.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
@@ -37,6 +52,8 @@ _COMMIT = "_gondar_commit.json"
 # only dictionary/RLE-packs — the warehouse's hex norms, md5 band keys and
 # sha256 columns — for about half the bytes at parquet's default level.
 CODEC = "zstd"
+# the footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def swap_in(tmp: str, final: str) -> None:
@@ -125,7 +142,7 @@ class TableIO:
     # ---- write (atomic snapshot commit) -----------------------------------
     def write(self, df: DataFrame, name: str,
               partition_by: list[str] | None = None,
-              meta: dict | None = None) -> dict:
+              meta: dict | None = None) -> dict | None:
         if self.use_iceberg:
             writer = (df.writeTo(self._ident(name)).using("iceberg")
                       .tableProperty("write.parquet.compression-codec",
@@ -134,10 +151,9 @@ class TableIO:
                 from pyspark.sql import functions as F
                 writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
             writer.createOrReplace()
-            commit = {"table": name, "ts": time.time(),
-                      "rows": self._iceberg_row_count(name),
-                      "meta": meta or {}}
-            return commit
+            return {"table": name, "ts": time.time(),
+                    "rows": self._iceberg_row_count(name),
+                    "meta": meta or {}}
         final = self._path(name)
         tmp = final + ".tmp-" + uuid.uuid4().hex[:8]
         try:
@@ -164,10 +180,16 @@ class TableIO:
             # rows from the parquet FOOTERS (driver-side metadata read,
             # microseconds per file) — not a second Spark scan of the
             # data; bytes and files from the same walk of the staging dir
+            stats = self._staged_stats(tmp)
+            if stats["rows"] == 0 and self._SEG_SEP in name:
+                # an append segment that staged no rows commits nothing
+                # (append reports it); a table write commits even empty
+                shutil.rmtree(tmp, ignore_errors=True)
+                return None
             commit = {
                 "table": name,
                 "ts": time.time(),
-                **self._staged_stats(tmp),
+                **stats,
                 "partition_by": partition_by or [],
                 # a base write REPLACES the table, so every segment
                 # committed before it is stale. Listing them IN the commit
@@ -242,12 +264,9 @@ class TableIO:
                     continue
                 parts += 1
                 if parts > cls.MAX_FOOTER_FILES:
-                    import logging
-
                     logging.getLogger(__name__).warning(
                         "row-count skipped for %s: > %d part files",
-                        path, cls.MAX_FOOTER_FILES,
-                    )
+                        path, cls.MAX_FOOTER_FILES)
                     rows = None
                     continue
                 rows += pq.ParquetFile(p).metadata.num_rows
@@ -269,14 +288,26 @@ class TableIO:
 
     def append(self, df: DataFrame, name: str, meta: dict | None = None,
                partition_by: list[str] | None = None) -> dict:
+        """Commit ``df``'s rows as one more segment of ``name`` (a base
+        write while the table does not exist). Returns the commit with
+        its ``rows``; a frame that turns out empty commits nothing and
+        returns ``rows`` 0."""
         if self.use_iceberg:
+            # the appended rows from the summaries around the commit
+            # (single writer): right whether or not an empty append made
+            # a snapshot
+            before = self._iceberg_row_count(name)
             df.writeTo(self._ident(name)).append()
+            after = self._iceberg_row_count(name)
             return {"table": name, "ts": time.time(), "appended": True,
-                    "meta": meta or {}}
+                    "rows": None if None in (before, after)
+                    else after - before, "meta": meta or {}}
         if not self.exists(name):
             return self.write(df, name, meta=meta, partition_by=partition_by)
         seg = f"{name}{self._SEG_SEP}{uuid.uuid4().hex[:12]}"
-        return self.write(df, seg, meta=meta, partition_by=partition_by)
+        return self.write(df, seg, meta=meta, partition_by=partition_by) \
+            or {"table": name, "ts": time.time(), "rows": 0, "bytes": 0,
+                "files": 0, "meta": meta or {}}
 
     def _raw_segments(self, name: str) -> list[str]:
         """Committed segment dirs on disk, WITHOUT the superseded filter
@@ -315,11 +346,9 @@ class TableIO:
         if df is None:
             df = self.read(name)
         # the write plan reads the CURRENT base + segments while staging to
-        # a tmp dir; the atomic swap happens only after the read finished
-        commit = self.write(df, name, meta=meta, partition_by=partition_by)
-        for seg in segs:
-            self.drop(seg)
-        return commit
+        # a tmp dir; the atomic swap happens only after the read finished,
+        # and its manifest supersedes (and drops) the folded segments
+        return self.write(df, name, meta=meta, partition_by=partition_by)
 
     # ---- zero-copy registration --------------------------------------------
     def register(self, name: str, path: str) -> dict:
@@ -357,12 +386,13 @@ class TableIO:
         if not self.exists(name):
             raise TableFormatError(f"table {name} not committed")
         meta = self.commit_meta(name) or {}
-        if meta.get("external_path"):
-            df = self.spark.read.parquet(meta["external_path"])
-        else:
-            df = self.spark.read.parquet(self._path(name))
+        # one read per directory: a single multi-path read of a
+        # partitioned base and its segments fails with
+        # CONFLICTING_DIRECTORY_STRUCTURES
+        df = _read_dir(self.spark, meta.get("external_path")
+                       or self._path(name))
         for seg in self.segments(name):
-            df = df.unionByName(self.spark.read.parquet(self._path(seg)))
+            df = df.unionByName(_read_dir(self.spark, self._path(seg)))
         return df
 
     def exists(self, name: str) -> bool:
@@ -391,3 +421,29 @@ class TableIO:
                 shutil.rmtree(self._path(seg), ignore_errors=True)
             shutil.rmtree(self._path(name), ignore_errors=True)
             self.spark.catalog.refreshByPath(self._path(name))
+
+
+def _read_dir(spark: SparkSession, path: str) -> DataFrame:
+    """One committed directory, read with the data schema Spark wrote
+    into the footer of its first part file (``SPARK_SCHEMA_KEY``, read
+    on the driver): no schema-inference job, and Spark still adds the
+    ``k=v`` partition columns from the listing, typed as before. A
+    directory whose part files lack the key (written by another tool)
+    keeps Spark's inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    for root, dirs, names in os.walk(path):
+        # the entries Spark skips: hidden, or ``_`` on a non-``k=v`` name
+        dirs[:] = sorted(d for d in dirs if not d.startswith(".")
+                         and ("=" in d or not d.startswith("_")))
+        parts = sorted(f for f in names if f.endswith(".parquet")
+                       and not f.startswith(("_", ".")))
+        if parts:
+            kv = pq.read_metadata(os.path.join(root, parts[0])).metadata
+            raw = (kv or {}).get(SPARK_SCHEMA_KEY)
+            if raw is not None:
+                return spark.read.schema(
+                    StructType.fromJson(json.loads(raw))).parquet(path)
+            break
+    return spark.read.parquet(path)

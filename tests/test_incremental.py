@@ -249,3 +249,34 @@ def test_ingest_appends_one_triples_raw_segment(spark, tmp_path):
     new_rows = [r for r in pipe.lineage()
                 if r["stage"] == "triples_raw_incremental"][-1]["new_rows"]
     assert pipe.io.commit_meta(segs[0])["rows"] == new_rows > 0
+
+
+# Spark jobs a no-op ingest of a registered corpus may run: the probes of
+# the source, extraction, link and materialize todos, as measured on this
+# test's corpus.
+NOOP_INGEST_JOBS = 10
+
+
+def test_noop_ingest_job_count(spark, tmp_path):
+    """A re-run with nothing new to ingest asks committed metadata, not
+    Spark: its job count is pinned (status-store count around the run)."""
+    from tests.test_table_commits import _job_ids
+
+    corpus = str(tmp_path / "corpus")
+    generate_source_df(spark, SynthConfig(n_files=40, seed=5),
+                       partitions=2).write.parquet(corpus)
+    pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh"),
+                                     run_id="n1", durable_link_state=True))
+    pipe.run(source_path=corpus)
+    generate_source_df(spark, SynthConfig(n_files=50, seed=5),
+                       partitions=2).filter(
+        ~F.col("path").isin(*[r[0] for r in spark.read.parquet(corpus)
+                              .select("path").collect()])
+    ).write.mode("append").parquet(corpus)
+    pipe.run(source_path=corpus, incremental=True)   # one segment each
+
+    before = _job_ids(spark)
+    executed = pipe.run(source_path=corpus, incremental=True)
+    n_jobs = len(_job_ids(spark) - before)
+    assert not any(executed.values()), executed
+    assert n_jobs <= NOOP_INGEST_JOBS, n_jobs

@@ -137,3 +137,41 @@ def test_link_crash_before_ledger_replays_outputs(spark, tmp_path):
     assert executed["materialize"]
     assert _snapshot(pipe) == _full_recompute_snapshot(
         spark, pipe, tmp_path, "link_crash")
+
+
+def test_full_stage_fallback_replays_a_killed_ingest(spark, tmp_path):
+    """The full-stage ingest fallback (lang-aware blocking) killed at its
+    mentions write, after its extraction commit: the replay extracts
+    nothing new and must still recompute the later stages, because
+    extract_done holds files mat_done lacks — 4 mention and triple rows,
+    as in a scratch build, not the 2 of the base."""
+    from tests.test_incremental_linking import _crash_on
+
+    def config(wh, run_id):
+        return JobConfig(warehouse=str(tmp_path / wh), run_id=run_id,
+                         durable_link_state=True, link_lang_aware=True)
+
+    pipe = Pipeline(spark, config("wh", "l1"))
+    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
+    pipe.run(source_df=run1)
+    both = run1.unionByName(_src(spark, [("c.py", _win(0)),
+                                         ("d.py", _win(6))]))
+    restore = _crash_on(pipe.io, "write", "mentions")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(source_df=both, incremental=True)
+    restore()
+    executed = pipe.run(source_df=both, incremental=True)
+    assert not executed["triples_raw"] and executed["materialize"]
+
+    scratch = Pipeline(spark, config("wh_scratch", "s1"))
+    scratch.run(source_df=both)
+    for t, cols in (("mentions", ["surface", "lang", "norm"]),
+                    ("triples", ["subj", "pred", "path"])):
+        got = {tuple(r) for r in pipe.io.read(t).select(*cols).collect()}
+        want = {tuple(r) for r in scratch.io.read(t).select(*cols).collect()}
+        assert got == want and len(got) == 4, t
+    assert _snapshot(pipe) == _full_recompute_snapshot(
+        spark, pipe, tmp_path, "fallback")
+    # up to date: the next ingest recomputes nothing past its source copy
+    again = pipe.run(source_df=both, incremental=True)
+    assert not any(v for k, v in again.items() if k != "source"), again

@@ -29,6 +29,10 @@ class _FakeWriter:
     def createOrReplace(self):
         self.calls["created"] = True
 
+    def append(self):
+        self.calls["appended"] = True
+        self.calls.get("on_append", lambda: None)()
+
 
 class _FakeDF:
     def __init__(self, calls):
@@ -97,6 +101,37 @@ def test_iceberg_branch_row_count_degrades_to_none(tmp_path):
                  use_iceberg=True)
     commit = io.write(_FakeDF({}), "t")
     assert commit["rows"] is None  # never a wrong number
+
+
+def test_iceberg_branch_append_rows_from_snapshot_summaries(tmp_path):
+    """An append's rows are the difference of the snapshot summaries'
+    total-records around it: 0 for an empty append, whether or not the
+    runtime made a snapshot for it, and None when the summaries cannot
+    be read. segments() and the commit metadata stay as they were."""
+    from gondar_spark.sources.tables import TableIO
+
+    spark = _FakeSpark(tables={"gondar.db.t"},
+                       snapshot_rows=[{"summary": {"total-records": "10"}}])
+    io = TableIO(spark, str(tmp_path / "wh_a"), use_iceberg=True)
+    meta = io.commit_meta("t")
+    calls = {}
+    empty = io.append(_FakeDF(calls), "t")   # no new snapshot
+    assert calls["ident"] == "gondar.db.t" and calls["appended"]
+    assert empty["rows"] == 0
+    assert io.segments("t") == [] and io.commit_meta("t") == meta
+
+    # an empty snapshot: same total
+    empty_snap = {"on_append": lambda: spark.snapshot_rows.insert(
+        0, {"summary": {"total-records": "10"}})}
+    assert io.append(_FakeDF(empty_snap), "t")["rows"] == 0
+
+    grew = {"on_append": lambda: spark.snapshot_rows.insert(
+        0, {"summary": {"total-records": "17", "added-records": "7"}})}
+    assert io.append(_FakeDF(grew), "t")["rows"] == 7
+
+    blind = TableIO(_FakeSpark(snapshots_fail=True), str(tmp_path / "wh_b"),
+                    use_iceberg=True)
+    assert blind.append(_FakeDF({}), "t")["rows"] is None  # may have rows
 
 
 def test_iceberg_branch_read_exists_drop(tmp_path):

@@ -19,6 +19,9 @@ old components.
 Reported: summed mentions+edges+labels walls from lineage for the SAME
 batch at 1x and 10x corpus (ratio ~1.0 = flat), plus the full
 force-relink wall at 10x — the O(corpus) cost the probe path avoids.
+Each run's Spark job count (``*_jobs``: the jobs the application's
+status store gained during the run) is reported beside its wall: at
+small batches the job count, not the data, sets the ingest latency.
 
 Usage: python tools/bench_linking.py [base_files] [batch_files]
 Prints one JSON line.
@@ -88,6 +91,24 @@ def _stage_walls(pipe: Pipeline, run_id: str, stages) -> dict:
     return {s: _link_wall(pipe, run_id, stages=(s,)) for s in stages}
 
 
+def _job_ids(spark) -> set:
+    """Ids of the jobs in the application's status store (it retains
+    the last ``spark.ui.retainedJobs``, more than one run starts)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def _timed(spark, fn):
+    """(result, wall s, Spark jobs) of one call."""
+    before = _job_ids(spark)
+    t0 = time.time()
+    out = fn()
+    wall = round(time.time() - t0, 3)
+    return out, wall, len(_job_ids(spark) - before)
+
+
 def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
     wh = tempfile.mkdtemp(prefix="gondar_link_wh_")
     corpus = tempfile.mkdtemp(prefix="gondar_link_corpus_")
@@ -97,9 +118,8 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
                 .write.mode("append").parquet(corpus)
         pipe = Pipeline(spark, JobConfig(warehouse=wh, run_id="seed",
                                      durable_link_state=True))
-        t0 = time.time()
-        pipe.run(source_path=corpus)
-        seed_wall = round(time.time() - t0, 3)
+        _, seed_wall, seed_jobs = _timed(
+            spark, lambda: pipe.run(source_path=corpus))
 
         # the ingest batch: new families (new x new pairs) + third
         # members of a slice of OLD families (store-probe hits that
@@ -112,9 +132,8 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
             .write.mode("append").parquet(corpus)
         pipe.cfg = JobConfig(warehouse=wh, run_id="ingest",
                              durable_link_state=True)
-        t0 = time.time()
-        pipe.run(source_path=corpus, incremental=True)
-        ingest_wall = round(time.time() - t0, 3)
+        _, ingest_wall, ingest_jobs = _timed(
+            spark, lambda: pipe.run(source_path=corpus, incremental=True))
         link_wall = _link_wall(pipe, "ingest")
         # must read lineage while cfg.run_id is still "ingest" —
         # lineage() reads the current run's file
@@ -126,6 +145,12 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
                    if r.get("run_id") == "ingest"
                    and r["stage"] == "labels_incremental"]
 
+        # a re-run with nothing new: its cost is all job overhead
+        pipe.cfg = JobConfig(warehouse=wh, run_id="noop",
+                             durable_link_state=True)
+        _, noop_wall, noop_jobs = _timed(
+            spark, lambda: pipe.run(source_path=corpus, incremental=True))
+
         # retraction: take the ingest batch back out — wall must track
         # the batch (dead norms + touched components), not the corpus
         remaining = spark.read.parquet(corpus).filter(
@@ -133,16 +158,14 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
             & ~F.col("path").startswith("src/probe"))
         pipe.cfg = JobConfig(warehouse=wh, run_id="retract",
                              durable_link_state=True)
-        t0 = time.time()
-        rstats = pipe.retract(source_df=remaining)
-        retract_wall = round(time.time() - t0, 3)
+        rstats, retract_wall, retract_jobs = _timed(
+            spark, lambda: pipe.retract(source_df=remaining))
 
         # the avoided cost: full relink of the grown corpus
         pipe.cfg = JobConfig(warehouse=wh, run_id="relink",
                              durable_link_state=True)
-        t0 = time.time()
-        pipe.run(source_path=corpus, force=True)
-        full_wall = round(time.time() - t0, 3)
+        _, full_wall, full_jobs = _timed(
+            spark, lambda: pipe.run(source_path=corpus, force=True))
         full_link_wall = round(sum(
             r["wall_s"] for r in pipe.lineage()
             if r.get("run_id") == "relink" and "wall_s" in r
@@ -157,15 +180,21 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
             "touched_components": (touched[-1]["touched_components"]
                                    if touched else 0),
             "seed_run_wall_s": seed_wall,
+            "seed_run_jobs": seed_jobs,
             "ingest_run_wall_s": ingest_wall,
+            "ingest_run_jobs": ingest_jobs,
+            "noop_run_wall_s": noop_wall,
+            "noop_run_jobs": noop_jobs,
             "link_wall_s": link_wall,
             "link_stage_walls_s": link_stage_walls,
             "materialize_wall_s": mat_wall,
             "retract_wall_s": retract_wall,
+            "retract_jobs": retract_jobs,
             "retract_dead_norms": rstats["dead_norms"],
             "full_relink_link_wall_s": full_link_wall,
             "full_relink_materialize_wall_s": full_mat_wall,
             "full_relink_run_wall_s": full_wall,
+            "full_relink_run_jobs": full_jobs,
         }
     finally:
         shutil.rmtree(wh, ignore_errors=True)
