@@ -1477,40 +1477,29 @@ def q_kg_canonical_triples(spark, sf_dir):
 
 def _kg_incremental_outputs(spark):
     """Shared by incremental_kg_triples/entities: split the fixture
-    into a COMMITTED 2/3 and a NEW 1/3 of files, materialize the
-    committed part one-shot, then ingest the new files through the
-    ENTIRE incremental path — incremental CC over the new edge batch
-    (cc.incremental_components) and affected-group output splicing
-    (materialize.splice_outputs, the one splice ingest and retraction
-    share; the delta here is the new files' rows). The result must equal a
-    one-shot build over the union, which is exactly what the DuckDB
-    oracles compute — so the O(new) ingest contract is hash-verified
-    end-to-end, not just pytest-pinned. Every persist and checkpoint
-    lands in the current scope (release_caches() frees them outside any
-    Scope), so each of the two queries builds its own copy."""
+    into a COMMITTED 2/3 and a NEW 1/3 of files, link the committed part
+    one-shot, then take the new files through the incremental CC
+    (cc.incremental_components over the new edge batch) and the one
+    materialize ingest, builds and retraction share
+    (materialize.full_outputs over the updated mapping). The result must
+    equal a one-shot build over the union, which is exactly what the
+    DuckDB oracles compute — so the O(new) linking contract is
+    hash-verified end-to-end, not just pytest-pinned. Every persist and
+    checkpoint lands in the current scope (release_caches() frees them
+    outside any Scope), so each of the two queries builds its own copy."""
     from gondar_spark.operators import cc, materialize
 
     triples = persist(_mini_kg_triples(spark))
-    is_new = (F.xxhash64("path") % 3) == 0
-    old_raw = persist(triples.filter(~is_new))
-    new_raw = persist(triples.filter(is_new))
-
-    m_old, e_old = _kg_link(old_raw)
-    e_old = checkpoint(e_old)
+    e_old = checkpoint(
+        _kg_link(triples.filter((F.xxhash64("path") % 3) != 0))[1])
     labels_old = cc.connected_components(e_old, 20)
-    map_old = checkpoint(_kg_mapping(m_old, labels_old))
-    old_out = materialize.full_outputs(m_old, old_raw, map_old)
 
     m_all, e_all = _kg_link(triples)
     e_new = e_all.join(e_old, ["norm_a", "norm_b"], "left_anti")
     labels_u, _touched = cc.incremental_components(
         labels_old, e_old, e_new, 20)
     mapping = checkpoint(_kg_mapping(m_all, labels_u))
-    changed = mapping.join(map_old, ["norm", "entity_id"], "left_anti")
-    outputs, _ids, _keys = materialize.splice_outputs(
-        old_out["triples"], old_out["entities"], old_out["aliases"],
-        m_all, triples, new_raw, mapping, map_old, changed)
-    return outputs
+    return materialize.full_outputs(m_all, triples, mapping)
 
 
 def q_streaming_kg_triples(spark, sf_dir):
@@ -1519,7 +1508,7 @@ def q_streaming_kg_triples(spark, sf_dir):
     (a real readStream + foreachBatch, maxFilesPerTrigger=1 -> each wave
     is its own micro-batch = one O(new) incremental pipeline ingest:
     ledger-gated extraction, store-probe linking, CC on touched
-    components, affected-group materialize splice). The warehouse's
+    components, materialize under the stable entity ids). The warehouse's
     canonical triples are then exported with stable entity ids resolved
     to their component's min-label canonical form (the ledger's
     first-assigned ids deliberately survive merges, so the export
@@ -1596,7 +1585,8 @@ def q_retract_kg_triples(spark, sf_dir):
     warehouse, then Pipeline.retract the ~3/16 of files whose
     md5(path) starts with 0/1/2 — dead norms leave the dictionary and
     signature store, components split under the holder-aware stable-id
-    rule, and materialize splices only affected groups. The canonical
+    rule, and the outputs are re-materialized under the stable ids
+    (the one materialize builds and ingests run too). The canonical
     export must hash-equal the one-shot DuckDB chain over ONLY the
     remaining files (the oracle filters src with the same md5
     predicate) — takedown leaves no trace and breaks nothing else."""
@@ -1625,13 +1615,13 @@ def q_retract_kg_triples(spark, sf_dir):
 def q_incremental_kg_triples(spark, sf_dir):
     """Incremental-ingest canonical triples (see
     _kg_incremental_outputs) — shares kg_canonical_triples' one-shot
-    oracle: splicing must lose and invent nothing."""
+    oracle: the incremental path must lose and invent nothing."""
     return _kg_incremental_outputs(spark)["triples"]
 
 
 def q_incremental_kg_entities(spark, sf_dir):
     """Incremental-ingest entity dictionary with n_mentions — the
-    entities/aliases side of the splice, against a one-shot DuckDB
+    entities side of _kg_incremental_outputs, against a one-shot DuckDB
     closure + mention-count oracle."""
     return _kg_incremental_outputs(spark)["entities"].select(
         "entity_id", "canonical_form", "n_aliases", "n_mentions")
@@ -2084,8 +2074,8 @@ def _kg_canonical_triples_sql(src_where: str = "") -> str:
     zero-padded) so lexicographic min over the key equals Spark's
     field-by-field struct min. Shared by kg_canonical_triples,
     incremental_kg_triples, streaming_kg_triples, and (with a src
-    filter) retract_kg_triples — splices must equal the one-shot
-    build."""
+    filter) retract_kg_triples — the incremental, streaming and
+    retraction paths must equal the one-shot build."""
     return (_kg_prefix_sql(recursive=True, src_where=src_where)
             + _kg_linking_cte() + _KG_COMP_CTE) + f"""
 , canon AS (
@@ -2113,7 +2103,7 @@ FROM canon GROUP BY subj, pred, obj"""
 def _kg_entities_full_sql() -> str:
     """Entity dictionary WITH n_mentions (count of raw linkable triple
     rows per canonical id) — the oracle for the entities side of the
-    incremental splice."""
+    incremental ingest."""
     return _kg_prefix_sql(recursive=True) + _kg_linking_cte() + _KG_COMP_CTE + f"""
 , nm AS (
     SELECT coalesce(c.entity_id, {_KG_NORM_OBJ}) AS eid,

@@ -31,9 +31,7 @@ from pyspark.sql import functions as F
 
 
 def resolve_stable_ids(
-    labels: DataFrame,
-    prior_map: DataFrame | None = None,
-    all_norms: DataFrame | None = None,
+    labels: DataFrame, prior_map: DataFrame, all_norms: DataFrame
 ) -> DataFrame:
     """labels(norm, component) -> assign(component, entity_id), one row
     per component.
@@ -57,39 +55,29 @@ def resolve_stable_ids(
     a member norm of its own component, and norm sets are disjoint
     across components). For append-only ingest this reduces exactly to
     the old min-of-claims rule. ``all_norms``: the full surviving-norm
-    set, needed to see singleton holders after a retraction; when None,
-    holders are resolved from ``labels`` alone (sufficient for
-    append-only callers).
+    set, needed to see singleton holders after a retraction.
 
     All frames are small (∝ components / ∝ claims); the groupBys
     shuffle only (component, prior-id) pairs, never the corpus.
     """
-    j = labels
-    if prior_map is not None:
-        j = j.join(
+    prior_pairs = (
+        labels.join(
             prior_map.select("norm", F.col("entity_id").alias("_prior")),
             "norm",
-            "left",
         )
-    else:
-        j = j.withColumn("_prior", F.lit(None).cast("string"))
-    prior_pairs = (
-        j.filter(F.col("_prior").isNotNull())
         .select("component", "_prior")
         .distinct()
     )
     # where does each claimed id's own norm live now? (component label,
     # or the sentinel for a surviving singleton, or nowhere)
+    single_holders = (
+        all_norms.select("norm").distinct()
+        .join(labels.select("norm"), "norm", "left_anti")
+        .select(F.col("norm").alias("_prior"), F.col("norm").alias("_hc"))
+    )
     holder = labels.select(
-        F.col("norm").alias("_prior"), F.col("component").alias("_hc"))
-    if all_norms is not None:
-        single_holders = (
-            all_norms.select("norm").distinct()
-            .join(labels.select("norm"), "norm", "left_anti")
-            .select(F.col("norm").alias("_prior"),
-                    F.col("norm").alias("_hc"))
-        )
-        holder = holder.unionByName(single_holders)
+        F.col("norm").alias("_prior"), F.col("component").alias("_hc")
+    ).unionByName(single_holders)
     # restrict the holder lookup to the claimed ids first (broadcast the
     # small claim set into the dictionary scan), so the left join below
     # broadcasts a claim-sized frame instead of shuffling the dictionary

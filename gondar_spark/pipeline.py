@@ -12,9 +12,14 @@ table: a build hashes every file, an ingest only the files
 ``source_hashes`` lacks. The extraction stage extracts its todo: the
 whole corpus on a build, the corpus minus the ``extract_done`` ledger on
 an ingest. A build writes its tables; an ingest appends one segment to
-each. From there an ingest's link and materialize steps each work from
-their own ledger (``link_done``, ``mat_done``), advanced last, so a
-crash at any commit replays without duplicating rows.
+each. From there an ingest's link and materialize steps share one
+pending set, ``extract_done`` minus the ``mat_done`` ledger, which
+advances last: the link step is replay-idempotent (every append
+anti-joins what is committed), so a crash at any commit replays the
+batch without duplicating rows. Builds, ingests and retract() produce
+the outputs one way, materialize.full_outputs under the stable
+``entity_ids`` mapping (_materialize). A warehouse written before this
+layout may hold a ``link_done`` table; nothing reads it any more.
 
 Lineage: one JSONL record per stage per run (rows, bytes, wall_s,
 skipped flag), timed by one context manager (Pipeline._stage), plus the
@@ -49,6 +54,13 @@ def _prefix_slice(store: DataFrame, part_col: str, batch: DataFrame,
     read prunes at the partition level."""
     ps = [r[0] for r in batch.select(prefix).distinct().collect()]
     return store.filter(F.col(part_col).isin(ps) if ps else F.lit(False))
+
+
+def _singletons(labels: DataFrame, mentions: DataFrame) -> DataFrame:
+    """The mention norms no component holds, each its own entity id."""
+    return (mentions.select("norm").distinct()
+            .join(labels.select("norm").distinct(), "norm", "left_anti")
+            .withColumn("entity_id", F.col("norm")))
 
 
 class Pipeline:
@@ -103,32 +115,32 @@ class Pipeline:
 
     def _run_stage(self, name: str, tables: dict[str, "DataFrame"],
                    partition_by: dict[str, list[str]] | None = None,
-                   force: bool = False, parallel: bool = False) -> bool:
+                   force: bool = False) -> bool:
         """Write each output table unless all are already committed.
-        Returns True if the stage executed, False if skipped (resume).
-
-        ``parallel`` overlaps the independent table writes (_overlap;
-        guide §2.6: actions are only sequential because the driver calls
-        them sequentially) — one write's task tail back-fills with the next
-        write's tasks. Safe ONLY when the table plans read committed,
-        checkpointed or already-populated inputs: plans sharing an
-        un-materialized persist would race to populate the cache and
-        re-run the expensive upstream (the extract-once contract)."""
+        Returns True if the stage executed, False if skipped (resume)."""
         if not force and all(self.io.exists(t) for t in tables):
             self._log(name, skipped=True)
             return False
         with self._stage(name, skipped=False) as rec:
             rec.update(self._sizes(self._write_tables(
-                name, tables, partition_by, parallel)))
+                name, tables, partition_by)))
         return True
 
     def _write_tables(self, stage: str, tables: dict[str, DataFrame],
                       partition_by: dict[str, list[str]] | None = None,
                       parallel: bool = False, append: bool = False) -> dict:
         """Commit each table — a snapshot write, or one appended segment
-        when ``append`` — overlapped (_overlap) when ``parallel``;
-        returns {table: commit} of the tables committed: an append that
-        turned out empty commits nothing and is left out."""
+        when ``append``; returns {table: commit} of the tables committed:
+        an append that turned out empty commits nothing and is left out.
+
+        ``parallel`` overlaps the independent table writes (_overlap:
+        actions are only sequential because the driver calls them
+        sequentially) — one write's task tail back-fills with the next
+        write's tasks. Safe ONLY when the table plans read
+        committed, checkpointed or already-populated inputs: plans
+        sharing an un-materialized persist would race to populate the
+        cache and re-run the expensive upstream (the extract-once
+        contract)."""
         commit = self.io.append if append else self.io.write
 
         def _write(tbl, df):
@@ -180,8 +192,8 @@ class Pipeline:
             triple and quarantined files too), so an unchanged corpus
             re-runs with zero extractor calls;
           * linking (_link_incremental) and materialize
-            (_materialize_incremental) each take their pending files
-            from their own ledger (``link_done``, ``mat_done``).
+            (_materialize_incremental) take one pending set, the
+            extracted files the ``mat_done`` ledger lacks.
         Segment tables fold into one snapshot every ``COMPACT_AFTER``
         runs. A warehouse without the link state, or with lang-aware
         blocking, recomputes the later stages in full while extracted
@@ -229,16 +241,18 @@ class Pipeline:
                 self._compact_ledgers(src if prune_removed else None,
                                       force=prune_removed)
                 if self._can_link_incremental():
-                    link_exec = self._link_incremental()
+                    pending = checkpoint(self._pending().distinct())
+                    n_pending = pending.count()
+                    link_exec = self._link_incremental(pending, n_pending)
                     executed.update(link_exec)
                     executed["materialize"] = self._materialize_incremental(
-                        link_exec["labels"])
+                        pending, n_pending, link_exec["labels"])
                     return executed
                 # the full-stage fallback recomputes the later stages
                 # while extracted files wait for materialize — this run's
                 # or a killed run's: a replay extracts nothing new
                 force = (not self.io.exists("mat_done")
-                         or not self._pending("mat_done").isEmpty())
+                         or not self._pending().isEmpty())
             triples_raw = self.io.read("triples_raw")
 
             # stage 3: distinct normalized mentions (B5)
@@ -318,13 +332,6 @@ class Pipeline:
                 force=force,
             )
             labels = self.io.read("labels")
-            # a completed full linking pass covers every extracted file: seed
-            # (or reset) the link_done ledger so later incremental runs link
-            # only what extraction adds after this point
-            if durable and (executed["labels"] or not self.io.exists("link_done")):
-                self.io.write(
-                    self.io.read("extract_done").distinct(), "link_done",
-                    meta={"stage": "labels", "run_id": cfg.run_id})
 
             # stage 6: materialize triples + dictionaries (B11/B13)
             executed["materialize"] = self._materialize_stage(
@@ -478,88 +485,67 @@ class Pipeline:
     def _materialize_stage(self, mentions: DataFrame, labels: DataFrame,
                            triples_raw: DataFrame, force: bool,
                            durable: bool = True) -> bool:
-        """FULL materialize with STABLE entity ids: CC labels are
+        """The build's materialize, with STABLE entity ids: CC labels are
         component minima and churn when a lower-id member arrives; the
         entity_ids ledger maps every mention norm to its FIRST-ASSIGNED
-        id, so corpus growth never relabels a published entity. Merges
-        (several prior ids landing in one component) survive as the
-        minimum prior id — deterministic — and are recorded in lineage.
-        On a fresh warehouse the ledger is the identity mapping, so
-        first-run outputs equal plain min-label canonicalization (all
-        existing oracles/fixtures unchanged). Ingests splice instead
-        (_materialize_incremental)."""
+        id, so corpus growth never relabels a published entity. With a
+        ledger this is _materialize. Without one the stable ids are the
+        identity (every component keeps its CC label, every singleton
+        its norm), so ``labels`` IS the mapping: the outputs equal plain
+        min-label canonicalization, one-shot and durable builds alike,
+        and a durable build commits that identity as the ledger's base
+        (``_seq`` 0), overlapped with the outputs. A durable build then
+        records every extracted file in ``mat_done``, last."""
+        io = self.io
         probe = _STAGE_TABLES["materialize"]
-        has_ledger = self.io.exists("entity_ids")
-        if (not force and all(self.io.exists(t) for t in probe)
+        has_ledger = io.exists("entity_ids")
+        if (not force and all(io.exists(t) for t in probe)
                 and (has_ledger or not durable)):
             self._log("materialize", skipped=True)
             return False
-        if not durable and not has_ledger:
-            # one-shot fast path (durability knob): on a fresh warehouse
-            # the stable-id resolution is the IDENTITY (assign = CC label,
-            # singletons = own norm — resolve_stable_ids with no prior
-            # map), so the labels table IS the mapping and the whole
-            # identity machinery (3 joins + a checkpoint + 2 ledger
-            # writes) is skipped. Outputs bit-equal to the durable first
-            # run by construction and by test.
-            return self._run_stage(
-                "materialize", materialize.full_outputs(
-                    mentions, triples_raw, labels.select(
-                        "norm", F.col("component").alias("entity_id"))),
-                partition_by=_MAT_PARTITIONS, force=True, parallel=True)
-        prior_map = self._read_entity_ledger() if has_ledger else None
-        mapping, changed, merges = self._stable_mapping(
-            labels, mentions, prior_map)
-        executed = self._run_stage(
-            "materialize",
-            materialize.full_outputs(mentions, triples_raw, mapping),
-            partition_by=_MAT_PARTITIONS, force=True, parallel=True)
-        meta = {"stage": "materialize", "run_id": self.cfg.run_id}
-        if has_ledger:
-            self._advance_ids(changed, merges, "materialize",
-                              changed.count())
-        else:
-            self.io.write(mapping.withColumn("_seq", F.lit(0)),
-                          "entity_ids", meta=meta)
-            self._log("entity_ids", rows="base", merges=0)
-        # a completed full materialize covers every extracted file; its
-        # ledger advances last
-        self.io.write(self.io.read("extract_done").distinct(), "mat_done",
-                      meta=meta)
-        return executed
+        with self._stage("materialize", skipped=False) as rec:
+            if has_ledger:
+                rec.update(self._materialize(mentions, labels, triples_raw))
+            else:
+                ids = labels.select(
+                    "norm", F.col("component").alias("entity_id"))
+                tables = materialize.full_outputs(mentions, triples_raw, ids)
+                if durable:
+                    tables["entity_ids"] = ids.unionByName(
+                        _singletons(labels, mentions)).withColumn(
+                            "_seq", F.lit(0))
+                rec.update(self._sizes(self._write_tables(
+                    "materialize", tables, _MAT_PARTITIONS, parallel=True)))
+            if durable:
+                io.write(io.read("extract_done").distinct(), "mat_done",
+                         meta={"stage": "materialize",
+                               "run_id": self.cfg.run_id})
+        return True
 
     @staticmethod
     def _stable_mapping(labels: DataFrame, mentions: DataFrame,
-                        prior_map: DataFrame | None):
+                        prior_map: DataFrame):
         """The full norm -> stable-id ``mapping``: linked norms through
         their component's identity.resolve_stable_ids assignment,
         singletons as themselves (components never shrink under
         append-only growth, so a singleton's id is its norm forever).
-        ``all_norms`` lets the holder-aware rule see SINGLETON holders —
-        after a retraction, a component fragment must not claim an id
-        whose norm survives unlinked (it republishes itself).
+        The mention norms let the holder-aware rule see SINGLETON
+        holders — after a retraction, a component fragment must not
+        claim an id whose norm survives unlinked (it republishes
+        itself).
 
         Returns (mapping, changed, merges). ``mapping`` is checkpointed
         once — it feeds three materialize joins plus the ledger diff;
         ``changed`` = norms whose mapping is new or moved vs
-        ``prior_map`` (O(changed); feeds the ledger append AND the
-        splice scope), checkpointed too — None without a ledger.
+        ``prior_map`` (O(changed); the ledger append), checkpointed too.
         ``merges`` (entity_id, absorbed_id) derives from that one
         checkpoint, so the stable-id resolution runs once: a prior id a
         component claimed but did not keep is exactly the prior id of
         one of its linked norms that moved (merges under growth,
         re-assignments under splits)."""
-        norms = mentions.select("norm").distinct()
-        assign = identity.resolve_stable_ids(labels, prior_map,
-                                             all_norms=norms)
+        assign = identity.resolve_stable_ids(labels, prior_map, mentions)
         linked = labels.join(assign, "component").select("norm", "entity_id")
-        singles = (
-            norms.join(labels.select("norm").distinct(), "norm", "left_anti")
-            .withColumn("entity_id", F.col("norm"))
-        )
-        mapping = checkpoint(linked.unionByName(singles))
-        if prior_map is None:
-            return mapping, None, None
+        mapping = checkpoint(linked.unionByName(_singletons(labels, mentions)))
         moved = checkpoint(mapping.join(
             prior_map.withColumnRenamed("entity_id", "absorbed_id"),
             "norm", "left").filter(
@@ -569,88 +555,60 @@ class Pipeline:
                   .select("entity_id", "absorbed_id").distinct())
         return mapping, moved.select("norm", "entity_id"), merges
 
-    def _materialize_incremental(self, labels_changed: bool) -> bool:
-        """Ingest's materialize: splice ONLY the output groups the
-        pending files touch (_splice) instead of re-aggregating every
-        triple group and every entity (_materialize_stage, the fallback
-        for a warehouse without outputs, ledger or ``mat_done``).
-
-        Pending files = extract_done ∖ mat_done: its own ledger, advanced
-        LAST. It runs when that set is non-empty or this run changed
-        ``labels`` — never from a caller's "something changed" flag,
-        which a replay after a crash past the extraction and link ledgers
-        would read as nothing to do. Exact-equal to the full path:
-        pinned by tests/test_incremental_materialize.py against a
-        same-state full recompute."""
+    def _materialize_incremental(self, pending: DataFrame, n_pending: int,
+                                 labels_changed: bool) -> bool:
+        """Ingest's materialize: _materialize when the ``pending`` files
+        (extract_done ∖ mat_done, shared with the link step) are
+        non-empty or this run changed ``labels``, then ``pending`` is
+        appended to ``mat_done`` as one segment, LAST. The trigger is
+        never a caller's "something changed" flag, which a replay after
+        a crash past the extraction ledger would read as nothing to do.
+        A warehouse without outputs or ledger takes the build's path
+        (_materialize_stage)."""
         io = self.io
+        state = (io.read(t) for t in ("mentions", "labels", "triples_raw"))
         if not all(io.exists(t) for t in (*_STAGE_TABLES["materialize"],
-                                          "entity_ids", "mat_done")):
-            return self._materialize_stage(
-                *(io.read(t) for t in ("mentions", "labels", "triples_raw")),
-                force=True)
-        keys = self._LINK_KEYS
-        with self._stage("materialize", incremental=True) as rec:
-            pending = self._pending("mat_done")
-            stats = None
-            # the emptiness probe is a no-op's whole cost: nothing else is
-            # read, deduplicated or checkpointed until there is work
-            if labels_changed or not pending.isEmpty():
-                pending = checkpoint(pending.distinct())
-                n_pending = pending.count()
-                triples_raw = io.read("triples_raw")
-                new_raw = triples_raw.join(
-                    self._batch_broadcast(n_pending)(pending), keys,
-                    "left_semi")
-                stats = self._splice("materialize", io.read("labels"),
-                                     triples_raw, new_raw, n_pending)
-            rec["skipped"] = stats is None
-            if stats is None:
+                                          "entity_ids")):
+            return self._materialize_stage(*state, force=True)
+        with self._stage("materialize", incremental=True,
+                         skipped=not (n_pending or labels_changed)) as rec:
+            if rec["skipped"]:
                 return False
+            rec.update(pending_files=n_pending, **self._materialize(*state))
             io.append(pending, "mat_done",
                       meta={"stage": "materialize", "run_id": self.cfg.run_id})
             self._fold("mat_done", DataFrame.distinct)
-            rec.update(pending_files=n_pending, **stats)
         return True
 
-    def _splice(self, stage: str, labels: DataFrame, triples_raw: DataFrame,
-                delta_raw: DataFrame, n_delta: int) -> dict | None:
-        """The shared tail of every file delta — ingest's materialize
-        and retract(): stable mapping over the current ``labels`` and
-        mentions -> materialize.splice_outputs over the delta's raw rows
-        (``delta_raw``: added or removed; ``triples_raw``: the current
-        raw stream) -> overlapped output writes -> entity_ids advance.
-        Every splice input is a committed table or a checkpointed frame,
-        so the three writes share no live persist. Returns the lineage
-        stats; None, with nothing written, when the delta is empty and
-        no mapping moved."""
-        io = self.io
-        mentions = io.read("mentions")
-        prior_map = self._read_entity_ledger()
+    def _materialize(self, mentions: DataFrame, labels: DataFrame,
+                     triples_raw: DataFrame) -> dict:
+        """The one materialize of a warehouse with an entity ledger — a
+        build's, an ingest's and retract()'s: the stable mapping over
+        the current ``labels`` and ``mentions`` -> the outputs
+        materialize.full_outputs makes of it over ``triples_raw`` (the
+        current raw stream), written overlapped -> the entity_ids
+        advance. Every input is a committed table or a checkpointed
+        frame, so the three writes share no live persist. The outputs
+        are a pure function of committed state: a replay after a crash
+        at any point rewrites the same rows. Returns the lineage
+        fields."""
         mapping, changed, merges = self._stable_mapping(
-            labels, mentions, prior_map)
-        n_changed = changed.count()
-        if n_delta == 0 and n_changed == 0:
-            return None
-        B = self._batch_broadcast(max(n_delta, n_changed))
-        outputs, affected_ids, drop_keys = materialize.splice_outputs(
-            io.read("triples"), io.read("entities"), io.read("aliases"),
-            mentions, triples_raw, delta_raw, mapping, prior_map, changed,
-            hint_broadcast=B is F.broadcast)
-        commits = self._write_tables(stage, outputs, _MAT_PARTITIONS,
-                                     parallel=True)
-        self._advance_ids(changed, merges, stage, n_changed)
-        return {"changed_mappings": n_changed,
-                "affected_entities": affected_ids.count(),
-                "affected_triple_groups": drop_keys.count(),
+            labels, mentions, self._read_entity_ledger())
+        commits = self._write_tables(
+            "materialize",
+            materialize.full_outputs(mentions, triples_raw, mapping),
+            _MAT_PARTITIONS, parallel=True)
+        return {"changed_mappings": self._advance_ids(changed, merges),
                 **self._sizes(commits)}
 
-    def _advance_ids(self, changed: DataFrame, merges: DataFrame,
-                     stage: str, n_changed: int) -> None:
+    def _advance_ids(self, changed: DataFrame, merges: DataFrame) -> int:
         """Append the new or moved mappings as one entity_ids segment
         (``_seq`` = latest + 1, so they win on read) and log the merge
         sample: prior ids a component claimed but did not keep — merges
-        under growth, re-assignments under splits."""
+        under growth, re-assignments under splits. Returns the number
+        of changed mappings."""
         merge_rows, n_merges = [], 0
+        n_changed = changed.count()
         # merges derive from ``changed``: none unless a mapping moved
         if n_changed:
             merges = checkpoint(merges)  # the sample and the count read it
@@ -660,9 +618,11 @@ class Pipeline:
                 F.max("_seq")).collect()[0][0] or 0
             self.io.append(changed.withColumn("_seq", F.lit(seq + 1)),
                            "entity_ids",
-                           meta={"stage": stage, "run_id": self.cfg.run_id})
+                           meta={"stage": "materialize",
+                                 "run_id": self.cfg.run_id})
         self._log("entity_ids", changed=n_changed, merges=n_merges,
                   merge_sample=merge_rows)
+        return n_changed
 
     @staticmethod
     def _overlap(tasks) -> list:
@@ -702,12 +662,12 @@ class Pipeline:
                 source_path: str | None = None) -> dict:
         """Incremental RETRACTION — the deletion analog of the O(new)
         ingest path: files present in the ledgers but ABSENT from the
-        given corpus are removed from every table at O(affected) shuffle
-        cost, instead of a full force-rebuild (run(prune_removed=True)
-        only prunes ledgers; the data tables kept stale rows until the
-        next force run). The 100 TB motivation is takedown/right-to-be-
-        forgotten: a daily handful of removals must not re-link the
-        corpus.
+        given corpus are removed from every table, the link state at
+        O(affected) shuffle cost, instead of a full force-rebuild
+        (run(prune_removed=True) only prunes ledgers; the data tables
+        kept stale rows until the next force run). The 100 TB motivation
+        is takedown/right-to-be-forgotten: a daily handful of removals
+        must not re-link the corpus.
 
         Scope — only what removal alone needs lives here: the removed
         files' raw triples -> affected norms; a norm with no surviving
@@ -716,20 +676,23 @@ class Pipeline:
         edges with a dead endpoint die. From there the delta takes the
         path ingest takes: the touched-component CC (_touched_cc — the
         components holding a dead norm can SPLIT, and edge segments a
-        crashed ingest left unreflected are folded in), then _splice
-        (stable mapping — the holder-aware rule in
+        crashed ingest left unreflected are folded in), then the one
+        materialize of builds and ingests, _materialize, over the
+        remaining raw triples (stable mapping — the holder-aware rule in
         identity.resolve_stable_ids keeps published ids collision-free:
         the fragment holding the id norm keeps it, others get their CC
-        label — output splice, entity_ids advance).
+        label — full outputs, entity_ids advance), logged as its own
+        ``materialize`` record.
 
         CRASH-SAFE by idempotent replay: every derived table is a pure
         function of (old triples_raw, removed keys, committed link
         state); labels are written before the link-table compactions
         (so a replay never loses unreflected edge segments a compaction
         folded away), data tables are rewritten before triples_raw, and
-        the ledgers are pruned LAST — a replay after any crash point
-        recomputes identical content (a post-triples_raw replay sees
-        empty scopes and only re-commits already-correct tables). Dead
+        the ledgers (``extract_done``, ``mat_done``) are pruned LAST — a
+        replay after any crash point recomputes identical content (a
+        post-triples_raw replay sees empty scopes and only re-commits
+        already-correct tables). Dead
         norms keep their ledger rows (no tombstones): if a file
         returns, its norms get their old ids back.
 
@@ -747,8 +710,9 @@ class Pipeline:
         link store predates the prefix-partitioned layout. Caches and
         checkpoints live in one session.Scope, freed on return.
 
-        Returns {"removed_files": n, "dead_norms": n, ...} (also logged
-        to lineage)."""
+        Returns {"removed_files": n, "dead_norms": n,
+        "touched_components": n, "changed_mappings": n, "rows": {...},
+        "bytes": {...}} (also logged to lineage)."""
         with Scope(), self._stage("retract") as rec:
             io = self.io
             cfg = self.cfg
@@ -856,10 +820,11 @@ class Pipeline:
                     meta=meta, partition_by=["_bp"]))
             self._overlap(link_rewrites)
 
+            with self._stage("materialize") as mat:
+                mat.update(self._materialize(
+                    io.read("mentions"), io.read("labels"), remaining_raw))
             stats = {"removed_files": n_removed, "dead_norms": n_dead,
-                     "touched_components": n_touched,
-                     **self._splice("retract", io.read("labels"),
-                                    remaining_raw, removed_raw, n_removed)}
+                     "touched_components": n_touched, **mat}
 
             # ---- prune the raw stream + per-file tables + ledgers LAST -------
             def prune(tables, rows=lambda df: df):
@@ -879,7 +844,7 @@ class Pipeline:
             prune(per_file)
             self._run_stage("triples_raw", {"triples_raw": remaining_raw},
                             force=True)
-            prune(("extract_done", "link_done", "mat_done"), DataFrame.distinct)
+            prune(("extract_done", "mat_done"), DataFrame.distinct)
             rec.update(stats)
             return stats
 
@@ -903,7 +868,7 @@ class Pipeline:
 
     _LINK_KEYS = ["repo", "path", "commit"]
 
-    def _link_incremental(self) -> dict:
+    def _link_incremental(self, pending: DataFrame, n_pending: int) -> dict:
         """Linking stages (B5-B9) at O(pending-batch) cost:
 
           * mentions — new (surface, lang, norm) rows found via a
@@ -922,18 +887,19 @@ class Pipeline:
             (_touched_cc, the one touched-component CC retract() also
             runs); untouched labels pass through.
 
-        Materialize follows as _materialize_incremental -> _splice, the
-        tail retract() shares.
+        Materialize follows as _materialize_incremental -> _materialize,
+        the materialize builds and retract() run too.
 
         CRASH-SAFE RESUME: extraction's ledger advances before linking,
-        so linking must track its own progress or a crash between the
-        two would skip these files forever (extraction's anti-join sees
-        nothing left to do). The unit of progress is the ``link_done``
-        ledger: pending = extract_done ∖ link_done, advanced LAST. Every
-        sub-step re-derives its own todo from committed state and commits
-        it as one append, whose row count comes back from the commit (an
-        empty append commits nothing), so any crash point replays
-        without duplicating:
+        so a crash between the two must not skip these files forever
+        (extraction's anti-join sees nothing left to do). ``pending`` is
+        extract_done ∖ mat_done, the one pending set of the link and
+        materialize steps, computed once by the caller; ``mat_done``
+        advances after the materialize, so a crash anywhere before it
+        replays the batch through both steps. Every sub-step re-derives
+        its own todo from committed state and commits it as one append,
+        whose row count comes back from the commit (an empty append
+        commits nothing), so a replay re-links without duplicating:
           - the mentions step appends its rows at once: they dedup by
             anti-join against the mentions table, so a replay appends
             none twice;
@@ -954,8 +920,6 @@ class Pipeline:
         io = self.io
         keys = self._LINK_KEYS
         meta = {"stage": "link_incremental", "run_id": cfg.run_id}
-        pending = checkpoint(self._pending("link_done").distinct())
-        n_pending = pending.count()
         B = self._batch_broadcast(n_pending)
         unreflected = self._unreflected_edge_segments()
         if n_pending == 0 and not unreflected:
@@ -1036,7 +1000,7 @@ class Pipeline:
                 B(needed_store), "norm", "left_semi"
             ).unionByName(new_sig.select("norm", "grams"))
             # anti-join against committed edges: a retry after a crash
-            # between the edges append and the link_done advance regenerates
+            # between the edges append and the mat_done advance regenerates
             # the same pairs — they must not stack
             new_edges = score_pairs(
                 pairs, sig_grams, cfg.link_threshold
@@ -1070,24 +1034,22 @@ class Pipeline:
                            unreflected_segments=len(unreflected))
         else:
             self._log("labels", skipped=True, incremental=True)
-        # link_done advances LAST so any crash above replays this batch
-        # instead of losing it
-        io.append(pending, "link_done", meta=meta)
         for name, pb in (("mentions", None), ("link_signatures", ["_np"]),
                          ("link_bands", ["_bp"]), ("edges", None)):
             self._fold(name, partition_by=pb)
-        self._fold("link_done", DataFrame.distinct)
         return {"mentions": n_new_mentions != 0,
                 "edges": n_new_edges != 0,
                 "labels": labels_changed}
 
-    def _pending(self, ledger: str) -> DataFrame:
-        """Extracted files a stage's ``ledger`` does not hold yet:
-        extract_done ∖ ledger (all of extract_done without the ledger)."""
+    def _pending(self) -> DataFrame:
+        """Extracted files the link and materialize steps have not
+        finished: extract_done ∖ mat_done (all of extract_done without
+        the ledger)."""
         done = self.io.read("extract_done")
-        if not self.io.exists(ledger):
+        if not self.io.exists("mat_done"):
             return done
-        return done.join(self.io.read(ledger), self._LINK_KEYS, "left_anti")
+        return done.join(self.io.read("mat_done"), self._LINK_KEYS,
+                         "left_anti")
 
     def _unreflected_edge_segments(self) -> list[str]:
         """Edge segments appended after the last labels write (crash

@@ -80,17 +80,18 @@ def run_streaming_kg_ingest(
     foreachBatch, where every micro-batch is ONE O(new) incremental
     pipeline ingest — extraction's anti-join ledger skips seen files,
     linking probes the committed signature/band store, CC re-labels only
-    touched components, and materialize splices only affected output
-    groups. The batch pipeline IS the stream processor: no second code
-    path, so streaming results are definitionally the batch results.
+    touched components, and materialize rewrites the outputs under the
+    stable entity ids. The batch pipeline IS the stream processor: no
+    second code path, so streaming results are definitionally the batch
+    results.
 
     Exactly-once end to end by two independent mechanisms: the streaming
     checkpoint never re-delivers a source file, and even if a batch IS
     replayed (crash before checkpoint commit, after partial pipeline
-    work), every pipeline ledger (extract_done / link_done / mat_done)
-    makes the replay converge idempotently — pinned by
-    tests/test_streaming_kg_ingest.py, whose final warehouse must
-    exact-equal a one-shot batch build over the same files.
+    work), the pipeline ledgers (extract_done, then mat_done for the
+    link and materialize steps) make the replay converge idempotently —
+    pinned by tests/test_streaming_kg_ingest.py, whose final warehouse
+    must exact-equal a one-shot batch build over the same files.
 
     ``corpus_dir`` accumulates the batches as the pipeline's append-only
     corpus table (at production scale: an Iceberg append per batch).

@@ -156,14 +156,15 @@ def test_entity_id_stability_across_merge(spark, tmp_path):
     assert {r["entity_id"] for r in pipe.io.read("entities").collect()} == {e1}
 
 
-def test_entity_id_stable_under_smaller_newcomer(spark, tmp_path):
+def test_entity_id_stable_under_smaller_newcomer(spark, tmp_path,
+                                                 durable_base):
     """No merge — just a new lexicographically-smaller member joining one
     component. min-label CC would relabel; the ledger must not."""
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="newmin",
-                    durable_link_state=True)
+    ab = [("a.py", _win(2)), ("b.py", _win(4))]
+    cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
+                    run_id="newmin", durable_link_state=True)
     pipe = Pipeline(spark, cfg)
-    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
-    pipe.run(source_df=run1)
+    run1 = _src(spark, ab)
     e1 = _win(2)
     assert {r["entity_id"] for r in pipe.io.read("entities").collect()} == {e1}
 
@@ -229,20 +230,22 @@ def _expected_state(spark, tmp_path, source_df):
     return ref
 
 
-def test_link_crash_before_ledger_advance_replays(spark, tmp_path):
-    """Kill the run right before link_done advances: the batch's edges /
-    signatures / mentions are already appended. The next run must replay
-    the pending files WITHOUT duplicating anything and converge to the
-    from-scratch state."""
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="r1",
-                    durable_link_state=True)
+def test_link_crash_before_ledger_advance_replays(spark, tmp_path,
+                                                  durable_base):
+    """Kill the run at its first output write, after linking: the
+    batch's edges / signatures / mentions / labels are committed but
+    mat_done has not advanced. The next run must re-link the pending
+    files WITHOUT duplicating anything and converge to the from-scratch
+    state."""
+    ab = [("a.py", _win(2)), ("b.py", _win(4))]
+    cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
+                    run_id="r1", durable_link_state=True)
     pipe = Pipeline(spark, cfg)
-    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
-    pipe.run(source_df=run1)
+    run1 = _src(spark, ab)
 
     both = run1.unionByName(_src(spark, [("c.py", _win(0)),
                                          ("d.py", _win(6))]))
-    restore = _crash_on(pipe.io, "append", "link_done")
+    restore = _crash_on(pipe.io, "write", "triples")
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.run(source_df=both, incremental=True)
     restore()
@@ -258,15 +261,16 @@ def test_link_crash_before_ledger_advance_replays(spark, tmp_path):
             f"{table}: replay stacked duplicates"
 
 
-def test_link_crash_before_labels_folds_unreflected_edges(spark, tmp_path):
+def test_link_crash_before_labels_folds_unreflected_edges(spark, tmp_path,
+                                                          durable_base):
     """Kill the run between the edges append and the labels write: the
     labels manifest doesn't list the new segment, so the next run must
     fold it into its incremental CC input (unreflected-segment path)."""
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="r1",
-                    durable_link_state=True)
+    ab = [("a.py", _win(2)), ("b.py", _win(4))]
+    cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
+                    run_id="r1", durable_link_state=True)
     pipe = Pipeline(spark, cfg)
-    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
-    pipe.run(source_df=run1)
+    run1 = _src(spark, ab)
 
     both = run1.unionByName(_src(spark, [("c.py", _win(0)),
                                          ("d.py", _win(6))]))

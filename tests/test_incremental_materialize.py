@@ -1,7 +1,7 @@
-"""Incremental materialize: affected-group recomputation must be
-EXACT-equal to a full materialize over the same state — same stable-id
-ledger, same mentions/labels — across merges, new provenance on
-untouched groups, and no-change runs."""
+"""Incremental materialize: an ingest's outputs must be EXACT-equal to
+a full materialize over the same state — same stable-id ledger, same
+mentions/labels — across merges, new provenance on untouched groups,
+crash replays and no-change runs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -87,16 +87,17 @@ def test_incremental_materialize_exact_equal(spark, tmp_path):
     assert recs[-1].get("skipped")
 
 
-def test_incremental_materialize_crash_replay(spark, tmp_path):
+def test_incremental_materialize_crash_replay(spark, tmp_path,
+                                              durable_base):
     """Kill the run before mat_done advances (outputs already written):
     the replay must converge to the same exact outputs, no duplicates."""
     from tests.test_incremental_linking import _crash_on
 
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="m1",
-                    durable_link_state=True)
+    ab = [("a.py", _win(2)), ("b.py", _win(4))]
+    cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
+                    run_id="m1", durable_link_state=True)
     pipe = Pipeline(spark, cfg)
-    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
-    pipe.run(source_df=run1)
+    run1 = _src(spark, ab)
 
     both = run1.unionByName(_src(spark, [("c.py", _win(0)),
                                          ("d.py", _win(6))]))
@@ -114,22 +115,23 @@ def test_incremental_materialize_crash_replay(spark, tmp_path):
         assert df.count() == df.select(cols).distinct().count()
 
 
-def test_link_crash_before_ledger_replays_outputs(spark, tmp_path):
-    """Kill an ingest at its link_done append: extraction and linking
-    are committed, materialize never ran. The replay finds nothing left
-    to extract or link, and materialize must still splice the batch in
-    from its own mat_done ledger."""
+def test_link_crash_before_ledger_replays_outputs(spark, tmp_path,
+                                                  durable_base):
+    """Kill an ingest at its triples write: extraction and linking are
+    committed, materialize did not finish. The replay finds nothing left
+    to extract, re-links without appending, and materialize must still
+    take the batch in from the mat_done ledger."""
     from tests.test_incremental_linking import _crash_on
 
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="m1",
-                    durable_link_state=True)
+    ab = [("a.py", _win(2)), ("b.py", _win(4))]
+    cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
+                    run_id="m1", durable_link_state=True)
     pipe = Pipeline(spark, cfg)
-    run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
-    pipe.run(source_df=run1)
+    run1 = _src(spark, ab)
 
     both = run1.unionByName(_src(spark, [("c.py", _win(0)),
                                          ("d.py", _win(6))]))
-    restore = _crash_on(pipe.io, "append", "link_done")
+    restore = _crash_on(pipe.io, "write", "triples")
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.run(source_df=both, incremental=True)
     restore()

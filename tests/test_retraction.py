@@ -124,7 +124,7 @@ def test_retract_singleton_keeps_id_against_fragment(spark, tmp_path):
     w_aliases = pipe.io.read("aliases").filter(
         F.col("alias").isin([_win(0), _win(2), _win(4), _win(6)]))
     assert w_aliases.select("entity_id").distinct().count() == 1
-    # retract then ingest, back to back through the shared splice path,
+    # retract then ingest, back to back through the shared materialize,
     # stays exact against a same-ledger full recompute
     got = _snapshot(pipe)
     want = _full_recompute_snapshot(spark, pipe, tmp_path, "reingest")
@@ -132,17 +132,17 @@ def test_retract_singleton_keeps_id_against_fragment(spark, tmp_path):
         assert got[t] == want[t], f"{t} after retract + re-ingest"
 
 
-def test_retract_crash_replay(spark, tmp_path):
+def test_retract_crash_replay(spark, tmp_path, durable_base):
     """Kill the retraction between the linking-table rewrites and the
     ledger prunes: the replay must converge to the same state (every
     derived table is a pure function of old triples_raw + removed keys,
     and ledgers are pruned last)."""
     from tests.test_incremental_linking import _crash_on
 
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="c1",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=durable_base(_win_files([0, 2, 4, 6, 12, 14]),
+                                           tmp_path / "wh"),
+                    run_id="c1", durable_link_state=True)
     pipe = Pipeline(spark, cfg)
-    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 6, 12, 14])))
     remaining = _src(spark, _win_files([0, 2, 6, 12, 14]))
 
     restore = _crash_on(pipe.io, "write", "labels")
@@ -152,9 +152,9 @@ def test_retract_crash_replay(spark, tmp_path):
     pipe.retract(source_df=remaining)
 
     scratch = Pipeline(spark, JobConfig(
-        warehouse=str(tmp_path / "wh2"), run_id="scratch",
+        warehouse=durable_base(_win_files([0, 2, 6, 12, 14]),
+                               tmp_path / "wh2"), run_id="scratch",
         durable_link_state=True))
-    scratch.run(source_df=remaining)
     for table, cols in _LINK:
         assert _set(pipe.io.read(table), cols) == \
             _set(scratch.io.read(table), cols), f"{table} after replay"
@@ -169,17 +169,18 @@ def test_retract_crash_replay(spark, tmp_path):
 
 
 @pytest.mark.parametrize("table", ["edges", "triples"])
-def test_retract_crash_after_labels_replays(spark, tmp_path, table):
+def test_retract_crash_after_labels_replays(spark, tmp_path, table,
+                                           durable_base):
     """Kill the retraction after its labels write: in the edges
-    compaction, or in the output splice's writes. The replay sees labels
+    compaction, or in the output writes. The replay sees labels
     already without the dead norms and must still converge to the
     scratch build and the same-ledger full recompute."""
     from tests.test_incremental_linking import _crash_on
 
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="c2",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=durable_base(_win_files([0, 2, 4, 6, 12, 14]),
+                                           tmp_path / "wh"),
+                    run_id="c2", durable_link_state=True)
     pipe = Pipeline(spark, cfg)
-    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 6, 12, 14])))
     remaining = _src(spark, _win_files([0, 2, 6, 12, 14]))
 
     restore = _crash_on(pipe.io, "write", table)
@@ -189,9 +190,9 @@ def test_retract_crash_after_labels_replays(spark, tmp_path, table):
     pipe.retract(source_df=remaining)
 
     scratch = Pipeline(spark, JobConfig(
-        warehouse=str(tmp_path / "wh2"), run_id="scratch",
+        warehouse=durable_base(_win_files([0, 2, 6, 12, 14]),
+                               tmp_path / "wh2"), run_id="scratch",
         durable_link_state=True))
-    scratch.run(source_df=remaining)
     for t, cols in _LINK:
         assert _set(pipe.io.read(t), cols) == \
             _set(scratch.io.read(t), cols), f"{t} after replay"

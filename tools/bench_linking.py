@@ -235,10 +235,6 @@ def main() -> None:
             "incremental_vs_full_relink_speedup_10x": round(
                 big["full_relink_link_wall_s"] / big["link_wall_s"], 2)
             if big["link_wall_s"] else None,
-            "materialize_vs_full_speedup_10x": round(
-                big["full_relink_materialize_wall_s"]
-                / big["materialize_wall_s"], 2)
-            if big["materialize_wall_s"] else None,
         }))
     finally:
         spark.stop()
