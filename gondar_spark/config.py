@@ -43,8 +43,8 @@ class JobConfig:
                                           # languages by design)
     cc_max_iter: int = 20                 # fixpoint cap for connected components
     durable_link_state: bool = False      # commit the incremental-ingest state
-                                          # (link_signatures / link_bands /
-                                          # mat_done / entity_ids) on one-shot
+                                          # (link_bands / mat_done /
+                                          # entity_ids) on one-shot
                                           # full runs too. Default off: a
                                           # one-shot build should not pay for
                                           # durability it never uses (round-5

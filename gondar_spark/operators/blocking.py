@@ -18,35 +18,19 @@ Plan shape: signatures and band keys are computed in-row (no shuffle);
 blocks self-join on band_key, AQE skew-join handles hot bands, and an
 optional block-size cap drops degenerate mega-blocks (standard LSH
 guard at web scale).
+
+The committed link store (the pipeline's ``link_bands``) is the
+``band_keys_df`` output as it is, (norm, band_key), one unpartitioned
+table: an ingest probes it by band key, and recomputes the verify
+grams of the store norms it touches with ``gram_array`` — the same
+expression ``minhash_signature_df`` uses — so no signature or gram
+column is ever stored.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-# Partition-prefix columns for the COMMITTED link state (round-5 verdict
-# #1): link_signatures partitions on the first NORM_PREFIX_LEN hex chars
-# of md5(norm), the band-membership table (link_bands) on the first
-# BAND_PREFIX_LEN chars of the band key ("<band_idx>:<hex...>"). An
-# incremental probe collects its batch's distinct prefixes (bounded:
-# <= 256 / <= bands*16 strings) and reads ONLY the matching partitions —
-# scan bytes track the batch, not the corpus.
-NORM_PREFIX_LEN = 2     # 256 partitions
-BAND_PREFIX_LEN = 3     # band digit + ':' + 1 hex char -> <= bands*16
-
-
-def norm_prefix(col: str = "norm"):
-    # 'p' guard: a purely-numeric prefix like "12" would trip Spark's
-    # partition-column type inference into int, breaking string pruning
-    return F.concat(
-        F.lit("p"),
-        F.substring(F.md5(F.col(col).cast("binary")), 1, NORM_PREFIX_LEN))
-
-
-def band_prefix(col: str = "band_key"):
-    return F.concat(F.lit("p"), F.substring(F.col(col), 1, BAND_PREFIX_LEN))
 
 
 def gram_array(col: str = "norm", n: int = 3):

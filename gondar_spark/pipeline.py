@@ -47,15 +47,6 @@ from .session import Scope, checkpoint, persist
 from .sources.tables import TableIO
 
 
-def _prefix_slice(store: DataFrame, part_col: str, batch: DataFrame,
-                  prefix) -> DataFrame:
-    """The rows of a prefix-partitioned store table that ``batch`` can
-    touch: the batch's distinct prefixes (bounded) are collected so the
-    read prunes at the partition level."""
-    ps = [r[0] for r in batch.select(prefix).distinct().collect()]
-    return store.filter(F.col(part_col).isin(ps) if ps else F.lit(False))
-
-
 def _singletons(labels: DataFrame, mentions: DataFrame) -> DataFrame:
     """The mention norms no component holds, each its own entity id."""
     return (mentions.select("norm").distinct()
@@ -114,7 +105,6 @@ class Pipeline:
         self._log(name, **rec, wall_s=round(time.time() - t0, 3))
 
     def _run_stage(self, name: str, tables: dict[str, "DataFrame"],
-                   partition_by: dict[str, list[str]] | None = None,
                    force: bool = False) -> bool:
         """Write each output table unless all are already committed.
         Returns True if the stage executed, False if skipped (resume)."""
@@ -122,8 +112,7 @@ class Pipeline:
             self._log(name, skipped=True)
             return False
         with self._stage(name, skipped=False) as rec:
-            rec.update(self._sizes(self._write_tables(
-                name, tables, partition_by)))
+            rec.update(self._sizes(self._write_tables(name, tables)))
         return True
 
     def _write_tables(self, stage: str, tables: dict[str, DataFrame],
@@ -240,6 +229,7 @@ class Pipeline:
             if ingest:
                 self._compact_ledgers(src if prune_removed else None,
                                       force=prune_removed)
+                self._migrate_link_store()
                 if self._can_link_incremental():
                     pending = checkpoint(self._pending().distinct())
                     n_pending = pending.count()
@@ -263,13 +253,12 @@ class Pipeline:
             )
             mentions = self.io.read("mentions")
 
-            # stage 4: blocking + candidate pairs + scoring (B6/B7/B8). The
-            # signature table is ALSO committed (link_signatures): it is the
-            # LSH index incremental runs probe — band keys re-derive in-row
-            # from the h-columns (no shuffle), and the grams column feeds the
-            # verify join, so a later ingest never re-blocks the corpus.
-            edges_probe = (("edges", "link_signatures", "link_bands")
-                           if durable else ("edges",))
+            # stage 4: blocking + candidate pairs + scoring (B6/B7/B8). A
+            # durable build ALSO commits the band membership (link_bands):
+            # it is the LSH index incremental runs probe by band key, and
+            # its norms are the "already blocked" set, so a later ingest
+            # never re-blocks the corpus.
+            edges_probe = ("edges", "link_bands") if durable else ("edges",)
             if force or not all(self.io.exists(t) for t in edges_probe):
                 with Scope():
                     # sig feeds band keys + both sides of the scoring join —
@@ -299,22 +288,12 @@ class Pipeline:
                     )
                     pairs = blocking.candidate_pairs(blocks_ok, max_block_size=None)
                     tables = {"edges": score_pairs(pairs, sig, cfg.link_threshold)}
-                    pb = {}
                     if durable:
-                        # the committed LSH index later ingests probe — one-shot
-                        # builds skip the writes (durability knob above). BOTH
-                        # store tables are PARTITIONED by a probe-key prefix
-                        # (round-5 verdict #1): link_signatures by md5(norm)
-                        # prefix, the band-membership table by band-key prefix,
-                        # so an incremental probe reads only the partitions its
-                        # batch can touch instead of scanning the corpus store.
-                        tables["link_signatures"] = sig.withColumn(
-                            "_np", blocking.norm_prefix())
-                        tables["link_bands"] = blocks.withColumn(
-                            "_bp", blocking.band_prefix())
-                        pb = {"link_signatures": ["_np"], "link_bands": ["_bp"]}
+                        # one-shot builds skip the store write (durability
+                        # knob above)
+                        tables["link_bands"] = blocks
                     executed["edges"] = self._run_stage(
-                        "edges", tables, partition_by=pb, force=True)
+                        "edges", tables, force=True)
                     n_mega = sizes.filter(
                         F.col("_bs") > cfg.max_block_size).count()
                     if n_mega:
@@ -671,8 +650,8 @@ class Pipeline:
 
         Scope — only what removal alone needs lives here: the removed
         files' raw triples -> affected norms; a norm with no surviving
-        mention DIES (leaves the mention dictionary and the
-        signature/band store, so future probes cannot link to ghosts);
+        mention DIES (leaves the mention dictionary and the band store,
+        so future probes cannot link to ghosts);
         edges with a dead endpoint die. From there the delta takes the
         path ingest takes: the touched-component CC (_touched_cc — the
         components holding a dead norm can SPLIT, and edge segments a
@@ -706,9 +685,9 @@ class Pipeline:
         ``source_path``, the source table is re-registered to it — so a
         later run without a source cannot re-extract them.
 
-        Fails up front (StageError, nothing written) on a warehouse whose
-        link store predates the prefix-partitioned layout. Caches and
-        checkpoints live in one session.Scope, freed on return.
+        A link store of the older prefix-partitioned layout is migrated
+        first (_migrate_link_store). Caches and checkpoints live in one
+        session.Scope, freed on return.
 
         Returns {"removed_files": n, "dead_norms": n,
         "touched_components": n, "changed_mappings": n, "rows": {...},
@@ -717,7 +696,7 @@ class Pipeline:
             io = self.io
             cfg = self.cfg
             keys = self._LINK_KEYS
-            missing = [t for t in ("extract_done", "link_signatures",
+            missing = [t for t in ("extract_done", "link_bands",
                                    "entity_ids")
                        if not io.exists(t)]
             if missing:
@@ -727,16 +706,7 @@ class Pipeline:
                     "JobConfig(durable_link_state=True) or run(incremental="
                     "True) — one-shot builds skip those commits by design"
                 )
-            # the link-store compactions below partition by the probe-key
-            # prefix; an older unpartitioned store would fail them AFTER
-            # labels and mentions were rewritten — refuse before any write
-            stale = [f"{t} lacks {c}" for t, c in (("link_signatures", "_np"),
-                                                   ("link_bands", "_bp"))
-                     if io.exists(t) and c not in io.read(t).columns]
-            if stale:
-                raise StageError(
-                    f"retract() needs the prefix-partitioned link store "
-                    f"({'; '.join(stale)}); rebuild it with run(force=True)")
+            self._migrate_link_store()
             if source_df is None:
                 if source_path is None:
                     raise ValueError("retract() needs source_df or source_path")
@@ -795,15 +765,11 @@ class Pipeline:
             io.write(labels_out, "labels", meta={
                 **meta, "edge_segments": io.segments("edges")})
 
-            # the four link-state rewrites are independent (each compact's
+            # the three link-state rewrites are independent (each compact's
             # plan reads only its OWN table + the checkpointed dead set) —
             # overlap them (guide §2.6)
-            link_rewrites = [
+            self._overlap([
                 lambda: io.compact("mentions", mentions_out, meta=meta),
-                lambda: io.compact(
-                    "link_signatures",
-                    io.read("link_signatures").join(B(dead), "norm", "left_anti"),
-                    meta=meta, partition_by=["_np"]),
                 lambda: io.compact(
                     "edges",
                     io.read("edges")
@@ -812,13 +778,11 @@ class Pipeline:
                     .join(B(dead.withColumnRenamed("norm", "norm_b")),
                           "norm_b", "left_anti"),
                     meta=meta),
-            ]
-            if io.exists("link_bands"):
-                link_rewrites.append(lambda: io.compact(
+                lambda: io.compact(
                     "link_bands",
                     io.read("link_bands").join(B(dead), "norm", "left_anti"),
-                    meta=meta, partition_by=["_bp"]))
-            self._overlap(link_rewrites)
+                    meta=meta),
+            ])
 
             with self._stage("materialize") as mat:
                 mat.update(self._materialize(
@@ -849,8 +813,7 @@ class Pipeline:
             return stats
 
     # ---- incremental linking (O(new) ingest) --------------------------------
-    _LINK_TABLES = ("mentions", "edges", "labels", "link_signatures",
-                    "link_bands")
+    _LINK_TABLES = ("mentions", "edges", "labels", "link_bands")
 
     def _can_link_incremental(self) -> bool:
         """The probe path needs the committed link state; lang-aware
@@ -868,6 +831,22 @@ class Pipeline:
 
     _LINK_KEYS = ["repo", "path", "commit"]
 
+    def _migrate_link_store(self) -> None:
+        """Rewrite a link store of the older prefix-partitioned layout
+        (``link_bands`` partitioned by ``_bp``, beside a
+        ``link_signatures`` table) as the one unpartitioned
+        ``link_bands``, once, before an ingest or retract() reads it.
+        The dead table is dropped BEFORE the rewrite: a crash between
+        the two leaves ``_bp`` in place, so the next run migrates again
+        — no crash point can leave ``link_signatures`` behind."""
+        io = self.io
+        if io.exists("link_bands") and "_bp" in io.read("link_bands").columns:
+            io.drop("link_signatures")
+            io.write(io.read("link_bands").drop("_bp"), "link_bands",
+                     meta={"stage": "link_store_migrated",
+                           "run_id": self.cfg.run_id})
+            self._log("link_store_migrated")
+
     def _link_incremental(self, pending: DataFrame, n_pending: int) -> dict:
         """Linking stages (B5-B9) at O(pending-batch) cost:
 
@@ -875,14 +854,14 @@ class Pipeline:
             broadcast semi/anti pair (the dictionary is SCANNED, never
             shuffled) and segment-appended;
           * edges — signatures computed for norms ABSENT from the
-            committed store; candidate pairs = new x new band self-join
-            ∪ a band-key equi-join probe of the committed signature
-            store (band keys re-derive in-row from the stored h-columns
-            — no shuffle of the store); the mega-block cap applies to
-            the COMBINED band population, so a band that ever crossed
-            the cap never emits new pairs (pairs emitted while it was
-            small stay — the batch analog of the streaming max_band
-            freeze; refusals are logged);
+            committed band store (link_bands); candidate pairs = new x
+            new band self-join ∪ a band-key equi-join probe of the store
+            (no shuffle of the store), verified against grams recomputed
+            in-row for the store norms the probe touched; the mega-block
+            cap applies to the COMBINED band population, so a band that
+            ever crossed the cap never emits new pairs (pairs emitted
+            while it was small stay — the batch analog of the streaming
+            max_band freeze; refusals are logged);
           * labels — CC re-runs ONLY on components touched by a new edge
             (_touched_cc, the one touched-component CC retract() also
             runs); untouched labels pass through.
@@ -903,11 +882,11 @@ class Pipeline:
           - the mentions step appends its rows at once: they dedup by
             anti-join against the mentions table, so a replay appends
             none twice;
-          - the new-norm set is "pending norms ∉ link_signatures", and
+          - the new-norm set is "pending norms ∉ link_bands", and
             regenerated edges anti-join the edges table before append.
-            The signature and band appends follow the edges append: a
-            crash between them leaves those norms unblocked, and the
-            replay regenerates (and anti-joins away) their pairs;
+            The band append follows the edges append: a crash between
+            them leaves those norms unblocked, and the replay
+            regenerates (and anti-joins away) their pairs;
           - the labels commit manifest records WHICH edge segments it
             reflects — a crash between the edges append and the labels
             write leaves an unreflected segment that the next run — an
@@ -945,31 +924,22 @@ class Pipeline:
             rec.update(new_rows=n_new_mentions, pending_files=n_pending)
 
         with self._stage("edges", skipped=False, incremental=True) as rec:
-            store_sig = io.read("link_signatures")
+            store = io.read("link_bands")
             # the store is the source of truth for "already blocked": norms
-            # of pending files absent from it (replay-safe on retry). The
-            # store tables are prefix-PARTITIONED (see the edges stage):
-            # collecting the batch's distinct prefixes (bounded — <= 256
-            # norm prefixes, <= bands*16 band prefixes) lets every store
-            # read below prune to the partitions the batch can touch, so
-            # probe scan bytes track the batch, not the corpus (round-5
-            # verdict #1; plan-asserted in tests/test_streaming_and_plans).
+            # of pending files absent from it (replay-safe on retry), found
+            # by a semi-join against the (small, broadcast) batch — the
+            # store is scanned, never shuffled
             pending_norms = checkpoint(new_m.select("norm").distinct())
-            sig_slice = _prefix_slice(store_sig, "_np", pending_norms,
-                                      blocking.norm_prefix())
-            norm_overlap = sig_slice.select("norm").join(
+            known = store.select("norm").join(
                 B(pending_norms), "norm", "left_semi").distinct()
-            new_norm_rows = pending_norms.join(
-                B(norm_overlap), "norm", "left_anti")
             new_sig = blocking.minhash_signature_df(
-                new_norm_rows, cfg.minhash_hashes, cfg.extractor_seed,
+                pending_norms.join(B(known), "norm", "left_anti"),
+                cfg.minhash_hashes, cfg.extractor_seed,
                 cfg.shingle_size).transform(checkpoint)
             new_blocks = blocking.band_keys_df(
                 new_sig, cfg.minhash_hashes, cfg.lsh_bands)
-            bands_slice = _prefix_slice(io.read("link_bands"), "_bp",
-                                        new_blocks, blocking.band_prefix())
             new_band_keys = new_blocks.select("band_key").distinct()
-            touched_store = bands_slice.join(
+            touched_store = store.join(
                 B(new_band_keys), "band_key", "left_semi"
             ).select("norm", "band_key")
             combined = (
@@ -990,14 +960,11 @@ class Pipeline:
             touched_ok = touched_store.join(
                 B(ok_bands), "band_key", "left_semi")
             pairs = blocking.probe_pairs(new_blocks_ok, touched_ok)
-            # grams for the verify join: only the store norms that actually
-            # appear in a touched band (batch-proportional) — fetched through
-            # the same prefix-pruned store read, never a full grams scan
-            needed_store = checkpoint(touched_ok.select("norm").distinct())
-            grams_slice = _prefix_slice(store_sig, "_np", needed_store,
-                                        blocking.norm_prefix())
-            sig_grams = grams_slice.select("norm", "grams").join(
-                B(needed_store), "norm", "left_semi"
+            # grams for the verify join: recomputed in-row for the store
+            # norms in a touched band (batch-proportional), with the
+            # expression minhash_signature_df uses for the new norms
+            sig_grams = touched_ok.select("norm").distinct().withColumn(
+                "grams", blocking.gram_array(n=cfg.shingle_size)
             ).unionByName(new_sig.select("norm", "grams"))
             # anti-join against committed edges: a retry after a crash
             # between the edges append and the mat_done advance regenerates
@@ -1007,15 +974,13 @@ class Pipeline:
             ).join(io.read("edges").select("norm_a", "norm_b"),
                    ["norm_a", "norm_b"], "left_anti").transform(checkpoint)
             n_new_edges = io.append(new_edges, "edges", meta=meta)["rows"]
-            # the store appends come after the edges append: a replay
+            # the store append comes after the edges append: a replay
             # after a crash between them still finds these norms
             # unblocked and regenerates their pairs
-            n_new_norms = io.append(
-                new_sig.withColumn("_np", blocking.norm_prefix()),
-                "link_signatures", meta=meta, partition_by=["_np"])["rows"]
-            io.append(new_blocks.withColumn("_bp", blocking.band_prefix()),
-                      "link_bands", meta=meta, partition_by=["_bp"])
-            rec.update(new_rows=n_new_edges, new_norms=n_new_norms)
+            n_bands = io.append(new_blocks, "link_bands", meta=meta)["rows"]
+            rec.update(new_rows=n_new_edges,
+                       new_norms=None if n_bands is None
+                       else n_bands // cfg.lsh_bands)
 
         # a commit's rows are None when unknown: "may have rows"
         labels_changed = n_new_edges != 0 or bool(unreflected)
@@ -1034,9 +999,8 @@ class Pipeline:
                            unreflected_segments=len(unreflected))
         else:
             self._log("labels", skipped=True, incremental=True)
-        for name, pb in (("mentions", None), ("link_signatures", ["_np"]),
-                         ("link_bands", ["_bp"]), ("edges", None)):
-            self._fold(name, partition_by=pb)
+        for name in ("mentions", "link_bands", "edges"):
+            self._fold(name)
         return {"mentions": n_new_mentions != 0,
                 "edges": n_new_edges != 0,
                 "labels": labels_changed}
@@ -1109,7 +1073,7 @@ class Pipeline:
         self._fold("entity_ids", self._latest_ids)
 
     def _fold(self, name: str, content=None, force: bool = False,
-              partition_by: list[str] | None = None, **log) -> None:
+              **log) -> None:
         """Fold ``name``'s append segments into one base snapshot once
         ``COMPACT_AFTER`` accumulate (now, when ``force``). ``content``
         maps the full read to the folded rows (dedup or prune while
@@ -1120,8 +1084,7 @@ class Pipeline:
         if force or n_seg >= self.COMPACT_AFTER:
             self.io.compact(
                 name, content(self.io.read(name)) if content else None,
-                meta={"stage": "ledger_compact", "run_id": self.cfg.run_id},
-                partition_by=partition_by)
+                meta={"stage": "ledger_compact", "run_id": self.cfg.run_id})
             self._log("ledger_compact", table=name, segments=n_seg, **log)
 
     def _run_stage_lazy(self, name, thunk, force=False) -> bool:

@@ -161,14 +161,13 @@ class TableIO:
                 # cluster rows by the partition columns before the
                 # partitioned write (guide §6 / Iceberg's
                 # write.distribution-mode=hash): without this every input
-                # task writes a file into every partition dir it sees —
-                # measured on the prefix-partitioned link store: a small
-                # append from 32 tasks x 256 dirs emitted thousands of
-                # near-empty files and made the ingest SLOWER at higher
-                # parallelism. One shuffle of the written rows, one file
-                # per populated dir (AQE-coalesced) — and a REBALANCE, not
-                # a repartition, so AQE splits a hot partition value
-                # across tasks instead of writing it through one.
+                # task writes a file into every partition dir it sees, so
+                # a partitioned output (triples by pred, aliases and the
+                # source corpus by lang) emits tasks x values near-empty
+                # files. One shuffle of the written rows, one file per
+                # populated dir (AQE-coalesced) — and a REBALANCE, not a
+                # repartition, so AQE splits a hot partition value across
+                # tasks instead of writing it through one.
                 df = df.hint("rebalance", *partition_by)
             w = (df.write.mode("overwrite").option("compression", CODEC)
                  # the commit manifest below is the success marker
@@ -332,8 +331,7 @@ class TableIO:
         return [s for s in self._raw_segments(name) if s not in dead]
 
     def compact(self, name: str, df: DataFrame | None = None,
-                meta: dict | None = None,
-                partition_by: list[str] | None = None) -> dict | None:
+                meta: dict | None = None) -> dict | None:
         """Fold segments into one base snapshot. ``df`` overrides the
         compacted content (callers use this to dedup or prune while
         compacting); default is the full union read. No-op when there is
@@ -348,7 +346,7 @@ class TableIO:
         # the write plan reads the CURRENT base + segments while staging to
         # a tmp dir; the atomic swap happens only after the read finished,
         # and its manifest supersedes (and drops) the folded segments
-        return self.write(df, name, meta=meta, partition_by=partition_by)
+        return self.write(df, name, meta=meta)
 
     # ---- zero-copy registration --------------------------------------------
     def register(self, name: str, path: str) -> dict:

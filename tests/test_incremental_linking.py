@@ -1,6 +1,6 @@
 """Round-5 incremental linking + stable entity ids (verdict asks #1/#2):
 
-  * incremental pipeline ingest (probe the committed signature store,
+  * incremental pipeline ingest (probe the committed band store,
     CC only on touched components) must equal the from-scratch pipeline
     on mentions / edges / labels;
   * entity ids must SURVIVE corpus growth: a component keeps its

@@ -150,16 +150,18 @@ def test_durable_knob_outputs_identical(spark, tmp_path):
         a, b = fast.io.read(t), durable.io.read(t)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
     # the knob's whole point: no link-state commits on the fast path
-    for t in ("link_signatures", "mat_done", "entity_ids"):
+    for t in ("link_bands", "mat_done", "entity_ids"):
         assert durable.io.exists(t), t
         assert not fast.io.exists(t), t
+    assert not durable.io.exists("link_signatures")
     # and a later incremental run on the fast warehouse still works: it
     # falls back to a full relink ONCE (committing the state), then the
     # warehouse is durable
     grown = generate_source_df(spark, SynthConfig(n_files=80), partitions=4)
     fast.run(source_df=grown, incremental=True)
-    for t in ("link_signatures", "mat_done", "entity_ids"):
+    for t in ("link_bands", "mat_done", "entity_ids"):
         assert fast.io.exists(t), t
+    assert not fast.io.exists("link_signatures")
     durable.run(source_df=grown, incremental=True)
     for t, cols in (("mentions", ["surface", "lang", "norm"]),
                     ("edges", ["norm_a", "norm_b"]),

@@ -5,7 +5,10 @@ materialize outputs vs a same-ledger full recompute (stable ids are
 deliberately history-dependent). Covers the hard cases: a component
 SPLIT (dead bridge norm), a surviving singleton that must keep its
 published id against a claiming fragment, dead norms leaving the
-signature store, and crash replay."""
+band store, crash replay, and the migration of an older link-store
+layout."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,9 +72,9 @@ def test_retract_equals_scratch_build(spark, tmp_path):
     for table, cols in _LINK:
         assert _set(pipe.io.read(table), cols) == \
             _set(scratch.io.read(table), cols), f"{table} != scratch"
-    # signature store: dead norms are gone, surviving norms present
-    sig_norms = _set(pipe.io.read("link_signatures"), ["norm"])
-    assert sig_norms == _set(scratch.io.read("link_signatures"), ["norm"])
+    # band store: dead norms are gone, surviving norms keep their bands
+    assert _set(pipe.io.read("link_bands"), ["norm", "band_key"]) == \
+        _set(scratch.io.read("link_bands"), ["norm", "band_key"])
 
     got = _snapshot(pipe)
     want = _full_recompute_snapshot(spark, pipe, tmp_path, "ret")
@@ -202,33 +205,65 @@ def test_retract_crash_after_labels_replays(spark, tmp_path, table,
         assert got[t] == want[t], f"{t} after replay"
 
 
-def test_retract_refuses_old_link_store_layout_before_writing(spark,
-                                                              tmp_path):
-    """A link_signatures store without the ``_np`` prefix column (the
-    pre-partitioning layout) fails retract() up front with StageError —
-    before this check the overlapped store compaction failed on the
-    missing column AFTER mentions and edges were already rewritten.
-    Every table's commit manifest must be untouched."""
-    import os
+def _to_prefix_layout(pipe):
+    """Rewrite a durable warehouse's link store in the older layout: a
+    ``link_bands`` base and one segment partitioned by a band-key prefix
+    (``_bp``), beside a ``link_signatures`` table partitioned by an
+    md5(norm) prefix (``_np``)."""
+    from gondar_spark.operators import blocking
 
-    from gondar_spark.errors import StageError
+    cfg, io = pipe.cfg, pipe.io
+    rows = io.read("link_bands").collect()
+    bands = pipe.spark.createDataFrame(rows, "norm string, band_key string") \
+        .withColumn("_bp", F.concat(F.lit("p"),
+                                    F.substring("band_key", 1, 3)))
+    first = F.col("band_key").startswith("0:")
+    io.write(bands.filter(first), "link_bands", partition_by=["_bp"])
+    io.append(bands.filter(~first), "link_bands", partition_by=["_bp"])
+    io.write(blocking.minhash_signature_df(
+        io.read("mentions"), cfg.minhash_hashes, cfg.extractor_seed,
+        cfg.shingle_size).withColumn("_np", F.concat(F.lit("p"), F.substring(
+            F.md5(F.col("norm").cast("binary")), 1, 2))),
+        "link_signatures", partition_by=["_np"])
+    assert "_bp" in io.read("link_bands").columns
+    assert io.segments("link_bands")
 
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="o1",
-                    durable_link_state=True)
-    pipe = Pipeline(spark, cfg)
-    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 6])))
-    pipe.io.write(pipe.io.read("link_signatures").drop("_np"),
-                  "link_signatures")
 
-    def manifests():
-        return {t: pipe.io.commit_meta(t)
-                for t in sorted(os.listdir(cfg.warehouse))
-                if pipe.io.exists(t)}
+def test_prefix_layout_store_migrates_on_ingest_and_retract(
+        spark, tmp_path, durable_base):
+    """A warehouse whose link store has the older prefix-partitioned
+    layout is migrated once, by the first ingest or retract() that reads
+    it: both then equal a scratch warehouse, and neither ``_bp`` nor
+    ``link_signatures`` remains."""
+    base = _win_files([0, 2, 4, 6, 12, 14])
+    for op, files in (("ingest", [0, 2, 4, 6, 8, 12, 14]),
+                      ("retract", [0, 2, 6, 12, 14])):
+        cfg = JobConfig(warehouse=durable_base(base, tmp_path / op),
+                        run_id=op, durable_link_state=True)
+        pipe = Pipeline(spark, cfg)
+        _to_prefix_layout(pipe)
+        corpus = _src(spark, _win_files(files))
+        if op == "ingest":
+            pipe.run(source_df=corpus, incremental=True)
+        else:
+            assert pipe.retract(source_df=corpus)["dead_norms"] >= 1
 
-    before = manifests()
-    with pytest.raises(StageError, match="_np"):
-        pipe.retract(source_df=_src(spark, _win_files([0, 2, 6])))
-    assert manifests() == before
+        assert "link_store_migrated" in [r["stage"] for r in pipe.lineage()]
+        assert pipe.io.read("link_bands").columns == ["norm", "band_key"]
+        assert not pipe.io.exists("link_signatures")
+        assert not os.path.exists(os.path.join(cfg.warehouse,
+                                               "link_signatures"))
+        scratch = Pipeline(spark, JobConfig(
+            warehouse=durable_base(_win_files(files),
+                                   tmp_path / f"{op}_scratch"),
+            run_id="scratch", durable_link_state=True))
+        for t, cols in [*_LINK, ("link_bands", ["norm", "band_key"])]:
+            assert _set(pipe.io.read(t), cols) == \
+                _set(scratch.io.read(t), cols), f"{op}: {t} != scratch"
+        got = _snapshot(pipe)
+        want = _full_recompute_snapshot(spark, pipe, tmp_path, op)
+        for t, _cols in _OUT:
+            assert got[t] == want[t], f"{op}: {t} != full recompute"
 
 
 def test_retract_after_ingest_crash_keeps_unreflected_edges(spark, tmp_path):

@@ -426,40 +426,37 @@ def test_stateful_minhash_pairs_state_ttl_drops_idle_bands(spark, tmp_path):
     assert (1, 9) not in drive(1, "t_mh_ttl_on")
 
 
-def test_link_store_prefix_pruning(spark, tmp_path):
-    """Round-5 verdict #1: the committed link state is PARTITIONED by a
-    probe-key prefix, and a prefix-filtered read prunes at the partition
-    level (PartitionFilters in the scan, like the IVF cell index) — the
-    layout the incremental probe's isin(prefixes) reads rely on."""
-    from pyspark.sql import functions as F
-
+def test_link_store_membership(spark, tmp_path):
+    """The committed link store is one unpartitioned table, link_bands
+    (norm, band_key): one row per (norm, band) for every mention norm.
+    A small ingest appends ONE link_bands segment of a few part files —
+    never a file per probe-key prefix directory."""
     from gondar_spark.config import JobConfig
-    from gondar_spark.operators import blocking
     from gondar_spark.pipeline import Pipeline
-    from gondar_spark.plans.inspect import explain_str
-    from gondar_spark.synth import SynthConfig, generate_source_df
+    from tests.test_incremental_linking import _src, _win
 
-    pipe = Pipeline(spark, JobConfig(
-        warehouse=str(tmp_path / "wh"), run_id="p",
-        durable_link_state=True))
-    pipe.run(source_df=generate_source_df(
-        spark, SynthConfig(n_files=40), partitions=4))
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="p",
+                    durable_link_state=True)
+    pipe = Pipeline(spark, cfg)
+    src = generate_source_df(spark, SynthConfig(n_files=40), partitions=4)
+    pipe.run(source_df=src)
+
+    def norms(table):
+        return {r[0] for r in
+                pipe.io.read(table).select("norm").distinct().collect()}
 
     bands = pipe.io.read("link_bands")
-    some_bp = bands.select("_bp").distinct().limit(1).collect()[0][0]
-    pruned = bands.filter(F.col("_bp").isin([some_bp]))
-    plan = explain_str(pruned)
-    assert "PartitionFilters" in plan and "_bp" in plan, plan
+    assert bands.columns == ["norm", "band_key"]
+    assert bands.count() == len(norms("mentions")) * cfg.lsh_bands
+    assert norms("link_bands") == norms("mentions")
 
-    sig = pipe.io.read("link_signatures")
-    some_np = sig.select("_np").distinct().limit(1).collect()[0][0]
-    plan2 = explain_str(sig.filter(F.col("_np").isin([some_np])))
-    assert "PartitionFilters" in plan2 and "_np" in plan2, plan2
-
-    # membership matches the signature table: one band row per
-    # (norm, band) with keys derived from the same expressions
-    n_norms = sig.select("norm").distinct().count()
-    assert bands.count() == n_norms * 8
-    assert bands.select("norm").distinct().count() == n_norms
-    # prefix values carry the 'p' type-inference guard
-    assert some_bp.startswith("p") and some_np.startswith("p")
+    pipe.run(source_df=src.unionByName(_src(
+        spark, [("w0.py", _win(0)), ("w2.py", _win(2))])), incremental=True)
+    segs = pipe.io.segments("link_bands")
+    assert len(segs) == 1, segs
+    parts = [f for _r, _d, fs in os.walk(os.path.join(cfg.warehouse, segs[0]))
+             for f in fs if f.endswith(".parquet")]
+    assert 1 <= len(parts) <= 4, parts
+    assert pipe.io.read("link_bands").count() == \
+        len(norms("mentions")) * cfg.lsh_bands
+    assert norms("link_bands") == norms("mentions")

@@ -22,6 +22,9 @@ force-relink wall at 10x — the O(corpus) cost the probe path avoids.
 Each run's Spark job count (``*_jobs``: the jobs the application's
 status store gained during the run) is reported beside its wall: at
 small batches the job count, not the data, sets the ingest latency.
+So are the files and bytes it wrote (``*_files_written``,
+``*_bytes_written``: files new or rewritten under the warehouse between
+a walk before and one after the run; deletions are not counted).
 
 Usage: python tools/bench_linking.py [base_files] [batch_files]
 Prints one JSON line.
@@ -100,13 +103,26 @@ def _job_ids(spark) -> set:
     return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
 
-def _timed(spark, fn):
-    """(result, wall s, Spark jobs) of one call."""
-    before = _job_ids(spark)
+def _listing(root: str) -> dict:
+    """{path: (size, mtime_ns)} of every file under ``root``."""
+    out = {}
+    for r, _d, fs in os.walk(root):
+        for f in fs:
+            st = os.stat(os.path.join(r, f))
+            out[os.path.join(r, f)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _timed(spark, wh: str, fn):
+    """(result, wall s, Spark jobs, files written, bytes written) of one
+    call; the written files are those new or rewritten under ``wh``."""
+    before, files = _job_ids(spark), _listing(wh)
     t0 = time.time()
     out = fn()
     wall = round(time.time() - t0, 3)
-    return out, wall, len(_job_ids(spark) - before)
+    written = [v[0] for p, v in _listing(wh).items() if files.get(p) != v]
+    return (out, wall, len(_job_ids(spark) - before), len(written),
+            sum(written))
 
 
 def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
@@ -118,8 +134,8 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
                 .write.mode("append").parquet(corpus)
         pipe = Pipeline(spark, JobConfig(warehouse=wh, run_id="seed",
                                      durable_link_state=True))
-        _, seed_wall, seed_jobs = _timed(
-            spark, lambda: pipe.run(source_path=corpus))
+        _, seed_wall, seed_jobs, seed_files, seed_bytes = _timed(
+            spark, wh, lambda: pipe.run(source_path=corpus))
 
         # the ingest batch: new families (new x new pairs) + third
         # members of a slice of OLD families (store-probe hits that
@@ -132,8 +148,9 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
             .write.mode("append").parquet(corpus)
         pipe.cfg = JobConfig(warehouse=wh, run_id="ingest",
                              durable_link_state=True)
-        _, ingest_wall, ingest_jobs = _timed(
-            spark, lambda: pipe.run(source_path=corpus, incremental=True))
+        _, ingest_wall, ingest_jobs, ingest_files, ingest_bytes = _timed(
+            spark, wh,
+            lambda: pipe.run(source_path=corpus, incremental=True))
         link_wall = _link_wall(pipe, "ingest")
         # must read lineage while cfg.run_id is still "ingest" —
         # lineage() reads the current run's file
@@ -148,8 +165,9 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
         # a re-run with nothing new: its cost is all job overhead
         pipe.cfg = JobConfig(warehouse=wh, run_id="noop",
                              durable_link_state=True)
-        _, noop_wall, noop_jobs = _timed(
-            spark, lambda: pipe.run(source_path=corpus, incremental=True))
+        _, noop_wall, noop_jobs, noop_files, noop_bytes = _timed(
+            spark, wh,
+            lambda: pipe.run(source_path=corpus, incremental=True))
 
         # retraction: take the ingest batch back out — wall must track
         # the batch (dead norms + touched components), not the corpus
@@ -158,14 +176,14 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
             & ~F.col("path").startswith("src/probe"))
         pipe.cfg = JobConfig(warehouse=wh, run_id="retract",
                              durable_link_state=True)
-        rstats, retract_wall, retract_jobs = _timed(
-            spark, lambda: pipe.retract(source_df=remaining))
+        rstats, retract_wall, retract_jobs, retract_files, retract_bytes = \
+            _timed(spark, wh, lambda: pipe.retract(source_df=remaining))
 
         # the avoided cost: full relink of the grown corpus
         pipe.cfg = JobConfig(warehouse=wh, run_id="relink",
                              durable_link_state=True)
-        _, full_wall, full_jobs = _timed(
-            spark, lambda: pipe.run(source_path=corpus, force=True))
+        _, full_wall, full_jobs, full_files, full_bytes = _timed(
+            spark, wh, lambda: pipe.run(source_path=corpus, force=True))
         full_link_wall = round(sum(
             r["wall_s"] for r in pipe.lineage()
             if r.get("run_id") == "relink" and "wall_s" in r
@@ -181,20 +199,30 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
                                    if touched else 0),
             "seed_run_wall_s": seed_wall,
             "seed_run_jobs": seed_jobs,
+            "seed_run_files_written": seed_files,
+            "seed_run_bytes_written": seed_bytes,
             "ingest_run_wall_s": ingest_wall,
             "ingest_run_jobs": ingest_jobs,
+            "ingest_run_files_written": ingest_files,
+            "ingest_run_bytes_written": ingest_bytes,
             "noop_run_wall_s": noop_wall,
             "noop_run_jobs": noop_jobs,
+            "noop_run_files_written": noop_files,
+            "noop_run_bytes_written": noop_bytes,
             "link_wall_s": link_wall,
             "link_stage_walls_s": link_stage_walls,
             "materialize_wall_s": mat_wall,
             "retract_wall_s": retract_wall,
             "retract_jobs": retract_jobs,
+            "retract_files_written": retract_files,
+            "retract_bytes_written": retract_bytes,
             "retract_dead_norms": rstats["dead_norms"],
             "full_relink_link_wall_s": full_link_wall,
             "full_relink_materialize_wall_s": full_mat_wall,
             "full_relink_run_wall_s": full_wall,
             "full_relink_run_jobs": full_jobs,
+            "full_relink_run_files_written": full_files,
+            "full_relink_run_bytes_written": full_bytes,
         }
     finally:
         shutil.rmtree(wh, ignore_errors=True)
