@@ -1599,12 +1599,10 @@ def q_retract_kg_triples(spark, sf_dir):
     if key not in _CENTROID_CACHE:
         wh = tempfile.mkdtemp(prefix="gondar_retract_kg_")
         src = spark.read.parquet(_KG_FIXTURE)
-        # durable_link_state: retraction consumes the committed link
-        # state (one-shot builds skip those commits by default — the
-        # round-6 durability knob)
-        pipe = Pipeline(spark, JobConfig(warehouse=wh, run_id="full",
-                                         durable_link_state=True))
-        pipe.run(source_df=src)
+        # the durable lifecycle: retraction consumes the committed link
+        # state, which one-shot builds skip
+        pipe = Pipeline(spark, JobConfig(warehouse=wh, run_id="full"))
+        pipe.run(source_df=src, incremental=True)
         remaining = src.filter(
             ~F.substring(F.md5("path"), 1, 1).isin("0", "1", "2"))
         pipe.retract(source_df=remaining)

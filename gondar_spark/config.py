@@ -42,26 +42,14 @@ class JobConfig:
                                           # golden alias clusters span
                                           # languages by design)
     cc_max_iter: int = 20                 # fixpoint cap for connected components
-    durable_link_state: bool = False      # commit the incremental-ingest state
-                                          # (link_bands / mat_done /
-                                          # entity_ids) on one-shot
-                                          # full runs too. Default off: a
-                                          # one-shot build should not pay for
-                                          # durability it never uses (round-5
-                                          # verdict #4 — the commits cost
-                                          # ~25% of the full-run wall).
-                                          # run(incremental=True), streaming
-                                          # ingest and any warehouse that
-                                          # already has the ledgers force it
-                                          # on regardless — outputs are
-                                          # identical either way.
     # --- scale / skew (SURVEY.md B10) ---
-    broadcast_row_limit: int = 1_000_000  # incremental/retract batch-scope
+    broadcast_row_limit: int = 1_000_000  # link-step/retract batch-scope
                                           # frames are broadcast-HINTED only
                                           # below this row count; above it
                                           # the hints are dropped (AQE picks
-                                          # the join strategy) so a bulk
-                                          # backlog or mass takedown degrades
+                                          # the join strategy) so a large
+                                          # build, a bulk backlog or a mass
+                                          # takedown degrades
                                           # to shuffle joins instead of
                                           # OOMing the driver (round-5
                                           # verdict #2). Logged either way.

@@ -4,22 +4,25 @@
          -> triples / entities / aliases (materialize)
 
 Every stage ends in committed tables (TableIO.write is atomic), so a
-killed run resumes idempotently: a build skips the stages whose tables
-are committed and re-reads them. Builds and incremental ingests share
-the first two stages, one path each. The source stage commits the
-corpus (a copy, or a zero-copy registration) and hashes the committed
-table: a build hashes every file, an ingest only the files
-``source_hashes`` lacks. The extraction stage extracts its todo: the
-whole corpus on a build, the corpus minus the ``extract_done`` ledger on
-an ingest. A build writes its tables; an ingest appends one segment to
-each. From there an ingest's link and materialize steps share one
-pending set, ``extract_done`` minus the ``mat_done`` ledger, which
-advances last: the link step is replay-idempotent (every append
-anti-joins what is committed), so a crash at any commit replays the
-batch without duplicating rows. Builds, ingests and retract() produce
-the outputs one way, materialize.full_outputs under the stable
-``entity_ids`` mapping (_materialize). A warehouse written before this
-layout may hold a ``link_done`` table; nothing reads it any more.
+killed run resumes idempotently. Builds, resumed builds, ingests,
+``force`` rebuilds and lang-aware runs take the same four steps, one
+path each. The source stage commits the corpus (a copy, or a zero-copy
+registration) and hashes the committed table: a build hashes every
+file, an ingest only the files ``source_hashes`` lacks. The extraction
+stage extracts its todo: the whole corpus on a build, the corpus minus
+the ``extract_done`` ledger on an ingest. A build writes its tables; an
+ingest appends one segment to each. The link step (_link) and the
+materialize step (_materialize_step) share one pending set,
+``extract_done`` minus the ``mat_done`` ledger, which advances last. A
+build is an ingest into empty link state: a link table that is absent
+reads as empty, and an append to it is its base write. The link step
+is replay-idempotent (every append anti-joins what is committed), so a
+crash at any commit replays the batch without duplicating rows. Builds,
+ingests and retract() produce the outputs one way,
+materialize.full_outputs under the stable ``entity_ids`` mapping
+(_materialize), or under the identity while no ledger exists. A
+warehouse written before this layout may hold a ``link_done`` table;
+nothing reads it any more.
 
 Lineage: one JSONL record per stage per run (rows, bytes, wall_s,
 skipped flag), timed by one context manager (Pipeline._stage), plus the
@@ -36,6 +39,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .config import JobConfig
 from .errors import StageError
@@ -104,17 +108,6 @@ class Pipeline:
         yield rec
         self._log(name, **rec, wall_s=round(time.time() - t0, 3))
 
-    def _run_stage(self, name: str, tables: dict[str, "DataFrame"],
-                   force: bool = False) -> bool:
-        """Write each output table unless all are already committed.
-        Returns True if the stage executed, False if skipped (resume)."""
-        if not force and all(self.io.exists(t) for t in tables):
-            self._log(name, skipped=True)
-            return False
-        with self._stage(name, skipped=False) as rec:
-            rec.update(self._sizes(self._write_tables(name, tables)))
-        return True
-
     def _write_tables(self, stage: str, tables: dict[str, DataFrame],
                       partition_by: dict[str, list[str]] | None = None,
                       parallel: bool = False, append: bool = False) -> dict:
@@ -159,7 +152,7 @@ class Pipeline:
             incremental: bool = False,
             source_path: str | None = None,
             prune_removed: bool = False) -> dict:
-        """Run all stages with resume; returns {stage: executed}.
+        """Run the four steps with resume; returns {stage: executed}.
 
         ``source_df`` is written to ``cfg.source_table`` as a copy;
         ``source_path`` is the ZERO-COPY mode: the corpus already at rest
@@ -167,29 +160,34 @@ class Pipeline:
         copy is a job in itself. Without either, the committed source
         table is re-read.
 
-        ``incremental=True`` makes the run an INGEST once the warehouse
-        holds ``triples_raw`` (B12 — resume by anti-join on (repo, path,
-        commit)). Every stage still has one path; what changes is its
-        todo and its commit:
-          * source: only the files ``source_hashes`` lacks are hashed,
-            and appended as one segment;
-          * extraction: only the corpus minus the ``extract_done``
-            ledger is extracted, and ``triples_raw``, ``quarantine``,
+        ``incremental=True`` declares the durable lifecycle: the run
+        commits the ingest state (``link_bands``, ``entity_ids``,
+        ``mat_done``) that later ingests and retract() read, and once the
+        warehouse holds ``triples_raw`` the run is an INGEST (B12 —
+        resume by anti-join on (repo, path, commit)). A warehouse that
+        holds the entity ledger stays durable whatever the caller says:
+        its published ids must keep being honored. A one-shot build
+        skips those commits; its outputs are the same. Every step has
+        one path; what changes is its todo and its commit:
+          * source: an ingest hashes only the files ``source_hashes``
+            lacks, and appends them as one segment;
+          * extraction: an ingest extracts only the corpus minus the
+            ``extract_done`` ledger, and ``triples_raw``, ``quarantine``,
             ``extract_metrics`` and the ledger each get one appended
             segment — O(batch) bytes, never a rewrite of the history. The
             ledger records every file whose extraction completed (zero-
             triple and quarantined files too), so an unchanged corpus
             re-runs with zero extractor calls;
-          * linking (_link_incremental) and materialize
-            (_materialize_incremental) take one pending set, the
-            extracted files the ``mat_done`` ledger lacks.
+          * linking (_link) and materialize (_materialize_step) take one
+            pending set (_pending), the extracted files the ``mat_done``
+            ledger lacks — every file on a build, so a build is an ingest
+            into empty link state, and a replay of a killed run extracts
+            nothing new and still finishes its batch.
         Segment tables fold into one snapshot every ``COMPACT_AFTER``
-        runs. A warehouse without the link state, or with lang-aware
-        blocking, recomputes the later stages in full while extracted
-        files wait for materialize (``extract_done`` ∖ ``mat_done``
-        non-empty, or no ``mat_done``) — a replay of a killed run
-        extracts nothing new and still finishes its batch.
-        ``force=True`` rebuilds every stage.
+        runs. ``force=True`` reruns every step, and relinks FRESH: the
+        committed link state and ``mat_done`` are ignored and rewritten
+        as snapshots (the entity ledger is honored). A lang-aware run
+        with pending files relinks fresh too (see _link).
 
         APPEND-ONLY ASSUMPTION: an ingest treats the corpus as
         append-only — files REMOVED or REWRITTEN-in-place upstream keep
@@ -207,21 +205,12 @@ class Pipeline:
         if source_path is not None and source_df is not None:
             raise ValueError("pass source_df OR source_path, not both")
         with Scope():
-            cfg = self.cfg
             executed: dict[str, bool] = {}
-            # link-state durability (round-5 verdict #4): one-shot builds skip
-            # committing the incremental-ingest state (outputs identical, the
-            # commits cost ~25% of the run). Incremental callers DECLARE the
-            # lifecycle via incremental=True, and a warehouse that already has
-            # the entity ledger stays durable forever (its published ids must
-            # keep being honored and advanced).
-            durable = (cfg.durable_link_state or incremental
-                       or self.io.exists("entity_ids"))
-
+            durable = incremental or self.io.exists("entity_ids")
             if source_df is not None or source_path is not None:
                 executed["source"] = self._source_stage(
                     source_df, source_path, force, incremental)
-            src = self.io.read(cfg.source_table)
+            src = self.io.read(self.cfg.source_table)
             ingest = (incremental and not force
                       and self.io.exists("triples_raw"))
             executed["triples_raw"] = self._extract_stage(
@@ -229,92 +218,17 @@ class Pipeline:
             if ingest:
                 self._compact_ledgers(src if prune_removed else None,
                                       force=prune_removed)
-                self._migrate_link_store()
-                if self._can_link_incremental():
-                    pending = checkpoint(self._pending().distinct())
-                    n_pending = pending.count()
-                    link_exec = self._link_incremental(pending, n_pending)
-                    executed.update(link_exec)
-                    executed["materialize"] = self._materialize_incremental(
-                        pending, n_pending, link_exec["labels"])
-                    return executed
-                # the full-stage fallback recomputes the later stages
-                # while extracted files wait for materialize — this run's
-                # or a killed run's: a replay extracts nothing new
-                force = (not self.io.exists("mat_done")
-                         or not self._pending().isEmpty())
-            triples_raw = self.io.read("triples_raw")
-
-            # stage 3: distinct normalized mentions (B5)
-            executed["mentions"] = self._run_stage_lazy(
-                "mentions",
-                lambda: {"mentions": normalize.normalize_mentions(triples_raw)},
-                force=force,
-            )
-            mentions = self.io.read("mentions")
-
-            # stage 4: blocking + candidate pairs + scoring (B6/B7/B8). A
-            # durable build ALSO commits the band membership (link_bands):
-            # it is the LSH index incremental runs probe by band key, and
-            # its norms are the "already blocked" set, so a later ingest
-            # never re-blocks the corpus.
-            edges_probe = ("edges", "link_bands") if durable else ("edges",)
-            if force or not all(self.io.exists(t) for t in edges_probe):
-                with Scope():
-                    # sig feeds band keys + both sides of the scoring join —
-                    # persist so the md5 minhash computation runs once; the
-                    # stage's scope releases it (and sizes) once the stage
-                    # write (the one action that consumes them) completes.
-                    sig = persist(blocking.minhash_signature_df(
-                        mentions, cfg.minhash_hashes, cfg.extractor_seed,
-                        cfg.shingle_size))
-                    blocks = blocking.band_keys_df(
-                        sig, cfg.minhash_hashes, cfg.lsh_bands,
-                        lang_df=mentions if cfg.link_lang_aware else None)
-                    # mega-block cap accounting (B7/B10): the cap bounds the s^2/2
-                    # pair blow-up of degenerate blocks and must never fire
-                    # silently. Band sizes are computed ONCE (persisted — one row
-                    # per band key) and feed both the cap filter and the logged
-                    # drop count; the count itself runs AFTER the stage write,
-                    # off the populated cache (a separate eager count here cost
-                    # an extra job whose only purpose was logging).
-                    sizes = persist(
-                        blocks.groupBy("band_key").agg(F.count("*").alias("_bs")))
-                    blocks_ok = blocks.join(
-                        sizes.filter(F.col("_bs") <= cfg.max_block_size)
-                        .select("band_key"),
-                        "band_key",
-                        "left_semi",
-                    )
-                    pairs = blocking.candidate_pairs(blocks_ok, max_block_size=None)
-                    tables = {"edges": score_pairs(pairs, sig, cfg.link_threshold)}
-                    if durable:
-                        # one-shot builds skip the store write (durability
-                        # knob above)
-                        tables["link_bands"] = blocks
-                    executed["edges"] = self._run_stage(
-                        "edges", tables, force=True)
-                    n_mega = sizes.filter(
-                        F.col("_bs") > cfg.max_block_size).count()
-                    if n_mega:
-                        self._log("edges_megablock_cap", n_blocks_dropped=n_mega,
-                                  max_block_size=cfg.max_block_size)
-            else:
-                self._log("edges", skipped=True)
-                executed["edges"] = False
-            edges = self.io.read("edges")
-
-            # stage 5: connected components (B9)
-            executed["labels"] = self._run_stage_lazy(
-                "labels",
-                lambda: {"labels": cc.connected_components(edges, cfg.cc_max_iter)},
-                force=force,
-            )
-            labels = self.io.read("labels")
-
-            # stage 6: materialize triples + dictionaries (B11/B13)
-            executed["materialize"] = self._materialize_stage(
-                mentions, labels, triples_raw, force=force, durable=durable)
+            # lang-aware band keys change when an EXISTING norm gains a
+            # language, which a probe of the new norms cannot see: a
+            # lang-aware run with pending files relinks fresh
+            fresh = force or (self.cfg.link_lang_aware
+                              and self._pending(False, durable)[1] > 0)
+            pending, n_pending = self._pending(fresh, durable)
+            step = dict(n_pending=n_pending, fresh=fresh, durable=durable,
+                        ingest=ingest)
+            executed.update(self._link(pending, **step))
+            executed["materialize"] = self._materialize_step(
+                pending, executed["labels"], **step)
             return executed
 
     def _source_stage(self, source_df: DataFrame | None,
@@ -450,8 +364,6 @@ class Pipeline:
     def _latest_ids(ledger: DataFrame) -> DataFrame:
         """The latest row per norm of the segment-appended entity_ids
         ledger: each append carries a monotone _seq, highest wins."""
-        from pyspark.sql.window import Window
-
         w = Window.partitionBy("norm").orderBy(F.col("_seq").desc())
         return (ledger.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn"))
@@ -461,29 +373,37 @@ class Pipeline:
         return self._latest_ids(self.io.read("entity_ids")).select(
             "norm", "entity_id")
 
-    def _materialize_stage(self, mentions: DataFrame, labels: DataFrame,
-                           triples_raw: DataFrame, force: bool,
-                           durable: bool = True) -> bool:
-        """The build's materialize, with STABLE entity ids: CC labels are
-        component minima and churn when a lower-id member arrives; the
-        entity_ids ledger maps every mention norm to its FIRST-ASSIGNED
-        id, so corpus growth never relabels a published entity. With a
-        ledger this is _materialize. Without one the stable ids are the
-        identity (every component keeps its CC label, every singleton
-        its norm), so ``labels`` IS the mapping: the outputs equal plain
-        min-label canonicalization, one-shot and durable builds alike,
-        and a durable build commits that identity as the ledger's base
-        (``_seq`` 0), overlapped with the outputs. A durable build then
-        records every extracted file in ``mat_done``, last."""
+    def _materialize_step(self, pending: DataFrame | None,
+                          labels_changed: bool, n_pending: int, fresh: bool,
+                          durable: bool, ingest: bool) -> bool:
+        """The materialize step of every run, with STABLE entity ids: CC
+        labels are component minima and churn when a lower-id member
+        arrives; the entity_ids ledger maps every mention norm to its
+        FIRST-ASSIGNED id, so corpus growth never relabels a published
+        entity. It runs when the pending files (shared with the link
+        step) are non-empty, this run changed ``labels`` or an output is
+        missing — never on a caller's "something changed" flag, which a
+        replay after a crash past the extraction ledger would read as
+        nothing to do. With a ledger it is _materialize. Without one the
+        stable ids are the identity (every component keeps its CC label,
+        every singleton its norm), so ``labels`` IS the mapping: the
+        outputs equal plain min-label canonicalization, one-shot and
+        durable builds alike, and a durable run commits that identity as
+        the ledger's base (``_seq`` 0), overlapped with the outputs. A
+        durable run then records the pending files in ``mat_done``,
+        LAST: one appended segment, or a snapshot of every extracted
+        file on a fresh relink."""
         io = self.io
-        probe = _STAGE_TABLES["materialize"]
-        has_ledger = io.exists("entity_ids")
-        if (not force and all(io.exists(t) for t in probe)
-                and (has_ledger or not durable)):
-            self._log("materialize", skipped=True)
-            return False
-        with self._stage("materialize", skipped=False) as rec:
-            if has_ledger:
+        done = all(io.exists(t) for t in _STAGE_TABLES["materialize"])
+        with self._stage("materialize", incremental=ingest,
+                         skipped=done and not (n_pending or labels_changed)
+                         ) as rec:
+            if rec["skipped"]:
+                return False
+            mentions, labels, triples_raw = (
+                io.read(t) for t in ("mentions", "labels", "triples_raw"))
+            rec["pending_files"] = n_pending
+            if io.exists("entity_ids"):
                 rec.update(self._materialize(mentions, labels, triples_raw))
             else:
                 ids = labels.select(
@@ -496,9 +416,12 @@ class Pipeline:
                 rec.update(self._sizes(self._write_tables(
                     "materialize", tables, _MAT_PARTITIONS, parallel=True)))
             if durable:
-                io.write(io.read("extract_done").distinct(), "mat_done",
-                         meta={"stage": "materialize",
-                               "run_id": self.cfg.run_id})
+                files = (io.read("extract_done").distinct() if pending is None
+                         else pending)
+                (io.write if fresh else io.append)(
+                    files, "mat_done",
+                    meta={"stage": "materialize", "run_id": self.cfg.run_id})
+                self._fold("mat_done", DataFrame.distinct)
         return True
 
     @staticmethod
@@ -533,31 +456,6 @@ class Pipeline:
                   .join(labels.select("norm"), "norm", "left_semi")
                   .select("entity_id", "absorbed_id").distinct())
         return mapping, moved.select("norm", "entity_id"), merges
-
-    def _materialize_incremental(self, pending: DataFrame, n_pending: int,
-                                 labels_changed: bool) -> bool:
-        """Ingest's materialize: _materialize when the ``pending`` files
-        (extract_done ∖ mat_done, shared with the link step) are
-        non-empty or this run changed ``labels``, then ``pending`` is
-        appended to ``mat_done`` as one segment, LAST. The trigger is
-        never a caller's "something changed" flag, which a replay after
-        a crash past the extraction ledger would read as nothing to do.
-        A warehouse without outputs or ledger takes the build's path
-        (_materialize_stage)."""
-        io = self.io
-        state = (io.read(t) for t in ("mentions", "labels", "triples_raw"))
-        if not all(io.exists(t) for t in (*_STAGE_TABLES["materialize"],
-                                          "entity_ids")):
-            return self._materialize_stage(*state, force=True)
-        with self._stage("materialize", incremental=True,
-                         skipped=not (n_pending or labels_changed)) as rec:
-            if rec["skipped"]:
-                return False
-            rec.update(pending_files=n_pending, **self._materialize(*state))
-            io.append(pending, "mat_done",
-                      meta={"stage": "materialize", "run_id": self.cfg.run_id})
-            self._fold("mat_done", DataFrame.distinct)
-        return True
 
     def _materialize(self, mentions: DataFrame, labels: DataFrame,
                      triples_raw: DataFrame) -> dict:
@@ -622,12 +520,12 @@ class Pipeline:
 
     # ---- broadcast-size gate (round-5 verdict #2) ---------------------------
     def _batch_broadcast(self, n_rows: int):
-        """Returns the broadcast HINT to apply to batch-scope frames of an
-        incremental/retract run: F.broadcast below the configured row
-        limit, identity above it (the hints are dropped and AQE picks the
-        join strategy from real sizes — a bulk backlog or mass takedown
-        degrades to shuffle joins instead of OOMing). The decision is
-        logged, never silent."""
+        """Returns the broadcast HINT to apply to batch-scope frames of a
+        link step or a retract() run: F.broadcast below the configured
+        row limit, identity above it (the hints are dropped and AQE picks
+        the join strategy from real sizes — a large build, a bulk backlog
+        or a mass takedown degrades to shuffle joins instead of OOMing).
+        The decision is logged, never silent."""
         if n_rows > self.cfg.broadcast_row_limit:
             self._log("broadcast_gate", batch_rows=n_rows,
                       limit=self.cfg.broadcast_row_limit,
@@ -703,8 +601,8 @@ class Pipeline:
                 raise StageError(
                     "retract() needs the committed link state "
                     f"(missing: {missing}); build the warehouse with "
-                    "JobConfig(durable_link_state=True) or run(incremental="
-                    "True) — one-shot builds skip those commits by design"
+                    "run(incremental=True) — one-shot builds skip those "
+                    "commits by design"
                 )
             self._migrate_link_store()
             if source_df is None:
@@ -758,9 +656,7 @@ class Pipeline:
             n_dead = dead.count()
 
             # ---- labels: one touched-component CC, written first ----------
-            labels_out, n_touched = self._touched_cc(
-                self.spark.createDataFrame([], "norm_a string, norm_b string"),
-                removed=B(dead))
+            labels_out, n_touched = self._touched_cc(removed=B(dead))
             meta = {"stage": "retract", "run_id": cfg.run_id}
             io.write(labels_out, "labels", meta={
                 **meta, "edge_segments": io.segments("edges")})
@@ -806,36 +702,21 @@ class Pipeline:
             else:
                 per_file.append(cfg.source_table)
             prune(per_file)
-            self._run_stage("triples_raw", {"triples_raw": remaining_raw},
-                            force=True)
+            with self._stage("triples_raw", skipped=False) as raw_rec:
+                raw_rec.update(self._sizes(self._write_tables(
+                    "triples_raw", {"triples_raw": remaining_raw})))
             prune(("extract_done", "mat_done"), DataFrame.distinct)
             rec.update(stats)
             return stats
 
-    # ---- incremental linking (O(new) ingest) --------------------------------
-    _LINK_TABLES = ("mentions", "edges", "labels", "link_bands")
-
-    def _can_link_incremental(self) -> bool:
-        """The probe path needs the committed link state; lang-aware
-        blocking changes band keys when an EXISTING norm gains a new
-        language, which the new-norms-only probe cannot see — that mode
-        falls back to the full recompute (logged)."""
-        if self.cfg.link_lang_aware:
-            self._log("link_incremental_fallback", reason="link_lang_aware")
-            return False
-        if not all(self.io.exists(t) for t in self._LINK_TABLES):
-            self._log("link_incremental_fallback",
-                      reason="missing link state (pre-round-5 warehouse)")
-            return False
-        return True
-
+    # ---- linking (O(pending) for every run) --------------------------------
     _LINK_KEYS = ["repo", "path", "commit"]
 
     def _migrate_link_store(self) -> None:
         """Rewrite a link store of the older prefix-partitioned layout
         (``link_bands`` partitioned by ``_bp``, beside a
         ``link_signatures`` table) as the one unpartitioned
-        ``link_bands``, once, before an ingest or retract() reads it.
+        ``link_bands``, once, before a link step or retract() reads it.
         The dead table is dropped BEFORE the rewrite: a crash between
         the two leaves ``_bp`` in place, so the next run migrates again
         — no crash point can leave ``link_signatures`` behind."""
@@ -847,38 +728,48 @@ class Pipeline:
                            "run_id": self.cfg.run_id})
             self._log("link_store_migrated")
 
-    def _link_incremental(self, pending: DataFrame, n_pending: int) -> dict:
-        """Linking stages (B5-B9) at O(pending-batch) cost:
+    def _link(self, pending: DataFrame | None, n_pending: int, fresh: bool,
+              durable: bool, ingest: bool) -> dict:
+        """The link step (B5-B9) of every run, at O(pending) cost:
 
-          * mentions — new (surface, lang, norm) rows found via a
-            broadcast semi/anti pair (the dictionary is SCANNED, never
-            shuffled) and segment-appended;
-          * edges — signatures computed for norms ABSENT from the
-            committed band store (link_bands); candidate pairs = new x
-            new band self-join ∪ a band-key equi-join probe of the store
-            (no shuffle of the store), verified against grams recomputed
+          * mentions — the pending files' (surface, lang, norm) rows the
+            dictionary lacks, found via a broadcast semi/anti pair (the
+            dictionary is SCANNED, never shuffled), appended;
+          * edges — signatures computed for the pending norms ABSENT
+            from the band store (link_bands); candidate pairs = their
+            band self-join ∪ a band-key equi-join probe of the store (no
+            shuffle of the store), verified against grams recomputed
             in-row for the store norms the probe touched; the mega-block
             cap applies to the COMBINED band population, so a band that
             ever crossed the cap never emits new pairs (pairs emitted
             while it was small stay — the batch analog of the streaming
-            max_band freeze; refusals are logged);
-          * labels — CC re-runs ONLY on components touched by a new edge
-            (_touched_cc, the one touched-component CC retract() also
-            runs); untouched labels pass through.
+            max_band freeze; drops are logged as
+            ``edges_megablock_cap``). A durable run appends the new
+            norms' bands to the store after the edges;
+          * labels — CC over every committed edge while no labels are
+            committed (``labels``), else only on the components a new
+            edge touches (``labels_incremental``, _touched_cc, the one
+            touched-component CC retract() also runs); untouched labels
+            pass through.
 
-        Materialize follows as _materialize_incremental -> _materialize,
-        the materialize builds and retract() run too.
+        A link table that is absent reads as empty, and an append to it
+        is its base write, so on a build every pending norm is new and
+        the probe joins fold away: a build is an ingest into empty link
+        state. A FRESH relink (``force``, or lang-aware band keys) reads
+        every link table as empty and writes snapshots instead of
+        appending. The materialize step (_materialize_step) follows.
 
         CRASH-SAFE RESUME: extraction's ledger advances before linking,
         so a crash between the two must not skip these files forever
         (extraction's anti-join sees nothing left to do). ``pending`` is
-        extract_done ∖ mat_done, the one pending set of the link and
-        materialize steps, computed once by the caller; ``mat_done``
-        advances after the materialize, so a crash anywhere before it
-        replays the batch through both steps. Every sub-step re-derives
-        its own todo from committed state and commits it as one append,
-        whose row count comes back from the commit (an empty append
-        commits nothing), so a replay re-links without duplicating:
+        extract_done ∖ mat_done (None: every extracted file), the one
+        pending set of the link and materialize steps, computed once by
+        the caller; ``mat_done`` advances after the materialize, so a
+        crash anywhere before it replays the batch through both steps.
+        Every sub-step re-derives its own todo from committed state and
+        commits it as one append, whose row count comes back from the
+        commit (an empty append commits nothing), so a replay re-links
+        without duplicating:
           - the mentions step appends its rows at once: they dedup by
             anti-join against the mentions table, so a replay appends
             none twice;
@@ -893,127 +784,159 @@ class Pipeline:
             ingest or a retract() — folds into its touched-component CC
             input.
 
-        Equal to the full recompute except for cap-freeze semantics
-        (pinned by tests against Pipeline-on-union)."""
-        cfg = self.cfg
-        io = self.io
-        keys = self._LINK_KEYS
-        meta = {"stage": "link_incremental", "run_id": cfg.run_id}
-        B = self._batch_broadcast(n_pending)
+        Equal to the fresh relink except for cap-freeze semantics
+        (pinned by tests against Pipeline-on-union). Returns
+        {sub-step: committed}."""
+        cfg, io, keys = self.cfg, self.io, self._LINK_KEYS
+        self._migrate_link_store()
+        full_cc = fresh or not io.exists("labels")
         unreflected = self._unreflected_edge_segments()
-        if n_pending == 0 and not unreflected:
+        if n_pending == 0 and not unreflected and not full_cc:
             for stage in ("mentions", "edges", "labels"):
-                self._log(stage, skipped=True, incremental=True)
+                self._log(stage, skipped=True, incremental=ingest)
             return {"mentions": False, "edges": False, "labels": False}
+        B = self._batch_broadcast(n_pending)
 
-        with self._stage("mentions", skipped=False, incremental=True) as rec:
-            old_mentions = io.read("mentions")
-            pending_triples = io.read("triples_raw").join(
-                B(pending), keys, "left_semi")
-            new_m = normalize.normalize_mentions(pending_triples)
-            # which of the batch's mention rows are genuinely new: semi-join
-            # the dictionary against the (small, broadcast) batch, then
-            # anti-join the batch against that overlap — both joins broadcast
-            # the small side, so the dictionary is scanned, not shuffled
-            overlap = old_mentions.join(
-                B(new_m), ["surface", "lang", "norm"], "left_semi")
-            new_rows = new_m.join(
-                B(overlap), ["surface", "lang", "norm"], "left_anti")
-            n_new_mentions = io.append(new_rows, "mentions",
-                                       meta=meta)["rows"]
-            rec.update(new_rows=n_new_mentions, pending_files=n_pending)
+        def state(name: str) -> DataFrame:
+            """The committed link table; empty (a plan Spark's optimizer
+            folds joins of away) when absent or on a fresh relink."""
+            if io.exists(name) and not fresh:
+                return io.read(name)
+            return self.spark.createDataFrame(
+                [], _LINK_SCHEMAS[name]).where(F.lit(False))
 
-        with self._stage("edges", skipped=False, incremental=True) as rec:
-            store = io.read("link_bands")
-            # the store is the source of truth for "already blocked": norms
-            # of pending files absent from it (replay-safe on retry), found
-            # by a semi-join against the (small, broadcast) batch — the
-            # store is scanned, never shuffled
-            pending_norms = checkpoint(new_m.select("norm").distinct())
-            known = store.select("norm").join(
-                B(pending_norms), "norm", "left_semi").distinct()
-            new_sig = blocking.minhash_signature_df(
-                pending_norms.join(B(known), "norm", "left_anti"),
-                cfg.minhash_hashes, cfg.extractor_seed,
-                cfg.shingle_size).transform(checkpoint)
-            new_blocks = blocking.band_keys_df(
-                new_sig, cfg.minhash_hashes, cfg.lsh_bands)
-            new_band_keys = new_blocks.select("band_key").distinct()
-            touched_store = store.join(
-                B(new_band_keys), "band_key", "left_semi"
-            ).select("norm", "band_key")
-            combined = (
-                touched_store.select("band_key")
-                .union(new_blocks.select("band_key"))
-                .groupBy("band_key").agg(F.count("*").alias("_bs"))
-                .transform(checkpoint)
-            )
-            n_refused = combined.filter(
-                F.col("_bs") > cfg.max_block_size).count()
-            if n_refused:
-                self._log("edges_megablock_cap", n_blocks_refused=n_refused,
-                          max_block_size=cfg.max_block_size, incremental=True)
-            ok_bands = combined.filter(
-                F.col("_bs") <= cfg.max_block_size).select("band_key")
-            new_blocks_ok = new_blocks.join(
-                B(ok_bands), "band_key", "left_semi")
-            touched_ok = touched_store.join(
-                B(ok_bands), "band_key", "left_semi")
-            pairs = blocking.probe_pairs(new_blocks_ok, touched_ok)
-            # grams for the verify join: recomputed in-row for the store
-            # norms in a touched band (batch-proportional), with the
-            # expression minhash_signature_df uses for the new norms
-            sig_grams = touched_ok.select("norm").distinct().withColumn(
-                "grams", blocking.gram_array(n=cfg.shingle_size)
-            ).unionByName(new_sig.select("norm", "grams"))
-            # anti-join against committed edges: a retry after a crash
-            # between the edges append and the mat_done advance regenerates
-            # the same pairs — they must not stack
-            new_edges = score_pairs(
-                pairs, sig_grams, cfg.link_threshold
-            ).join(io.read("edges").select("norm_a", "norm_b"),
-                   ["norm_a", "norm_b"], "left_anti").transform(checkpoint)
-            n_new_edges = io.append(new_edges, "edges", meta=meta)["rows"]
-            # the store append comes after the edges append: a replay
-            # after a crash between them still finds these norms
-            # unblocked and regenerates their pairs
-            n_bands = io.append(new_blocks, "link_bands", meta=meta)["rows"]
-            rec.update(new_rows=n_new_edges,
-                       new_norms=None if n_bands is None
-                       else n_bands // cfg.lsh_bands)
+        # the step's caches and the CC's checkpoints are freed once the
+        # labels commit, before materialize reads the committed tables
+        with Scope():
+            with self._stage("mentions", skipped=False,
+                             incremental=ingest) as rec:
+                raw = io.read("triples_raw")
+                if pending is not None:
+                    raw = raw.join(B(pending), keys, "left_semi")
+                new_m = normalize.normalize_mentions(raw)
+                # which of the batch's mention rows are genuinely new:
+                # semi-join the dictionary against the (small, broadcast)
+                # batch, then anti-join the batch against that overlap
+                cols = ["surface", "lang", "norm"]
+                overlap = state("mentions").join(B(new_m), cols,
+                                                 "left_semi")
+                m_commits = self._write_tables("mentions", {
+                    "mentions": new_m.join(B(overlap), cols, "left_anti")},
+                    append=not fresh)
+                rec.update(pending_files=n_pending,
+                           **self._sizes(m_commits))
 
-        # a commit's rows are None when unknown: "may have rows"
-        labels_changed = n_new_edges != 0 or bool(unreflected)
-        if labels_changed:
-            with self._stage("labels_incremental") as rec:
-                labels_new, n_touched = self._touched_cc(
-                    new_edges.select("norm_a", "norm_b"))
-                # the labels write reads the old snapshot while staging to
-                # a tmp dir; the atomic swap happens only after the read
-                # ran. Its manifest records which edge segments it reflects.
-                io.write(labels_new, "labels", meta={
-                    "stage": "labels", "run_id": cfg.run_id,
-                    "edge_segments": io.segments("edges"),
-                })
-                rec.update(touched_components=n_touched,
-                           unreflected_segments=len(unreflected))
-        else:
-            self._log("labels", skipped=True, incremental=True)
+            with self._stage("edges", skipped=False,
+                             incremental=ingest) as rec:
+                store = state("link_bands")
+                # the store is the source of truth for "already blocked":
+                # pending norms absent from it (replay-safe on retry),
+                # found by a semi-join against the (small, broadcast)
+                # batch — the store is scanned, never shuffled
+                known = store.select("norm").join(
+                    B(new_m.select("norm")), "norm", "left_semi").distinct()
+                sig = persist(blocking.minhash_signature_df(
+                    new_m.join(B(known), "norm", "left_anti"),
+                    cfg.minhash_hashes, cfg.extractor_seed,
+                    cfg.shingle_size))
+                blocks = blocking.band_keys_df(
+                    sig, cfg.minhash_hashes, cfg.lsh_bands,
+                    lang_df=new_m if cfg.link_lang_aware else None)
+                touched = store.join(
+                    B(blocks.select("band_key").distinct()), "band_key",
+                    "left_semi").select("norm", "band_key")
+                # every member of a band the batch touches, new or stored,
+                # with the band's size: one shuffle by band key, kept by
+                # the checkpoint, serves the cap (it bounds the s^2/2 pair
+                # blow-up of degenerate bands and never fires silently),
+                # the logged drop count and the band joins below
+                bands = checkpoint(
+                    blocks.withColumn("_new", F.lit(True))
+                    .unionByName(touched.withColumn("_new", F.lit(False)))
+                    .withColumn("_bs", F.count("*").over(
+                        Window.partitionBy("band_key"))))
+                n_mega = bands.filter(F.col("_bs") > cfg.max_block_size) \
+                    .select("band_key").distinct().count()
+                if n_mega:
+                    self._log("edges_megablock_cap",
+                              n_blocks_dropped=n_mega,
+                              max_block_size=cfg.max_block_size)
+                ok = bands.filter(F.col("_bs") <= cfg.max_block_size)
+                old_ok = ok.filter(~F.col("_new")).select("norm", "band_key")
+                pairs = blocking.probe_pairs(
+                    ok.filter("_new").select("norm", "band_key"), old_ok)
+                # grams for the verify join: recomputed in-row for the
+                # store norms in a touched band (batch-proportional), with
+                # the expression minhash_signature_df uses for the new
+                grams = old_ok.select("norm").distinct().withColumn(
+                    "grams", blocking.gram_array(n=cfg.shingle_size)
+                ).unionByName(sig.select("norm", "grams"))
+                # anti-join against committed edges: a retry after a
+                # crash before the mat_done advance regenerates the same
+                # pairs — they must not stack
+                new_edges = score_pairs(
+                    pairs, grams, cfg.link_threshold
+                ).join(state("edges").select("norm_a", "norm_b"),
+                       ["norm_a", "norm_b"], "left_anti")
+                # edges first: a replay after a crash before the band
+                # commit still finds these norms unblocked
+                tables = {"edges": new_edges}
+                if durable:
+                    tables["link_bands"] = bands.filter("_new").select(
+                        "norm", "band_key")
+                e_commits = self._write_tables("edges", tables,
+                                               append=not fresh)
+                rec.update(self._sizes(e_commits))
+
+            labels_changed = full_cc or bool(unreflected) or (
+                "edges" in e_commits and e_commits["edges"]["rows"] != 0)
+            if labels_changed:
+                with self._stage("labels" if full_cc
+                                 else "labels_incremental") as rec:
+                    if full_cc:
+                        labels = cc.connected_components(
+                            io.read("edges"), cfg.cc_max_iter)
+                    else:
+                        # the rows this run appended, read back
+                        appended = e_commits.get("edges")
+                        labels, rec["touched_components"] = \
+                            self._touched_cc(
+                                appended and io.read(appended["table"]))
+                        rec["unreflected_segments"] = len(unreflected)
+                    # the write reads the old snapshot while staging to a
+                    # tmp dir; the atomic swap happens only after the read
+                    # ran. Its manifest records which edge segments it
+                    # reflects.
+                    rec.update(self._sizes({"labels": io.write(
+                        labels, "labels", meta={
+                            "stage": "labels", "run_id": cfg.run_id,
+                            "edge_segments": io.segments("edges")})}))
+            else:
+                self._log("labels", skipped=True, incremental=ingest)
         for name in ("mentions", "link_bands", "edges"):
             self._fold(name)
-        return {"mentions": n_new_mentions != 0,
-                "edges": n_new_edges != 0,
-                "labels": labels_changed}
+        return {"mentions": "mentions" in m_commits,
+                "edges": "edges" in e_commits, "labels": labels_changed}
 
-    def _pending(self) -> DataFrame:
-        """Extracted files the link and materialize steps have not
-        finished: extract_done ∖ mat_done (all of extract_done without
-        the ledger)."""
-        done = self.io.read("extract_done")
-        if not self.io.exists("mat_done"):
-            return done
-        return done.join(self.io.read("mat_done"), self._LINK_KEYS,
-                         "left_anti")
+    def _pending(self, fresh: bool, durable: bool):
+        """The files the link and materialize steps have not finished,
+        and their count: extract_done ∖ mat_done, checkpointed once.
+        Without the ledger, or on a fresh relink, every extracted file
+        (None), counted from the ledger's commits. A one-shot warehouse
+        keeps no ledger: its committed outputs mark its one
+        materialize, so a one-shot run finds nothing pending there — a
+        durable run finds every file and upgrades the warehouse."""
+        io = self.io
+        if not fresh and io.exists("mat_done"):
+            pending = checkpoint(io.read("extract_done").join(
+                io.read("mat_done"), self._LINK_KEYS, "left_anti")
+                .distinct())
+            return pending, pending.count()
+        if not (fresh or durable) and all(
+                io.exists(t) for t in _STAGE_TABLES["materialize"]):
+            return None, 0
+        n = io.rows("extract_done")
+        return None, n if n is not None else io.read("extract_done").count()
 
     def _unreflected_edge_segments(self) -> list[str]:
         """Edge segments appended after the last labels write (crash
@@ -1026,7 +949,7 @@ class Pipeline:
         reflected = set(meta.get("meta", {}).get("edge_segments", []))
         return [s for s in self.io.segments("edges") if s not in reflected]
 
-    def _touched_cc(self, new_edges: DataFrame,
+    def _touched_cc(self, new_edges: DataFrame | None = None,
                     removed: DataFrame | None = None):
         """Labels after a signed edge delta, for ingest and retract()
         alike: cc.incremental_components over the committed labels and
@@ -1034,13 +957,16 @@ class Pipeline:
         the unreflected edge segments (a crash between an edges append
         and its labels write) and the ``removed`` norms touch. Returns
         (labels plan, touched component count)."""
-        for seg in self._unreflected_edge_segments():
-            new_edges = new_edges.unionByName(
-                self.io.read(seg).select("norm_a", "norm_b"))
-        # the committed edges already hold this ingest's append: the
-        # duplicates with new_edges dedup inside incremental CC
+        delta = [self.io.read(s) for s in self._unreflected_edge_segments()]
+        # the committed edges already hold this ingest's append, which
+        # is also an unreflected segment: duplicates dedup inside
+        # incremental CC
+        delta += [new_edges] if new_edges is not None else []
         labels, touched = cc.incremental_components(
-            self.io.read("labels"), self.io.read("edges"), new_edges,
+            self.io.read("labels"), self.io.read("edges"),
+            functools.reduce(DataFrame.unionByName, (
+                e.select("norm_a", "norm_b") for e in delta),
+                self.spark.createDataFrame([], _LINK_SCHEMAS["edges"])),
             self.cfg.cc_max_iter, removed=removed)
         return labels, touched.count()
 
@@ -1087,21 +1013,14 @@ class Pipeline:
                 meta={"stage": "ledger_compact", "run_id": self.cfg.run_id})
             self._log("ledger_compact", table=name, segments=n_seg, **log)
 
-    def _run_stage_lazy(self, name, thunk, force=False) -> bool:
-        """Resume-aware stage: only build the DataFrames if not committed
-        (building them is cheap/lazy, but skipping keeps lineage honest).
-        Caches the thunk makes live in the caller's session.Scope."""
-        if not force and all(self.io.exists(t) for t in _STAGE_TABLES[name]):
-            self._log(name, skipped=True)
-            return False
-        return self._run_stage(name, thunk(), force=True)
-
 
 _STAGE_TABLES = {
     "triples_raw": ("triples_raw", "quarantine", "extract_metrics",
                     "extract_done"),
-    "mentions": ("mentions",),
-    "labels": ("labels",),
     "materialize": ("triples", "entities", "aliases"),
 }
+# the columns the link step reads of each link table (_link: state)
+_LINK_SCHEMAS = {"mentions": "surface string, lang string, norm string",
+                 "edges": "norm_a string, norm_b string",
+                 "link_bands": "norm string, band_key string"}
 _MAT_PARTITIONS = {"triples": ["pred"], "aliases": ["lang"]}

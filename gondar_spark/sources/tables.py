@@ -335,7 +335,8 @@ class TableIO:
         """Fold segments into one base snapshot. ``df`` overrides the
         compacted content (callers use this to dedup or prune while
         compacting); default is the full union read. No-op when there is
-        nothing to fold (unless ``df`` is given — an explicit rewrite)."""
+        nothing to fold (unless ``df`` is given — an explicit rewrite).
+        The snapshot keeps the partitioning its base manifest records."""
         if self.use_iceberg:
             return None
         segs = self.segments(name)
@@ -346,7 +347,17 @@ class TableIO:
         # the write plan reads the CURRENT base + segments while staging to
         # a tmp dir; the atomic swap happens only after the read finished,
         # and its manifest supersedes (and drops) the folded segments
-        return self.write(df, name, meta=meta)
+        return self.write(df, name, meta=meta, partition_by=(
+            self.commit_meta(name) or {}).get("partition_by") or None)
+
+    def rows(self, name: str) -> int | None:
+        """The rows committed to ``name``, base and segments, as their
+        commits recorded them (no scan); None when one does not know."""
+        if self.use_iceberg:
+            return self._iceberg_row_count(name)
+        counts = [(self.commit_meta(t) or {}).get("rows")
+                  for t in (name, *self.segments(name))]
+        return None if None in counts else sum(counts)
 
     # ---- zero-copy registration --------------------------------------------
     def register(self, name: str, path: str) -> dict:

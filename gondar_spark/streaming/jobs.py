@@ -79,7 +79,7 @@ def run_streaming_kg_ingest(
     """Streaming KG CONSTRUCTION: a file-source stream drained through
     foreachBatch, where every micro-batch is ONE O(new) incremental
     pipeline ingest — extraction's anti-join ledger skips seen files,
-    linking probes the committed signature/band store, CC re-labels only
+    linking probes the committed band store, CC re-labels only
     touched components, and materialize rewrites the outputs under the
     stable entity ids. The batch pipeline IS the stream processor: no
     second code path, so streaming results are definitionally the batch

@@ -36,26 +36,22 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                         "manifest, no rewrite) instead of --synthetic / a "
                         "pre-loaded --source-table")
     p.add_argument("--incremental", action="store_true",
-                   help="file-level resume: extract only files absent "
-                        "from the committed extract_done ledger")
+                   help="the durable lifecycle: commit the ingest state "
+                        "a later --incremental or --retract reads (on an "
+                        "empty warehouse too); on a built one, extract "
+                        "only files absent from the extract_done ledger")
     p.add_argument("--prune-removed", action="store_true",
                    help="with --incremental: drop ledger/hash rows for "
                         "files the registered corpus no longer contains "
                         "(default assumes an append-only corpus)")
-    p.add_argument("--durable-link-state", action="store_true",
-                   help="commit the incremental-ingest state (link "
-                        "signatures / ledgers / entity-id ledger) on a "
-                        "one-shot full run too — required before a later "
-                        "--incremental or --retract against this "
-                        "warehouse; skipped by default (the commits cost "
-                        "~25%% of a one-shot build)")
     p.add_argument("--retract", action="store_true",
                    help="incremental retraction (takedown): remove files "
                         "present in the warehouse ledgers but ABSENT from "
                         "the given corpus from every table at O(affected) "
                         "cost (dead norms leave the dictionary and "
-                        "signature store; components split id-stably; "
-                        "materialize splices affected groups only)")
+                        "band store; components split id-stably; the "
+                        "outputs are rewritten under the stable ids). The "
+                        "warehouse must have been built with --incremental")
     p.add_argument("--clean-corpus", default=None, metavar="PARQUET",
                    help="run the corpus-cleaning chain (quality gate -> "
                         "exact dedup -> LSH+CC near-dup removal) over a "
@@ -121,7 +117,6 @@ def main(argv: list[str] | None = None) -> int:
         chunk_lines=args.chunk_lines,
         link_threshold=args.link_threshold,
         shuffle_partitions=args.shuffle_partitions,
-        durable_link_state=args.durable_link_state,
     )
     batch_extractor = None
     if args.extractor == "llm-mock":

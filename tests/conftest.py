@@ -38,9 +38,8 @@ def durable_base(spark, tmp_path_factory):
         key = tuple(files)
         if key not in built:
             wh = str(tmp_path_factory.mktemp("durable_base") / "wh")
-            Pipeline(spark, JobConfig(warehouse=wh, run_id="base",
-                                      durable_link_state=True)).run(
-                source_df=_src(spark, list(files)))
+            Pipeline(spark, JobConfig(warehouse=wh, run_id="base")).run(
+                source_df=_src(spark, list(files)), incremental=True)
             built[key] = wh
         shutil.copytree(built[key], str(dest))
         return str(dest)

@@ -24,17 +24,16 @@ def test_oversized_batch_drops_hints_and_matches(spark, tmp_path):
     # oversized, every hint is dropped
     gated = Pipeline(spark, JobConfig(
         warehouse=str(tmp_path / "wh_gated"), run_id="g",
-        durable_link_state=True, broadcast_row_limit=0))
-    gated.run(source_df=base)
+        broadcast_row_limit=0))
+    gated.run(source_df=base, incremental=True)
     gated.run(source_df=grown, incremental=True)
     gate_recs = [r for r in gated.lineage() if r["stage"] == "broadcast_gate"]
     assert gate_recs and gate_recs[0]["hints_dropped"]
 
     # hinted pipeline: default limit, hints kept
     hinted = Pipeline(spark, JobConfig(
-        warehouse=str(tmp_path / "wh_hinted"), run_id="h",
-        durable_link_state=True))
-    hinted.run(source_df=base)
+        warehouse=str(tmp_path / "wh_hinted"), run_id="h"))
+    hinted.run(source_df=base, incremental=True)
     hinted.run(source_df=grown, incremental=True)
     assert not any(r["stage"] == "broadcast_gate" for r in hinted.lineage())
 

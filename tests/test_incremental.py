@@ -207,8 +207,7 @@ def test_extract_crash_before_ledger_replays(spark, tmp_path, table,
 
     ab = [("a.py", _win(2)), ("b.py", _win(4))]
     pipe = Pipeline(spark, JobConfig(
-        warehouse=durable_base(ab, tmp_path / "wh"), run_id="x1",
-        durable_link_state=True))
+        warehouse=durable_base(ab, tmp_path / "wh"), run_id="x1"))
     run1 = _src(spark, ab)
     both = run1.unionByName(_src(spark, [("c.py", _win(0)),
                                          ("d.py", _win(6))]))
@@ -268,8 +267,8 @@ def test_noop_ingest_job_count(spark, tmp_path):
     generate_source_df(spark, SynthConfig(n_files=40, seed=5),
                        partitions=2).write.parquet(corpus)
     pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh"),
-                                     run_id="n1", durable_link_state=True))
-    pipe.run(source_path=corpus)
+                                     run_id="n1"))
+    pipe.run(source_path=corpus, incremental=True)
     generate_source_df(spark, SynthConfig(n_files=50, seed=5),
                        partitions=2).filter(
         ~F.col("path").isin(*[r[0] for r in spark.read.parquet(corpus)
@@ -282,3 +281,30 @@ def test_noop_ingest_job_count(spark, tmp_path):
     n_jobs = len(_job_ids(spark) - before)
     assert not any(executed.values()), executed
     assert n_jobs <= NOOP_INGEST_JOBS, n_jobs
+
+
+# Spark jobs a build of the same corpus may run, one-shot and durable
+# (run(incremental=True) on an empty warehouse), as measured on this
+# test's corpus before builds took the ingest's link step.
+ONE_SHOT_BUILD_JOBS = 41
+DURABLE_BUILD_JOBS = 48
+
+
+@pytest.mark.parametrize("incremental,limit", [
+    (False, ONE_SHOT_BUILD_JOBS), (True, DURABLE_BUILD_JOBS)])
+def test_build_job_count(spark, tmp_path, incremental, limit):
+    """A build is an ingest into empty link state: the empty link tables
+    fold out of its plans, so it runs no more Spark jobs than the
+    build-only stages it replaced (status-store count around the run)."""
+    from tests.test_table_commits import _job_ids
+
+    corpus = str(tmp_path / "corpus")
+    generate_source_df(spark, SynthConfig(n_files=40, seed=5),
+                       partitions=2).write.parquet(corpus)
+    pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh"),
+                                     run_id="b1"))
+    before = _job_ids(spark)
+    pipe.run(source_path=corpus, incremental=incremental)
+    n_jobs = len(_job_ids(spark) - before)
+    assert n_jobs <= limit, n_jobs
+    assert pipe.io.exists("mat_done") == incremental

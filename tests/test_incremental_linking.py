@@ -54,13 +54,12 @@ def test_incremental_link_equals_full_recompute(spark, tmp_path):
     takes the O(new) probe path — asserted via lineage) must produce the
     same mentions / edges / labels as a from-scratch pipeline on the
     grown corpus."""
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="inc",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="inc")
     pipe = Pipeline(spark, cfg)
     base = generate_source_df(
         spark, SynthConfig(n_files=80), partitions=4).unionByName(
         _src(spark, [("w2.py", _win(2)), ("w4.py", _win(4))]))
-    pipe.run(source_df=base)
+    pipe.run(source_df=base, incremental=True)
 
     # growth adds new files AND new linkable norms: w0 extends the
     # committed w2-w4 component (a store-probe hit), w8/w10 form a brand
@@ -104,8 +103,7 @@ def test_entity_id_stability_across_merge(spark, tmp_path):
     the published entity id must not: the surviving id is the minimum
     FIRST-ASSIGNED id, the merge is recorded, and untouched entities
     keep their ids."""
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="merge",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="merge")
     pipe = Pipeline(spark, cfg)
 
     # run 1: comp1 = {w2, w4} (id E1 = w2-norm), comp2 = {w10, w12}
@@ -114,7 +112,7 @@ def test_entity_id_stability_across_merge(spark, tmp_path):
         ("a.py", _win(2)), ("b.py", _win(4)),
         ("c.py", _win(10)), ("d.py", _win(12)),
     ])
-    pipe.run(source_df=run1)
+    pipe.run(source_df=run1, incremental=True)
     e1 = _win(2)   # "cdefghijklmn"
     e2 = _win(10)  # "klmnopqrstuv"
     ids1 = {r["entity_id"] for r in pipe.io.read("entities").collect()}
@@ -162,7 +160,7 @@ def test_entity_id_stable_under_smaller_newcomer(spark, tmp_path,
     component. min-label CC would relabel; the ledger must not."""
     ab = [("a.py", _win(2)), ("b.py", _win(4))]
     cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
-                    run_id="newmin", durable_link_state=True)
+                    run_id="newmin")
     pipe = Pipeline(spark, cfg)
     run1 = _src(spark, ab)
     e1 = _win(2)
@@ -239,7 +237,7 @@ def test_link_crash_before_ledger_advance_replays(spark, tmp_path,
     state."""
     ab = [("a.py", _win(2)), ("b.py", _win(4))]
     cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
-                    run_id="r1", durable_link_state=True)
+                    run_id="r1")
     pipe = Pipeline(spark, cfg)
     run1 = _src(spark, ab)
 
@@ -268,7 +266,7 @@ def test_link_crash_before_labels_folds_unreflected_edges(spark, tmp_path,
     fold it into its incremental CC input (unreflected-segment path)."""
     ab = [("a.py", _win(2)), ("b.py", _win(4))]
     cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
-                    run_id="r1", durable_link_state=True)
+                    run_id="r1")
     pipe = Pipeline(spark, cfg)
     run1 = _src(spark, ab)
 
@@ -371,3 +369,71 @@ def test_ivf_append_drift_gate(spark, tmp_path):
     with open(f"{two}/drift.jsonl") as f:
         recs = [json.loads(line) for line in f]
     assert recs[-1]["retrain"]
+
+
+def test_force_after_ingest_equals_scratch_build(spark, tmp_path,
+                                                 durable_base):
+    """run(force=True) on a durable warehouse after an ingest relinks
+    FRESH: its link tables are snapshots equal to a scratch durable
+    build of the grown corpus, and its outputs equal a full materialize
+    under the same entity ledger."""
+    from tests.test_incremental_materialize import (
+        _full_recompute_snapshot,
+        _snapshot,
+    )
+
+    ab = [("a.py", _win(2)), ("b.py", _win(4))]
+    pipe = Pipeline(spark, JobConfig(
+        warehouse=durable_base(ab, tmp_path / "wh"), run_id="f1"))
+    both = _src(spark, ab + [("c.py", _win(0)), ("d.py", _win(10))])
+    pipe.run(source_df=both, incremental=True)
+    executed = pipe.run(source_df=both, force=True)
+    assert all(executed.values()), executed
+
+    scratch = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh_s"),
+                                        run_id="s1"))
+    scratch.run(source_df=both, incremental=True)
+    for table, cols in [("mentions", ["surface", "lang", "norm"]),
+                        ("edges", ["norm_a", "norm_b"]),
+                        ("labels", ["norm", "component"]),
+                        ("link_bands", ["norm", "band_key"]),
+                        ("mat_done", ["repo", "path", "commit"])]:
+        got = pipe.io.read(table)
+        assert _set(got, cols) == _set(scratch.io.read(table), cols), table
+        assert got.count() == got.select(cols).distinct().count(), table
+        assert pipe.io.segments(table) == [], table
+    assert _snapshot(pipe) == _full_recompute_snapshot(
+        spark, pipe, tmp_path, "force")
+
+
+def test_build_crash_at_edges_resumes_to_scratch_build(spark, tmp_path):
+    """A one-shot build killed at its edges commit: the resume re-links
+    the committed mentions without appending to them and commits exactly
+    the tables and rows of a scratch build."""
+    import os
+
+    src = _src(spark, [("a.py", _win(2)), ("b.py", _win(4)),
+                       ("c.py", _win(0)), ("d.py", _win(20))])
+    pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh"),
+                                     run_id="k1"))
+    restore = _crash_on(pipe.io, "write", "edges")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run(source_df=src)
+    restore()
+    assert pipe.io.exists("mentions") and not pipe.io.exists("edges")
+    executed = pipe.run(source_df=src)
+    assert not executed["triples_raw"] and not executed["mentions"]
+    assert executed["edges"] and executed["labels"] and executed["materialize"]
+
+    ref = _expected_state(spark, tmp_path, src)
+
+    def tables(p):
+        return sorted(t for t in os.listdir(p.cfg.warehouse)
+                      if not t.startswith("_"))
+
+    assert tables(pipe) == tables(ref)
+    for table in ("mentions", "edges", "labels", "triples", "entities",
+                  "aliases"):
+        got, want = pipe.io.read(table), ref.io.read(table)
+        assert got.exceptAll(want).count() == 0, table
+        assert want.exceptAll(got).count() == 0, table

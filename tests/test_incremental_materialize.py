@@ -29,31 +29,30 @@ def _snapshot(pipe):
 
 def _full_recompute_snapshot(spark, pipe, tmp_path, tag):
     """Full materialize over the SAME warehouse state: copy the ledger
-    so the stable-id resolution matches, then run the full _mat path in
-    a scratch warehouse and snapshot its outputs."""
+    so the stable-id resolution matches, then run _materialize, the one
+    materialize of a warehouse with a ledger, in a scratch warehouse
+    and snapshot its outputs."""
     import shutil
 
     scratch = str(tmp_path / f"wh_full_{tag}")
     shutil.copytree(pipe.cfg.warehouse, scratch)
     ref = Pipeline(spark, JobConfig(warehouse=scratch, run_id="ref"))
-    # drop the outputs + mat ledger so the full path recomputes them
-    for t in ("triples", "entities", "aliases", "mat_done"):
+    # drop the outputs so nothing of them survives into the snapshot
+    for t in ("triples", "entities", "aliases"):
         ref.io.drop(t)
-    ref._materialize_stage(
-        ref.io.read("mentions"), ref.io.read("labels"),
-        ref.io.read("triples_raw"), force=True)
+    ref._materialize(ref.io.read("mentions"), ref.io.read("labels"),
+                     ref.io.read("triples_raw"))
     return _snapshot(ref)
 
 
 def test_incremental_materialize_exact_equal(spark, tmp_path):
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="m1",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="m1")
     pipe = Pipeline(spark, cfg)
     base = generate_source_df(
         spark, SynthConfig(n_files=60), partitions=4).unionByName(
         _src(spark, [("w2.py", _win(2)), ("w4.py", _win(4)),
                      ("w10.py", _win(10)), ("w12.py", _win(12))]))
-    pipe.run(source_df=base)
+    pipe.run(source_df=base, incremental=True)
 
     # ingest 1: a MERGE (bridge w6/w8), a new smallest member (w0), new
     # provenance rows for existing synth groups, brand-new synth files
@@ -95,7 +94,7 @@ def test_incremental_materialize_crash_replay(spark, tmp_path,
 
     ab = [("a.py", _win(2)), ("b.py", _win(4))]
     cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
-                    run_id="m1", durable_link_state=True)
+                    run_id="m1")
     pipe = Pipeline(spark, cfg)
     run1 = _src(spark, ab)
 
@@ -125,7 +124,7 @@ def test_link_crash_before_ledger_replays_outputs(spark, tmp_path,
 
     ab = [("a.py", _win(2)), ("b.py", _win(4))]
     cfg = JobConfig(warehouse=durable_base(ab, tmp_path / "wh"),
-                    run_id="m1", durable_link_state=True)
+                    run_id="m1")
     pipe = Pipeline(spark, cfg)
     run1 = _src(spark, ab)
 
@@ -142,20 +141,20 @@ def test_link_crash_before_ledger_replays_outputs(spark, tmp_path,
 
 
 def test_full_stage_fallback_replays_a_killed_ingest(spark, tmp_path):
-    """The full-stage ingest fallback (lang-aware blocking) killed at its
-    mentions write, after its extraction commit: the replay extracts
-    nothing new and must still recompute the later stages, because
-    extract_done holds files mat_done lacks — 4 mention and triple rows,
-    as in a scratch build, not the 2 of the base."""
+    """A lang-aware ingest relinks fresh; killed at its mentions write,
+    after its extraction commit, the replay extracts nothing new and
+    must still relink, because extract_done holds files mat_done lacks
+    — 4 mention and triple rows, as in a scratch build, not the 2 of
+    the base."""
     from tests.test_incremental_linking import _crash_on
 
     def config(wh, run_id):
         return JobConfig(warehouse=str(tmp_path / wh), run_id=run_id,
-                         durable_link_state=True, link_lang_aware=True)
+                         link_lang_aware=True)
 
     pipe = Pipeline(spark, config("wh", "l1"))
     run1 = _src(spark, [("a.py", _win(2)), ("b.py", _win(4))])
-    pipe.run(source_df=run1)
+    pipe.run(source_df=run1, incremental=True)
     both = run1.unionByName(_src(spark, [("c.py", _win(0)),
                                          ("d.py", _win(6))]))
     restore = _crash_on(pipe.io, "write", "mentions")

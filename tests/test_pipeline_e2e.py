@@ -133,30 +133,28 @@ def test_resume_skips_and_recomputes_missing(spark, pipe):
 
 
 def test_durable_knob_outputs_identical(spark, tmp_path):
-    """Round-6 durability knob (round-5 verdict #4): a one-shot build
-    with durable_link_state=False (the default) must produce BIT-EQUAL
-    triples/entities/aliases to a durable build — it only skips
-    committing the incremental-ingest state."""
+    """A one-shot build must produce BIT-EQUAL triples/entities/aliases
+    to a durable build, run(incremental=True) on the empty warehouse —
+    it only skips committing the incremental-ingest state."""
     src = generate_source_df(spark, SynthConfig(n_files=60), partitions=4)
     fast = Pipeline(spark, JobConfig(
         warehouse=str(tmp_path / "wh_fast"), run_id="f"))
     fast.run(source_df=src)
     durable = Pipeline(spark, JobConfig(
-        warehouse=str(tmp_path / "wh_dur"), run_id="d",
-        durable_link_state=True))
-    durable.run(source_df=src)
+        warehouse=str(tmp_path / "wh_dur"), run_id="d"))
+    durable.run(source_df=src, incremental=True)
     for t in ("triples", "entities", "aliases", "mentions", "edges",
               "labels"):
         a, b = fast.io.read(t), durable.io.read(t)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
-    # the knob's whole point: no link-state commits on the fast path
+    # the one-shot build commits no link state
     for t in ("link_bands", "mat_done", "entity_ids"):
         assert durable.io.exists(t), t
         assert not fast.io.exists(t), t
     assert not durable.io.exists("link_signatures")
-    # and a later incremental run on the fast warehouse still works: it
-    # falls back to a full relink ONCE (committing the state), then the
-    # warehouse is durable
+    # and a later incremental run on the fast warehouse still works: its
+    # first ingest relinks every file ONCE (committing the state), then
+    # the warehouse is durable
     grown = generate_source_df(spark, SynthConfig(n_files=80), partitions=4)
     fast.run(source_df=grown, incremental=True)
     for t in ("link_bands", "mat_done", "entity_ids"):

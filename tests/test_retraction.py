@@ -48,13 +48,12 @@ def test_retract_equals_scratch_build(spark, tmp_path):
     same-ledger full recompute; and the fragment holding the old id norm
     (w0's) keeps the published id while the other fragment gets a fresh
     one."""
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="r1",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="r1")
     pipe = Pipeline(spark, cfg)
     synth = generate_source_df(spark, SynthConfig(n_files=60), partitions=4)
     full = synth.unionByName(
         _src(spark, _win_files([0, 2, 4, 6, 8, 12, 14])))
-    pipe.run(source_df=full)
+    pipe.run(source_df=full, incremental=True)
     old_entities = _set(pipe.io.read("entities"), ["entity_id"])
 
     remaining = synth.filter(
@@ -66,9 +65,8 @@ def test_retract_equals_scratch_build(spark, tmp_path):
     assert stats["touched_components"] >= 1
 
     scratch = Pipeline(spark, JobConfig(
-        warehouse=str(tmp_path / "wh2"), run_id="scratch",
-        durable_link_state=True))
-    scratch.run(source_df=remaining)
+        warehouse=str(tmp_path / "wh2"), run_id="scratch"))
+    scratch.run(source_df=remaining, incremental=True)
     for table, cols in _LINK:
         assert _set(pipe.io.read(table), cols) == \
             _set(scratch.io.read(table), cols), f"{table} != scratch"
@@ -100,10 +98,10 @@ def test_retract_singleton_keeps_id_against_fragment(spark, tmp_path):
     component that still claims the old id. The singleton must keep its
     published id (it IS the id norm); the fragment must take a fresh
     one — no two entities may share an id."""
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="s1",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="s1")
     pipe = Pipeline(spark, cfg)
-    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 6])))
+    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 6])),
+             incremental=True)
     pipe.retract(source_df=_src(spark, _win_files([0, 4, 6])))
 
     ents = pipe.io.read("entities")
@@ -144,7 +142,7 @@ def test_retract_crash_replay(spark, tmp_path, durable_base):
 
     cfg = JobConfig(warehouse=durable_base(_win_files([0, 2, 4, 6, 12, 14]),
                                            tmp_path / "wh"),
-                    run_id="c1", durable_link_state=True)
+                    run_id="c1")
     pipe = Pipeline(spark, cfg)
     remaining = _src(spark, _win_files([0, 2, 6, 12, 14]))
 
@@ -156,8 +154,7 @@ def test_retract_crash_replay(spark, tmp_path, durable_base):
 
     scratch = Pipeline(spark, JobConfig(
         warehouse=durable_base(_win_files([0, 2, 6, 12, 14]),
-                               tmp_path / "wh2"), run_id="scratch",
-        durable_link_state=True))
+                               tmp_path / "wh2"), run_id="scratch"))
     for table, cols in _LINK:
         assert _set(pipe.io.read(table), cols) == \
             _set(scratch.io.read(table), cols), f"{table} after replay"
@@ -182,7 +179,7 @@ def test_retract_crash_after_labels_replays(spark, tmp_path, table,
 
     cfg = JobConfig(warehouse=durable_base(_win_files([0, 2, 4, 6, 12, 14]),
                                            tmp_path / "wh"),
-                    run_id="c2", durable_link_state=True)
+                    run_id="c2")
     pipe = Pipeline(spark, cfg)
     remaining = _src(spark, _win_files([0, 2, 6, 12, 14]))
 
@@ -194,8 +191,7 @@ def test_retract_crash_after_labels_replays(spark, tmp_path, table,
 
     scratch = Pipeline(spark, JobConfig(
         warehouse=durable_base(_win_files([0, 2, 6, 12, 14]),
-                               tmp_path / "wh2"), run_id="scratch",
-        durable_link_state=True))
+                               tmp_path / "wh2"), run_id="scratch"))
     for t, cols in _LINK:
         assert _set(pipe.io.read(t), cols) == \
             _set(scratch.io.read(t), cols), f"{t} after replay"
@@ -239,7 +235,7 @@ def test_prefix_layout_store_migrates_on_ingest_and_retract(
     for op, files in (("ingest", [0, 2, 4, 6, 8, 12, 14]),
                       ("retract", [0, 2, 6, 12, 14])):
         cfg = JobConfig(warehouse=durable_base(base, tmp_path / op),
-                        run_id=op, durable_link_state=True)
+                        run_id=op)
         pipe = Pipeline(spark, cfg)
         _to_prefix_layout(pipe)
         corpus = _src(spark, _win_files(files))
@@ -256,7 +252,7 @@ def test_prefix_layout_store_migrates_on_ingest_and_retract(
         scratch = Pipeline(spark, JobConfig(
             warehouse=durable_base(_win_files(files),
                                    tmp_path / f"{op}_scratch"),
-            run_id="scratch", durable_link_state=True))
+            run_id="scratch"))
         for t, cols in [*_LINK, ("link_bands", ["norm", "band_key"])]:
             assert _set(pipe.io.read(t), cols) == \
                 _set(scratch.io.read(t), cols), f"{op}: {t} != scratch"
@@ -275,10 +271,10 @@ def test_retract_after_ingest_crash_keeps_unreflected_edges(spark, tmp_path):
     the crashed batch included."""
     from tests.test_incremental_linking import _crash_on
 
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="x1",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="x1")
     pipe = Pipeline(spark, cfg)
-    pipe.run(source_df=_src(spark, _win_files([2, 4, 20, 30])))
+    pipe.run(source_df=_src(spark, _win_files([2, 4, 20, 30])),
+             incremental=True)
 
     restore = _crash_on(pipe.io, "write", "labels")
     with pytest.raises(RuntimeError, match="simulated crash"):
@@ -292,9 +288,8 @@ def test_retract_after_ingest_crash_keeps_unreflected_edges(spark, tmp_path):
     pipe.run(source_df=remaining, incremental=True)
 
     scratch = Pipeline(spark, JobConfig(
-        warehouse=str(tmp_path / "wh2"), run_id="scratch",
-        durable_link_state=True))
-    scratch.run(source_df=remaining)
+        warehouse=str(tmp_path / "wh2"), run_id="scratch"))
+    scratch.run(source_df=remaining, incremental=True)
     for table, cols in _LINK[1:]:
         assert _set(pipe.io.read(table), cols) == \
             _set(scratch.io.read(table), cols), f"{table} != scratch"
@@ -311,7 +306,7 @@ def test_retract_prunes_the_source_tables(spark, tmp_path, mode):
     import os
 
     cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="s1",
-                    durable_link_state=True, source_table="corpus")
+                    source_table="corpus")
     pipe = Pipeline(spark, cfg)
     full = _src(spark, _win_files([0, 2, 4, 12]))
     remaining = _src(spark, _win_files([0, 2, 12]))
@@ -319,12 +314,12 @@ def test_retract_prunes_the_source_tables(spark, tmp_path, mode):
         full_dir, rest_dir = str(tmp_path / "full"), str(tmp_path / "rest")
         full.write.parquet(full_dir)
         remaining.write.parquet(rest_dir)
-        pipe.run(source_path=full_dir)
+        pipe.run(source_path=full_dir, incremental=True)
         pipe.retract(source_path=rest_dir)
         assert (pipe.io.commit_meta("corpus")["external_path"]
                 == os.path.abspath(rest_dir))
     else:
-        pipe.run(source_df=full)
+        pipe.run(source_df=full, incremental=True)
         pipe.retract(source_df=remaining)
 
     gone = F.col("path") == "w4.py"
@@ -334,3 +329,21 @@ def test_retract_prunes_the_source_tables(spark, tmp_path, mode):
     pipe.run(incremental=True)
     assert pipe.io.read("triples_raw").filter(gone).count() == 0
     assert pipe.io.read("triples").filter(gone).count() == 0
+
+
+def test_retract_keeps_source_partitioning(spark, tmp_path):
+    """retract() prunes a copied source table into a snapshot with the
+    lang partitioning its build gave it, holding the remaining files."""
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="p1")
+    pipe = Pipeline(spark, cfg)
+    remaining = _src(spark, _win_files([0, 2, 12]))
+    pipe.run(source_df=_src(spark, _win_files([0, 2, 4, 12])),
+             incremental=True)
+    pipe.retract(source_df=remaining)
+
+    table = cfg.source_table
+    assert pipe.io.commit_meta(table)["partition_by"] == ["lang"]
+    assert os.path.isdir(os.path.join(cfg.warehouse, table, "lang=python"))
+    cols = ["repo", "path", "commit", "lang", "content"]
+    assert _set(pipe.io.read(table), cols) == _set(remaining, cols)
+

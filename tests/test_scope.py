@@ -31,10 +31,11 @@ def test_pipeline_build_ingest_and_retract_leave_no_blocks(spark, tmp_path):
     full = generate_source_df(spark, SynthConfig(n_files=60, seed=7), 4)
     base = full.filter(F.xxhash64("path") % 3 != 0)
     pipe = Pipeline(spark, JobConfig(warehouse=str(tmp_path / "wh"),
-                                     run_id="s1", durable_link_state=True))
+                                     run_id="s1"))
     _isolate(spark)
     calls = {
-        "durable build": lambda: pipe.run(source_df=base),
+        "durable build": lambda: pipe.run(source_df=base,
+                                          incremental=True),
         "incremental ingest": lambda: pipe.run(source_df=full,
                                                incremental=True),
         "retract": lambda: pipe.retract(

@@ -435,11 +435,10 @@ def test_link_store_membership(spark, tmp_path):
     from gondar_spark.pipeline import Pipeline
     from tests.test_incremental_linking import _src, _win
 
-    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="p",
-                    durable_link_state=True)
+    cfg = JobConfig(warehouse=str(tmp_path / "wh"), run_id="p")
     pipe = Pipeline(spark, cfg)
     src = generate_source_df(spark, SynthConfig(n_files=40), partitions=4)
-    pipe.run(source_df=src)
+    pipe.run(source_df=src, incremental=True)
 
     def norms(table):
         return {r[0] for r in

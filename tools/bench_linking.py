@@ -132,10 +132,10 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
         for member, off in ((0, 0), (1, 4)):
             _family_files(spark, 0, n_families, member, off, "seed") \
                 .write.mode("append").parquet(corpus)
-        pipe = Pipeline(spark, JobConfig(warehouse=wh, run_id="seed",
-                                     durable_link_state=True))
+        pipe = Pipeline(spark, JobConfig(warehouse=wh, run_id="seed"))
         _, seed_wall, seed_jobs, seed_files, seed_bytes = _timed(
-            spark, wh, lambda: pipe.run(source_path=corpus))
+            spark, wh, lambda: pipe.run(source_path=corpus,
+                                        incremental=True))
 
         # the ingest batch: new families (new x new pairs) + third
         # members of a slice of OLD families (store-probe hits that
@@ -146,8 +146,7 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
                       1, 4, "newfam").write.mode("append").parquet(corpus)
         _family_files(spark, 0, batch_families, 2, 2, "probe") \
             .write.mode("append").parquet(corpus)
-        pipe.cfg = JobConfig(warehouse=wh, run_id="ingest",
-                             durable_link_state=True)
+        pipe.cfg = JobConfig(warehouse=wh, run_id="ingest")
         _, ingest_wall, ingest_jobs, ingest_files, ingest_bytes = _timed(
             spark, wh,
             lambda: pipe.run(source_path=corpus, incremental=True))
@@ -163,8 +162,7 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
                    and r["stage"] == "labels_incremental"]
 
         # a re-run with nothing new: its cost is all job overhead
-        pipe.cfg = JobConfig(warehouse=wh, run_id="noop",
-                             durable_link_state=True)
+        pipe.cfg = JobConfig(warehouse=wh, run_id="noop")
         _, noop_wall, noop_jobs, noop_files, noop_bytes = _timed(
             spark, wh,
             lambda: pipe.run(source_path=corpus, incremental=True))
@@ -174,14 +172,12 @@ def ingest_at_scale(spark, n_families: int, batch_families: int) -> dict:
         remaining = spark.read.parquet(corpus).filter(
             ~F.col("path").startswith("src/newfam")
             & ~F.col("path").startswith("src/probe"))
-        pipe.cfg = JobConfig(warehouse=wh, run_id="retract",
-                             durable_link_state=True)
+        pipe.cfg = JobConfig(warehouse=wh, run_id="retract")
         rstats, retract_wall, retract_jobs, retract_files, retract_bytes = \
             _timed(spark, wh, lambda: pipe.retract(source_df=remaining))
 
         # the avoided cost: full relink of the grown corpus
-        pipe.cfg = JobConfig(warehouse=wh, run_id="relink",
-                             durable_link_state=True)
+        pipe.cfg = JobConfig(warehouse=wh, run_id="relink")
         _, full_wall, full_jobs, full_files, full_bytes = _timed(
             spark, wh, lambda: pipe.run(source_path=corpus, force=True))
         full_link_wall = round(sum(
